@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -25,65 +27,66 @@ import org.apache.spark.sql.SparkSession
   * line carries per-query GC seconds so any regression is visible in
   * the recorded artifact, not just locally. */
 object Bench {
+  /** Every node of an executed plan with its depth, in pre-order,
+    * descending into adaptive plans (their current plan) and query
+    * stages: the walk behind both [[fingerprint]] and `Probe explain`. */
+  def planNodes(root: SparkPlan): Seq[(SparkPlan, Int)] = {
+    val out = Seq.newBuilder[(SparkPlan, Int)]
+    def walk(n: SparkPlan, depth: Int): Unit = {
+      out += n -> depth
+      n match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth + 1)
+        case q: QueryStageExec => walk(q.plan, depth + 1)
+        case o => o.children.foreach(walk(_, depth + 1))
+      }
+    }
+    walk(root, 0)
+    out.result()
+  }
+
+  /** Executed-plan fingerprint per timed run, recorded next to the
+    * times so an anomalous sample is attributable from the artifact
+    * alone (r10's x39 and r11's x72 ~17 s anomalies each cost a full
+    * adjudication cycle because the artifact could not distinguish
+    * an AQE plan-flip from environment noise). The fingerprint is a
+    * compact node census of the FINAL adaptive plan: join strategies
+    * actually chosen, exchange/reuse counts, scans, explodes, and
+    * observed spill — identical fingerprints across runs/rounds rule
+    * out a plan flip; a changed one names the node class that moved. */
+  def fingerprint(root: SparkPlan): String = {
+    val counts = scala.collection.mutable.LinkedHashMap[String, Int]()
+    var spill = 0L
+    planNodes(root).foreach { case (n, _) =>
+      val name = n.nodeName
+      val key =
+        if (name.contains("BroadcastHashJoin")) "BHJ"
+        else if (name.contains("SortMergeJoin")) "SMJ"
+        else if (name.contains("ShuffledHashJoin")) "SHJ"
+        else if (name.contains("BroadcastNestedLoopJoin")) "BNLJ"
+        else if (name.contains("CartesianProduct")) "CART"
+        else if (name.contains("ReusedExchange")) "REX"
+        else if (name.contains("Exchange")) "EX"
+        else if (name.contains("Generate")) "GEN"
+        else if (name.contains("Scan")) "SCAN"
+        else null
+      if (key != null) counts.update(key, counts.getOrElse(key, 0) + 1)
+      n.metrics.foreach { case (k, m) =>
+        if (k.toLowerCase.contains("spill") && m.value > 0) spill += m.value
+      }
+    }
+    val parts = counts.map { case (k, v) => s"$k$v" }.toSeq ++
+      (if (spill > 0) Seq(s"SPILL${spill >> 20}M") else Nil)
+    parts.mkString("+")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // safety net: periodic ContextCleaner GC every 60s instead of the
-      // 30min default (a full bench run can finish inside one default
-      // interval, i.e. with zero cleanups)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     def exec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
-    // Executed-plan fingerprint per timed run, recorded next to the
-    // times so an anomalous sample is attributable from the artifact
-    // alone (r10's x39 and r11's x72 ~17 s anomalies each cost a full
-    // adjudication cycle because the artifact could not distinguish
-    // an AQE plan-flip from environment noise). The fingerprint is a
-    // compact node census of the FINAL adaptive plan: join strategies
-    // actually chosen, exchange/reuse counts, scans, explodes, and
-    // observed spill — identical fingerprints across runs/rounds rule
-    // out a plan flip; a changed one names the node class that moved.
-    def fingerprint(root: org.apache.spark.sql.execution.SparkPlan): String = {
-      import org.apache.spark.sql.execution.adaptive._
-      val counts = scala.collection.mutable.LinkedHashMap[String, Int]()
-      var spill = 0L
-      def walk(n: org.apache.spark.sql.execution.SparkPlan): Unit = {
-        val name = n.nodeName
-        val key =
-          if (name.contains("BroadcastHashJoin")) "BHJ"
-          else if (name.contains("SortMergeJoin")) "SMJ"
-          else if (name.contains("ShuffledHashJoin")) "SHJ"
-          else if (name.contains("BroadcastNestedLoopJoin")) "BNLJ"
-          else if (name.contains("CartesianProduct")) "CART"
-          else if (name.contains("ReusedExchange")) "REX"
-          else if (name.contains("Exchange")) "EX"
-          else if (name.contains("Generate")) "GEN"
-          else if (name.contains("Scan")) "SCAN"
-          else null
-        if (key != null) counts.update(key, counts.getOrElse(key, 0) + 1)
-        n.metrics.foreach { case (k, m) =>
-          if (k.toLowerCase.contains("spill") && m.value > 0) spill += m.value
-        }
-        n match {
-          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-          case q: QueryStageExec => walk(q.plan)
-          case o => o.children.foreach(walk)
-        }
-      }
-      walk(root)
-      val parts = counts.map { case (k, v) => s"$k$v" }.toSeq ++
-        (if (spill > 0) Seq(s"SPILL${spill >> 20}M") else Nil)
-      parts.mkString("+")
-    }
     val planHolder = new java.util.concurrent.atomic.AtomicReference[String](null)
     spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,

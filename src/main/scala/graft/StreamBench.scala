@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import graft.streaming.Flows
 import graft.tables.TableStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -35,15 +34,9 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val variant = sys.env.getOrElse("SPARK_GRAFT_STREAM_VARIANT", "both")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROUNDS", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sql = spark.sqlContext
@@ -94,7 +87,7 @@ object StreamBench {
         trigger = Trigger.ProcessingTime(0))
       // multi-partition source: a single-partition MemoryStream would
       // serialize every scan of the batch through one thread
-      val ms = MemoryStream[R](spark, cpus.toInt)
+      val ms = MemoryStream[R](spark, LocalSession.cpus)
       val chunk = (n + nRounds - 1) / nRounds
       val t0 = System.nanoTime()
       val q = if (stateful) flows.admissionFlowStateful(ms.toDS().toDF())
@@ -153,7 +146,7 @@ object StreamBench {
         case (m, i) if i % 20 == 0 => m
       }
       val nm = msgs.length
-      val ms = MemoryStream[M](spark, cpus.toInt)
+      val ms = MemoryStream[M](spark, LocalSession.cpus)
       val chunk = (nm + nRounds - 1) / nRounds
       val t0 = System.nanoTime()
       val q = flows.consumerFlow(ms.toDS().toDF())
@@ -187,7 +180,7 @@ object StreamBench {
           col("text"))
         .as[(Long, String, String)].collect()
       val nd = docs.length
-      val ms = MemoryStream[(Long, String, String)](spark, cpus.toInt)
+      val ms = MemoryStream[(Long, String, String)](spark, LocalSession.cpus)
       val chunk = (nd + nRounds - 1) / nRounds
       val t0 = System.nanoTime()
       val q = graft.streaming.PackingFlow.flow(store,
@@ -234,7 +227,7 @@ object StreamBench {
           col("source").cast("string"), col("lang").cast("string"))
         .as[(Long, String, String, String)].collect()
       val nd = docs.length
-      val ms = MemoryStream[(Long, String, String, String)](spark, cpus.toInt)
+      val ms = MemoryStream[(Long, String, String, String)](spark, LocalSession.cpus)
       val chunk = (nd + nRounds - 1) / nRounds
       val t0 = System.nanoTime()
       val q = flows.documentIngestFlow(

@@ -158,10 +158,17 @@ case class DecimalSum128(child: Expression) extends DeclarativeAggregate {
   // overflow; parity is for the contract, pinned by DecimalSumSpec)
   private lazy val nullOnOverflow = !SQLConf.get.ansiEnabled
 
+  // The INPUT DOMAIN ([[DecimalSumUtil]]) as a type check, made at
+  // analysis — the first point the child's type is known (`dsum` is
+  // usually built over unresolved columns): p ≤ 18, or a
+  // DecimalTimesCompact product under the operand-bound argument.
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: DecimalType => TypeCheckResult.TypeCheckSuccess
+    case d: DecimalType
+        if d.precision <= 18 || child.exists(_.isInstanceOf[DecimalTimesCompact]) =>
+      TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires decimal input, got ${other.catalogString}")
+      s"$prettyName requires a decimal of precision <= 18 or a " +
+        s"decimal_times_compact product, got ${other.catalogString}")
   }
 
   private lazy val hi = AttributeReference("hi", LongType, nullable = false)()
@@ -218,9 +225,13 @@ case class DecimalSum128(child: Expression) extends DeclarativeAggregate {
 }
 
 object DecimalSumFns {
-  /** Drop-in for `sum(c)` on a decimal column (exact, two-long
-    * buffer). Same result type, same value, same null/overflow
-    * semantics — DecimalSumSpec pins all three. */
+  /** `sum(c)` on a decimal column whose every value's UNSCALED form
+    * fits a signed long (exact, two-long buffer). Within that domain:
+    * same result type, same value, same null/overflow semantics as the
+    * built-in — DecimalSumSpec pins all three. Analysis accepts a
+    * child of precision ≤ 18, or a [[DecimalFns.dtimes]] product whose
+    * values the caller bounds; a row outside the domain throws
+    * ArithmeticException (never a silent truncation). */
   def dsum(c: Column): Column =
     Bridge.column(DecimalSum128(Bridge.expression(c)).toAggregateExpression())
 }

@@ -63,12 +63,9 @@ object KMeansQueries {
 
   /** k-means build knobs. Defaults are ORACLE-PINNED (the x111/x114
     * oracles replay exactly this build as CTE chains); production
-    * tunes them per corpus. `spreadSeed=false` keeps the legacy
-    * first-k-by-vec_id seed for SSE comparison (KMeansSpec) — it is
-    * never used by a declared query. Non-default builds get their own
-    * cache entry (keyed by (dir, params)). */
-  final case class KMeansParams(k: Int = 8, iters: Int = 2,
-      spreadSeed: Boolean = true) {
+    * tunes them per corpus. Non-default builds get their own cache
+    * entry (keyed by (dir, params)). */
+  final case class KMeansParams(k: Int = 8, iters: Int = 2) {
     require(k > 0 && iters >= 0, s"bad KMeansParams: k=$k iters=$iters")
     /** seed-candidate sample size: 8·k (64 at the default k). */
     def sampleN: Int = 8 * k
@@ -78,7 +75,7 @@ object KMeansQueries {
     String, StoredIndexes.Cached[Array[Array[Long]]]]()
 
   private def cacheKey(dir: String, p: KMeansParams): String =
-    s"$dir|kmeans|${p.k}|${p.iters}|${p.spreadSeed}"
+    s"$dir|kmeans|${p.k}|${p.iters}"
 
   /** Quantization expression over a float-array embedding column. */
   private[graft] def quantExpr(e: Column): Column =
@@ -157,23 +154,13 @@ object KMeansQueries {
     StoredIndexes.versionedValue(centroidCache, d, "embeddings.parquet",
       "graft-kmeans", cacheKey(d, p)) {
       val q = quantized(s, d)
-      var cents: Array[Array[Long]] =
-        if (p.spreadSeed) {
-          val sample = q.select(col("vec_id").cast("long").as("vec_id"),
-              col("v"), graft.functions.TextFns.md5Bits16(
-                col("vec_id").cast("string")).as("rk"))
-            .sort(col("rk"), col("vec_id")).limit(p.sampleN)
-            .collect()
-            .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-          spreadSeeds(sample, p.k)
-        } else { // legacy first-k seed, kept ONLY for the SSE spec
-          val cs = q.filter(col("vec_id") < p.k)
-            .orderBy("vec_id").select(col("v"))
-            .collect().map(_.getSeq[Long](0).toArray)
-          require(cs.length == p.k,
-            s"need ${p.k} seed vectors, got ${cs.length}")
-          cs
-        }
+      val sample = q.select(col("vec_id").cast("long").as("vec_id"),
+          col("v"), graft.functions.TextFns.md5Bits16(
+            col("vec_id").cast("string")).as("rk"))
+        .sort(col("rk"), col("vec_id")).limit(p.sampleN)
+        .collect()
+        .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      var cents: Array[Array[Long]] = spreadSeeds(sample, p.k)
       var it = 0
       while (it < p.iters) {
         // the argmin select and the posexplode MUST be two steps: a

@@ -35,20 +35,23 @@ private[graft] object StoredIndexes {
     * tasks back-fill executors freed by the current write's tail,
     * instead of every build paying its stages' straggler tails
     * end-to-end). Safe here because TableStore serializes transitions
-    * per table and each step writes a DISTINCT table. Any step failure
-    * propagates (unwrapped) after the others finish — same all-or-
-    * nothing surface the sequential form had. */
+    * per table and each step writes a DISTINCT table. Every step runs
+    * to its end, failed or not — a sibling's write is never
+    * interrupted mid-flight — and then the first failure in step order
+    * is rethrown unwrapped: the all-or-nothing surface the sequential
+    * form had. */
   def inParallel(steps: (() => Unit)*): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(steps.size)
     try {
       val futs = steps.map(st => pool.submit(new java.util.concurrent.Callable[Unit] {
         override def call(): Unit = st()
       }))
-      futs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      val failures = futs.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
       }
-    } finally { pool.shutdownNow(); () }
+      failures.headOption.foreach(throw _)
+    } finally { pool.shutdown(); () }
   }
 
   /** Fingerprint of the files backing `dir/file`: stable while the

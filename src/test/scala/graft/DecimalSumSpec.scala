@@ -1,7 +1,11 @@
 package graft
 
-import graft.functions.expressions.{DecimalFns, DecimalSumFns}
+import graft.functions.expressions.{DecimalFns, DecimalSum128, DecimalSumFns,
+  DecimalSumUtil, DecimalTimesCompact}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[DecimalSumFns.dsum]] must be VALUE- and TYPE-identical to the
@@ -98,5 +102,31 @@ class DecimalSumSpec extends AnyFunSuite {
       DecimalSumFns.dsum(col("v")).as("mine"), sum(col("v")).as("builtin"))
     val r = both.head
     assert(r.getDecimal(0) === r.getDecimal(1))
+  }
+
+  test("make128 overflow: null when nullOnOverflow, ArithmeticException otherwise") {
+    // long-fit branch: 1000 needs 4 digits, DECIMAL(3,0) holds 3
+    assert(DecimalSumUtil.make128(0L, 1000L, 3, 0, nullOnOverflow = true) === null)
+    intercept[ArithmeticException](
+      DecimalSumUtil.make128(0L, 1000L, 3, 0, nullOnOverflow = false))
+    assert(DecimalSumUtil.make128(0L, 999L, 3, 0, nullOnOverflow = false)
+      .toJavaBigDecimal.longValueExact === 999L)
+    // 128-bit branch: (hi=1, lo=0) is 2^64 ≈ 1.8e19, 20 digits
+    assert(DecimalSumUtil.make128(1L, 0L, 19, 0, nullOnOverflow = true) === null)
+    intercept[ArithmeticException](
+      DecimalSumUtil.make128(1L, 0L, 19, 0, nullOnOverflow = false))
+    assert(DecimalSumUtil.make128(1L, 0L, 20, 0, nullOnOverflow = false)
+      .toJavaBigDecimal.toBigIntegerExact === java.math.BigInteger.ONE.shiftLeft(64))
+  }
+
+  test("input domain: precision <= 18 or a compact product, rejected at analysis otherwise") {
+    def attr(p: Int) = AttributeReference("v", DecimalType(p, 2))()
+    assert(DecimalSum128(attr(18)).checkInputDataTypes().isSuccess)
+    assert(DecimalSum128(DecimalTimesCompact(attr(18), attr(18)))
+      .checkInputDataTypes().isSuccess)
+    assert(DecimalSum128(attr(19)).checkInputDataTypes().isFailure)
+    import spark.implicits._
+    val wide = Seq("1.50").toDF("s").select(col("s").cast("decimal(38,2)").as("v"))
+    intercept[AnalysisException](wide.agg(DecimalSumFns.dsum(col("v"))).collect())
   }
 }

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * centroid component, cluster size and SSE, not just the aggregate
   * shape. All arithmetic is integer (quantized embeddings), so
   * equality is exact. Also pins the production knobs: farthest-point
-  * spread seeding beats the legacy first-K seed on a fixture with
-  * co-located early vectors, and parameterized builds get their own
+  * spread seeding beats first-K seeding on a fixture with co-located
+  * early vectors, and parameterized builds get their own
   * cache entries (the BpeMiner k-in-cacheKey lesson). */
 class KMeansSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -204,8 +204,10 @@ class KMeansSpec extends AnyFunSuite {
           }
       }
       val spread = KMeansQueries.train(spark, dir, KMeansParams(k = 4))
-      val firstK = KMeansQueries.train(spark, dir,
-        KMeansParams(k = 4, spreadSeed = false))
+      // the first-K arm runs the same Lloyd rounds from the first 4
+      // vectors by vec_id; refLloyd is pinned equal to the engine below
+      val firstKSeeds = qv.filter(_._1 < 4).sortBy(_._1).map(_._2)
+      val firstK = refLloyd(qv, firstKSeeds, Iters)
       val (sseSpread, sseFirst) = (sse(spread, qv), sse(firstK, qv))
       // first-K seeds all sit inside cluster 0 → at most a couple of
       // true clusters get their own centroid; spread seeds cover all 4

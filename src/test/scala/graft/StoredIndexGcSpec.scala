@@ -57,4 +57,17 @@ class StoredIndexGcSpec extends AnyFunSuite {
     assert(live.load("ex8h").count() > 0, "live index must survive the sweep")
     graft.tables.TempDirs.delete(dir)
   }
+
+  test("inParallel: a failing step lets a slower sibling's write finish, then rethrows unwrapped") {
+    class InjectedStepFailure extends RuntimeException("injected build-step failure")
+    val dir = Files.createTempDirectory("graft-inparallel").toString
+    val out = s"$dir/sibling.parquet"
+    try {
+      intercept[InjectedStepFailure](StoredIndexes.inParallel(
+        () => throw new InjectedStepFailure,
+        () => { Thread.sleep(300); spark.range(1000).write.parquet(out) }))
+      assert(spark.read.parquet(out).count() === 1000,
+        "the sibling step's write must complete, not be interrupted")
+    } finally graft.tables.TempDirs.delete(dir)
+  }
 }

@@ -6,14 +6,7 @@ import org.apache.spark.sql.SparkSession
   * JVM; suites grab the same session lazily). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s = LocalSession(cpus = 8)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
