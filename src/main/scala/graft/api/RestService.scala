@@ -4,9 +4,12 @@ import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.immutable.ListMap
+
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import graft.operators.{CurationQueries, PqQueries, TextQueries, VectorQueries}
 import graft.tables.{MergeOps, TableStore}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,9 +36,8 @@ import org.apache.spark.sql.functions._
  *
  *   GET /query/{name}?limit=            any declared query, limit-capped
  *   GET /query/{name}/plan              formatted physical plan (no exec)
- *   GET /search?q=&k=[&unit=chunk]      parameterized BM25 retrieval
- *   GET /search?like=&k=                dense more-like-this (stored IVF)
- *   GET /search?q=&like=&k=             hybrid RRF fusion of both arms
+ *   GET /search?…&k=                    lexical, dense and hybrid
+ *                                       retrieval (RestService.SearchArms)
  *   GET /metrics[/{flow}]               per-batch flow telemetry rows
  *   GET /tables/{t}/version             live version number
  *   GET /tables/{t}/at/{v}?limit=       time-travel snapshot read
@@ -380,428 +382,95 @@ final class RestService(spark: SparkSession, store: TableStore,
         graft.SparkEntry.queries.get(name) match {
           case None => reply(ex, 404, s"unknown query $name")
           case Some(build) =>
-            val limit = Option(ex.getRequestURI.getQuery)
-              .flatMap(_.split("&").collectFirst {
-                case p if p.startsWith("limit=") =>
-                  p.drop(6).toIntOption.getOrElse(100)
-              }).getOrElse(100).min(10000).max(1)
-            val rows = build(spark, dir).limit(limit)
+            val rows = build(spark, dir).limit(rowLimit(ex))
               .toJSON.collect()
             replyJson(ex, 200, rows.mkString("[", ",", "]"))
         }
       case _ => reply(ex, 404, "Not Found")
     }
 
-  // Parameterized retrieval over the stored corpus (r16 — the r15
-  // verdict's ask #3): the x94 / x133 BM25 scorers serve ARBITRARY
-  // q-terms instead of the benchmark's fixed three, turning the
-  // retrieval tier into a usable component. The terms bind into the
-  // occurrence filter of the SAME audited O(term-occurrences) plans
-  // (bm25ScoredFor / chunkBm25For — one definition with the declared
-  // queries, so the endpoint and the benchmark cannot drift); ranking
-  // is (score desc, id…), k is capped like /query's limit.
-  //   GET /search?q=<terms>&k=N             document-level BM25 (x94)
-  //   GET /search?q=<terms>&k=N&unit=chunk  chunk-granular BM25 (x133)
-  //   GET /search?like=<vec_id>&k=N         dense more-like-this (x20's
-  //                                         stored-IVF probe; 404 on an
-  //                                         unknown vec_id). &nprobe=N
-  //                                         overrides the probe width
-  //                                         (clamped to the cell count);
-  //                                         default = the retuneIvf
-  //                                         policy's measured-recall pick
-  //   GET /search?like=<vec_id>&index=srp   dense more-like-this off the
-  //                                         SRP index instead (x11's
-  //                                         bucket-pruned probe, multi-
-  //                                         probe widened). &radius=R
-  //                                         overrides the Hamming probe
-  //                                         radius (clamped to the bit
-  //                                         width); default = the
-  //                                         retuneSrp policy's
-  //                                         measured-recall pick (x150)
-  //   GET /search?like=<vec_id>&index=pq    dense more-like-this off the
-  //                                         stored PQ code table: ADC
-  //                                         top-R candidates re-ranked
-  //                                         by exact cosine. &rerank=R
-  //                                         overrides the re-rank depth
-  //                                         (capped 1024); default = the
-  //                                         retunePq policy's
-  //                                         measured-recall pick (x151).
-  //                                         The effective depth never
-  //                                         drops below k — a depth < k
-  //                                         cannot fill the response
-  //   GET /search?like=<vec_id>&index=ivfadc  the composed billion-scale
-  //                                         pipeline (x152): probe nProbe
-  //                                         cells, ADC-scan only their
-  //                                         stored codes, re-rank top R
-  //                                         exactly. Takes BOTH &nprobe=
-  //                                         and &rerank=; defaults = the
-  //                                         two measured policies.
-  //                                         &label=L restricts to one
-  //                                         metadata label (x153) — a
-  //                                         PRE-filter pushed into the
-  //                                         same pruned code scan
-  //   GET /search?q=<terms>&like=<vec_id>   HYBRID: RRF fusion of the two
-  //                                         arms (x128's combiner; IVF
-  //                                         dense arm only)
-  //   GET /search?phrase=<terms>&k=N        exact-adjacency phrase match
-  //                                         over the positional postings
-  //                                         (x144's probe; order kept,
-  //                                         duplicates meaningful).
-  //                                         &snippet=1 adds each hit's
-  //                                         densest 32-token window
-  //   GET /search?q=<terms>&snippet=1       doc-level BM25 + best-window
-  //                                         offsets (x145's probe)
-  //   GET /search?prefix=<p>&k=N            vocabulary listing for a
-  //                                         token prefix (x146's probe;
-  //                                         df desc, token asc)
-  //   GET /search?near=<terms>&span=S&k=N   ordered proximity (x147's
-  //                                         probe; terms in order, whole
-  //                                         match within span+1 tokens,
-  //                                         span default 8, max 256)
+  // Parameterized retrieval over the stored corpus: arbitrary terms
+  // and vec_ids bind into the SAME plans the declared queries run
+  // (bm25ScoredFor, ivfKnn, … — one definition with the benchmark, so
+  // the endpoint cannot drift from it). RestService.SearchArms lists
+  // each arm and the parameters it accepts; the request's arm is picked
+  // once (searchArm), and a parameter outside the arm's set, a value
+  // its check refuses or a missing key parameter is a 400, never a
+  // silent fall-through. Ranking is (score desc, id…); k is capped like
+  // /query's limit.
   private def routeSearch(ex: HttpExchange): Unit =
     (ex.getRequestMethod, segments(ex), analyticsDir) match {
       case (_, _, None) => reply(ex, 404, "analytics surface not enabled")
-      case ("GET", List("search"), Some(dir))
-          if qparam(ex, "like").isDefined =>
-        qparam(ex, "like").get.toLongOption match {
-          case None => reply(ex, 400, "like must be a vec_id (long)")
-          // unit selects a LEXICAL granularity; the dense/hybrid arms
-          // are doc-level only — reject rather than silently downgrade
-          case Some(_) if qparam(ex, "unit").exists(_ != "doc") =>
-            reply(ex, 400, "unit is not supported with like")
-          // a PRESENT-but-empty q is a client error (the lone-q route
-          // 400s it) — not a silent dense-only downgrade in a
-          // different response schema
-          case Some(_) if qparam(ex, "q").exists(
-              _.split("\\s+").forall(_.isEmpty)) =>
-            reply(ex, 400, "missing or empty q parameter")
-          // phrase is a lexical-only arm: adjacency has no dense rank
-          // to fuse with — reject rather than silently ignore it
-          case Some(_) if qparam(ex, "phrase").isDefined =>
-            reply(ex, 400, "phrase cannot combine with like")
-          case Some(_) if qparam(ex, "prefix").isDefined =>
-            reply(ex, 400, "prefix cannot combine with like")
-          case Some(_) if qparam(ex, "near").isDefined =>
-            reply(ex, 400, "near cannot combine with like")
-          // snippets are positional-postings features of the lexical
-          // arms; silently dropping the flag would tell the client a
-          // lie about its response (the loud-validation rule)
-          case Some(_) if qparam(ex, "snippet").isDefined =>
-            reply(ex, 400, "snippet is not supported with like")
-          // a malformed width is a client error, like a malformed
-          // like= — never a silent fall-through to the default
-          case Some(_) if qparam(ex, "nprobe").exists(
-              _.toIntOption.forall(_ < 1)) =>
-            reply(ex, 400, "nprobe must be a positive integer")
-          // index picks the dense family; anything but the three
-          // stored indexes is a client error, not a silent IVF fallback
-          case Some(_) if qparam(ex, "index").exists(
-              i => i != "ivf" && i != "srp" && i != "pq" &&
-                i != "ivfadc") =>
-            reply(ex, 400, "index must be ivf, srp, pq or ivfadc")
-          // each family's probe knob is its own: radius widens SRP's
-          // Hamming probe, rerank deepens PQ's exact re-rank, nprobe
-          // widens IVF's cell probe — a knob on the wrong family
-          // would be silently meaningless
-          case Some(_) if qparam(ex, "radius").isDefined &&
-              !qparam(ex, "index").contains("srp") =>
-            reply(ex, 400, "radius requires index=srp")
-          case Some(_) if qparam(ex, "rerank").isDefined &&
-              !qparam(ex, "index").exists(
-                i => i == "pq" || i == "ivfadc") =>
-            reply(ex, 400, "rerank requires index=pq or index=ivfadc")
-          case Some(_) if qparam(ex, "nprobe").isDefined &&
-              qparam(ex, "index").exists(
-                i => i == "srp" || i == "pq") =>
-            reply(ex, 400,
-              "nprobe is an ivf/ivfadc knob; use radius with srp, " +
-                "rerank with pq")
-          case Some(_) if qparam(ex, "radius").exists(
-              _.toIntOption.forall(_ < 0)) =>
-            reply(ex, 400, "radius must be a non-negative integer")
-          case Some(_) if qparam(ex, "rerank").exists(
-              _.toIntOption.forall(_ < 1)) =>
-            reply(ex, 400, "rerank must be a positive integer")
-          // the metadata filter lives inline in the IVFADC code
-          // sidecar — the only arm that can push it into its scan
-          case Some(_) if qparam(ex, "label").isDefined &&
-              !qparam(ex, "index").contains("ivfadc") =>
-            reply(ex, 400, "label requires index=ivfadc")
-          case Some(_) if qparam(ex, "label").exists(
-              _.toIntOption.isEmpty) =>
-            reply(ex, 400, "label must be an integer")
-          // a filter against a corpus without label metadata is a
-          // client error up front, not a missing-column 500 later
-          case Some(_) if qparam(ex, "label").isDefined &&
-              !graft.operators.PqQueries.hasLabels(spark, dir) =>
-            reply(ex, 400, "corpus has no label metadata")
-          // the hybrid combiner fuses the IVF dense arm (x128's
-          // definition) — reject rather than silently swap the arm
-          case Some(_) if qparam(ex, "index").exists(_ != "ivf") &&
-              qparam(ex, "q").isDefined =>
-            reply(ex, 400,
-              "hybrid fusion serves the ivf arm; drop index=" +
-                qparam(ex, "index").get)
-          case Some(vid) =>
-            val k = qparam(ex, "k").flatMap(_.toIntOption)
-              .getOrElse(10).min(100).max(1)
-            // probe-width override (r16 verdict ask #2): bounded like
-            // k; absent = the measured-recall serving policy
-            // (VectorQueries.servingProbeWidth — retuneIvf sets it
-            // from the x142 curve); ivfKnn clamps to the cell count
-            val nprobe = qparam(ex, "nprobe").flatMap(_.toIntOption)
-              .getOrElse(-1).min(1024)
-            val terms = qparam(ex, "q").toSeq
-              .flatMap(_.split("\\s+")).filter(_.nonEmpty).distinct
-            try {
-              if (terms.isEmpty) {
-                // dense-only more-like-this: the stored-IVF probe, the
-                // SRP multi-probe at the measured serving radius
-                // (retuneSrp's x150 pick), or the PQ code scan + exact
-                // re-rank at the measured depth (retunePq's x151 pick)
-                // the effective re-rank depth floors at k: a depth
-                // below k deterministically truncates the response
-                // (the candidate set IS capped at depth rows), which
-                // would be a silent drop — the clamp is the same
-                // doctrine as nprobe-to-cell-count and radius-to-K
-                val rerank = (qparam(ex, "rerank")
-                  .flatMap(_.toIntOption)
-                  .getOrElse(graft.operators.PqQueries
-                    .pqServingRerank(dir))
-                  .min(1024)).max(k)
-                val knn = qparam(ex, "index") match {
-                  case Some("srp") =>
-                    graft.operators.VectorQueries.srpKnn(spark, dir, vid,
-                      qparam(ex, "radius").flatMap(_.toIntOption)
-                        .getOrElse(-1))
-                  case Some("pq") =>
-                    graft.operators.PqQueries.pqKnn(spark, dir, vid,
-                      rerank)
-                  case Some("ivfadc") =>
-                    graft.operators.PqQueries.ivfadcKnn(spark, dir, vid,
-                      nprobe, rerank,
-                      qparam(ex, "label").flatMap(_.toIntOption))
-                  case _ => graft.operators.VectorQueries
-                    .ivfKnn(spark, dir, vid, nprobe)
-                }
-                val rows = knn
-                  .orderBy(col("cos").desc, col("vec_id"))
-                  .limit(k).collect()
-                  .map(r => Json.obj("vec_id" -> r.getLong(0),
-                    "cos" -> r.getDouble(1)))
-                replyJson(ex, 200, Json.arr(rows.toIndexedSeq))
-              } else if (terms.size > RestService.SearchMaxTerms ||
-                  terms.exists(_.length > RestService.SearchMaxTermLen)) {
-                reply(ex, 400,
-                  s"q is limited to ${RestService.SearchMaxTerms} " +
-                    s"terms of at most ${RestService.SearchMaxTermLen} chars")
-              } else {
-                // HYBRID: x128's RRF combiner over the parameterized
-                // arms — terms-bound BM25 × vec_id-bound IVF cosine
-                val rows = graft.operators.CurationQueries.rrfFused(
-                    graft.operators.TextQueries
-                      .bm25ScoredFor(spark, dir, terms),
-                    graft.operators.VectorQueries
-                      .ivfKnn(spark, dir, vid, nprobe)
-                      .select(col("vec_id").as("doc_id"), col("cos")))
-                  .limit(k).collect()
-                  .map(r => Json.obj("doc_id" -> r.getLong(0),
-                    "lex_rank" ->
-                      (if (r.isNullAt(1)) null else r.getLong(1)),
-                    "den_rank" ->
-                      (if (r.isNullAt(2)) null else r.getLong(2)),
-                    "rrf" -> r.getDouble(3)))
-                replyJson(ex, 200, Json.arr(rows.toIndexedSeq))
-              }
-            } catch {
-              case e: NoSuchElementException => reply(ex, 404, e.getMessage)
-            }
-        }
-      case ("GET", List("search"), Some(dir))
-          if qparam(ex, "near").isDefined =>
-        // ORDER PRESERVED, duplicates kept — "a b a" is a chain of
-        // three; x147's probe walks positions by in-query index
-        val toks = qparam(ex, "near").toSeq
-          .flatMap(_.split("\\s+")).filter(_.nonEmpty)
-        val k = qparam(ex, "k").flatMap(_.toIntOption)
-          .getOrElse(10).min(100).max(1)
-        // a malformed span is a client error like a malformed nprobe —
-        // never a silent fall-through to the default
-        val spanRaw = qparam(ex, "span")
-        val span = spanRaw.flatMap(_.toIntOption).getOrElse(8)
-        if (toks.isEmpty) reply(ex, 400, "missing or empty near parameter")
-        else if (toks.size < 2)
-          reply(ex, 400, "near requires at least two terms")
-        else if (Seq("q", "phrase", "like", "prefix", "unit", "snippet",
-            "nprobe", "index", "radius", "rerank", "label")
-            .exists(qparam(ex, _).isDefined))
-          reply(ex, 400, "near cannot combine with other search parameters")
-        else if (spanRaw.exists(s =>
-            s.toIntOption.forall(v => v < 1 || v > 256)))
-          reply(ex, 400, "span must be an integer in [1, 256]")
-        else if (toks.size > RestService.SearchMaxTerms ||
-            toks.exists(_.length > RestService.SearchMaxTermLen))
-          reply(ex, 400, s"near is limited to ${RestService.SearchMaxTerms} " +
-            s"tokens of at most ${RestService.SearchMaxTermLen} chars")
-        else {
-          val rows = graft.operators.TextQueries
-            .proximityMatchesFor(spark, dir, toks, span)
-            .orderBy(col("prox_tf").desc, col("doc_id"))
-            .limit(k).collect()
-            .map(r => Json.obj("doc_id" -> r.getLong(0),
-              "prox_tf" -> r.getLong(1)))
-          replyJson(ex, 200, Json.arr(rows.toIndexedSeq))
-        }
-      case ("GET", List("search"), Some(dir))
-          if qparam(ex, "prefix").isDefined =>
-        val p = qparam(ex, "prefix").get
-        val k = qparam(ex, "k").flatMap(_.toIntOption)
-          .getOrElse(10).min(100).max(1)
-        if (p.isEmpty) reply(ex, 400, "missing or empty prefix parameter")
-        // prefix is its own arm — combining it with any retrieval
-        // parameter is a client error, never a silent drop
-        else if (Seq("q", "phrase", "like", "near", "span", "unit",
-            "snippet", "nprobe", "index", "radius", "rerank", "label")
-            .exists(qparam(ex, _).isDefined))
-          reply(ex, 400, "prefix cannot combine with other search parameters")
-        else if (p.length > RestService.SearchMaxTermLen ||
-            p.exists(_.isWhitespace))
-          reply(ex, 400, s"prefix is one token fragment of at most " +
-            s"${RestService.SearchMaxTermLen} chars")
-        else {
-          val rows = graft.operators.TextQueries
-            .prefixVocabFor(spark, dir, p)
-            .orderBy(col("df").desc, col("token"))
-            .limit(k).collect()
-            .map(r => Json.obj("token" -> r.getString(0),
-              "df" -> r.getLong(1), "n_occ" -> r.getLong(2)))
-          replyJson(ex, 200, Json.arr(rows.toIndexedSeq))
-        }
-      case ("GET", List("search"), Some(dir))
-          if qparam(ex, "phrase").isDefined =>
-        // ORDER PRESERVED and duplicates KEPT — "a b a" and "a a b"
-        // are different phrases; x144's probe aligns positions by
-        // in-phrase index, so the raw token sequence is the input
-        val toks = qparam(ex, "phrase").toSeq
-          .flatMap(_.split("\\s+")).filter(_.nonEmpty)
-        val k = qparam(ex, "k").flatMap(_.toIntOption)
-          .getOrElse(10).min(100).max(1)
-        if (toks.isEmpty) reply(ex, 400, "missing or empty phrase parameter")
-        else if (qparam(ex, "q").isDefined ||
-            qparam(ex, "unit").exists(_ != "doc"))
-          reply(ex, 400, "phrase cannot combine with q or a non-doc unit")
-        else if (qparam(ex, "nprobe").isDefined)
-          reply(ex, 400, "nprobe requires like")
-        else if (qparam(ex, "index").isDefined ||
-            qparam(ex, "radius").isDefined ||
-            qparam(ex, "rerank").isDefined ||
-            qparam(ex, "label").isDefined)
-          reply(ex, 400, "index/radius/rerank/label require like")
-        else if (qparam(ex, "span").isDefined)
-          reply(ex, 400, "span requires near")
-        else if (toks.size > RestService.SearchMaxTerms ||
-            toks.exists(_.length > RestService.SearchMaxTermLen))
-          reply(ex, 400, s"phrase is limited to ${RestService.SearchMaxTerms} " +
-            s"tokens of at most ${RestService.SearchMaxTermLen} chars")
-        else {
-          val ranked = graft.operators.TextQueries
-            .phraseMatchesFor(spark, dir, toks)
-            .orderBy(col("phrase_tf").desc, col("doc_id"))
-            .limit(k)
-          if (qparam(ex, "snippet").contains("1")) {
-            // best window of the phrase's distinct terms per hit doc;
-            // the k-row ranked side joins against the O(matching docs)
-            // window frame — inner by construction (a phrase hit is a
-            // term hit), left for schema honesty
-            val rows = ranked
-              .join(graft.operators.TextQueries
-                .bestWindowFor(spark, dir, toks.distinct),
-                Seq("doc_id"), "left")
-              .orderBy(col("phrase_tf").desc, col("doc_id"))
-              .collect()
-              .map(r => Json.obj("doc_id" -> r.getLong(0),
-                "phrase_tf" -> r.getLong(1),
-                "win_start" -> (if (r.isNullAt(2)) null else r.getLong(2)),
-                "win_hits" -> (if (r.isNullAt(3)) null else r.getLong(3))))
-            replyJson(ex, 200, Json.arr(rows.toIndexedSeq))
-          } else {
-            val rows = ranked.collect()
-              .map(r => Json.obj("doc_id" -> r.getLong(0),
-                "phrase_tf" -> r.getLong(1)))
-            replyJson(ex, 200, Json.arr(rows.toIndexedSeq))
-          }
-        }
       case ("GET", List("search"), Some(dir)) =>
-        // qparam already URL-decodes ('+' and %XX) — decoding again
-        // here would corrupt literal '+'/'%' terms (review-caught).
-        // Duplicate terms are score no-ops (the scorer keys tf by
-        // token), dropped for a cleaner isin.
-        val terms = qparam(ex, "q").toSeq
-          .flatMap(_.split("\\s+"))
-          .filter(_.nonEmpty).distinct
-        val k = qparam(ex, "k").flatMap(_.toIntOption)
-          .getOrElse(10).min(100).max(1)
-        if (terms.isEmpty) reply(ex, 400, "missing or empty q parameter")
-        // the term list binds into the plan as isin literals — bound
-        // user input like /query bounds limit (an unbounded q would
-        // build a pathological plan and, on the single-threaded JDK
-        // server, stall every other route while it runs)
-        else if (terms.size > RestService.SearchMaxTerms ||
-            terms.exists(_.length > RestService.SearchMaxTermLen))
-          reply(ex, 400, s"q is limited to ${RestService.SearchMaxTerms} " +
-            s"terms of at most ${RestService.SearchMaxTermLen} chars")
-        // a malformed or inapplicable parameter is a 400, never a
-        // silent fall-through (the nprobe/phrase rule): a lexical-only
-        // search has no probe width, and the chunk arm has no snippet
-        else if (qparam(ex, "nprobe").isDefined)
-          reply(ex, 400, "nprobe requires like")
-        else if (qparam(ex, "index").isDefined ||
-            qparam(ex, "radius").isDefined ||
-            qparam(ex, "rerank").isDefined ||
-            qparam(ex, "label").isDefined)
-          reply(ex, 400, "index/radius/rerank/label require like")
-        else if (qparam(ex, "span").isDefined)
-          reply(ex, 400, "span requires near")
-        else if (qparam(ex, "snippet").isDefined &&
-            qparam(ex, "unit").exists(_ == "chunk"))
-          reply(ex, 400, "snippet is not supported with unit=chunk")
-        else qparam(ex, "unit").getOrElse("doc") match {
-          case "doc" =>
-            val ranked = graft.operators.TextQueries
-              .bm25ScoredFor(spark, dir, terms)
-              .orderBy(col("score").desc, col("doc_id"))
-              .limit(k)
-            if (qparam(ex, "snippet").contains("1")) {
-              // x145's probe: the densest 32-token window per result
-              // doc — a second positional-postings probe joined to
-              // the k ranked rows (inner by construction: a scored
-              // doc has ≥1 term hit; left for schema honesty)
-              val rows = ranked
-                .join(graft.operators.TextQueries
-                  .bestWindowFor(spark, dir, terms),
-                  Seq("doc_id"), "left")
-                .orderBy(col("score").desc, col("doc_id"))
-                .collect()
-                .map(r => Json.obj("doc_id" -> r.getLong(0),
-                  "score" -> r.getDouble(1),
-                  "win_start" -> (if (r.isNullAt(2)) null else r.getLong(2)),
-                  "win_hits" -> (if (r.isNullAt(3)) null else r.getLong(3))))
-              replyJson(ex, 200, Json.arr(rows.toIndexedSeq))
-            } else {
-              val rows = ranked.collect()
-                .map(r => Json.obj("doc_id" -> r.getLong(0),
-                  "score" -> r.getDouble(1)))
-              replyJson(ex, 200, Json.arr(rows.toIndexedSeq))
+        val p = RestService.SearchParams
+          .flatMap(n => qparam(ex, n).map(n -> _)).toMap
+        val arm = RestService.searchArm(p)
+        // a label filter needs label metadata in the corpus: a 400 up
+        // front, not a missing-column 500 later
+        RestService.searchError(arm, p).orElse(Option.when(
+            p.contains("label") && !PqQueries.hasLabels(spark, dir))(
+            "corpus has no label metadata")) match {
+          case Some(err) => reply(ex, 400, err)
+          case None =>
+            val k = p.get("k").flatMap(_.toIntOption)
+              .getOrElse(10).min(100).max(1)
+            def int(n: String, absent: => Int): Int =
+              p.get(n).fold(absent)(_.toInt)
+            // duplicate q terms are score no-ops (tf is keyed by
+            // token); phrase and near keep order and duplicates
+            // ("a b a" is a chain of three)
+            val q = RestService.searchTerms(p.getOrElse("q", "")).distinct
+            def toks(n: String) = RestService.searchTerms(p(n))
+            lazy val vid = p("like").toLong
+            // absent = the measured-recall serving policy (retuneIvf);
+            // ivfKnn clamps to the cell count
+            val nprobe = int("nprobe", -1).min(1024)
+            // the depth floors at k: the candidate set IS depth rows,
+            // so a smaller depth would silently truncate the response
+            def rerank =
+              int("rerank", PqQueries.pqServingRerank(dir)).min(1024).max(k)
+            val byCos = Seq("cos", "vec_id")
+            try {
+              val (found, order) = arm match {
+                case "bm25" => (TextQueries.bm25ScoredFor(spark, dir, q),
+                  Seq("score", "doc_id"))
+                case "chunk" => (CurationQueries.chunkBm25For(spark, dir, q),
+                  Seq("score", "doc_id", "chunk_id"))
+                case "phrase" => (TextQueries.phraseMatchesFor(spark, dir,
+                  toks("phrase")), Seq("phrase_tf", "doc_id"))
+                case "near" => (TextQueries.proximityMatchesFor(spark, dir,
+                  toks("near"), int("span", 8)), Seq("prox_tf", "doc_id"))
+                case "prefix" => (TextQueries.prefixVocabFor(spark, dir,
+                  p("prefix")), Seq("df", "token"))
+                // x128's RRF combiner: terms-bound BM25 × vec_id-bound IVF
+                case "hybrid" => (CurationQueries.rrfFused(
+                  TextQueries.bm25ScoredFor(spark, dir, q),
+                  VectorQueries.ivfKnn(spark, dir, vid, nprobe)
+                    .select(col("vec_id").as("doc_id"), col("cos"))),
+                  Seq("rrf", "doc_id"))
+                case "srp" => (VectorQueries.srpKnn(spark, dir, vid,
+                  int("radius", -1)), byCos)
+                case "pq" => (PqQueries.pqKnn(spark, dir, vid, rerank), byCos)
+                case "ivfadc" => (PqQueries.ivfadcKnn(spark, dir, vid, nprobe,
+                  rerank, p.get("label").map(_.toInt)), byCos)
+                case _ => (VectorQueries.ivfKnn(spark, dir, vid, nprobe), byCos)
+              }
+              val ranking = col(order.head).desc +: order.tail.map(col)
+              val top = found.orderBy(ranking: _*).limit(k)
+              // x145's densest 32-token window per hit, joined to the k
+              // ranked rows (inner by construction: every hit has a
+              // term hit; left for schema honesty)
+              val shown =
+                if (!p.get("snippet").contains("1")) top
+                else top.join(TextQueries.bestWindowFor(spark, dir,
+                    (if (arm == "phrase") toks("phrase") else q).distinct),
+                  Seq("doc_id"), "left").orderBy(ranking: _*)
+              replyJson(ex, 200,
+                Json.arr(shown.collect().toIndexedSeq.map(Json.row)))
+            } catch {
+              case e: NoSuchElementException if p.contains("like") =>
+                reply(ex, 404, e.getMessage)
             }
-          case "chunk" =>
-            val rows = graft.operators.CurationQueries
-              .chunkBm25For(spark, dir, terms)
-              .orderBy(col("score").desc, col("doc_id"), col("chunk_id"))
-              .limit(k).collect()
-              .map(r => Json.obj("doc_id" -> r.getLong(0),
-                "chunk_id" -> r.getLong(1), "score" -> r.getDouble(2)))
-            replyJson(ex, 200, Json.arr(rows.toIndexedSeq))
-          case other => reply(ex, 400, s"unknown unit: $other")
         }
       case _ => reply(ex, 404, "Not Found")
     }
@@ -1090,6 +759,87 @@ object RestService {
   val SearchMaxTerms = 32
   val SearchMaxTermLen = 64
 
+  /** The /search arms, each with the parameters it accepts and one
+    * value check per parameter. The first parameter listed is the
+    * arm's key and must be present; every arm takes k (default 10,
+    * clamped to [1, 100]).
+    *
+    *   bm25    q=<terms>[&snippet=1]       doc-level BM25 (x94); snippet
+    *                                       adds x145's best window
+    *   chunk   q=<terms>&unit=chunk        chunk-level BM25 (x133)
+    *   phrase  phrase=<terms>[&snippet=1]  exact adjacency (x144)
+    *   near    near=<terms>[&span=S]       ordered proximity within
+    *                                       span+1 tokens (x147), span 8
+    *   prefix  prefix=<p>                  vocabulary by prefix (x146)
+    *   ivf     like=<vec_id>[&nprobe=N]    stored-IVF more-like-this
+    *                                       (x20)
+    *   srp     like=&index=srp[&radius=R]  SRP multi-probe (x11)
+    *   pq      like=&index=pq[&rerank=R]   ADC top-R, exact re-rank
+    *   ivfadc  like=&index=ivfadc[&nprobe=&rerank=&label=L]
+    *                                       probe + ADC + re-rank (x152),
+    *                                       label pre-filter (x153)
+    *   hybrid  q=<terms>&like=<vec_id>     RRF of bm25 and ivf (x128)
+    *
+    * An absent nprobe, radius or rerank means the measured-recall pick
+    * of retuneIvf, retuneSrp or retunePq. unit=doc and index=ivf may be
+    * spelled out where they are the arm's own. label also needs label
+    * metadata in the corpus, which routeSearch checks. */
+  val SearchArms: Map[String, ListMap[String, String => Boolean]] = {
+    val any: String => Boolean = _ => true
+    def is(v: String): String => Boolean = _ == v
+    def int(lo: Int, hi: Int = Int.MaxValue): String => Boolean =
+      _.toIntOption.exists(i => i >= lo && i <= hi)
+    // terms bind into the plan as isin literals: bounded input, like
+    // /query's limit
+    def bounded(ts: Seq[String], min: Int) = ts.size >= min &&
+      ts.size <= SearchMaxTerms && ts.forall(_.length <= SearchMaxTermLen)
+    def terms(min: Int): String => Boolean = v => bounded(searchTerms(v), min)
+    val q = "q" -> ((v: String) => bounded(searchTerms(v).distinct, 1))
+    val like = "like" -> ((v: String) => v.toLongOption.isDefined)
+    val (k, doc, snippet) = ("k" -> any, "unit" -> is("doc"), "snippet" -> any)
+    val (nprobe, rerank) = ("nprobe" -> int(1), "rerank" -> int(1))
+    Map(
+      "bm25" -> ListMap(q, k, doc, snippet),
+      "chunk" -> ListMap(q, k, "unit" -> is("chunk")),
+      "phrase" -> ListMap("phrase" -> terms(1), k, doc, snippet),
+      "near" -> ListMap("near" -> terms(2), k, "span" -> int(1, 256)),
+      "prefix" -> ListMap("prefix" -> ((v: String) => v.nonEmpty &&
+        v.length <= SearchMaxTermLen && !v.exists(_.isWhitespace)), k),
+      "ivf" -> ListMap(like, k, doc, "index" -> is("ivf"), nprobe),
+      "srp" -> ListMap(like, k, doc, "index" -> is("srp"), "radius" -> int(0)),
+      "pq" -> ListMap(like, k, doc, "index" -> is("pq"), rerank),
+      "ivfadc" -> ListMap(like, k, doc, "index" -> is("ivfadc"), nprobe, rerank,
+        "label" -> int(Int.MinValue)),
+      "hybrid" -> ListMap(like, q, k, doc, "index" -> is("ivf"), nprobe))
+  }
+  private[api] val SearchParams: Set[String] =
+    SearchArms.values.flatMap(_.keys).toSet
+
+  private[api] def searchTerms(v: String): Seq[String] =
+    v.split("\\s+").toSeq.filter(_.nonEmpty)
+
+  /** The arm a /search request runs: like first (hybrid with a
+    * non-empty q, else the dense family its index names), then near,
+    * prefix, phrase, and last q, split by unit. */
+  private[api] def searchArm(p: Map[String, String]): String =
+    if (p.contains("like"))
+      if (p.get("q").exists(searchTerms(_).nonEmpty)) "hybrid"
+      else p.get("index").filter(Set("srp", "pq", "ivfadc")).getOrElse("ivf")
+    else Seq("near", "prefix", "phrase").find(p.contains)
+      .getOrElse(if (p.get("unit").contains("chunk")) "chunk" else "bm25")
+
+  /** Why `arm` refuses the search parameters `p`, if it does. */
+  private[api] def searchError(arm: String,
+      p: Map[String, String]): Option[String] = {
+    val accepts = SearchArms(arm)
+    val key = accepts.head._1
+    p.keys.find(!accepts.contains(_))
+      .map(n => s"$n does not apply to a $arm search")
+      .orElse(Option.when(!p.contains(key))(s"missing $key parameter"))
+      .orElse(p.collectFirst { case (n, v) if !accepts(n)(v) =>
+        s"invalid $n for a $arm search: $v" })
+  }
+
   /** Request-handler pool size: enough that interactive reads never
     * queue behind one slow request, small enough that concurrent
     * Spark jobs can't starve the executors (local scheduling is FAIR
@@ -1142,4 +892,6 @@ private object Json {
     fields.map { case (k, v) => "\"" + k + "\":" + value(v) }
       .mkString("{", ",", "}")
   def arr(items: Seq[String]): String = items.mkString("[", ",", "]")
+  /** A row as an object of its column names and values. */
+  def row(r: Row): String = obj(r.schema.fieldNames.toSeq.zip(r.toSeq): _*)
 }

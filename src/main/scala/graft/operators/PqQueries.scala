@@ -435,24 +435,12 @@ object PqQueries {
     VectorQueries.gridRecallFrame(s, d, q, scored, depths, "rerank_depth")
   }
 
-  // Per-corpus-dir serving re-rank depth, default 10 (pure ADC
-  // ranking — the depth at which re-ranking top-k cannot reorder
-  // beyond it) until a [[retunePq]] run picks one from the measured
-  // curve. Same fingerprint-pinning rule as servingProbeWidth /
-  // servingRadius.
-  private val servingRerank =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  /** The re-rank depth `/search?like=&index=pq` serves `d` at —
-    * pinned to the corpus version it was measured on; any corpus
-    * change reverts to the default until the next retune. */
+  /** The re-rank depth `/search?like=&index=pq` serves `d` at: 10
+    * (pure ADC ranking — the depth at which re-ranking top-k cannot
+    * reorder beyond it) until a [[retunePq]] run picks one from the
+    * measured curve ([[StoredIndexes.servingKnob]]). */
   private[graft] def pqServingRerank(d: String): Int =
-    Option(servingRerank.get(d)) match {
-      case Some((fp, r))
-        if fp == StoredIndexes.fingerprint(d, "embeddings.parquet") =>
-        r.toInt
-      case _ => 10
-    }
+    StoredIndexes.servingKnob(d, "pq_rerank", 10)
 
   /** Audit-driven PQ retune — retuneIvf/retuneSrp's sibling for the
     * third ANN family: re-measures the re-rank curve on the CURRENT
@@ -468,8 +456,7 @@ object PqQueries {
       .collectFirst { case row if row.getDouble(2) >= floor =>
         row.getLong(0) }
       .getOrElse(curve.last.getLong(0))
-    servingRerank.put(d,
-      (StoredIndexes.fingerprint(d, "embeddings.parquet"), r))
+    StoredIndexes.setServingKnob(d, "pq_rerank", r.toInt)
     r
   }
 

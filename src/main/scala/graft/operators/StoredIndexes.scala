@@ -80,6 +80,29 @@ private[graft] object StoredIndexes {
     }
   }
 
+  // Measured serving knobs (the IVF probe width, the SRP radius, the
+  // PQ re-rank depth) per (corpus dir, knob), each pinned to the
+  // embeddings fingerprint it was measured on: any corpus change —
+  // rewrite OR append-only ingest — reverts the knob to its default
+  // until the next retune, because a value tuned on one geometry says
+  // nothing about another. The check is a file-metadata walk, the
+  // cost every stored-index probe already pays.
+  private val servingKnobs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Int)]()
+
+  /** `knob`'s serving value for `dir`: the last [[setServingKnob]]
+    * while the corpus is unchanged since, else `default`. */
+  def servingKnob(dir: String, knob: String, default: Int): Int =
+    Option(servingKnobs.get((dir, knob))) match {
+      case Some((fp, v)) if fp == fingerprint(dir, "embeddings.parquet") => v
+      case _ => default
+    }
+
+  def setServingKnob(dir: String, knob: String, value: Int): Unit = {
+    servingKnobs.put((dir, knob), (fingerprint(dir, "embeddings.parquet"), value))
+    ()
+  }
+
   /** Per-DATA-file signature (relative path → "size|mtime") of the
     * parquet files backing `dir/file`; metadata files (`_SUCCESS`,
     * dot-files) are excluded because append jobs legitimately rewrite

@@ -359,22 +359,11 @@ object VectorQueries {
     gridRecallFrame(s, d, q, scored, (0L to maxR.toLong), "radius")
   }
 
-  // Per-corpus-dir SRP serving radius, default 0 (x11's single-bucket
-  // probe) until a [[retuneSrp]] run picks one from the measured
-  // curve. Same fingerprint-pinning rule as [[servingProbeWidth]].
-  private val servingRadius =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
-
-  /** The probe radius `/search?like=&index=srp` serves `d` at. Pinned
-    * to the corpus version it was measured on — any corpus change
-    * reverts to the default until the next retune (the
-    * [[servingProbeWidth]] doctrine). */
+  /** The probe radius `/search?like=&index=srp` serves `d` at: 0
+    * (x11's single-bucket probe) until a [[retuneSrp]] run picks one
+    * from the measured curve ([[StoredIndexes.servingKnob]]). */
   private[graft] def srpServingRadius(d: String): Int =
-    Option(servingRadius.get(d)) match {
-      case Some((fp, r))
-        if fp == StoredIndexes.fingerprint(d, "embeddings.parquet") => r
-      case _ => 0
-    }
+    StoredIndexes.servingKnob(d, "srp_radius", 0)
 
   /** Audit-driven SRP retune — [[retuneIvf]]'s sibling for the second
     * ANN family: re-measures the radius curve on the CURRENT index
@@ -392,8 +381,7 @@ object VectorQueries {
       .collectFirst { case row if row.getDouble(2) >= floor =>
         row.getLong(0).toInt }
       .getOrElse(K)
-    servingRadius.put(d,
-      (StoredIndexes.fingerprint(d, "embeddings.parquet"), r))
+    StoredIndexes.setServingKnob(d, "srp_radius", r)
     r
   }
 
@@ -444,30 +432,13 @@ object VectorQueries {
   }
 
   // ------------------------------------------------ IVF serving policy
-  // Per-corpus-dir serving probe width, default NProbe until a
-  // [[retuneIvf]] run picks one from the MEASURED recall curve — the
-  // r16 verdict's ask #2: x137 measured recall@10 at the fixed
-  // serving width and nothing consumed the number. The declared x20
-  // stays pinned at the oracle-replayed NProbe; the SERVING endpoint
-  // reads this policy.
-  private val servingWidth =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
-
-  /** The probe width `/search?like=` serves `dir` at (policy-set by
-    * [[retuneIvf]], NProbe until then). The pick is PINNED to the
-    * corpus version it was measured on: any corpus change — rewrite
-    * OR append-only ingest — reverts to the default until the next
-    * retune, because a width tuned on one geometry says nothing about
-    * another (the StoredIndexes stale-derived-state doctrine;
-    * review-caught — the first cut kept serving the old pick across a
-    * silent fingerprint rebuild). The check is a file-metadata walk,
-    * the same cost class every stored-index probe already pays. */
+  /** The probe width `/search?like=` serves `d` at: NProbe until a
+    * [[retuneIvf]] run picks one from the MEASURED recall curve
+    * ([[StoredIndexes.servingKnob]]). The declared x20 stays pinned at
+    * the oracle-replayed NProbe; the SERVING endpoint reads this
+    * policy. */
   private[graft] def servingProbeWidth(d: String): Int =
-    Option(servingWidth.get(d)) match {
-      case Some((fp, w))
-        if fp == StoredIndexes.fingerprint(d, "embeddings.parquet") => w
-      case _ => NProbe
-    }
+    StoredIndexes.servingKnob(d, "ivf_nprobe", NProbe)
 
   /** (vec_id, cos): exact-cosine re-rank inside the `nProbe` nearest
     * stored IVF cells for corpus vector `queryId` — x20's probe shape
@@ -567,8 +538,7 @@ object VectorQueries {
         (pick().getOrElse(maxProbe), true)
     }
     // pin the pick to the corpus version the curve was measured on
-    servingWidth.put(d,
-      (StoredIndexes.fingerprint(d, "embeddings.parquet"), w))
+    StoredIndexes.setServingKnob(d, "ivf_nprobe", w)
     (w, rebuilt)
   }
   private val Dim = VectorIndex.Dim

@@ -172,16 +172,6 @@ final class IngestionFlows(spark: SparkSession, store: TableStore,
         store.replace("text_fps",
           graft.operators.DedupQueries.fpQualityOf(corpus))
       }
-      // same migration class for a chunks table persisted before the
-      // ck_md5 content key: first contact REBUILDS it from the corpus
-      // (schema-evolving the append alone would leave every legacy
-      // row with a null key, silently breaking the stored-chunks ==
-      // chunkRowsOf(documents) parity and x132's dedup groups)
-      if (chunkStore && store.exists("chunks") &&
-        !store.load("chunks").columns.contains("ck_md5"))
-        store.replace("chunks",
-          graft.operators.CurationQueries.chunkRowsOf(
-            store.load("documents").select(col("doc_id"), col("text"))))
       // which of the batch are genuinely new: a doc is settled once its
       // VERDICT is logged — the ingest_log is written LAST, so a batch
       // that crashed mid-way (corpus appended, derived writes lost)

@@ -102,13 +102,14 @@ object MergeOps {
     *
     * Returns (updated inventario, admission log with `admitted` flag).
     *
-    * Implementation: typed `cogroup` on the event key — both sides
-    * shuffle once, then each key folds in plain Scala (O(n) per key,
-    * JIT-compiled). This is the textbook case for dropping out of
-    * Catalyst: a data-dependent running fold that emits a per-element
-    * decision log has no efficient expression form (an `aggregate`
-    * fold that appends to an array accumulator is O(n²) in copies —
-    * measured 30 s for 600k requests where this cogroup takes ~2 s).
+    * Implementation: both sides as one tagged union, shuffled once on
+    * the event key, then each key folds in plain Scala
+    * ([[foldAdmitPartition]], O(n) per key, JIT-compiled). This is the
+    * textbook case for dropping out of Catalyst: a data-dependent
+    * running fold that emits a per-element decision log has no
+    * efficient expression form (an `aggregate` fold that appends to an
+    * array accumulator is O(n²) in copies — measured 30 s for 600k
+    * requests where the typed cogroup form took ~2 s).
     * Per-key serialization is the semantic the reference relies on;
     * cross-key parallelism is what it never had. */
   /** Typed fold records — top-level-object case classes so their
@@ -116,7 +117,6 @@ object MergeOps {
     * the Row-based first cut of this fold cost ~10× in the bench). */
   final case class AdmitReq(id: String, evento: String, email: String,
       cantidad: Int, seq: Long)
-  final case class InvKeyState(nombre: String, capacidad: Int, estado: String)
   /** Flat fold output — one row per request. Flat rows (vs a per-key
     * nested log array) keep the output encoder a cheap product
     * encoder. */
@@ -157,16 +157,19 @@ object MergeOps {
       estado: String, id: String, email: String, cantidad: Int, seq: Long)
 
   /** The per-partition admission fold over key-clustered, side-ordered
-    * [[AdmitMerge]] rows (inv rows of a key first, then its requests —
-    * the upstream sort guarantees it). Semantics are EXACTLY the r9
-    * cogroup fold's: requests of a key sort by [[AdmitReqOrder]] (the
-    * ONE admission ordering — deliberately NOT the Catalyst sort,
-    * whose UTF8String binary order diverges from String.compareTo on
-    * non-ASCII ids, and cross-engine order agreement with
-    * StatefulAdmission matters more than one in-fold sort); each
-    * inventario row of the key replays the whole request sequence
-    * against its own capacity; keys missing either side emit nothing
-    * (unknownEventRequests surfaces the no-inventario ones). */
+    * [[AdmitMerge]] rows (a key's inventario row first, then its
+    * requests — the upstream sort guarantees it). Requests of a key
+    * sort by [[AdmitReqOrder]] (the ONE admission ordering —
+    * deliberately NOT the Catalyst sort, whose UTF8String binary order
+    * diverges from String.compareTo on non-ASCII ids, and cross-engine
+    * order agreement with StatefulAdmission matters more than one
+    * in-fold sort) and fold against the key's capacity; keys missing
+    * either side emit nothing (unknownEventRequests surfaces the
+    * no-inventario ones). inventario is unique on `nombre` (every
+    * writer appends keyed on it, like the reference's unique index),
+    * so a second inventario row for a key throws
+    * IllegalStateException naming the key rather than guessing which
+    * row's capacity admits. */
   private[tables] def foldAdmitPartition(
       rows: Iterator[AdmitMerge]): Iterator[AdmitOut] = {
     val it = rows.buffered
@@ -176,49 +179,26 @@ object MergeOps {
         val k = it.head.k
         @inline def same(r: AdmitMerge): Boolean =
           if (k == null) r.k == null else k == r.k
-        // inventario states of this key (side 0 sorts first; almost
-        // always exactly one row — keep the >1 path allocation-lazy)
-        var nInv = 0
-        var invHead: InvKeyState = null
-        var invMore: scala.collection.mutable.ArrayBuffer[InvKeyState] = null
-        while (it.hasNext && same(it.head) && it.head.side == 0) {
-          val r = it.next()
-          val st = InvKeyState(r.k, r.capacidad, r.estado)
-          if (nInv == 0) invHead = st
-          else {
-            if (invMore == null)
-              invMore = new scala.collection.mutable.ArrayBuffer[InvKeyState](2)
-            invMore += st
-          }
-          nInv += 1
-        }
+        val inv = if (it.head.side == 0) it.next() else null
+        if (inv != null && it.hasNext && same(it.head) && it.head.side == 0)
+          throw new IllegalStateException(
+            s"inventario has more than one row for nombre '$k'")
         val reqB = new scala.collection.mutable.ArrayBuffer[AdmitReq](8)
         while (it.hasNext && same(it.head)) {
           val r = it.next()
           reqB += AdmitReq(r.id, k, r.email, r.cantidad, r.seq)
         }
-        if (nInv == 0 || reqB.isEmpty) Array.empty
+        if (inv == null || reqB.isEmpty) Array.empty
         else {
           val arr = reqB.toArray
           if (arr.length > 1) java.util.Arrays.sort(arr, AdmitReqOrder)
-          val out = new Array[AdmitOut](arr.length * nInv)
-          var v = 0
-          while (v < nInv) {
-            val st = if (v == 0) invHead else invMore(v - 1)
-            var cap = st.capacidad.toLong
-            val active = st.estado == "A"
-            val base = v * arr.length
-            var i = 0
-            while (i < arr.length) {
-              val r = arr(i)
-              val ok = active && (r.cantidad <= 0 || cap >= r.cantidad)
-              if (ok) cap -= r.cantidad
-              out(base + i) = AdmitOut(r.id, k, r.email, r.cantidad, ok, r.seq)
-              i += 1
-            }
-            v += 1
+          var cap = inv.capacidad.toLong
+          val active = inv.estado == "A"
+          arr.map { r =>
+            val ok = active && (r.cantidad <= 0 || cap >= r.cantidad)
+            if (ok) cap -= r.cantidad
+            AdmitOut(r.id, k, r.email, r.cantidad, ok, r.seq)
           }
-          out
         }
       }
     }.flatMap(_.iterator)

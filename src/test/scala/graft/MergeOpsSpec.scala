@@ -84,6 +84,21 @@ class MergeOpsSpec extends AnyFunSuite {
     assert(caps.sum + admittedSum === 13)
   }
 
+  test("admitReservations: a duplicated inventario key fails, naming the key") {
+    // inventario is unique on nombre; a second row for a key is a
+    // corrupt table, not a second capacity to admit against
+    val i = inv(("1", "a", 5, "Op", "A"), ("2", "a", 9, "Op", "A"),
+      ("3", "b", 2, "Op", "A"))
+    val reqs = Seq(("ra1", "a", "x@y", 1, 1L), ("rb1", "b", "z@y", 1, 1L))
+      .toDF("id", "evento", "email", "cantidad", "seq")
+    val (_, log) = MergeOps.admitReservations(i, reqs)
+    val e = intercept[Exception](log.collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString("\n")
+    assert(chain.contains("IllegalStateException") &&
+      chain.contains("more than one row for nombre 'a'"), chain)
+  }
+
   test("unknownEventRequests finds requests with no inventario row") {
     val i = inv(("1", "a", 5, "Op", "A"))
     val reqs = Seq(("r1", "a", "x", 1, 1L), ("r2", "zz", "x", 1, 2L))

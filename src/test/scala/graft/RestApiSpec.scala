@@ -688,6 +688,12 @@ class RestApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(http("GET", "/search?phrase=a&index=srp")._1 === 400)
     assert(http("GET", "/search?prefix=s&index=srp")._1 === 400)
     assert(http("GET", "/search?near=a+b&radius=1")._1 === 400)
+    // a parameter of another arm is a 400 on every arm, not only on
+    // the arms that happened to list it: span on the dense and hybrid
+    // arms, snippet on near
+    assert(http("GET", "/search?like=7&span=3")._1 === 400)
+    assert(http("GET", "/search?q=hash&like=7&span=3")._1 === 400)
+    assert(http("GET", "/search?near=a+b&snippet=1")._1 === 400)
   }
 
   test("GET /search?like=&index=pq serves the ADC-then-re-rank arm") {
