@@ -394,16 +394,15 @@ final class RestService(spark: SparkSession, store: TableStore,
   // (bm25ScoredFor, ivfKnn, … — one definition with the benchmark, so
   // the endpoint cannot drift from it). RestService.SearchArms lists
   // each arm and the parameters it accepts; the request's arm is picked
-  // once (searchArm), and a parameter outside the arm's set, a value
-  // its check refuses or a missing key parameter is a 400, never a
-  // silent fall-through. Ranking is (score desc, id…); k is capped like
-  // /query's limit.
+  // once (searchArm), and a parameter no arm knows, one outside the
+  // arm's set, a value its check refuses or a missing key parameter is
+  // a 400, never a silent fall-through. Ranking is (score desc, id…);
+  // k is capped like /query's limit.
   private def routeSearch(ex: HttpExchange): Unit =
     (ex.getRequestMethod, segments(ex), analyticsDir) match {
       case (_, _, None) => reply(ex, 404, "analytics surface not enabled")
       case ("GET", List("search"), Some(dir)) =>
-        val p = RestService.SearchParams
-          .flatMap(n => qparam(ex, n).map(n -> _)).toMap
+        val p = queryParams(ex)
         val arm = RestService.searchArm(p)
         // a label filter needs label metadata in the corpus: a 400 up
         // front, not a missing-column 500 later
@@ -483,11 +482,17 @@ final class RestService(spark: SparkSession, store: TableStore,
   // /query; the CDC fast path stays O(delta) end-to-end.
   // decode from the RAW query: URI.getQuery already resolves %XX, so
   // decoding it again turns an escaped literal '+' (%2B) into a space
-  // and throws on an escaped '%' — split the raw string, decode once
+  // and throws on an escaped '%' — split the raw string, decode once.
+  // A bare `name` has the value ""; a repeated name keeps its first.
+  private def queryParams(ex: HttpExchange): Map[String, String] =
+    Option(ex.getRequestURI.getRawQuery).toSeq.flatMap(_.split("&"))
+      .filter(_.nonEmpty).map { kv =>
+        val (n, v) = kv.span(_ != '=')
+        URLDecoder.decode(n, UTF_8) -> URLDecoder.decode(v.drop(1), UTF_8)
+      }.groupMapReduce(_._1)(_._2)((first, _) => first)
+
   private def qparam(ex: HttpExchange, name: String): Option[String] =
-    Option(ex.getRequestURI.getRawQuery).flatMap(_.split("&")
-      .collectFirst { case p if p.startsWith(name + "=") =>
-        URLDecoder.decode(p.drop(name.length + 1), UTF_8) })
+    queryParams(ex).get(name)
 
   private def rowLimit(ex: HttpExchange): Int =
     qparam(ex, "limit").flatMap(_.toIntOption)
@@ -783,7 +788,9 @@ object RestService {
     * An absent nprobe, radius or rerank means the measured-recall pick
     * of retuneIvf, retuneSrp or retunePq. unit=doc and index=ivf may be
     * spelled out where they are the arm's own. label also needs label
-    * metadata in the corpus, which routeSearch checks. */
+    * metadata in the corpus, which routeSearch checks. A query
+    * parameter that no arm lists (a mistyped `nprob`, or /query's
+    * `limit`) is refused by name. */
   val SearchArms: Map[String, ListMap[String, String => Boolean]] = {
     val any: String => Boolean = _ => true
     def is(v: String): String => Boolean = _ == v
@@ -833,8 +840,10 @@ object RestService {
       p: Map[String, String]): Option[String] = {
     val accepts = SearchArms(arm)
     val key = accepts.head._1
-    p.keys.find(!accepts.contains(_))
-      .map(n => s"$n does not apply to a $arm search")
+    p.keys.find(!SearchParams.contains(_))
+      .map(n => s"unknown search parameter $n")
+      .orElse(p.keys.find(!accepts.contains(_))
+        .map(n => s"$n does not apply to a $arm search"))
       .orElse(Option.when(!p.contains(key))(s"missing $key parameter"))
       .orElse(p.collectFirst { case (n, v) if !accepts(n)(v) =>
         s"invalid $n for a $arm search: $v" })

@@ -1,7 +1,10 @@
 package graft.tables
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, row_number}
 
@@ -122,6 +125,7 @@ final class TableStore(spark: SparkSession, root: String,
     Files.write(tmp, next.toString.getBytes)
     Files.move(tmp, pointer(name), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    handles.remove(name)
     // always-on retention GC (callers hold the write lock; vacuum's
     // synchronized re-enters). Only fires once the horizon is behind
     // us, so young tables pay nothing.
@@ -157,23 +161,49 @@ final class TableStore(spark: SparkSession, root: String,
     * through the union into every branch, so pruning is preserved.
     * Bucketed tables resolve through the session catalog — that is
     * where Spark keeps the CLUSTERED BY metadata that lets a join or
-    * aggregation on the bucket key skip its Exchange. */
+    * aggregation on the bucket key skip its Exchange. Other tables
+    * resolve once per version through the table's snapshot handle. */
   def load(name: String): DataFrame = {
     val v = currentVersion(name)
     require(v >= 0, s"table $name does not exist")
     loadVersion(name, v)
   }
 
+  /** Snapshot handle: the resolved frame of a table's current version,
+    * keyed by (version, manifest mtime). It holds metadata only — the
+    * analysed plan, its `HadoopFsRelation`s with their file listings
+    * and the schema — never rows. A published version is immutable, so
+    * while the key holds, a read reuses the handle instead of listing
+    * the segment dirs and inferring their schema again; each read gets
+    * a copy with fresh attribute ids ([[Bridge.freshRelations]]) so
+    * reads of one version still self-join. Any publish moves the
+    * version (and drops this instance's entry), and the next read
+    * replaces the entry: one entry per table. The mtime catches a
+    * table deleted and re-created at the same version by another
+    * instance. */
+  private final class Handle(val version: Int, val mtime: FileTime,
+      val frame: DataFrame)
+  private val handles = new ConcurrentHashMap[String, Handle]()
+  private val resolving = new ConcurrentHashMap[String, Object]()
+
   /** Time-travel read: bind to the snapshot AS OF version `v` (any
     * version still inside the vacuum horizon — reclaimed versions fail
     * with a pointed error, the Delta/Iceberg `VERSION AS OF` contract).
     * Bucketed snapshots whose session-catalog entry is gone re-register
-    * from the manifest's recorded spec exactly like [[load]] does. */
+    * from the manifest's recorded spec exactly like [[load]] does. The
+    * current version reads through the snapshot handle, older ones
+    * resolve afresh. */
   def loadVersion(name: String, v: Int): DataFrame = {
-    require(currentVersion(name) >= 0, s"table $name does not exist")
-    require(v >= 0 && Files.exists(tdir(name).resolve(s"m$v")),
+    val cur = currentVersion(name)
+    require(cur >= 0, s"table $name does not exist")
+    val m = tdir(name).resolve(s"m$v")
+    require(v >= 0 && Files.exists(m),
       s"table $name has no readable version $v (current " +
-        s"${currentVersion(name)}; older versions may have been vacuumed)")
+        s"$cur; older versions may have been vacuumed)")
+    val mtime = Files.getLastModifiedTime(m)
+    val held = handles.get(name)
+    if (v == cur && held != null && held.version == v && held.mtime == mtime)
+      return Bridge.freshRelations(held.frame)
     val lines = manifestLines(name, v)
     lines.find(_.startsWith("#bucketed=")) match {
       case Some(h) =>
@@ -212,10 +242,31 @@ final class TableStore(spark: SparkSession, root: String,
       case None =>
         val dirs = lines.filterNot(_.startsWith("#"))
           .map(s => tdir(name).resolve(s).toString)
-        readDirs(dirs, lines.exists(_.startsWith("#partitionBy=")),
-          recordedSchema(name, v))
+        def read() = readDirs(dirs,
+          lines.exists(_.startsWith("#partitionBy=")), recordedSchema(name, v))
+        if (v == cur) Bridge.freshRelations(handleFor(name, v, mtime)(read()))
+        else read()
     }
   }
+
+  /** The frame of `name`'s handle at (`v`, `mtime`), resolved with
+    * `read` when the table has none. Resolution runs under the table's
+    * lock, so reads racing on a newly published version resolve it once
+    * between them instead of once each; a hit never takes the lock. The
+    * entry is stored only while `v` is still current, so a read that
+    * lost a race with a publish leaves no stale entry behind. */
+  private def handleFor(name: String, v: Int, mtime: FileTime)(
+      read: => DataFrame): DataFrame =
+    resolving.computeIfAbsent(name, _ => new Object).synchronized {
+      val held = handles.get(name)
+      if (held != null && held.version == v && held.mtime == mtime) held.frame
+      else {
+        val frame = read
+        if (currentVersion(name) == v)
+          handles.put(name, new Handle(v, mtime, frame))
+        frame
+      }
+    }
 
   private def readDirs(dirs: Seq[String], partitioned: Boolean,
       recorded: Option[org.apache.spark.sql.types.StructType] = None)

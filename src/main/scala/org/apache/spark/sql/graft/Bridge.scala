@@ -2,7 +2,9 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Column ⇄ Expression bridge. Spark 4 narrowed these converters to
   * `private[sql]`; extension libraries (this one included) reach them
@@ -30,5 +32,27 @@ object Bridge {
     val cdf = df.asInstanceOf[org.apache.spark.sql.classic.DataFrame]
     cdf.sparkSession.internalCreateDataFrame(
       cdf.queryExecution.toRdd, cdf.schema)
+  }
+
+  /** A copy of `df` whose every `LogicalRelation` leaf is re-instanced
+    * with fresh attribute ids (and every reference above it rewritten
+    * to match), over the SAME resolved relations: their file listings
+    * and schemas are reused, nothing is listed, inferred or read. Two
+    * copies of one frame carry distinct ids, so they self-join like two
+    * independent reads would; handing out the one frame twice would
+    * make `a("id") === b("id")` compare an attribute with itself. The
+    * copy drops the Dataset-id tags it inherits: the tag's id set is
+    * shared by reference, so keeping it would stamp every copy's id on
+    * every other copy and make their columns look ambiguous in a join. */
+  def freshRelations(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val cdf = df.asInstanceOf[org.apache.spark.sql.classic.DataFrame]
+    val plan = cdf.queryExecution.analyzed.transformUpWithNewOutput {
+      case r: LogicalRelation =>
+        val n = r.newInstance()
+        n -> r.output.zip(n.output)
+    }
+    plan.foreach(_.unsetTagValue(classic.Dataset.DATASET_ID_TAG))
+    classic.Dataset.ofRows(cdf.sparkSession, plan)
   }
 }

@@ -3,10 +3,20 @@ package graft
 import graft.functions.expressions.{DecimalFns, DecimalSum128, DecimalSumFns,
   DecimalSumUtil, DecimalTimesCompact}
 import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{DataType, DecimalType}
 import org.scalatest.funsuite.AnyFunSuite
+
+/** A hand-built [[DecimalSum128]] whose result is DECIMAL(4,2): a
+  * result precision small enough that a few rows overflow it, which
+  * no real child type allows (the result is always p + 10 digits). */
+private final class NarrowDsum(c: Expression) extends DecimalSum128(c) {
+  override lazy val dataType: DataType = DecimalType(4, 2)
+  override protected def withNewChildrenInternal(
+      cs: IndexedSeq[Expression]): NarrowDsum = new NarrowDsum(cs.head)
+}
 
 /** [[DecimalSumFns.dsum]] must be VALUE- and TYPE-identical to the
   * built-in `sum` over decimals — including nulls (skipped; all-null
@@ -128,5 +138,32 @@ class DecimalSumSpec extends AnyFunSuite {
     import spark.implicits._
     val wide = Seq("1.50").toDF("s").select(col("s").cast("decimal(38,2)").as("v"))
     intercept[AnalysisException](wide.agg(DecimalSumFns.dsum(col("v"))).collect())
+  }
+
+  test("end to end: a narrow DecimalSum128 nulls on overflow like sum") {
+    import spark.implicits._
+    // per group, sums that fit DECIMAL(4,2) (60.00, the edge 99.99),
+    // sums one step past it (100.00) or far past it (150.00, -120.00),
+    // and an all-null group; 8 partitions exercise the merge path
+    val rows = Seq.fill(10)((0, "6.00")) ++ Seq.fill(11)((1, "9.09")) ++
+      Seq.fill(20)((2, "5.00")) ++ Seq.fill(20)((3, "7.50")) ++
+      Seq.fill(16)((4, "-7.50")) ++ Seq.fill(3)((5, null: String))
+    val df = rows.toDF("g", "s").repartition(8)
+      .select(col("g"), col("s").cast("decimal(3,2)").as("v"))
+    val narrow = Bridge.column(
+      new NarrowDsum(Bridge.expression(col("v"))).toAggregateExpression())
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val both = df.groupBy("g").agg(narrow.as("mine"),
+        sum(col("v")).cast("decimal(4,2)").as("builtin"))
+      assert(both.schema("mine").dataType === DecimalType(4, 2))
+      val got = both.orderBy("g").collect()
+        .map(r => (r.getInt(0), Option(r.getDecimal(1)).map(BigDecimal(_)),
+          Option(r.getDecimal(2)).map(BigDecimal(_)))).toSeq
+      assert(got.map(r => r._2) === Seq(Some(BigDecimal("60.00")),
+        Some(BigDecimal("99.99")), None, None, None, None))
+      assert(got.map(_._2) === got.map(_._3), "null-on-overflow parity")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 }

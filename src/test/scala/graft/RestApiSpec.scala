@@ -103,6 +103,20 @@ class RestApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c2 === 200 && t2.contains("\"Disponible\":27"))
   }
 
+  test("point reads on an unchanged store run one Spark job each") {
+    // the store's snapshot handle resolves each table version once: a
+    // warm point read lists no files and infers no schema, so the
+    // filtered collect is its only job
+    val inv = "/reservas/eventos/Opera%20Boheme"
+    val res = "/reservas/" + "0" * 23 + "1"
+    Seq(inv, res).foreach(http("GET", _))
+    val invJobs = TestSpark.jobTasks(spark)(
+      assert(http("GET", inv)._1 === 200))
+    assert(invJobs.size === 1, s"inventario point read jobs: $invJobs")
+    val resJobs = TestSpark.jobTasks(spark)(http("GET", res))
+    assert(resJobs.size === 1, s"reserva point read jobs: $resJobs")
+  }
+
   test("POST /reservas admits a covered request and decrements inventory") {
     val (code, bodyText) = http("POST", "/reservas",
       """{"Evento": "Opera Boheme", "Email": "new@x.com", "Cantidad": 2}""")
@@ -614,6 +628,16 @@ class RestApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(http("GET", "/search?q=&like=0")._1 === 400)
   }
 
+  test("a warm dense /search runs no wide job (no fwd partition discovery)") {
+    // the first request builds and retunes the index; the warm one
+    // reads the 64-bucket fwd table through the store's handle, so no
+    // 64-task listing job runs per request
+    assert(http("GET", "/search?like=3&k=5")._1 === 200)
+    val jobs = TestSpark.jobTasks(spark)(
+      assert(http("GET", "/search?like=5&k=5")._1 === 200))
+    assert(jobs.nonEmpty && jobs.max <= 8, s"task counts per job: $jobs")
+  }
+
   test("GET /search?like=&nprobe= overrides the probe width; full probe is exact") {
     // nprobe = Cells probes every cell, so the endpoint result IS
     // brute-force top-k — recomputed here driver-side from the raw
@@ -835,6 +859,13 @@ class RestApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(http("GET", "/search?q=")._1 === 400)
     assert(http("GET", "/search?q=hash&unit=para")._1 === 400)
     assert(http("GET", "/search/extra?q=hash")._1 === 404)
+    // a parameter no arm knows is refused by name, never ignored
+    Seq("/search?like=7&nprob=2" -> "nprob", "/search?like=7&foo=1" -> "foo",
+        "/search?q=hash&limit=3" -> "limit").foreach { case (url, name) =>
+      val (c, t) = http("GET", url)
+      assert(c === 400 && t.contains(s"unknown search parameter $name"),
+        s"$url: $c $t")
+    }
     // q is bounded input (it binds into the plan as isin literals):
     // too many terms or an oversized term is a 400, not a giant plan
     val manyTerms = (1 to 33).map(i => s"t$i").mkString("+")

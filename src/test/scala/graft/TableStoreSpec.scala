@@ -749,4 +749,117 @@ class TableStoreSpec extends AnyFunSuite {
     assert(store.syncTo("src", "dst", Seq("k")) === 2)
     assert(content(store, "dst") === Seq((3, "c")))
   }
+
+  // -- snapshot handle: one resolution per (table, version) ----------
+
+  test("handle: a repeated load of an unchanged version runs only its own job") {
+    import spark.implicits._
+    val store = fresh()
+    store.init("t", (1 to 50).map(i => (i, s"v$i")).toDF("k", "v"))
+    assert(store.load("t").count() === 50L)
+    // no listing job, no schema-inference job: resolving runs nothing,
+    // a collect is one job, and a count runs exactly the jobs a count
+    // of an already-resolved frame runs (AQE submits its map stage as
+    // a job of its own, so that is two)
+    assert(TestSpark.jobTasks(spark)(store.load("t")).isEmpty)
+    val collect = TestSpark.jobTasks(spark)(
+      assert(store.load("t").collect().length === 50))
+    assert(collect.size === 1, s"jobs: $collect")
+    val resolved = store.load("t")
+    val counted = TestSpark.jobTasks(spark)(
+      assert(resolved.count() === 50L))
+    val jobs = TestSpark.jobTasks(spark)(
+      assert(store.load("t").count() === 50L))
+    assert(jobs === counted)
+  }
+
+  test("handle: two loads of one version self-join through Column references") {
+    import spark.implicits._
+    val store = fresh()
+    store.init("t", Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"))
+    val a = store.load("t")
+    val b = store.load("t")
+    val same = a.join(b, a("k") === b("k")).select(a("k"), b("v"))
+      .collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(same === Seq((1, "a"), (2, "b"), (3, "c")))
+    // a("k") and b("k") are distinct attributes: an off-by-one join
+    // pairs neighbours instead of collapsing to k = k
+    val next = a.join(b, a("k") + 1 === b("k")).select(a("v"), b("v"))
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(next === Seq(("a", "b"), ("b", "c")))
+  }
+
+  test("handle: every version transition is visible on the next load") {
+    import spark.implicits._
+    val store = fresh()
+    def seen() = content(store, "t")
+    store.init("t", Seq((1, "a")).toDF("k", "v"))
+    assert(seen() === Seq((1, "a")))
+    store.append("t", Seq((2, "b")).toDF("k", "v"))
+    assert(seen() === Seq((1, "a"), (2, "b")))
+    store.appendUnique("t", Seq((2, "x"), (3, "c")).toDF("k", "v"), Seq("k"))
+    assert(seen() === Seq((1, "a"), (2, "b"), (3, "c")))
+    store.upsert("t", Seq((1, "A")).toDF("k", "v"), Seq("k"))
+    assert(seen() === Seq((1, "A"), (2, "b"), (3, "c")))
+    assert(store.deleteWhere("t", col("k") === 2) === 1L)
+    assert(seen() === Seq((1, "A"), (3, "c")))
+    val before = store.version("t")
+    store.compact("t")
+    // same rows, new files: the load must list the compacted segment
+    assert(store.version("t") === before + 1)
+    assert(store.load("t").inputFiles.forall(
+      _.contains(s"/d${before + 1}/")), "compact's files, not the old ones")
+    assert(seen() === Seq((1, "A"), (3, "c")))
+    store.append("t", Seq((4, "d", 0.5)).toDF("k", "v", "s"),
+      evolveSchema = true)
+    assert(store.load("t").columns.toSeq === Seq("k", "v", "s"))
+    assert(seen() === Seq((1, "A"), (3, "c"), (4, "d")))
+    store.replace("t", Seq((9, "z")).toDF("k", "v"))
+    assert(seen() === Seq((9, "z")))
+  }
+
+  test("handle: concurrent first loads of a new version resolve it once") {
+    import spark.implicits._
+    val store = fresh()
+    store.init("t", (1 to 50).map(i => (i, s"v$i")).toDF("k", "v"))
+    store.append("t", Seq((51, "v51")).toDF("k", "v"))
+    // resolving a version runs one schema-inference job; four loads
+    // racing on the new version share one resolution
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val jobs = TestSpark.jobTasks(spark) {
+      val ts = (1 to 4).map { _ =>
+        val t = new Thread(() => { go.await(); store.load("t"); () })
+        t.start(); t
+      }
+      go.countDown()
+      ts.foreach(_.join())
+    }
+    assert(jobs.size === 1, s"jobs: $jobs")
+    assert(store.load("t").count() === 51L)
+  }
+
+  test("handle: a version published by another instance is visible") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val reader = new TableStore(spark, root)
+    val writer = new TableStore(spark, root)
+    writer.init("t", Seq((1, "a")).toDF("k", "v"))
+    assert(content(reader, "t") === Seq((1, "a")))
+    writer.append("t", Seq((2, "b")).toDF("k", "v"))
+    assert(content(reader, "t") === Seq((1, "a"), (2, "b")))
+    writer.replace("t", Seq((3, "c")).toDF("k", "v"))
+    assert(content(reader, "t") === Seq((3, "c")))
+  }
+
+  test("handle: a table re-created at the same version is read fresh") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    store.init("t", Seq((1, "a"), (2, "b")).toDF("k", "v"))
+    assert(content(store, "t") === Seq((1, "a"), (2, "b")))
+    graft.tables.TempDirs.delete(Paths.get(root, "t").toString)
+    store.init("t", Seq((7, "q")).toDF("k", "v"))
+    assert(store.version("t") === 0)
+    assert(content(store, "t") === Seq((7, "q")))
+  }
 }

@@ -41,4 +41,23 @@ object TestSpark {
         .invoke(bus, java.lang.Long.valueOf(10000L))
       ()
     } catch { case _: Throwable => Thread.sleep(2000) }
+
+  /** The task count of the widest stage of every Spark job `body`
+    * starts, in start order (the listener bus is drained before and
+    * after, so the window holds exactly `body`'s jobs when nothing else
+    * runs meanwhile). */
+  def jobTasks(s: SparkSession)(body: => Unit): Seq[Int] = {
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        tasks.add(j.stageInfos.map(_.numTasks).max); ()
+      }
+    }
+    drainListenerBus(s)
+    s.sparkContext.addSparkListener(l)
+    try { body; drainListenerBus(s) }
+    finally s.sparkContext.removeSparkListener(l)
+    tasks.toArray(Array.empty[Integer]).toSeq.map(_.intValue)
+  }
 }
