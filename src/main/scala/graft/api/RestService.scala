@@ -363,7 +363,7 @@ final class RestService(spark: SparkSession, store: TableStore,
       // broadcast shapes over HTTP without a Spark shell. The QUERY
       // itself never executes, but a few builders lawfully run
       // bounded driver-side work while CONSTRUCTING the plan: the
-      // fingerprint-cached corpus-metadata builds (stored indexes,
+      // version-cached corpus-metadata builds (stored indexes,
       // learned profiles, codebooks — amortized, rebuilt only on a
       // corpus-version change) and O(1)-row scalar reads (ANN query
       // vectors, x57's capped candidate pre-pass). A plan request can

@@ -60,7 +60,7 @@ object BpeMiner {
     * upstream). */
   def forDir(s: SparkSession, dir: String, k: Int = 8): Seq[Merge] =
     // cacheKey carries k: a k=4 caller after a k=8 caller must not be
-    // served the 8-merge list off the fingerprint hit
+    // served the 8-merge list off the version hit
     StoredIndexes.versionedValue(cache, dir, "documents.parquet",
       "graft-bpe-merges", cacheKey = s"$dir#k=$k") {
       val types = table(s, dir, "documents")

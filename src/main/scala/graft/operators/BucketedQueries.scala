@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
  * zero-Exchange shape with broadcast disabled; the layout is what
  * Delta/Iceberg express as CLUSTERED BY).
  *
- * Build-once like the ANN/shingle indexes: fingerprint-versioned per
+ * Build-once like the ANN/shingle indexes: version-keyed per
  * corpus, built during warmup, probed by the query; the bench `build`
- * section reports the amortized layout cost. The fingerprint watches
+ * section reports the amortized layout cost. The version watches
  * `lineitem.parquet` (the large side; the fixtures version both fact
  * tables together).
  */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /**
  * Build-once stored DSIR weight table over the `documents` corpus,
  * shared by the selection (x129) and resample (x134) queries. Same
- * fingerprint-versioned build-once/probe-many lifecycle as
+ * version-keyed build-once/probe-many lifecycle as
  * SimhashIndex / ShingleIndex / the vector indexes, and the same
  * doctrine that moved the trigram profile (r8), the unigram LM (r9)
  * and the boilerplate list (r12) off per-invocation recompute: the
@@ -51,7 +51,7 @@ object DsirIndex {
     * gets its own cache entry and stored table keyed on
     * (dir, target.key), so selection toward a new domain never evicts
     * the serving build, and an unchanged (corpus, target) pair is a
-    * fingerprint hit. */
+    * version hit. */
   def forDir(spark: SparkSession, dir: String,
       target: CurationQueries.DsirTarget =
         CurationQueries.DsirTarget.Default): TableStore =

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
  * Build-once stored INVERTED POSTINGS index over the `documents`
  * corpus — the serving-tier structure behind every lexical-retrieval
  * consumer (x94 doc BM25, x133 chunk BM25, x128's hybrid lexical arm,
- * and `GET /search?q=`). Same fingerprint-versioned
+ * and `GET /search?q=`). Same corpus-version-keyed
  * build-once/probe-many lifecycle as ShingleIndex / UnigramLM / the
  * vector indexes ([[StoredIndexes.versioned]], build cost in the bench
  * `build` section).
@@ -66,12 +66,10 @@ import org.apache.spark.sql.functions._
  * appends exactly its own docs' postings — O(batch) compute plus one
  * limit-1 replay probe per table — and the 1-row stats tables fold
  * by addition.
- * Same two-level checked contract as [[VectorIndex.ingest]]: the
- * corpus data-file listing must EXTEND the covered listing and
- * covered + delta rows must equal the corpus row count; any violation
- * falls back to a full rebuild. What remains trusted is that an
- * append-only growth of exactly N rows IS the N delta rows handed in
- * (the caller owns the corpus writer). Unlike DSIR weights (NOT
+ * The checked contract and its rebuild fallback are
+ * [[StoredIndexes.maintain]]'s, shared with [[VectorIndex.ingest]]: the
+ * corpus version must EXTEND the covered one and covered + delta rows
+ * must equal the corpus row count. Unlike DSIR weights (NOT
  * incrementally foldable — every batch shifts the global ratio
  * table), postings and (sum, count) stats fold exactly.
  *
@@ -85,8 +83,8 @@ import org.apache.spark.sql.functions._
  * nothing per table), the cstats fold skips itself via its n_rows
  * stamp, and stats folds off its unchanged pre-batch values.
  * A process death after the stats commit loses only the in-memory
- * cache — the next forDir rebuilds from the corpus fingerprint
- * (correct, merely not incremental).
+ * cache — the next forDir rebuilds from the corpus (correct, merely
+ * not incremental).
  *
  * Production caller: whoever grows the dir-resident corpus calls
  * [[ingest]] with the delta right after the corpus append — the
@@ -229,81 +227,62 @@ object PostingsIndex {
     * plain build. Call AFTER the corpus dir has grown append-only by
     * exactly `rows`. */
   def ingest(spark: SparkSession, dir: String, rows: DataFrame): TableStore =
-    cache.compute(dir, (_, prev) => {
-      val listing = StoredIndexes.dataListing(dir, "documents.parquet")
-      val fp = StoredIndexes.fingerprint(dir, "documents.parquet")
-      lazy val nCorpus: Long = table(spark, dir, "documents").count()
-      def full() = {
-        val e = StoredIndexes.rebuildEntry(fp, "graft-postings-index",
-          listing, nCorpus)(root =>
-          buildInto(spark, new TableStore(spark, root),
-            table(spark, dir, "documents"), nCorpus))
-        if (prev != null) StoredIndexes.retireRoot(prev.root)
-        e
-      }
-      if (prev == null || !StoredIndexes.appendOnly(prev.files, listing))
-        full()
-      else {
-        val deltaN = rows.count()
-        // covered from the DURABLE stored stats (a 1-row read), never
-        // the cache entry: the stats table is this absorption's
-        // COMMIT RECORD (written last, see below), so a previous
-        // attempt that died mid-way leaves it at the pre-batch value
-        // and the whole absorption re-runs — review-caught: a cached
-        // counter would pass the contract while the store already
-        // held the failed attempt's appended rows
-        val covered = prev.index.load("stats").head.getLong(2)
-        if (covered + deltaN != nCorpus) full()
-        else {
-          val st = prev.index
-          val nPart = spark.sessionState.conf.numShufflePartitions
-          // ONE tokenize pass for the whole absorption (the
-          // ShardExport.maintain rule): the persisted projection
-          // feeds both postings tables and both stats folds
-          val tk = tokensOf(rows).persist()
-          try {
-            // REPLAY-SAFE absorption (review-caught: plain appends
-            // would double tf/df on a retried batch). TableStore
-            // appends are ATOMIC per table (segment files first, then
-            // the manifest pointer via ATOMIC_MOVE), so a dead
-            // attempt left each postings table either the WHOLE batch
-            // segment or nothing — replay detection is therefore a
-            // single-doc presence probe (one column-pruned limit-1
-            // read), never a per-batch anti-join of the stored keys
-            // (which would shuffle the whole index every trigger at
-            // scale). Any non-null-text doc has ≥ 1 row in BOTH
-            // tables (split("") = [""]; chunk 0 always survives), so
-            // the batch's min doc_id is a valid marker for each. The
-            // cstats fold carries the corpus row count it reflects,
-            // so a replay skips it; stats commits LAST.
-            val marker = tk.agg(min(col("doc_id"))).head
-            def absorb(tbl: String, batch: DataFrame): Unit =
-              if (!marker.isNullAt(0) &&
-                  st.load(tbl)
-                    .filter(col("doc_id") === marker.getLong(0))
-                    .limit(1).isEmpty)
-                st.append(tbl, batch
-                  .repartition(nPart, col("token"))
-                  .sortWithinPartitions("token"))
-            absorb("postings", docPostingsFromTokens(tk))
-            absorb("cpostings",
-              CurationQueries.chunkPostingsFromTokens(tk))
-            import spark.implicits._
-            val oc = st.load("cstats").head
-            if (oc.getLong(2) != nCorpus) {
-              val bc = CurationQueries.chunkStatsFromTokens(tk).head
-              st.replace("cstats", Seq((oc.getLong(0) + bc.getLong(0),
-                oc.getLong(1) + bc.getLong(1), nCorpus))
-                .toDF("nch", "sum_dl", "n_rows"))
-            }
-            val o = st.load("stats").head
-            val b = docStatsFromTokens(tk).head
-            st.replace("stats", Seq((o.getLong(0) + b.getLong(0),
-              o.getLong(1) + b.getLong(1), nCorpus))
-              .toDF("n_tokens", "n_docs", "n_rows"))
-          } finally { tk.unpersist(); () }
-          StoredIndexes.Cached(fp, prev.root, st, listing, nCorpus)
-        }
-      }
-    }).index
+    StoredIndexes.maintain(spark, cache, dir, "documents.parquet",
+      "graft-postings-index", Some(rows))(
+      (root, nCorpus) => buildInto(spark, new TableStore(spark, root),
+        table(spark, dir, "documents"), nCorpus))(
+      // covered from the DURABLE stored stats (a 1-row read), never the
+      // cache entry: the stats table is this absorption's COMMIT RECORD
+      // (written last, see below), so a previous attempt that died
+      // mid-way leaves it at the pre-batch value and the whole
+      // absorption re-runs — review-caught: a cached counter would pass
+      // the contract while the store already held the failed attempt's
+      // appended rows
+      prev => prev.index.load("stats").head.getLong(2)) {
+      (st, rows, nCorpus) =>
+        val nPart = spark.sessionState.conf.numShufflePartitions
+        // ONE tokenize pass for the whole absorption (the
+        // ShardExport.maintain rule): the persisted projection feeds
+        // both postings tables and both stats folds
+        val tk = tokensOf(rows).persist()
+        try {
+          // REPLAY-SAFE absorption (review-caught: plain appends would
+          // double tf/df on a retried batch). TableStore appends are
+          // ATOMIC per table (segment files first, then the manifest
+          // pointer via ATOMIC_MOVE), so a dead attempt left each
+          // postings table either the WHOLE batch segment or nothing —
+          // replay detection is therefore a single-doc presence probe
+          // (one column-pruned limit-1 read), never a per-batch
+          // anti-join of the stored keys (which would shuffle the whole
+          // index every trigger at scale). Any non-null-text doc has
+          // ≥ 1 row in BOTH tables (split("") = [""]; chunk 0 always
+          // survives), so the batch's min doc_id is a valid marker for
+          // each. The cstats fold carries the corpus row count it
+          // reflects, so a replay skips it; stats commits LAST.
+          val marker = tk.agg(min(col("doc_id"))).head
+          def absorb(tbl: String, batch: DataFrame): Unit =
+            if (!marker.isNullAt(0) &&
+                st.load(tbl)
+                  .filter(col("doc_id") === marker.getLong(0))
+                  .limit(1).isEmpty)
+              st.append(tbl, batch
+                .repartition(nPart, col("token"))
+                .sortWithinPartitions("token"))
+          absorb("postings", docPostingsFromTokens(tk))
+          absorb("cpostings", CurationQueries.chunkPostingsFromTokens(tk))
+          import spark.implicits._
+          val oc = st.load("cstats").head
+          if (oc.getLong(2) != nCorpus) {
+            val bc = CurationQueries.chunkStatsFromTokens(tk).head
+            st.replace("cstats", Seq((oc.getLong(0) + bc.getLong(0),
+              oc.getLong(1) + bc.getLong(1), nCorpus))
+              .toDF("nch", "sum_dl", "n_rows"))
+          }
+          val o = st.load("stats").head
+          val b = docStatsFromTokens(tk).head
+          st.replace("stats", Seq((o.getLong(0) + b.getLong(0),
+            o.getLong(1) + b.getLong(1), nCorpus))
+            .toDF("n_tokens", "n_docs", "n_rows"))
+        } finally { tk.unpersist(); () }
+    }
 }

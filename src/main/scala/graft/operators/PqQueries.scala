@@ -198,12 +198,12 @@ object PqQueries {
       pmod(element_at(ks, ss + 1), lit(cbs(ss).length)).cast("int")): _*)
 
   /** Build-once stored `pq_codes` (vec_id, code array<int> of M sub-
-    * centroid ids) on the fingerprint-versioned lifecycle — the
+    * centroid ids) on the version-keyed lifecycle — the
     * DsirIndex tiny-sidecar class (M·4 bytes/vector here; M·log₂K
     * bits in a bit-packed production layout). Incremental ingest
     * maintenance is deliberately NOT provided (the SimhashIndex scope
     * rule): new vectors CAN be encoded with frozen codebooks — the
-    * standard serving practice — but the corpus fingerprint also
+    * standard serving practice — but the corpus version also
     * versions the codebooks themselves, and serving codes from one
     * codebook version while training another is a consistency seam
     * this engine resolves the same way as IVF centroid drift: rebuild
@@ -282,7 +282,7 @@ object PqQueries {
     * cell-partitioned: ONE scan of the already-built IVF corpus
     * (which carries the cell assignment) through the PQ encoder — no
     * join, the cell rides along. Rebuild-per-corpus-version like its
-    * two parents (their fingerprints both key on the same corpus). */
+    * two parents (both key on the same corpus version). */
   private[graft] def ivfadcFor(s: SparkSession, d: String): TableStore =
     StoredIndexes.versioned(ivfadcCache, d, "embeddings.parquet",
       "graft-ivfadc-codes") { root =>

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
  * schedule → exported shards).
  *
  * Lifecycle: build-once per corpus version ([[StoredIndexes]]
- * fingerprint cache, kind `graft-shard-export` in the bench `build`
+ * version cache, kind `graft-shard-export` in the bench `build`
  * section), stored table `shards(lang, window_id, n_tok, tokens,
  * w_md5)` hive-partitioned by `lang` — each shard (= lang stream,
  * matching x100's shard-local packing contract) is its own directory

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
  * Build-once stored shingle index over the `documents` corpus, shared
  * by x7 (prefix-filtered Jaccard), x8 (MinHash+LSH) and x36
  * (decontamination). Same build-once/probe-many lifecycle as the
- * vector indexes: fingerprint-versioned per corpus, rebuilt when the
+ * vector indexes: version-keyed per corpus, rebuilt when the
  * corpus changes, reclaimed when superseded.
  *
  * What is stored is deliberately COMPACT — fixed-width hashes and
@@ -53,7 +53,7 @@ import org.apache.spark.sql.functions._
  * silently break the completeness guarantee the whole operator rests
  * on. bands3/ex8h are per-document and could append, but a corpus
  * change invalidates pfx3 regardless, so the whole index rebuilds on
- * the fingerprint transition (correct-by-construction over fast).
+ * the version transition (correct-by-construction over fast).
  */
 object ShingleIndex {
 
@@ -127,7 +127,7 @@ object ShingleIndex {
         // per doc — SMALLER than the text — while the recompute they
         // replace is an md5 per 4-gram, so here the stored form wins
         // (measured: x130 1.86 → 1.0 s at sf0.1). Per-document rows,
-        // but the corpus fingerprint transition rebuilds the whole
+        // but the corpus version transition rebuilds the whole
         // index anyway (see the pfx3 note), so wfp rides the same
         // lifecycle.
         () => store.replace("wfp",

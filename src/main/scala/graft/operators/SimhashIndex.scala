@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
  * Build-once stored 64-bit SimHash index over the `documents` corpus,
  * shared by the whole text near-dup family (x25 pairs, x34/x40
  * clustering, x118 split assignment, x120/x122 quality election, x124
- * pair mining, x125/x126 rollups). Same fingerprint-versioned
+ * pair mining, x125/x126 rollups). Same version-keyed
  * build-once/probe-many lifecycle as ShingleIndex and the vector
  * indexes.
  *

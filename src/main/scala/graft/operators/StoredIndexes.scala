@@ -1,11 +1,18 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
+
 /** Shared machinery for build-once stored indexes (IVF/SRP vector
-  * indexes, the shingle index): a per-JVM cache keyed on (corpus dir,
-  * corpus fingerprint) so an index is built exactly once per corpus
-  * VERSION — untouched corpora are served from the stored tables,
-  * mutated corpora trigger a rebuild instead of silently serving
-  * stale results, and retired builds' scratch roots are reclaimed.
+  * indexes, postings, the shingle index): a per-JVM cache keyed on
+  * corpus dir whose entries carry the corpus VERSION they cover
+  * ([[dataListing]]), so an index is built exactly once per version —
+  * untouched corpora are served from the stored tables, mutated
+  * corpora trigger a rebuild instead of silently serving stale
+  * results, an append-only batch is absorbed ([[maintain]]), and
+  * retired builds' scratch roots are reclaimed. This object is the
+  * only code that walks a corpus directory or decides whether a batch
+  * extends the covered version.
   *
   * Build wall-clock is recorded per index kind in [[buildLog]]: probe
   * queries deliberately time only serving cost (the build runs during
@@ -15,14 +22,14 @@ package graft.operators
   */
 private[graft] object StoredIndexes {
 
-  /** @param files data-file listing ([[dataListing]]) of the corpus
-    *   state this entry covers — the append-only witness the ingest
-    *   APIs check before extending the index instead of rebuilding
+  /** @param files the corpus version this entry covers
+    *   ([[dataListing]]): the hit key of [[versioned]] and the
+    *   append-only witness of [[maintain]]
     * @param rows corpus rows covered by the index; -1 = not tracked
     *   yet (backfilled on the first ingest, then counter-maintained so
     *   coverage checks never rescan the index) */
-  final case class Cached[A](fingerprint: String, root: String, index: A,
-      files: Map[String, String] = Map.empty, rows: Long = -1L)
+  final case class Cached[A](files: Map[String, String], root: String,
+      index: A, rows: Long = -1L)
 
   /** Seconds spent building each index kind in this JVM (rebuilds
     * accumulate). Bench emits this as the `build` section. */
@@ -54,88 +61,68 @@ private[graft] object StoredIndexes {
     } finally { pool.shutdown(); () }
   }
 
-  /** Fingerprint of the files backing `dir/file`: stable while the
-    * corpus is untouched, changes on any append/rewrite UNDER THE
-    * ASSUMPTION that writers emit fresh (UUID-named) part files —
-    * which Spark's parquet writer always does. A byte-level in-place
-    * rewrite that preserves every file's name, size and millisecond
-    * mtime would evade it; that requires a deliberate non-Spark
-    * writer and is outside the threat model. */
-  def fingerprint(dir: String, file: String): String = {
-    val p = java.nio.file.Paths.get(dir, file)
-    if (!java.nio.file.Files.exists(p)) "absent"
-    else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted().forEach { f =>
-        val sz =
-          if (java.nio.file.Files.isRegularFile(f))
-            java.nio.file.Files.size(f)
-          else 0L
-        md.update((p.relativize(f).toString + "|" + sz + "|" +
-          java.nio.file.Files.getLastModifiedTime(f).toMillis + "\n")
-          .getBytes("UTF-8"))
-      } finally walk.close()
-      md.digest().map("%02x".format(_)).mkString
-    }
-  }
-
   // Measured serving knobs (the IVF probe width, the SRP radius, the
   // PQ re-rank depth) per (corpus dir, knob), each pinned to the
-  // embeddings fingerprint it was measured on: any corpus change —
+  // embeddings version it was measured on: any corpus change —
   // rewrite OR append-only ingest — reverts the knob to its default
   // until the next retune, because a value tuned on one geometry says
-  // nothing about another. The check is a file-metadata walk, the
-  // cost every stored-index probe already pays.
-  private val servingKnobs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Int)]()
+  // nothing about another. The check is one listing walk, the cost
+  // every stored-index probe already pays.
+  private val servingKnobs = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (Map[String, String], Int)]()
 
   /** `knob`'s serving value for `dir`: the last [[setServingKnob]]
     * while the corpus is unchanged since, else `default`. */
   def servingKnob(dir: String, knob: String, default: Int): Int =
     Option(servingKnobs.get((dir, knob))) match {
-      case Some((fp, v)) if fp == fingerprint(dir, "embeddings.parquet") => v
+      case Some((files, v)) if files == dataListing(dir, "embeddings.parquet") => v
       case _ => default
     }
 
   def setServingKnob(dir: String, knob: String, value: Int): Unit = {
-    servingKnobs.put((dir, knob), (fingerprint(dir, "embeddings.parquet"), value))
+    servingKnobs.put((dir, knob), (dataListing(dir, "embeddings.parquet"), value))
     ()
   }
 
-  /** Per-DATA-file signature (relative path → "size|mtime") of the
-    * parquet files backing `dir/file`; metadata files (`_SUCCESS`,
-    * dot-files) are excluded because append jobs legitimately rewrite
-    * them. This is the append-only witness the ingest APIs check: a
-    * corpus grew append-only iff every previously covered data file is
-    * still present with an unchanged signature — new files are the
-    * appended delta, any touched/vanished old file is an in-place
-    * rewrite (upsert, compaction, overwrite) that invalidates
-    * incremental maintenance. Same writer assumption as
-    * [[fingerprint]] (fresh part files per write). */
-  def dataListing(dir: String, file: String): Map[String, String] = {
+  /** The corpus VERSION of `dir/file`, the one identity every cache
+    * entry and serving knob is keyed on: relative path → "size|mtime"
+    * of each data file Spark's parquet reader reads, taken in one walk.
+    * What the reader skips (`_SUCCESS`, dot-files, `_temporary/`
+    * attempt dirs, `._COPYING_`; [[Bridge.readerSkips]]) is not part of
+    * it, and directories carry no entry: a metadata-only change is not
+    * a new version, because identical data files read identically.
+    * Sound while writers emit fresh (UUID-named) part files, which
+    * Spark's parquet writer always does; an in-place rewrite that keeps
+    * a file's name, size and millisecond mtime needs a deliberate
+    * non-Spark writer and is outside the threat model. */
+  private def dataListing(dir: String, file: String): Map[String, String] = {
+    import java.nio.file.{FileVisitOption, FileVisitResult, Files, Path,
+      SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
     val p = java.nio.file.Paths.get(dir, file)
-    if (!java.nio.file.Files.exists(p)) Map.empty
-    else {
-      val walk = java.nio.file.Files.walk(p)
-      try {
-        val b = Map.newBuilder[String, String]
-        walk.forEach { f =>
-          val n = f.getFileName.toString
-          if (java.nio.file.Files.isRegularFile(f) &&
-              !n.startsWith("_") && !n.startsWith("."))
-            b += p.relativize(f).toString ->
-              (java.nio.file.Files.size(f) + "|" +
-                java.nio.file.Files.getLastModifiedTime(f).toMillis)
-        }
-        b.result()
-      } finally walk.close()
-    }
+    val b = Map.newBuilder[String, String]
+    def rel(f: Path) = "/" + p.relativize(f).toString
+    // links followed, as the reader follows them
+    if (Files.exists(p)) Files.walkFileTree(p,
+        java.util.EnumSet.of(FileVisitOption.FOLLOW_LINKS), Int.MaxValue,
+        new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes) =
+        if (d != p && Bridge.readerSkips(rel(d) + "/")) FileVisitResult.SKIP_SUBTREE
+        else FileVisitResult.CONTINUE
+      override def visitFile(f: Path, a: BasicFileAttributes) = {
+        if (a.isRegularFile && !Bridge.readerSkips(rel(f)))
+          b += rel(f) -> s"${a.size}|${a.lastModifiedTime.toMillis}"
+        FileVisitResult.CONTINUE
+      }
+    })
+    b.result()
   }
 
   /** True iff `now` extends `covered` without touching it: every
-    * covered file still present, byte-identical by signature. */
-  def appendOnly(covered: Map[String, String],
+    * covered file still present, byte-identical by signature. New
+    * files are the appended delta; a changed or vanished covered file
+    * is an in-place rewrite (upsert, compaction, overwrite). */
+  private def appendOnly(covered: Map[String, String],
       now: Map[String, String]): Boolean =
     covered.forall { case (f, sig) => now.get(f).contains(sig) }
 
@@ -153,13 +140,6 @@ private[graft] object StoredIndexes {
 
   private val retired =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Record `root` as superseded as of now (no-op for rootless
-    * driver-value entries). */
-  def retireRoot(root: String): Unit =
-    if (root != null && root.nonEmpty) {
-      retired.put(root, System.currentTimeMillis()); ()
-    }
 
   /** Currently retired-but-unreclaimed roots (spec observability). */
   def retiredRoots: Set[String] = {
@@ -199,68 +179,128 @@ private[graft] object StoredIndexes {
     built
   }
 
-  /** Build a fresh cache entry into a registered scratch root,
-    * recording the build seconds under `kind` (via [[timedBuild]]),
-    * shared by [[versioned]] and the ingest APIs. A THROWING build
-    * deletes its own (possibly partially written) root before
-    * rethrowing — the entry was never published, so nothing can read
-    * it, and without the cleanup a repeatedly failing rebuild (e.g. a
-    * corrupt corpus retried per probe) would leak one scratch root
-    * per attempt, invisible to [[sweepRetired]]. */
-  def rebuildEntry[A](fp: String, kind: String,
-      files: Map[String, String] = Map.empty, rows: Long = -1L)(
+  /** Build a fresh entry for corpus version `files` into a registered
+    * scratch root (timed via [[timedBuild]]), then retire `prev`'s
+    * root. Build FIRST, retire after: a throwing rebuild leaves prev
+    * cached and servable, so its root must not be queued for sweep.
+    * A superseded root is not deleted eagerly — a reader holding a
+    * lazy plan over the old index keeps its snapshot (the retention
+    * contract TableStore documents) until [[sweepRetired]] or JVM
+    * exit. A THROWING build deletes its own (possibly partially
+    * written) root before rethrowing — the entry was never published,
+    * so nothing can read it, and without the cleanup a repeatedly
+    * failing rebuild (e.g. a corrupt corpus retried per probe) would
+    * leak one scratch root per attempt, invisible to [[sweepRetired]]. */
+  private def rebuildEntry[A](prev: Cached[A], kind: String,
+      files: Map[String, String], rows: Long = -1L)(
       mk: String => A): Cached[A] = {
     val root = graft.tables.TempDirs.scratch(kind)
-    try timedBuild(kind)(Cached(fp, root, mk(root), files, rows))
-    catch {
-      case e: Throwable =>
-        try graft.tables.TempDirs.delete(root)
-        catch { case _: Throwable => () } // best-effort; don't mask e
-        throw e
-    }
+    val entry =
+      try timedBuild(kind)(Cached(files, root, mk(root), rows))
+      catch {
+        case e: Throwable =>
+          try graft.tables.TempDirs.delete(root)
+          catch { case _: Throwable => () } // best-effort; don't mask e
+          throw e
+      }
+    if (prev != null) retireRoot(prev.root)
+    entry
   }
 
-  /** Serve `m(dir)` if its fingerprint still matches, else (re)build
-    * via `mk` into a fresh registered scratch root. A superseded
-    * build's root is NOT deleted eagerly — a reader holding a lazy
-    * plan over the old index keeps its snapshot (the same retention
-    * contract TableStore documents); retired roots are recorded for
-    * [[sweepRetired]] (horizon-based reclamation for long-lived
-    * serving processes) and otherwise fall at JVM exit.
-    * `kind` names the index in [[buildLog]]. `cacheKey` overrides the
-    * map key when one corpus dir can host several index variants
-    * (parameterized builds); the fingerprint is always of `dir`. */
+  /** Record `root` as superseded as of now. */
+  private def retireRoot(root: String): Unit = {
+    retired.put(root, System.currentTimeMillis()); ()
+  }
+
+  /** Replace the entry under `cacheKey` (default `dir`) by
+    * `next(prev, version)`, where the version of `dir/file` comes from
+    * ONE walk, atomically per key, and serve the result. Every entry
+    * point below goes through here. */
+  private def advance[A](m: java.util.concurrent.ConcurrentHashMap[
+      String, Cached[A]], dir: String, file: String, cacheKey: String)(
+      next: (Cached[A], Map[String, String]) => Cached[A]): A =
+    m.compute(if (cacheKey == null) dir else cacheKey,
+      (_, prev) => next(prev, dataListing(dir, file))).index
+
+  /** Serve `m(dir)` while the corpus version `dir/file` is the one it
+    * covers, else (re)build via `mk` into a fresh scratch root
+    * ([[rebuildEntry]]). `kind` names the index in [[buildLog]].
+    * `cacheKey` overrides the map key when one corpus dir can host
+    * several index variants (parameterized builds); the version is
+    * always of `dir`. */
   def versioned[A](m: java.util.concurrent.ConcurrentHashMap[
       String, Cached[A]], dir: String, file: String, kind: String,
       cacheKey: String = null)(
       mk: String => A): A =
-    m.compute(if (cacheKey == null) dir else cacheKey, (_, prev) => {
-      val fp = fingerprint(dir, file)
-      if (prev != null && prev.fingerprint == fp) prev
-      else {
-        // build FIRST, retire after: a throwing rebuild leaves prev
-        // cached and servable — its root must not be queued for sweep
-        val entry = rebuildEntry(fp, kind, dataListing(dir, file))(mk)
-        if (prev != null) retireRoot(prev.root)
-        entry
-      }
-    }).index
+    advance(m, dir, file, cacheKey) {
+      (prev, files) =>
+        if (prev != null && prev.files == files) prev
+        else rebuildEntry(prev, kind, files)(mk)
+    }
 
   /** [[versioned]] for DRIVER-VALUE artifacts (a learned profile, a
-    * guard statistic): same fingerprint-keyed once-per-corpus-version
-    * contract and the same build-cost accounting, but no scratch root
-    * is allocated — the value lives on the driver, so there is nothing
-    * to put on disk. `cacheKey` overrides the map key for
-    * PARAMETERIZED builds (same contract as [[versioned]]'s): without
-    * it a second call with different build parameters would silently
-    * serve the first call's value off the fingerprint hit. */
+    * guard statistic): same once-per-corpus-version contract and the
+    * same build-cost accounting, but no scratch root is allocated —
+    * the value lives on the driver, so there is nothing to put on
+    * disk. `cacheKey` overrides the map key for PARAMETERIZED builds
+    * (same contract as [[versioned]]'s): without it a second call with
+    * different build parameters would silently serve the first call's
+    * value off the version hit. */
   def versionedValue[A](m: java.util.concurrent.ConcurrentHashMap[
       String, Cached[A]], dir: String, file: String, kind: String,
       cacheKey: String = null)(
       mk: => A): A =
-    m.compute(if (cacheKey == null) dir else cacheKey, (_, prev) => {
-      val fp = fingerprint(dir, file)
-      if (prev != null && prev.fingerprint == fp) prev
-      else timedBuild(kind)(Cached(fp, "", mk))
-    }).index
+    advance(m, dir, file, cacheKey) {
+      (prev, files) =>
+        if (prev != null && prev.files == files) prev
+        else timedBuild(kind)(Cached(files, "", mk))
+    }
+
+  /** The ONE append-or-rebuild path of the incrementally maintained
+    * indexes (IVF, SRP, postings). Call AFTER the corpus `dir/file`
+    * has grown append-only by exactly `delta`; `delta = None` forces a
+    * rebuild of the current version (the retune policy's rebuild arm,
+    * which re-trains even when the version is unchanged).
+    *
+    * The contract is CHECKED at two levels before the index is
+    * touched, and a violation falls back to a full logged rebuild:
+    * (a) the corpus version must EXTEND the covered one
+    * ([[appendOnly]]: an in-place rewrite such as an upsert, a
+    * compaction or a same-count mutation changes or replaces old
+    * files and is caught even when row counts still agree); (b)
+    * `covered(prev)` + delta rows must equal the corpus row count (a
+    * parquet metadata read), which catches foreign appends beyond the
+    * handed delta. What remains trusted is only that an append-only
+    * growth of exactly N rows IS the N delta rows handed in — the
+    * caller owns the corpus writer. With no entry yet this is a build
+    * over the full corpus.
+    *
+    * Per index: `build(root, corpusRows)` writes a full index;
+    * `covered` says where the covered-row count comes from (a counter
+    * on the entry, or a durable commit record in the index itself);
+    * `absorb(index, delta, corpusRows)` extends the index in place,
+    * replay-safely. An absorbed entry keeps its root and advances to
+    * the new version with `rows` = corpus rows. */
+  def maintain[A](spark: SparkSession,
+      m: java.util.concurrent.ConcurrentHashMap[String, Cached[A]],
+      dir: String, file: String, kind: String, delta: Option[DataFrame],
+      cacheKey: String = null)(
+      build: (String, Long) => A)(
+      covered: Cached[A] => Long)(
+      absorb: (A, DataFrame, Long) => Unit): A =
+    advance(m, dir, file, cacheKey) {
+      (prev, files) =>
+        lazy val nCorpus: Long = spark.read.parquet(s"$dir/$file").count()
+        def rebuilt = rebuildEntry(prev, kind, files, nCorpus)(build(_, nCorpus))
+        delta match {
+          case Some(rows) if prev != null && appendOnly(prev.files, files) =>
+            val grown = rows.count() + covered(prev)
+            if (grown != nCorpus) rebuilt
+            else {
+              absorb(prev.index, rows, grown)
+              prev.copy(files = files, rows = grown)
+            }
+          case _ => rebuilt
+        }
+    }
 }

@@ -26,7 +26,7 @@ object TextQueries {
 
   // x26's learned profile (5 langs × top-20 trigrams) is corpus
   // METADATA: learned once per corpus version — the same
-  // fingerprint-cached build-once lifecycle as the stored indexes,
+  // version-cached build-once lifecycle as the stored indexes,
   // with the learn cost in the bench `build` section — and baked into
   // the scoring expressions as literals. The r8 formulation re-ran
   // the corpus-scale explode+agg on every invocation.
@@ -34,7 +34,7 @@ object TextQueries {
     String, StoredIndexes.Cached[Seq[(String, Seq[String])]]]()
 
   // x73's mined top-50 boilerplate 5-grams — corpus metadata on the
-  // same fingerprint-cached build-once lifecycle as the trigram
+  // same version-cached build-once lifecycle as the trigram
   // profile (the r11 form re-ran the mining explode+agg inside every
   // x73 invocation, doubling the corpus pass)
   private val boilerCache = new java.util.concurrent.ConcurrentHashMap[
@@ -1093,7 +1093,7 @@ object TextQueries {
     // are order-dependent across engines; BIGINT sums are not), so it
     // hash-matches the oracle exactly. Scale shape: the df table is
     // bounded by the trigram VOCABULARY, not the corpus, so it is
-    // learned once per corpus version ([[trigramDf]], fingerprint-
+    // learned once per corpus version ([[trigramDf]], version-
     // cached like x26's profile) and broadcast into the probe join —
     // ONE corpus-scale explode per invocation (plus the narrow doc_id
     // audit scan), where rebuilding the df table lazily re-ran the
@@ -1593,7 +1593,7 @@ object TextQueries {
     // boilerplate-removal step): a document whose gram stream is ≥ 50%
     // mined boilerplate is dropped, and the survivors roll up into a
     // per-language data card. Since r12 the mined list is
-    // fingerprint-cached corpus METADATA (the x26-profile lifecycle:
+    // version-cached corpus METADATA (the x26-profile lifecycle:
     // mined once per corpus version, cost in the bench `build`
     // section) and baked into the probe as a 50-literal codegen InSet
     // — the query plan is ONE scan + ONE explode_outer + the per-doc

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
  * fact instead of ~25 % for a week×user-range slice (ZOrderSpec
  * measures exactly this ratio on the fixture).
  *
- * Build-once like the bucketed facts: fingerprint-versioned per
+ * Build-once like the bucketed facts: version-keyed per
  * corpus, built during warmup, amortized across every 2-d slice
  * query; the bench `build` section carries the layout cost. The
  * scale bounds (grid edges) come from one min/max aggregate over the

@@ -60,7 +60,7 @@ object Gdpr {
     *  - `ingest_log`: the doc's verdict row deletes.
     *
     * The stored QUERY indexes (ShingleIndex, SRP/IVF) need no call
-    * here: they are fingerprint-versioned on the corpus files, so the
+    * here: they are version-keyed on the corpus files, so the
     * purge's copy-on-write rewrite invalidates them and the next probe
     * rebuilds from the post-purge corpus — GdprDerivedSpec pins
     * exactly that (no probe can surface purged content afterwards).

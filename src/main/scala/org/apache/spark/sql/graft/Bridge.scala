@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.util.HadoopFSUtils
 
 /** Column ⇄ Expression bridge. Spark 4 narrowed these converters to
   * `private[sql]`; extension libraries (this one included) reach them
@@ -55,4 +56,11 @@ object Bridge {
     plan.foreach(_.unsetTagValue(classic.Dataset.DATASET_ID_TAG))
     classic.Dataset.ofRows(cdf.sparkSession, plan)
   }
+
+  /** True for a path under a table root (relative, with a leading
+    * `/`) that Spark's file index leaves out of a read: `_SUCCESS` and
+    * other `_` names that are not `k=v` partition dirs, dot-files,
+    * `_temporary/` attempt dirs and `._COPYING_` files. */
+  def readerSkips(path: String): Boolean =
+    HadoopFSUtils.shouldFilterOutPath(path)
 }

@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.operators.{ShingleIndex, StoredIndexes}
+import graft.operators.{PostingsIndex, ShingleIndex, StoredIndexes}
+import graft.tables.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Retired-root retention (r13): a long-lived serving process rewrites
@@ -18,10 +19,11 @@ class StoredIndexGcSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
   }
 
+  private val base = (1L to 6L).map(i =>
+    i -> s"alpha$i beta gamma delta epsilon zeta eta theta iota kappa")
+
   test("rebuilds retire old roots; horizon protects in-flight readers; sweep reclaims") {
     val dir = Files.createTempDirectory("graft-idxgc").toString
-    val base = (1L to 6L).map(i =>
-      i -> s"alpha$i beta gamma delta epsilon zeta eta theta iota kappa")
     writeCorpus(dir, base)
     val before = StoredIndexes.retiredRoots
     val store1 = ShingleIndex.forDir(spark, dir)
@@ -56,6 +58,59 @@ class StoredIndexGcSpec extends AnyFunSuite {
     val live = ShingleIndex.forDir(spark, dir)
     assert(live.load("ex8h").count() > 0, "live index must survive the sweep")
     graft.tables.TempDirs.delete(dir)
+  }
+
+  /** What an in-flight or finished Spark append leaves beside the data
+    * files, none of which the parquet reader reads: a rewritten
+    * `_SUCCESS` marker and a task attempt's file under `_temporary/`. */
+  private def touchMetadata(dir: String): Unit = {
+    val t = Paths.get(dir, "documents.parquet")
+    val success = t.resolve("_SUCCESS")
+    Files.write(success, "rewritten".getBytes("UTF-8"))
+    Files.setLastModifiedTime(success, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() + 5000))
+    val attempt = t.resolve("_temporary/0/part-x.parquet")
+    Files.createDirectories(attempt.getParent)
+    Files.write(attempt, "not yet committed".getBytes("UTF-8"))
+  }
+
+  test("a metadata-only change is not a new corpus version; a real append is") {
+    val dir = Files.createTempDirectory("graft-idxver").toString
+    writeCorpus(dir, base)
+    val store1 = ShingleIndex.forDir(spark, dir)
+    val rows1 = store1.load("ex8h").count()
+    touchMetadata(dir)
+    assert(ShingleIndex.forDir(spark, dir) eq store1,
+      "_SUCCESS / _temporary changes must not rebuild")
+    // the in-flight writer's job ends and cleans up its attempt dir
+    TempDirs.delete(Paths.get(dir, "documents.parquet", "_temporary").toString)
+    assert(ShingleIndex.forDir(spark, dir) eq store1)
+    import spark.implicits._
+    Seq(7L -> "one two three four five six seven eight nine ten")
+      .toDF("doc_id", "text")
+      .write.mode("append").parquet(s"$dir/documents.parquet")
+    val store2 = ShingleIndex.forDir(spark, dir)
+    assert(!(store2 eq store1), "an appended data file must rebuild")
+    assert(store2.load("ex8h").count() > rows1)
+    TempDirs.delete(dir)
+  }
+
+  test("ingest absorbs a batch after an in-flight append's attempt files vanished") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-idxtmp").toString
+    writeCorpus(dir, base)
+    // the index is built while another writer's attempt file sits in
+    // _temporary/; that writer's job then cleans it up
+    touchMetadata(dir)
+    val ps0 = PostingsIndex.forDir(spark, dir)
+    TempDirs.delete(Paths.get(dir, "documents.parquet", "_temporary").toString)
+    val delta = Seq(7L -> "one two three four five six seven eight nine ten")
+      .toDF("doc_id", "text")
+    delta.write.mode("append").parquet(s"$dir/documents.parquet")
+    val ps1 = PostingsIndex.ingest(spark, dir, delta)
+    assert(ps1 eq ps0, "the batch extends the covered version: absorb, not rebuild")
+    assert(ps1.load("stats").head.getLong(2) === 7L)
+    TempDirs.delete(dir)
   }
 
   test("inParallel: a failing step lets a slower sibling's write finish, then rethrows unwrapped") {
