@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.streaming.Flows
-import graft.tables.TableStore
+import graft.tables.{MergeOps, TableStore}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -54,14 +54,12 @@ object StreamBench {
     def freshStore(): TableStore = {
       val root = Files.createTempDirectory("graft-streambench").toString
       val store = new TableStore(spark, root)
-      store.init("inventario", spark.read.parquet(s"$sfDir/part.parquet").select(
-        col("p_partkey").cast("string").as("id"),
-        col("p_partkey").cast("string").as("nombre"),
-        (col("p_size") * 1000).as("capacidad"),
-        lit("Cat").as("categoria"), lit("A").as("estado"),
-        lit(null).cast("string").as("idres"),
-        lit(null).cast("string").as("email"),
-        lit(null).cast("int").as("canres")))
+      store.init("inventario", MergeOps.inventarioClones(
+        spark.read.parquet(s"$sfDir/part.parquet").select(
+          col("p_partkey").cast("string").as("id"),
+          col("p_partkey").cast("string").as("nombre"),
+          (col("p_size") * 1000).as("capacidad"),
+          lit("Cat").as("categoria"), lit("A").as("estado"))))
       store.init("reservas", graft.sources.Tables.reservas(spark).limit(0))
       store
     }

@@ -55,14 +55,24 @@ import org.apache.spark.sql.functions._
  *
  * Semantics: each parameter binds into a Catalyst filter on the backing
  * table (point lookups are pushed-down scans, never driver-side
- * seeks), and each write is the corresponding MergeOps primitive — the
- * SAME primitives the streaming flows run, so the sync API and the
- * async saga cannot disagree on admission rules. POST /reservas
- * collapses the reference's async saga (guarded inventory decrement,
- * then the reservation row landing via CDC) into one handler: it
- * applies the O19 guarded decrement and persists the settled
- * reservation row, which is exactly the saga's fixed point (S2/S4
- * prove the async route reaches the same state).
+ * seeks), and each write is the corresponding MergeOps rule — the
+ * SAME definitions the streaming flows run, so the sync API and the
+ * async saga cannot disagree. The event and reservation writes
+ * collapse the part of the reference's async saga they start into one
+ * handler that persists the saga's fixed point:
+ *
+ *  - POST /eventos inserts the event and its inventario clone (S1);
+ *  - DELETE /eventos cancels the event and its inventario row and
+ *    cascades its active reservations (S4);
+ *  - POST /reservas applies the O19 guarded decrement and the settled
+ *    reservation row (S2).
+ *
+ * DELETE /reservas is the customer CAS A→X (O20) alone: the S3 seat
+ * return stays with the flows.
+ *
+ * Existence guards are plain counts. A `limit` would name its counter
+ * from a JVM-wide sequence, so every call would compile a new class,
+ * and `isEmpty` runs one job per partition batch it tries.
  *
  * Scale stance: this is the interactive seam, not the bulk path —
  * handlers serialize through one writer lock (the reference leans on
@@ -658,11 +668,14 @@ final class RestService(spark: SparkSession, store: TableStore,
       val target = store.load("eventos")
       // O17 insert-if-absent on the unique name (eventos/main.go:75-78:
       // duplicate insert → 400 "ya existente")
-      if (target.filter(col("nombre") === nombre).limit(1).count() > 0)
+      if (target.filter(col("nombre") === nombre).count() > 0)
         reply(ex, 400, s"Evento $nombre ya existente")
       else {
         store.replace("eventos",
           MergeOps.insertIfAbsent(target, row, Seq("nombre")))
+        // S1: the inventario clone makes the event reservable
+        store.appendUnique("inventario", MergeOps.inventarioClones(row),
+          Seq("nombre"))
         replyJson(ex, 200, Json.obj("Id" -> id, "Nombre" -> nombre,
           "Capacidad" -> int(js, "Capacidad"),
           "Categoria" -> str(js, "Categoria"), "Estado" -> "A"))
@@ -674,13 +687,17 @@ final class RestService(spark: SparkSession, store: TableStore,
     lock.synchronized {
       import spark.implicits._
       val target = store.load("eventos")
-      if (target.filter(col("nombre") === nombre).limit(1).count() == 0)
+      if (target.filter(col("nombre") === nombre).count() == 0)
         reply(ex, 404, "Not Found")
       else {
-        // O18 guarded update: estado→C by unique name (main.go:49)
-        store.replace("eventos", MergeOps.guardedUpdate(target,
-          Seq(nombre).toDF("nombre"), Seq("nombre"), lit(true),
-          Map("estado" -> lit("C"))))
+        // S4: estado→C on the event and its inventario row (O18), and
+        // its active reservations cascade (O23)
+        val names = Seq(nombre).toDF("nombre")
+        store.replace("eventos", MergeOps.cancelEvents(target, names))
+        store.replace("inventario",
+          MergeOps.cancelEvents(store.load("inventario"), names))
+        store.replace("reservas",
+          MergeOps.cancelReservas(store.load("reservas"), names))
         reply(ex, 200, s"Evento: $nombre cancelado")
       }
     }
@@ -699,7 +716,7 @@ final class RestService(spark: SparkSession, store: TableStore,
         // matches AND estado='A' AND capacidad covers the request
         val guard = col("nombre") === evento && col("estado") === "A" &&
           col("capacidad") >= cant
-        if (inv.filter(guard).limit(1).count() == 0)
+        if (inv.filter(guard).count() == 0)
           reply(ex, 404,
             s"evento $evento no encontrado o sin capacidad en este momento")
         else {

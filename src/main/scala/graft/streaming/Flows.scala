@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.tables.{MergeOps, TableStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -89,14 +88,8 @@ final class Flows(spark: SparkSession, store: TableStore,
       store.appendUnique("eventos",
         parsed.select(evCols.map(col).toIndexedSeq: _*), Seq("nombre"),
         tieBreak = Seq(col("id")))
-      // O2: clone into inventario (same id, null reservation columns)
-      val clones = parsed.select(col("id"), col("nombre"), col("capacidad"),
-        col("categoria"), col("estado"),
-        lit(null).cast("string").as("idres"),
-        lit(null).cast("string").as("email"),
-        lit(null).cast("int").as("canres"))
-      store.appendUnique("inventario", clones, Seq("nombre"),
-        tieBreak = Seq(col("id")))
+      store.appendUnique("inventario", MergeOps.inventarioClones(parsed),
+        Seq("nombre"), tieBreak = Seq(col("id")))
       parsed0.unpersist()
       ()
     }
@@ -111,14 +104,9 @@ final class Flows(spark: SparkSession, store: TableStore,
       // the source batch feeds two branches (invalid-routing and the
       // fold pipeline); persist so the stream source is scanned once
       val rawBatch = rawBatch0.persist()
-      // O16 input validation (reservas/main.go:112-115,142-145): reject
-      // null/non-positive quantities and null/malformed ids BEFORE the
-      // fold — a cantidad<=0 "request" would otherwise read as a seat
-      // return, and NULLs would slip three-valued-logic predicates.
+      // O16: invalid requests are refused BEFORE the fold
       val validated = rawBatch.withColumn("__invalid",
-        when(col("cantidad").isNull || col("cantidad") <= 0, "cantidad_invalida")
-          .when(col("id").isNull || !col("id").rlike("^[0-9a-f]{24}$"),
-            "id_invalido"))
+        MergeOps.requestFault(col("cantidad"), col("id")))
       store.appendUnique("rechazos",
         validated.filter(col("__invalid").isNotNull)
           .select(col("id"), col("evento"), col("email"), col("cantidad"),
@@ -148,23 +136,10 @@ final class Flows(spark: SparkSession, store: TableStore,
       // sink — measured 5.8k → 50k req/s on a 600k-request batch
       val log = log0.persist()
       val admitted = log.filter(col("admitted"))
-      // widen inventario with the last admitted reservation per key
-      // (README.md:443-454 document shape) — max_by hash-agg, id as the
-      // deterministic tiebreak for equal seq
-      val lastPerKey = admitted
-        .groupBy(col("evento").as("nombre"))
-        .agg(max_by(struct(col("id"), col("email"), col("cantidad")),
-          struct(col("seq"), col("id"))).as("__r"))
-        .select(col("nombre"), col("__r.id").as("__idres"),
-          col("__r.email").as("__email"), col("__r.cantidad").as("__canres"))
-      val widened = MergeOps.guardedUpdate(updatedInv, lastPerKey,
-        Seq("nombre"),
-        guard = lit(true),
-        sets = Map(
-          "idres" -> col("__b___idres"), "email" -> col("__b___email"),
-          "canres" -> col("__b___canres")),
-        batchCols = Seq("__idres", "__email", "__canres"))
-      store.replace("inventario", widened)
+      // the last admitted reservation per key is the latest seq, id as
+      // the deterministic tiebreak for equal seq
+      store.replace("inventario", MergeOps.widenLastAdmitted(updatedInv,
+        admitted, struct(col("seq"), col("id"))))
       // O22: idempotent reservation registration — reservas only ever
       // GROWS on this path, so it appends a delta segment (O(admitted)
       // write) instead of rewriting the registry (O(history))
@@ -219,9 +194,8 @@ final class Flows(spark: SparkSession, store: TableStore,
       coalesce(col("cantidad").cast("int"), lit(0)).as("cantidad"),
       coalesce(col("seq").cast("long"), lit(0L)).as("seq"),
       when(col("kind") =!= "req", lit(null).cast("string"))
-        .when(col("cantidad").isNull || col("cantidad") <= 0, "cantidad_invalida")
-        .when(col("id").isNull || !col("id").rlike("^[0-9a-f]{24}$"),
-          "id_invalido").as("motivo"),
+        .otherwise(MergeOps.requestFault(col("cantidad"), col("id")))
+        .as("motivo"),
       coalesce(col("kind"), lit("req")).as("kind")).as[SReq]
     // state seeded once, at query start: (capacidad, estado) from the
     // inventario snapshot, and the dedup maps from the DURABLE
@@ -269,109 +243,78 @@ final class Flows(spark: SparkSession, store: TableStore,
     val log = validated.groupByKey(_.evento)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout,
         init)(StatefulAdmission.admit(horizon) _)
-    val w = log.toDF().writeStream
-      .queryName("admission_stateful")
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        // same replay contract as start(): with a persistent
-        // checkpoint, a crash-replayed batch skips the (idempotent but
-        // not free) table merges; without one, batchIds restart at 0
-        // and the guard must stay off
-        if (checkpointRoot.isEmpty ||
-            batchId > store.lastCommitted("admission_stateful")) {
-        val log = batch0.persist()
-        val changes = log.filter(col("kind") =!= "reject")
-        if (!changes.isEmpty) {
-          // creates materialize FIRST (appendUnique on nombre — first
-          // wins, S1 parity; categoria is not carried on the lifecycle
-          // stream), so the lastState merge below sees the new keys and
-          // same-batch admissions land on them
-          val created = changes.filter(col("kind") === "create")
-            .select(col("id"), col("evento").as("nombre"),
-              col("cantidad").as("capacidad"),
-              lit(null).cast("string").as("categoria"),
-              lit("A").as("estado"))
-          if (!created.isEmpty) {
-            store.appendUnique("eventos", created, Seq("nombre"),
-              tieBreak = Seq(col("id")))
-            store.appendUnique("inventario", created
-              .withColumn("idres", lit(null).cast("string"))
-              .withColumn("email", lit(null).cast("string"))
-              .withColumn("canres", lit(null).cast("int")), Seq("nombre"),
-              tieBreak = Seq(col("id")))
-          }
-          val inv0 = store.load("inventario")
-          val capType = inv0.schema("capacidad").dataType
-          // the LAST state-changing event per key carries the key's
-          // final (capacidad, estado) — `ord` IS the fold order (the
-          // operator emits it), so no re-derivation of comparator
-          // tiebreaks here. One guarded MERGE applies both, touching
-          // only keys present in the batch.
-          val lastState = changes.groupBy(col("evento").as("nombre"))
-            .agg(max_by(struct(col("capacidad"), col("estado")),
-              col("ord")).as("__s"))
-            .select(col("nombre"), col("__s.capacidad").as("__cap"),
-              col("__s.estado").as("__estado"))
-          val capped = MergeOps.guardedUpdate(inv0, lastState,
-            Seq("nombre"), guard = lit(true),
-            sets = Map(
-              "capacidad" -> col("__b___cap").cast(capType),
-              "estado" -> col("__b___estado")),
-            batchCols = Seq("__cap", "__estado"))
-          // document widening from the last ADMITTED reservation
-          val admitted = log.filter(col("kind") === "admit")
-          val lastAdmit = admitted.groupBy(col("evento").as("nombre"))
-            .agg(max_by(struct(col("id"), col("email"), col("cantidad")),
-              col("ord")).as("__r"))
-            .select(col("nombre"), col("__r.id").as("__idres"),
-              col("__r.email").as("__email"), col("__r.cantidad").as("__canres"))
-          store.replace("inventario", MergeOps.guardedUpdate(capped,
-            lastAdmit, Seq("nombre"), guard = lit(true),
-            sets = Map(
-              "idres" -> col("__b___idres"), "email" -> col("__b___email"),
-              "canres" -> col("__b___canres")),
-            batchCols = Seq("__idres", "__email", "__canres")))
-          store.appendUnique("reservas", admitted.select(col("id"),
-            col("evento"), lit("A").as("estado"), col("email"),
-            col("cantidad")), Seq("id"))
-          // applied seat returns are durably recorded: devoluciones is
-          // the registry the restart reseed reads `returned` from (and
-          // the one the batch consumerFlow anti-joins against)
-          val returnedIds = changes.filter(col("kind") === "return")
-            .select(col("id"))
-          if (!returnedIds.isEmpty) {
-            if (!store.exists("devoluciones"))
-              store.init("devoluciones", Seq.empty[String].toDF("id"))
-            store.appendUnique("devoluciones", returnedIds, Seq("id"))
-          }
-          // O18/O23 organizer cancels: eventos estado + reservas cascade
-          // (active rows only; X history untouched) — table-side
-          // materialization of the state transition
-          val cancelled = changes.filter(col("kind") === "cancel")
-            .select(col("evento").as("nombre")).distinct()
-          if (!cancelled.isEmpty) {
-            store.replace("eventos", MergeOps.guardedUpdate(
-              store.load("eventos"), cancelled, Seq("nombre"),
-              guard = lit(true), sets = Map("estado" -> lit("C"))))
-            store.replace("reservas", MergeOps.semiJoinUpdate(
-              store.load("reservas"), cancelled,
-              targetKey = "evento", sourceKey = "nombre",
-              guard = col("estado") === "A", sets = Map("estado" -> lit("C"))))
-          }
+    start(log.toDF(), "admission_stateful") { batch0 =>
+      val log = batch0.persist()
+      val changes = log.filter(col("kind") =!= "reject")
+      if (!changes.isEmpty) {
+        // creates materialize FIRST (appendUnique on nombre — first
+        // wins, S1 parity; categoria is not carried on the lifecycle
+        // stream), so the lastState merge below sees the new keys and
+        // same-batch admissions land on them
+        val created = changes.filter(col("kind") === "create")
+          .select(col("id"), col("evento").as("nombre"),
+            col("cantidad").as("capacidad"),
+            lit(null).cast("string").as("categoria"),
+            lit("A").as("estado"))
+        if (!created.isEmpty) {
+          store.appendUnique("eventos", created, Seq("nombre"),
+            tieBreak = Seq(col("id")))
+          store.appendUnique("inventario", MergeOps.inventarioClones(created),
+            Seq("nombre"), tieBreak = Seq(col("id")))
         }
-        store.appendUnique("rechazos", log.filter(col("motivo").isNotNull)
-          .select(col("id"), col("evento"), col("email"), col("cantidad"),
-            col("motivo")), Seq("id", "motivo"))
-        log.unpersist()
-        if (checkpointRoot.isDefined)
-          store.commitBatch("admission_stateful", batchId)
+        val inv0 = store.load("inventario")
+        val capType = inv0.schema("capacidad").dataType
+        // the LAST state-changing event per key carries the key's
+        // final (capacidad, estado) — `ord` IS the fold order (the
+        // operator emits it), so no re-derivation of comparator
+        // tiebreaks here. One guarded MERGE applies both, touching
+        // only keys present in the batch.
+        val lastState = changes.groupBy(col("evento").as("nombre"))
+          .agg(max_by(struct(col("capacidad"), col("estado")),
+            col("ord")).as("__s"))
+          .select(col("nombre"), col("__s.capacidad").as("__cap"),
+            col("__s.estado").as("__estado"))
+        val capped = MergeOps.guardedUpdate(inv0, lastState,
+          Seq("nombre"), guard = lit(true),
+          sets = Map(
+            "capacidad" -> col("__b___cap").cast(capType),
+            "estado" -> col("__b___estado")),
+          batchCols = Seq("__cap", "__estado"))
+        // `ord` is the fold order, so the last admission is its max
+        val admitted = log.filter(col("kind") === "admit")
+        store.replace("inventario",
+          MergeOps.widenLastAdmitted(capped, admitted, col("ord")))
+        store.appendUnique("reservas", admitted.select(col("id"),
+          col("evento"), lit("A").as("estado"), col("email"),
+          col("cantidad")), Seq("id"))
+        // applied seat returns are durably recorded: devoluciones is
+        // the registry the restart reseed reads `returned` from (and
+        // the one the batch consumerFlow anti-joins against)
+        val returnedIds = changes.filter(col("kind") === "return")
+          .select(col("id"))
+        if (!returnedIds.isEmpty) {
+          if (!store.exists("devoluciones"))
+            store.init("devoluciones", Seq.empty[String].toDF("id"))
+          store.appendUnique("devoluciones", returnedIds, Seq("id"))
         }
-        ()
+        // O18/O23 organizer cancels: eventos estado + reservas cascade
+        // (active rows only; X history untouched) — table-side
+        // materialization of the state transition
+        val cancelled = changes.filter(col("kind") === "cancel")
+          .select(col("evento").as("nombre")).distinct()
+        if (!cancelled.isEmpty) {
+          store.replace("eventos",
+            MergeOps.cancelEvents(store.load("eventos"), cancelled))
+          store.replace("reservas",
+            MergeOps.cancelReservas(store.load("reservas"), cancelled))
+        }
       }
-    checkpointRoot.foreach(r =>
-      w.option("checkpointLocation", s"$r/admission_stateful"))
-    w.start()
+      store.appendUnique("rechazos", log.filter(col("motivo").isNotNull)
+        .select(col("id"), col("evento"), col("email"), col("cantidad"),
+          col("motivo")), Seq("id", "motivo"))
+      log.unpersist()
+      ()
+    }
   }
 
   // -------------------------------------------------------------------
@@ -390,16 +333,8 @@ final class Flows(spark: SparkSession, store: TableStore,
       // O20: guarded state transition
       store.replace("reservas", MergeOps.guardedUpdate(res, batch, Seq("id"),
         guard = col("estado") === "A", sets = Map("estado" -> lit("X"))))
-      // O21: guarded increment (seat return) — negative delta fold, no
-      // capacity guard; not-found (event already cancelled) tolerated
-      // seq=0: return order cannot change outcomes (no capacity guard)
-      // and the fold's id tiebreak keeps it deterministic — see
-      // consumerFlow's returns for the rationale
-      val returns = pre.select(col("id"), col("evento"), col("email"),
-        (-col("cantidad")).cast("int").as("cantidad"),
-        lit(0L).as("seq"))
-      val inv = store.load("inventario")
-      val (updatedInv, _) = MergeOps.admitReservations(inv, returns)
+      // O21: seat return; not-found (event already cancelled) tolerated
+      val updatedInv = MergeOps.returnSeats(store.load("inventario"), pre)
       // canres=-1 parity with the reference's sentinel document state
       val sentinel = pre.select(col("evento").as("__e"),
         col("id").as("__idres"), col("email").as("__email"))
@@ -419,16 +354,10 @@ final class Flows(spark: SparkSession, store: TableStore,
   // -------------------------------------------------------------------
   def organizerCancelFlow(cancelNames: DataFrame): StreamingQuery =
     start(cancelNames, "organizer_cancel") { batch =>
-      val evs = store.load("eventos")
-      store.replace("eventos", MergeOps.guardedUpdate(evs, batch, Seq("nombre"),
-        guard = lit(true), sets = Map("estado" -> lit("C"))))
-      val inv = store.load("inventario")
-      store.replace("inventario", MergeOps.guardedUpdate(inv, batch, Seq("nombre"),
-        guard = lit(true), sets = Map("estado" -> lit("C"))))
-      val res = store.load("reservas")
-      store.replace("reservas", MergeOps.semiJoinUpdate(res, batch,
-        targetKey = "evento", sourceKey = "nombre",
-        guard = col("estado") === "A", sets = Map("estado" -> lit("C"))))
+      Seq("eventos", "inventario").foreach(t =>
+        store.replace(t, MergeOps.cancelEvents(store.load(t), batch)))
+      store.replace("reservas",
+        MergeOps.cancelReservas(store.load("reservas"), batch))
     }
 
   // -------------------------------------------------------------------
@@ -469,12 +398,10 @@ final class Flows(spark: SparkSession, store: TableStore,
       val cancelled = invMsgs.filter(col("clase") === "cascade_cancel")
         .select(col("nombre"))
       if (!cancelled.isEmpty) {
-        store.replace("reservas", MergeOps.semiJoinUpdate(store.load("reservas"),
-          cancelled, targetKey = "evento", sourceKey = "nombre",
-          guard = col("estado") === "A", sets = Map("estado" -> lit("C"))))
-        store.replace("inventario", MergeOps.guardedUpdate(store.load("inventario"),
-          cancelled, Seq("nombre"), guard = lit(true),
-          sets = Map("estado" -> lit("C"))))
+        store.replace("reservas",
+          MergeOps.cancelReservas(store.load("reservas"), cancelled))
+        store.replace("inventario",
+          MergeOps.cancelEvents(store.load("inventario"), cancelled))
       }
       // O21: customer-cancel messages (estado='X') → seat return;
       // creation echoes (estado='A') dropped (inventario/main.go:111-113).
@@ -490,18 +417,11 @@ final class Flows(spark: SparkSession, store: TableStore,
         .filter(col("estado") === "X")
         .dropDuplicates("id")
         .join(store.load("devoluciones"), Seq("id"), "left_anti")
-        // seat returns carry no capacity guard, so fold order cannot
-        // change outcomes; seq=0 keeps the fold deterministic via its
-        // id tiebreak (a monotonically_increasing_id here would vary
-        // across retries/partitionings)
-        .select(col("id"), col("evento"), col("email"),
-          (-col("cantidad")).cast("int").as("cantidad"),
-          lit(0L).as("seq"))
+        .select(col("id"), col("evento"), col("cantidad"))
         .persist()
       if (!returns.isEmpty) {
-        val (updatedInv, _) =
-          MergeOps.admitReservations(store.load("inventario"), returns)
-        store.replace("inventario", updatedInv)
+        store.replace("inventario",
+          MergeOps.returnSeats(store.load("inventario"), returns))
         store.appendUnique("devoluciones", returns.select(col("id")), Seq("id"))
       }
       returns.unpersist()

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.tables.TableStore
+import graft.tables.{MergeOps, TableStore}
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues,
   Trigger}
@@ -166,11 +165,10 @@ object HoldExpiry {
     * reference makes the same trade (consumer effect before offset
     * commit); a deployment needing the clamp feeds the eventos
     * capacity table into a post-merge `least(capacidad, original)`
-    * reconciliation view. The increment itself rides
-    * [[graft.tables.MergeOps.admitReservations]] with negative
-    * cantidad, exactly like consumerFlow's devoluciones — no bespoke
-    * inventario merge, and unknown eventos are tolerated the same
-    * way. */
+    * reconciliation view. The increment itself is
+    * [[graft.tables.MergeOps.returnSeats]], exactly like consumerFlow's
+    * devoluciones — no bespoke inventario merge, and unknown eventos
+    * are tolerated the same way. */
   def flow(store: TableStore,
       events: Dataset[HoldEvent], timeoutMs: Long,
       checkpointRoot: Option[String] = None,
@@ -187,13 +185,8 @@ object HoldExpiry {
           else batch).persist()
         try {
           if (!fresh.isEmpty) {
-            val returns = fresh.select(col("id"), col("evento"),
-              lit("").as("email"),
-              (-col("cantidad")).cast("int").as("cantidad"),
-              lit(0L).as("seq"))
-            val (updatedInv, _) = graft.tables.MergeOps
-              .admitReservations(store.load("inventario"), returns)
-            store.replace("inventario", updatedInv)
+            store.replace("inventario",
+              MergeOps.returnSeats(store.load("inventario"), fresh))
             // fresh is already deduped against the table and a timer
             // fires once per key, so a plain append suffices —
             // appendUnique would re-run the identical anti-join

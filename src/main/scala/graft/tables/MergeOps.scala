@@ -18,6 +18,19 @@ import org.apache.spark.sql.functions._
  * batch is small (the common case for CDC micro-batches: a batch of
  * thousands merging into a table of billions broadcasts the batch, not
  * the table).
+ *
+ * The Boletia write rules are defined here once each, so the batch
+ * flows, the keyed-state flow, hold expiry and the REST handlers
+ * apply the same rule:
+ *
+ *  - [[requestFault]] — O16 request validation;
+ *  - [[inventarioClones]] — O2, an event's inventario row;
+ *  - [[widenLastAdmitted]] — the inventario document shape
+ *    (README.md:443-454), the last admitted reservation per event;
+ *  - [[cancelEvents]] — O18, estado → C by nombre (eventos and
+ *    inventario);
+ *  - [[cancelReservas]] — O23, the cascade onto active reservas;
+ *  - [[returnSeats]] — O21, seat returns as a negative admission fold.
  */
 object MergeOps {
 
@@ -260,6 +273,70 @@ object MergeOps {
       }: _*)
     (updated, log)
   }
+
+  /** O16 (reservas/main.go:112-115,142-145) — why a reservation
+    * request is refused before admission: `cantidad_invalida` for a
+    * null or non-positive quantity (a cantidad ≤ 0 "request" would
+    * otherwise read as a seat return), `id_invalido` for a null or
+    * non-24-hex id; null when the request is valid. */
+  def requestFault(cantidad: Column, id: Column): Column =
+    when(cantidad.isNull || cantidad <= 0, "cantidad_invalida")
+      .when(id.isNull || !id.rlike("^[0-9a-f]{24}$"), "id_invalido")
+
+  /** O2 (kafka-mongodb-connect.yaml:22-33) — the inventario row of each
+    * new `eventos` row: same id and full capacity, no reservation
+    * echo yet. */
+  def inventarioClones(eventos: DataFrame): DataFrame =
+    eventos.select(col("id"), col("nombre"), col("capacidad"),
+      col("categoria"), col("estado"),
+      lit(null).cast("string").as("idres"),
+      lit(null).cast("string").as("email"),
+      lit(null).cast("int").as("canres"))
+
+  /** The inventario document shape (README.md:443-454): each event
+    * touched by `admitted` (id, evento, email, cantidad) carries its
+    * last admitted reservation, the greatest by `order`, in
+    * idres/email/canres. */
+  def widenLastAdmitted(inv: DataFrame, admitted: DataFrame,
+      order: Column): DataFrame = {
+    val last = admitted.groupBy(col("evento").as("nombre"))
+      .agg(max_by(struct(col("id"), col("email"), col("cantidad")), order)
+        .as("__r"))
+      .select(col("nombre"), col("__r.id").as("__idres"),
+        col("__r.email").as("__email"), col("__r.cantidad").as("__canres"))
+    guardedUpdate(inv, last, Seq("nombre"), guard = lit(true),
+      sets = Map("idres" -> col("__b___idres"), "email" -> col("__b___email"),
+        "canres" -> col("__b___canres")),
+      batchCols = Seq("__idres", "__email", "__canres"))
+  }
+
+  /** O18 (eventos/main.go:45-59) — organizer cancel: estado → C on
+    * every `target` row (eventos or inventario) whose nombre is in
+    * `names`, whatever its estado. */
+  def cancelEvents(target: DataFrame, names: DataFrame): DataFrame =
+    guardedUpdate(target, names, Seq("nombre"), guard = lit(true),
+      sets = Map("estado" -> lit("C")))
+
+  /** O23 (inventario/main.go:99-103) — the cancel cascade: every
+    * ACTIVE reserva of an event in `names` → C; customer-cancelled X
+    * rows stay as history. */
+  def cancelReservas(reservas: DataFrame, names: DataFrame): DataFrame =
+    semiJoinUpdate(reservas, names, targetKey = "evento",
+      sourceKey = "nombre", guard = col("estado") === "A",
+      sets = Map("estado" -> lit("C")))
+
+  /** O21 (inventario/main.go:114-133) — `returned` reservations (id,
+    * evento, cantidad) give their seats back: the admission fold with
+    * negative cantidad, which no capacity guard stops; an event that is
+    * gone or no longer active takes nothing back. Every return sits at
+    * seq 0 — without a capacity guard fold order cannot change the
+    * outcome, and the fold's id tiebreak keeps it deterministic (a
+    * monotonically_increasing_id would vary across retries). Returns
+    * the updated inventario. */
+  def returnSeats(inventario: DataFrame, returned: DataFrame): DataFrame =
+    admitReservations(inventario, returned.select(col("id"), col("evento"),
+      lit(null).cast("string").as("email"),
+      (-col("cantidad")).cast("int").as("cantidad"), lit(0L).as("seq")))._1
 
   /** Unknown-event requests (no inventario row) — needed by flows to
     * emit rejections the fold never saw. */

@@ -5,8 +5,8 @@ import java.nio.file.attribute.FileTime
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit, row_number}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Versioned parquet table manager — a minimal log-structured MVCC
@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions.{col, lit, row_number}
  * need.
  *
  * Layout: every version N has a manifest file `root/<table>/m<N>`
- * listing the data segment dirs (`d<K>/`) that compose the snapshot,
- * plus a `_current` pointer file naming the live version. `load` binds
- * a DataFrame to the segment list current AT CALL TIME.
+ * listing the data segment dirs (`d<K>/`) that compose the snapshot
+ * (its format: [[TableStore.Manifest]]), plus a `_current` pointer
+ * file naming the live version. `load` binds a DataFrame to the
+ * segment list current AT CALL TIME.
  *
  * Writes are O(change), not O(table): `replace` materializes a full
  * new segment (mutating merges need it), but `append`/`appendUnique`
@@ -52,6 +53,7 @@ import org.apache.spark.sql.functions.{col, lit, row_number}
   *   available for explicit, tighter GC. */
 final class TableStore(spark: SparkSession, root: String,
     autoVacuumKeep: Int = 16) {
+  import TableStore.Manifest
   Files.createDirectories(Paths.get(root))
 
   private val CompactThreshold = 16
@@ -71,56 +73,48 @@ final class TableStore(spark: SparkSession, root: String,
   private def tdir(name: String): Path = Paths.get(root, name)
   private def pointer(name: String): Path = tdir(name).resolve("_current")
 
-  private def currentVersion(name: String): Int =
-    if (Files.exists(pointer(name)))
-      new String(Files.readAllBytes(pointer(name))).trim.toInt
-    else -1
+  private def manifestPath(name: String, v: Int): Path =
+    tdir(name).resolve(s"m$v")
 
-  // manifest = optional `#partitionBy=c1,c2` layout header + one
-  // segment dir per line. The header is what lets append() write
-  // layout-compatible (hive-partitioned) segments into a partitioned
-  // table instead of the r7 replace-only constraint.
-  private def manifestLines(name: String, v: Int): Seq[String] = {
-    val m = tdir(name).resolve(s"m$v")
-    new String(Files.readAllBytes(m)).split("\n").toSeq.filter(_.nonEmpty)
+  private def readManifest(p: Path): Manifest =
+    Manifest.parse(new String(Files.readAllBytes(p)), p.toString)
+
+  private def manifest(name: String, v: Int): Manifest =
+    readManifest(manifestPath(name, v))
+
+  /** Version `v`'s manifest path, or the pointed error of a version
+    * that was never published or has been vacuumed. */
+  private def requireReadable(name: String, v: Int): Path = {
+    require(versionExists(name, v), s"table $name has no readable " +
+      s"version $v (current ${version(name)}; older versions " +
+      "may have been vacuumed)")
+    manifestPath(name, v)
   }
 
-  private def segments(name: String, v: Int): Seq[String] =
-    manifestLines(name, v).filterNot(_.startsWith("#"))
+  /** The current manifest of `name`, refused for a bucketed table with
+    * `why` — bucketed tables are replace-only, their layout is the
+    * bucket spec. */
+  private def requireUnbucketed(name: String, why: String): Manifest = {
+    val m = manifest(name, version(name))
+    require(m.bucketed.isEmpty, s"table $name is bucketed — $why")
+    m
+  }
+
+  private def dirs(name: String, segs: Seq[String]): Seq[String] =
+    segs.map(s => tdir(name).resolve(s).toString)
 
   /** The table's partition columns (hive layout) as recorded by the
     * manifest of its CURRENT version; empty for flat tables. */
   def partitionColumns(name: String): Seq[String] = {
-    val v = currentVersion(name)
-    if (v < 0) Nil
-    else manifestLines(name, v).find(_.startsWith("#partitionBy="))
-      .map(_.stripPrefix("#partitionBy=").split(",").toSeq
-        .filter(_.nonEmpty))
-      .getOrElse(Nil)
+    val v = version(name)
+    if (v < 0) Nil else manifest(name, v).partitionBy
   }
 
-  /** The schema recorded by version `v`'s manifest, present once a
-    * table has EVOLVED past its files' own footers (older segments
-    * then lack the newer columns and must be read under the recorded
-    * superset schema, which fills them as null). */
-  private def recordedSchema(name: String, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] =
-    manifestLines(name, v).find(_.startsWith("#schema="))
-      .map(h => org.apache.spark.sql.types.DataType
-        .fromJson(h.stripPrefix("#schema="))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-
-  /** Atomically flip the table to version `next` = `segs`. The segment
+  /** Atomically flip the table to version `next` = `m`. The segment
     * data is fully materialized BEFORE the pointer flips; concurrent
     * readers see old-or-new, never partial. */
-  private def partHeader(partitionBy: Seq[String]): Seq[String] =
-    if (partitionBy.nonEmpty) Seq(s"#partitionBy=${partitionBy.mkString(",")}")
-    else Nil
-
-  private def publish(name: String, segs: Seq[String], next: Int,
-      headers: Seq[String] = Nil): Unit = {
-    Files.write(tdir(name).resolve(s"m$next"),
-      (headers ++ segs).mkString("\n").getBytes)
+  private def publish(name: String, next: Int, m: Manifest): Unit = {
+    Files.write(manifestPath(name, next), m.render.getBytes)
     val tmp = tdir(name).resolve("_current_tmp")
     Files.write(tmp, next.toString.getBytes)
     Files.move(tmp, pointer(name), StandardCopyOption.ATOMIC_MOVE,
@@ -133,26 +127,28 @@ final class TableStore(spark: SparkSession, root: String,
       vacuum(name, autoVacuumKeep)
   }
 
-  private def writeSegment(name: String, v: Int, df: DataFrame,
+  private def writeSegment(name: String, seg: String, df: DataFrame,
       partitionBy: Seq[String] = Nil): String = {
-    val seg = s"d$v"
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tdir(name).resolve(seg).toString)
     seg
   }
 
-  def exists(name: String): Boolean = currentVersion(name) >= 0
+  def exists(name: String): Boolean = version(name) >= 0
 
   /** The table's live version number (−1 if the table is absent) —
     * the handle time travel and CDC take. */
-  def version(name: String): Int = currentVersion(name)
+  def version(name: String): Int =
+    if (Files.exists(pointer(name)))
+      new String(Files.readAllBytes(pointer(name))).trim.toInt
+    else -1
 
   /** True iff version `v` of `name` is still readable (its manifest
     * has not been vacuumed) — the probe incremental consumers use to
     * decide between a delta read and a full resync. */
   def versionExists(name: String, v: Int): Boolean =
-    v >= 0 && Files.exists(tdir(name).resolve(s"m$v"))
+    v >= 0 && Files.exists(manifestPath(name, v))
 
   /** Snapshot read: bound to the segment list current at call time.
     * Partitioned tables with several delta segments read one scan per
@@ -163,11 +159,7 @@ final class TableStore(spark: SparkSession, root: String,
     * where Spark keeps the CLUSTERED BY metadata that lets a join or
     * aggregation on the bucket key skip its Exchange. Other tables
     * resolve once per version through the table's snapshot handle. */
-  def load(name: String): DataFrame = {
-    val v = currentVersion(name)
-    require(v >= 0, s"table $name does not exist")
-    loadVersion(name, v)
-  }
+  def load(name: String): DataFrame = loadVersion(name, version(name))
 
   /** Snapshot handle: the resolved frame of a table's current version,
     * keyed by (version, manifest mtime). It holds metadata only — the
@@ -194,31 +186,25 @@ final class TableStore(spark: SparkSession, root: String,
     * current version reads through the snapshot handle, older ones
     * resolve afresh. */
   def loadVersion(name: String, v: Int): DataFrame = {
-    val cur = currentVersion(name)
+    val cur = version(name)
     require(cur >= 0, s"table $name does not exist")
-    val m = tdir(name).resolve(s"m$v")
-    require(v >= 0 && Files.exists(m),
-      s"table $name has no readable version $v (current " +
-        s"$cur; older versions may have been vacuumed)")
-    val mtime = Files.getLastModifiedTime(m)
+    val path = requireReadable(name, v)
+    val mtime = Files.getLastModifiedTime(path)
     val held = handles.get(name)
     if (v == cur && held != null && held.version == v && held.mtime == mtime)
       return Bridge.freshRelations(held.frame)
-    val lines = manifestLines(name, v)
-    lines.find(_.startsWith("#bucketed=")) match {
-      case Some(h) =>
-        val catalog = h.stripPrefix("#bucketed=")
+    val m = readManifest(path)
+    m.bucketed match {
+      case Some(catalog) =>
         // the catalog entry dies with the SparkSession but the manifest
         // and data files are durable — a fresh session re-registers the
         // recorded CLUSTERED BY spec over the existing segment before
         // reading, so bucketed tables honor the same restart contract
         // as every other table kind
         if (!spark.catalog.tableExists(catalog))
-          lines.find(_.startsWith("#bucketSpec="))
-            .map(_.stripPrefix("#bucketSpec=").split("\\|", -1)) match {
+          m.bucketSpec.map(_.split("\\|", -1)) match {
             case Some(Array(n, by, sort)) =>
-              val dir = tdir(name)
-                .resolve(lines.filterNot(_.startsWith("#")).head).toString
+              val dir = dirs(name, m.segments).head
               val schema = spark.read.parquet(dir).schema
               // quote identifiers and escape the path: the store root
               // is caller-chosen, so the LOCATION literal (and bucket/
@@ -240,10 +226,7 @@ final class TableStore(spark: SparkSession, root: String,
           }
         spark.table(catalog)
       case None =>
-        val dirs = lines.filterNot(_.startsWith("#"))
-          .map(s => tdir(name).resolve(s).toString)
-        def read() = readDirs(dirs,
-          lines.exists(_.startsWith("#partitionBy=")), recordedSchema(name, v))
+        def read() = readDirs(dirs(name, m.segments), m)
         if (v == cur) Bridge.freshRelations(handleFor(name, v, mtime)(read()))
         else read()
     }
@@ -262,34 +245,33 @@ final class TableStore(spark: SparkSession, root: String,
       if (held != null && held.version == v && held.mtime == mtime) held.frame
       else {
         val frame = read
-        if (currentVersion(name) == v)
+        if (version(name) == v)
           handles.put(name, new Handle(v, mtime, frame))
         frame
       }
     }
 
-  private def readDirs(dirs: Seq[String], partitioned: Boolean,
-      recorded: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame =
-    recorded match {
-      // an evolved table reads under its RECORDED superset schema —
-      // parquet fills columns missing from older segments as null
-      case Some(sch) =>
-        if (dirs.length == 1 || !partitioned)
-          spark.read.schema(sch).parquet(dirs: _*)
-        else dirs.map(d => spark.read.schema(sch).parquet(d))
-          .reduce(_.unionByName(_))
-      case None if !partitioned || dirs.length == 1 =>
-        spark.read.parquet(dirs: _*)
-      case None =>
-        // pin every segment to the first segment's schema: hive
-        // partition-column type inference runs per segment, so a
-        // segment whose partition values happen to all look numeric
-        // could otherwise infer a different type than its siblings
-        // and unionByName would silently coerce
-        val schema = spark.read.parquet(dirs.head).schema
-        dirs.map(d => spark.read.schema(schema).parquet(d))
-          .reduce(_.unionByName(_))
+  /** The one schema every segment of `m` reads under: the RECORDED
+    * superset of an evolved table (parquet fills columns missing from
+    * older segments as null), else the first segment's — hive
+    * partition-column type inference runs per segment, so a segment
+    * whose partition values happen to all look numeric could otherwise
+    * infer a different type than its siblings. */
+  private def pinnedSchema(dirs: Seq[String], m: Manifest): StructType =
+    m.schema.getOrElse(spark.read.parquet(dirs.head).schema)
+
+  /** Partitioned segments read one scan each, unioned by name; a flat
+    * table or one segment reads as one scan, unpinned when nothing was
+    * recorded. */
+  private def readDirs(dirs: Seq[String], m: Manifest): DataFrame =
+    if (m.schema.isEmpty && (m.partitionBy.isEmpty || dirs.length == 1))
+      spark.read.parquet(dirs: _*)
+    else {
+      val sch = pinnedSchema(dirs, m)
+      if (dirs.length == 1 || m.partitionBy.isEmpty)
+        spark.read.schema(sch).parquet(dirs: _*)
+      else dirs.map(d => spark.read.schema(sch).parquet(d))
+        .reduce(_.unionByName(_))
     }
 
   /** Change-data-feed between two versions — the rows a downstream
@@ -313,23 +295,13 @@ final class TableStore(spark: SparkSession, root: String,
       key: Seq[String]): DataFrame = {
     require(fromV <= toV, s"fromV $fromV must be <= toV $toV")
     require(key.nonEmpty, "changesBetween needs a non-empty unique key")
-    Seq(fromV, toV).foreach(v =>
-      require(Files.exists(tdir(name).resolve(s"m$v")),
-        s"table $name has no readable version $v (current " +
-          s"${currentVersion(name)}; older versions may have been vacuumed)"))
-    val fromLines = manifestLines(name, fromV)
-    val toLines = manifestLines(name, toV)
-    val fromSegs = fromLines.filterNot(_.startsWith("#"))
-    val toSegs = toLines.filterNot(_.startsWith("#"))
-    val bucketed = (fromLines ++ toLines).exists(_.startsWith("#bucketed="))
-    if (!bucketed && toSegs.startsWith(fromSegs)) {
-      val delta = toSegs.drop(fromSegs.length)
-        .map(s => tdir(name).resolve(s).toString)
+    val Seq(from, to) =
+      Seq(fromV, toV).map(v => readManifest(requireReadable(name, v)))
+    if (to.extendsFrom(from)) {
+      val delta = dirs(name, to.segments.drop(from.segments.length))
       if (delta.isEmpty) // identical manifests (e.g. self-diff)
         loadVersion(name, toV).limit(0).withColumn("_op", lit("insert"))
-      else readDirs(delta, toLines.exists(_.startsWith("#partitionBy=")),
-          recordedSchema(name, toV))
-        .withColumn("_op", lit("insert"))
+      else readDirs(delta, to).withColumn("_op", lit("insert"))
     }
     else {
       import org.apache.spark.sql.functions.{when, xxhash64}
@@ -386,9 +358,9 @@ final class TableStore(spark: SparkSession, root: String,
   def replace(name: String, df: DataFrame,
       partitionBy: Seq[String] = Nil): Unit =
     writeLock(name).synchronized {
-      val next = currentVersion(name) + 1
-      publish(name, Seq(writeSegment(name, next, df, partitionBy)), next,
-        partHeader(partitionBy))
+      val next = version(name) + 1
+      publish(name, next,
+        Manifest(Seq(writeSegment(name, s"d$next", df, partitionBy)), partitionBy))
     }
 
   /** Bucketed snapshot publish — the fact-to-fact co-location layout:
@@ -411,7 +383,7 @@ final class TableStore(spark: SparkSession, root: String,
   def replaceBucketed(name: String, df: DataFrame, bucketBy: Seq[String],
       numBuckets: Int, sortBy: Seq[String] = Nil): Unit =
     writeLock(name).synchronized {
-      val next = currentVersion(name) + 1
+      val next = version(name) + 1
       val seg = s"d$next"
       val catalog = catalogId(name, next)
       val w = df.write.mode("overwrite").format("parquet")
@@ -422,8 +394,9 @@ final class TableStore(spark: SparkSession, root: String,
       // record the bucket spec itself, not just the catalog name: the
       // session catalog is in-memory, so a later session re-creates the
       // entry from this header (see load)
-      publish(name, Seq(seg), next, headers = Seq(s"#bucketed=$catalog",
-        s"#bucketSpec=$numBuckets|${bucketBy.mkString(",")}|${sortBy.mkString(",")}"))
+      publish(name, next, Manifest(Seq(seg), bucketed = Some(catalog),
+        bucketSpec = Some(s"$numBuckets|${bucketBy.mkString(",")}|" +
+          sortBy.mkString(","))))
     }
 
   /** Session-catalog identifier for version `v` of bucketed table
@@ -454,11 +427,10 @@ final class TableStore(spark: SparkSession, root: String,
     writeLock(name).synchronized {
       if (!exists(name)) replace(name, df)
       else {
-        require(!manifestLines(name, currentVersion(name))
-          .exists(_.startsWith("#bucketed=")),
-          s"table $name is bucketed — bucketed tables are replace-only " +
-            "(a plain append would break the bucket invariant)")
-        val parts = partitionColumns(name)
+        val v = version(name)
+        val m = requireUnbucketed(name, "bucketed tables are replace-only " +
+          "(a plain append would break the bucket invariant)")
+        val parts = m.partitionBy
         // a zero-row partitionBy write emits NO parquet files (only
         // _SUCCESS), so recording it in the manifest would make every
         // later load() fail schema inference on the empty segment dir —
@@ -466,8 +438,7 @@ final class TableStore(spark: SparkSession, root: String,
         // empty writes still emit a schema-bearing part file and are
         // harmless, so they keep the cheap no-action path)
         if (parts.isEmpty || !df.isEmpty) {
-          val v = currentVersion(name)
-          val cur = recordedSchema(name, v).getOrElse(load(name).schema)
+          val cur = m.schema.getOrElse(load(name).schema)
           val curTypes = cur.fields
             .map(f => f.name -> f.dataType.catalogString).toMap
           // Partition columns carry NO type on disk — the value is the
@@ -509,36 +480,34 @@ final class TableStore(spark: SparkSession, root: String,
             .filterNot(f => curTypes.contains(f.name))
           val missing = cur.fieldNames
             .filterNot(df.schema.fieldNames.contains).toSeq
-          val (aligned, evolvedHeader) =
+          val (aligned, schemaJson) =
             if (newCols.isEmpty && missing.isEmpty)
-              (df.select(cur.fieldNames.map(col).toSeq: _*),
-                manifestLines(name, v).find(_.startsWith("#schema=")))
+              (df.select(cur.fieldNames.map(col).toSeq: _*), m.schemaJson)
             else {
               require(evolveSchema,
                 s"append to $name changes the schema (adds " +
                   s"[${newCols.map(_.name).mkString(",")}], omits " +
                   s"[${missing.mkString(",")}]) — pass " +
                   "evolveSchema = true to evolve, or align the batch")
-              val evolved = org.apache.spark.sql.types.StructType(
+              val evolved = StructType(
                 cur.fields ++ newCols.map(_.copy(nullable = true)))
               val sel = evolved.fields.toSeq.map(f =>
                 if (df.columns.contains(f.name)) col(f.name)
                 else lit(null).cast(f.dataType).as(f.name))
               (df.select(sel: _*),
-                if (newCols.isEmpty) // pure-omission batch: no evolution
-                  manifestLines(name, v).find(_.startsWith("#schema="))
-                else Some(s"#schema=${evolved.json}"))
+                if (newCols.isEmpty) m.schemaJson // pure omission: no evolution
+                else Some(evolved.json))
             }
-          val segs = segments(name, v)
-          if (segs.length >= CompactThreshold)
+          if (m.segments.length >= CompactThreshold)
             // the rewrite materializes the (possibly evolved) schema
             // into the files themselves — no header needed afterwards
             replace(name, load(name).unionByName(aligned,
               allowMissingColumns = true), parts)
           else {
             val next = v + 1
-            publish(name, segs :+ writeSegment(name, next, aligned, parts),
-              next, partHeader(parts) ++ evolvedHeader.toSeq)
+            publish(name, next, Manifest(
+              m.segments :+ writeSegment(name, s"d$next", aligned, parts), parts,
+              schemaJson))
           }
         }
       }
@@ -587,12 +556,10 @@ final class TableStore(spark: SparkSession, root: String,
     writeLock(name).synchronized {
       if (!exists(name)) replace(name, dedup)
       else {
-        require(!manifestLines(name, currentVersion(name))
-          .exists(_.startsWith("#bucketed=")),
-          s"table $name is bucketed — upsert would drop its bucket spec")
+        val m = requireUnbucketed(name, "upsert would drop its bucket spec")
         val kept = load(name).join(dedup.select(key.map(col): _*),
           key, "left_anti")
-        replace(name, kept.unionByName(dedup), partitionColumns(name))
+        replace(name, kept.unionByName(dedup), m.partitionBy)
       }
     }
   }
@@ -616,11 +583,9 @@ final class TableStore(spark: SparkSession, root: String,
     writeLock(name).synchronized {
       require(exists(name), s"table $name does not exist")
       require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-      require(!manifestLines(name, currentVersion(name))
-        .exists(_.startsWith("#bucketed=")),
-        s"table $name is bucketed — its layout is fixed by the bucket " +
-          "spec; re-publish with replaceBucketed to change it")
-      val parts = partitionColumns(name)
+      val parts = requireUnbucketed(name, "its layout is fixed by the " +
+        "bucket spec; re-publish with replaceBucketed to change it")
+        .partitionBy
       val df = load(name)
       val rows = df.count()
       val nFiles = math.max(1L,
@@ -659,22 +624,17 @@ final class TableStore(spark: SparkSession, root: String,
   def deleteWhere(name: String, predicate: Column): Long =
     writeLock(name).synchronized {
       require(exists(name), s"table $name does not exist")
-      val v = currentVersion(name)
-      val lines = manifestLines(name, v)
-      require(!lines.exists(_.startsWith("#bucketed=")),
-        s"table $name is bucketed — bucketed tables are replace-only")
-      val parts = partitionColumns(name)
-      val segs = segments(name, v)
-      val dirs = segs.map(s => tdir(name).resolve(s).toString)
-      // pin one schema across segments, same rule as readDirs: the
-      // recorded (evolved) superset when present, else the first
-      // segment's — per-segment hive inference must not diverge
-      val pinned = recordedSchema(name, v)
-        .getOrElse(spark.read.parquet(dirs.head).schema)
+      val v = version(name)
+      val m = requireUnbucketed(name, "bucketed tables are replace-only")
+      val parts = m.partitionBy
+      val segs = m.segments
+      val segDirs = dirs(name, segs)
+      // one schema across segments, the rule readDirs reads under
+      val pinned = pinnedSchema(segDirs, m)
       val keep = !org.apache.spark.sql.functions
         .coalesce(predicate, lit(false))
       var deleted = 0L
-      val rewritten = segs.zip(dirs).zipWithIndex.flatMap {
+      val rewritten = segs.zip(segDirs).zipWithIndex.flatMap {
         case ((seg, dir), i) =>
           val sdf = spark.read.schema(pinned).parquet(dir)
           val hits = sdf.filter(
@@ -685,42 +645,24 @@ final class TableStore(spark: SparkSession, root: String,
             deleted += hits
             val kept = sdf.filter(keep)
             if (kept.isEmpty) None // fully-deleted segment: drop
-            else {
-              val next = v + 1
-              val newSeg = s"d${next}_$i"
-              val w = kept.write.mode("overwrite")
-              (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-                .parquet(tdir(name).resolve(newSeg).toString)
-              Some(newSeg)
-            }
+            else Some(writeSegment(name, s"d${v + 1}_$i", kept, parts))
           }
       }
       if (deleted > 0L) {
-        val headers = lines.filter(_.startsWith("#"))
         if (rewritten.nonEmpty)
-          publish(name, rewritten, v + 1, headers)
+          publish(name, v + 1, m.copy(segments = rewritten))
         else {
           // table emptied: one empty flat segment carrying the full
           // schema (partition columns become ordinary columns)
           val empty = spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pinned)
-          publish(name, Seq(writeSegment(name, v + 1, empty)), v + 1,
-            headers.filterNot(_.startsWith("#partitionBy=")))
+          publish(name, v + 1, m.copy(
+            segments = Seq(writeSegment(name, s"d${v + 1}", empty)),
+            partitionBy = Nil))
         }
       }
       deleted
     }
-
-  /** True iff `toV`'s manifest EXTENDS `fromV`'s — the append-only
-    * chain whose version diff is pure inserts readable from the delta
-    * segments alone. */
-  private def appendOnlyBetween(name: String, fromV: Int, toV: Int): Boolean = {
-    val fl = manifestLines(name, fromV)
-    val tl = manifestLines(name, toV)
-    !(fl ++ tl).exists(_.startsWith("#bucketed=")) &&
-      tl.filterNot(_.startsWith("#"))
-        .startsWith(fl.filterNot(_.startsWith("#")))
-  }
 
   /** True iff the transition `fromV` → current is append-only (pure
     * inserts, readable from the delta segments alone) — the probe an
@@ -728,7 +670,7 @@ final class TableStore(spark: SparkSession, root: String,
     * and a full resync (false also when `fromV` has been vacuumed). */
   def appendOnlySince(name: String, fromV: Int): Boolean =
     versionExists(name, fromV) &&
-      appendOnlyBetween(name, fromV, currentVersion(name))
+      manifest(name, version(name)).extendsFrom(manifest(name, fromV))
 
   /** Incremental replication: bring `dst` (hosted by this store) up to
     * `src`'s current snapshot by applying the version diff since the
@@ -748,16 +690,12 @@ final class TableStore(spark: SparkSession, root: String,
     val cur = version(src)
     require(cur >= 0, s"table $src does not exist")
     val last = lastCommitted(flow).toInt
-    if (!exists(dst) || last < 0) {
+    if (exists(dst) && last == cur) return cur
+    // first sync, or a base version aged out of the vacuum horizon →
+    // one full resync
+    if (!exists(dst) || !versionExists(src, last))
       replace(dst, loadVersion(src, cur), partitionColumns(src))
-      commitBatch(flow, cur)
-      return cur
-    }
-    if (last == cur) return cur
-    // base version aged out of the vacuum horizon → one full resync
-    if (!Files.exists(tdir(src).resolve(s"m$last")))
-      replace(dst, loadVersion(src, cur), partitionColumns(src))
-    else if (appendOnlyBetween(src, last, cur))
+    else if (manifest(src, cur).extendsFrom(manifest(src, last)))
       // evolveSchema: an evolved source's delta legitimately carries
       // columns dst has not seen yet — replication must follow the
       // evolution, not reject it
@@ -798,11 +736,11 @@ final class TableStore(spark: SparkSession, root: String,
     * call it on whatever cadence suits the table's churn. */
   def vacuum(name: String, keepVersions: Int = 2): Unit =
     writeLock(name).synchronized {
-      val cur = currentVersion(name)
+      val cur = version(name)
       require(cur >= 0, s"table $name does not exist")
       require(keepVersions >= 1, "must keep at least the current version")
       val floor = math.max(0, cur - keepVersions + 1)
-      val live = (floor to cur).flatMap(v => segments(name, v)).toSet
+      val live = (floor to cur).flatMap(v => manifest(name, v).segments).toSet
       val dir = tdir(name)
       val stream = Files.list(dir)
       try {
@@ -815,10 +753,8 @@ final class TableStore(spark: SparkSession, root: String,
             // a superseded bucketed version also owns a session-catalog
             // entry; drop it with the manifest so the catalog never
             // lists tables whose files this GC is about to delete
-            new String(Files.readAllBytes(p)).split("\n")
-              .find(_.startsWith("#bucketed=")).foreach(h =>
-                spark.sql("DROP TABLE IF EXISTS " +
-                  h.stripPrefix("#bucketed=")))
+            readManifest(p).bucketed.foreach(c =>
+              spark.sql(s"DROP TABLE IF EXISTS $c"))
             Files.delete(p)
           }
           else if (staleSegment) deleteRecursively(p)
@@ -852,5 +788,65 @@ final class TableStore(spark: SparkSession, root: String,
     val d = Paths.get(root, "_commits")
     Files.createDirectories(d)
     Files.write(d.resolve(flow), batchId.toString.getBytes)
+  }
+}
+
+object TableStore {
+
+  /** One version's manifest, the file `root/<table>/m<N>`: header lines,
+    * then one segment dir per line, joined by `\n` with no trailing
+    * newline. The headers, in this order and each at most once:
+    *
+    *  - `#partitionBy=c1,c2` — the hive layout every segment is written
+    *    in (lets append write layout-compatible segments);
+    *  - `#schema=<StructType JSON>` — the superset schema of a table
+    *    that EVOLVED past its older segments' footers, which read under
+    *    it with the new columns null;
+    *  - `#bucketed=<catalog id>` — the session-catalog entry of a
+    *    bucketed (replace-only) snapshot;
+    *  - `#bucketSpec=<n>|<by,..>|<sort,..>` — its CLUSTERED BY spec, from
+    *    which a later session re-registers the entry.
+    *
+    * Parsed here and rendered here only; a header line the parser does
+    * not know fails the read rather than being dropped or carried. */
+  private final case class Manifest(segments: Seq[String],
+      partitionBy: Seq[String] = Nil, schemaJson: Option[String] = None,
+      bucketed: Option[String] = None, bucketSpec: Option[String] = None) {
+
+    def schema: Option[StructType] =
+      schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+
+    /** True iff this manifest EXTENDS `from`'s segment list — the
+      * append-only chain whose version diff is pure inserts readable
+      * from the delta segments alone (never for bucketed snapshots). */
+    def extendsFrom(from: Manifest): Boolean =
+      bucketed.isEmpty && from.bucketed.isEmpty &&
+        segments.startsWith(from.segments)
+
+    def render: String =
+      (Option.when(partitionBy.nonEmpty)(partitionBy.mkString(","))
+          .map("#partitionBy=" + _) ++
+        schemaJson.map("#schema=" + _) ++
+        bucketed.map("#bucketed=" + _) ++
+        bucketSpec.map("#bucketSpec=" + _) ++
+        segments).mkString("\n")
+  }
+
+  private object Manifest {
+    def parse(text: String, where: String): Manifest =
+      text.split("\n").iterator.filter(_.nonEmpty)
+        .foldLeft(Manifest(Vector.empty)) { (m, line) =>
+          def value(h: String) = Option.when(line.startsWith(h))(line.drop(h.length))
+          value("#partitionBy=").map(v =>
+              m.copy(partitionBy = v.split(",").toSeq.filter(_.nonEmpty)))
+            .orElse(value("#schema=").map(v => m.copy(schemaJson = Some(v))))
+            .orElse(value("#bucketed=").map(v => m.copy(bucketed = Some(v))))
+            .orElse(value("#bucketSpec=").map(v => m.copy(bucketSpec = Some(v))))
+            .getOrElse {
+              if (line.startsWith("#")) throw new IllegalStateException(
+                s"manifest $where has an unknown header: $line")
+              m.copy(segments = m.segments :+ line)
+            }
+        }
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import graft.sources.Tables
 import graft.streaming.Flows
 import graft.tables.TableStore
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,6 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 case class Req(id: String, evento: String, email: String, cantidad: Int, seq: Long)
 case class CancelId(id: String)
 case class CancelName(nombre: String)
+case class NReq(id: String, evento: String, email: String,
+    cantidad: Option[Int], seq: Long)
 
 /** Golden end-to-end streaming scenarios S1–S8 (SURVEY §2.2): replay
   * the reference README's transcript through MemoryStream-driven flows
@@ -203,28 +205,50 @@ class FlowsSpec extends AnyFunSuite {
   }
 
   test("motivo parity: both admission engines label a cancelled-event request evento_cerrado") {
-    // Final Futbol is seeded estado='C'; a request against it must be
-    // rejected with the SAME motivo row by the batch-MERGE flow and the
-    // keyed-state flow (the batch fold derives it from inventario
-    // estado, the stateful fold from its state — they must not drift)
+    // the same requests through the batch-MERGE flow and the keyed-state
+    // flow must leave the SAME rechazos rows and the same widened
+    // inventario row: Final Futbol is seeded estado='C' (the batch fold
+    // derives evento_cerrado from inventario estado, the stateful fold
+    // from its state), four requests break the O16 rule, and two are
+    // admitted on Opera Boheme, the later one widening its row
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    val req = Req("619c1dae4b2120000195ffff", "Final Futbol", "x@y.z", 2, 1)
-    def rechazoRow(store: TableStore) =
+    val reqs = Seq(
+      NReq("619c1dae4b2120000195ffff", "Final Futbol", "x@y.z", Some(2), 1),
+      NReq("619c1dae4b2120000195fff0", "Opera Boheme", "x@y.z", Some(0), 2),
+      NReq("619c1dae4b2120000195fff1", "Opera Boheme", "x@y.z", None, 3),
+      NReq("NOT-A-HEX-ID-AT-ALL-0000", "Opera Boheme", "x@y.z", Some(1), 4),
+      NReq(null, "Opera Boheme", "x@y.z", Some(1), 5),
+      NReq("619c1dae4b2120000195fff2", "Opera Boheme", "w@y.z", Some(2), 6),
+      NReq("619c1dae4b2120000195fff3", "Opera Boheme", "v@y.z", Some(1), 7))
+    def rechazoRows(store: TableStore) =
       store.load("rechazos").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(4))).toSeq
+        .map(r => (Option(r.getString(0)), r.getString(1), r.getString(4)))
+        .toSeq.sorted
+    def boheme(store: TableStore) =
+      store.load("inventario").filter(col("nombre") === "Opera Boheme")
+        .select("capacidad", "idres", "email", "canres").collect().toSeq
     val (storeA, flowsA) = seededStore()
-    val msA = MemoryStream[Req]
-    msA.addData(req)
+    val msA = MemoryStream[NReq]
+    msA.addData(reqs)
     run(flowsA.admissionFlow(msA.toDS().toDF()))
     val (storeB, flowsB) = seededStore()
-    val msB = MemoryStream[Req]
-    msB.addData(req)
+    val msB = MemoryStream[NReq]
+    msB.addData(reqs)
     val qB = flowsB.admissionFlowStateful(msB.toDS().toDF())
     run(qB)
-    val expected = Seq(("619c1dae4b2120000195ffff", "Final Futbol", "evento_cerrado"))
-    assert(rechazoRow(storeA) === expected)
-    assert(rechazoRow(storeB) === expected)
+    val expected = Seq(
+      (None, "Opera Boheme", "id_invalido"),
+      (Some("619c1dae4b2120000195fff0"), "Opera Boheme", "cantidad_invalida"),
+      (Some("619c1dae4b2120000195fff1"), "Opera Boheme", "cantidad_invalida"),
+      (Some("619c1dae4b2120000195ffff"), "Final Futbol", "evento_cerrado"),
+      (Some("NOT-A-HEX-ID-AT-ALL-0000"), "Opera Boheme", "id_invalido"))
+    assert(rechazoRows(storeA) === expected)
+    assert(rechazoRows(storeB) === expected)
+    // 17 seeded − 2 − 1; the last admitted request fills the echo columns
+    val widened = Seq(Row(14, "619c1dae4b2120000195fff3", "v@y.z", 1))
+    assert(boheme(storeA) === widened)
+    assert(boheme(storeB) === widened)
   }
 
   test("malformed CDC payloads persist to dead_letter (no silent drop)") {

@@ -110,10 +110,13 @@ class RestApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val inv = "/reservas/eventos/Opera%20Boheme"
     val res = "/reservas/" + "0" * 23 + "1"
     Seq(inv, res).foreach(http("GET", _))
-    val invJobs = TestSpark.jobTasks(spark)(
+    // counted by the handler's call site: RestService.start's search
+    // pre-warm may still be building indexes on its own thread
+    val invJobs = TestSpark.jobTasks(spark, "RestService.getInventario")(
       assert(http("GET", inv)._1 === 200))
     assert(invJobs.size === 1, s"inventario point read jobs: $invJobs")
-    val resJobs = TestSpark.jobTasks(spark)(http("GET", res))
+    val resJobs = TestSpark.jobTasks(spark, "RestService.getReservaId")(
+      http("GET", res))
     assert(resJobs.size === 1, s"reserva point read jobs: $resJobs")
   }
 
@@ -210,6 +213,30 @@ class RestApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(http("DELETE", "/reservas/zzz")._1 === 400)
     assert(http("GET", "/reservas/zzz")._1 === 400)
     assert(http("DELETE", "/reservas/" + "0" * 24)._1 === 404)
+  }
+
+  test("REST event writes reach the saga's fixed point") {
+    // DELETE /eventos is the organizer cancel (S4): the event's
+    // inventario row closes, so it admits nothing more, and its active
+    // reservations cascade to C
+    val ana = "61a2a4c9a80e2a0001a93f36" // Opera Rigoletto, estado A
+    assert(http("DELETE", "/eventos/Opera%20Rigoletto")._1 === 200)
+    assert(http("POST", "/reservas",
+      """{"Evento": "Opera Rigoletto", "Email": "a@x.com", "Cantidad": 1}""")
+      ._1 === 404)
+    assert(http("GET", "/reservas/eventos/Opera%20Rigoletto")._2
+      .contains("\"Estado\":\"C\""))
+    assert(http("GET", s"/reservas/$ana")._2.contains("\"Estado\":\"C\""))
+    // POST /eventos clones the event into inventario (S1), so a new
+    // event is reservable at once
+    assert(http("POST", "/eventos",
+      """{"Nombre": "Teatro Nuevo", "Capacidad": 5, "Categoria": "Teatro"}""")
+      ._1 === 200)
+    assert(http("POST", "/reservas",
+      """{"Evento": "Teatro Nuevo", "Email": "b@x.com", "Cantidad": 2}""")
+      ._1 === 200)
+    assert(http("GET", "/reservas/eventos/Teatro%20Nuevo")._2
+      .contains("\"Disponible\":3"))
   }
 
   test("GET /tables/{name} version, time travel, and change feed") {
@@ -876,5 +903,20 @@ class RestApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (cp, tp) = http("GET", "/search?q=a%2Bb")
     assert(cp === 200 && tp === "[]",
       "a+b is one literal term (no corpus hit), not two split terms")
+  }
+
+  test("a warm POST /reservas compiles no codegen class per call") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the request's values are plan literals; one Cantidad keeps every
+    // call's generated code identical, so a warm call must hit the
+    // codegen cache (the /search tests above have finished the
+    // pre-warm, which compiles on its own thread)
+    def reserve() = assert(http("POST", "/reservas",
+      """{"Evento": "Opera Boheme", "Email": "cg@x.com", "Cantidad": 1}""")
+      ._1 === 200)
+    reserve(); reserve()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    reserve(); reserve(); reserve()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === before)
   }
 }

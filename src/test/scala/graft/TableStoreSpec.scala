@@ -862,4 +862,83 @@ class TableStoreSpec extends AnyFunSuite {
     assert(store.version("t") === 0)
     assert(content(store, "t") === Seq((7, "q")))
   }
+
+  test("manifest bytes: each header kind renders in one fixed format") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    def manifest(t: String) = new String(Files.readAllBytes(
+      Paths.get(root, t, s"m${store.version(t)}")), "UTF-8")
+    def field(n: String, t: String) =
+      s"""{"name":"$n","type":"$t","nullable":true,"metadata":{}}"""
+    def schema(fs: String*) =
+      "#schema=" + fs.mkString("""{"type":"struct","fields":[""", ",", "]}")
+    // a flat append lists its segments only
+    store.init("flat", Seq((1, "a")).toDF("k", "v"))
+    store.append("flat", Seq((2, "b")).toDF("k", "v"))
+    assert(manifest("flat") === "d0\nd1")
+    // a schema-evolving append records the superset schema first
+    store.append("flat", Seq((3, "c", 1.5)).toDF("k", "v", "w"),
+      evolveSchema = true)
+    assert(manifest("flat") === schema(field("k", "integer"),
+      field("v", "string"), field("w", "double")) + "\nd0\nd1\nd2")
+    // a partitioned table leads with its layout, then the schema
+    store.replace("part", Seq((1, "a"), (2, "b")).toDF("k", "p"), Seq("p"))
+    store.append("part", Seq((3, "c")).toDF("k", "p"))
+    assert(manifest("part") === "#partitionBy=p\nd0\nd1")
+    store.append("part", Seq((4, "a", 7L)).toDF("k", "p", "x"),
+      evolveSchema = true)
+    val evolved = schema(field("k", "integer"), field("p", "string"),
+      field("x", "long"))
+    assert(manifest("part") === s"#partitionBy=p\n$evolved\nd0\nd1\nd2")
+    // deleteWhere re-renders the headers around the rewritten segment,
+    // and an emptied table drops the layout but keeps the schema
+    assert(store.deleteWhere("part", col("k") === 1) === 1L)
+    assert(manifest("part") === s"#partitionBy=p\n$evolved\nd3_0\nd1\nd2")
+    assert(store.deleteWhere("part", lit(true)) === 3L)
+    assert(manifest("part") === s"$evolved\nd4")
+    // a bucketed publish records its catalog entry and its spec
+    val catalog = "graft_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(root.getBytes("UTF-8")).take(4).map("%02x".format(_))
+      .mkString + "_b_v0"
+    store.replaceBucketed("b", Seq((1L, "a")).toDF("k", "v"),
+      bucketBy = Seq("k"), numBuckets = 4, sortBy = Seq("v"))
+    assert(manifest("b") === s"#bucketed=$catalog\n#bucketSpec=4|k|v\nd0")
+    spark.sql(s"DROP TABLE IF EXISTS $catalog")
+  }
+
+  test("a manifest header the parser does not know fails loudly") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    store.init("t", Seq((1, "a")).toDF("k", "v"))
+    val m = Paths.get(root, "t", "m0")
+    Files.write(m, ("#zorder=k\n" + new String(Files.readAllBytes(m)))
+      .getBytes("UTF-8"))
+    // neither carried through nor dropped: every reader of the manifest
+    // refuses it
+    Seq[() => Any](
+      () => store.append("t", Seq((2, "b")).toDF("k", "v")),
+      () => store.deleteWhere("t", col("k") === 1),
+      () => store.load("t")).foreach { op =>
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("#zorder=k"), e.getMessage)
+    }
+    assert(store.version("t") === 0)
+  }
+
+  test("handle: a warm hit reads no manifest") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    store.init("t", Seq((1, "a")).toDF("k", "v"))
+    assert(content(store, "t") === Seq((1, "a")))
+    // an unparseable manifest under the handle's (version, mtime) key:
+    // only a read that parses it can fail
+    val m = Paths.get(root, "t", "m0")
+    val mtime = Files.getLastModifiedTime(m)
+    Files.write(m, "#unparseable\n".getBytes("UTF-8"))
+    Files.setLastModifiedTime(m, mtime)
+    assert(content(store, "t") === Seq((1, "a")))
+  }
 }

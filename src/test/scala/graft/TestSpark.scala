@@ -45,14 +45,18 @@ object TestSpark {
   /** The task count of the widest stage of every Spark job `body`
     * starts, in start order (the listener bus is drained before and
     * after, so the window holds exactly `body`'s jobs when nothing else
-    * runs meanwhile). */
-  def jobTasks(s: SparkSession)(body: => Unit): Seq[Int] = {
+    * runs meanwhile). A non-empty `site` keeps only the jobs whose call
+    * site names it (a stage's name and details carry the calling
+    * frames), so a job another thread runs meanwhile is not counted. */
+  def jobTasks(s: SparkSession, site: String = "")(body: => Unit): Seq[Int] = {
     val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        tasks.add(j.stageInfos.map(_.numTasks).max); ()
-      }
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.stageInfos.exists(st => (st.name + "\n" + st.details)
+            .contains(site))) {
+          tasks.add(j.stageInfos.map(_.numTasks).max); ()
+        }
     }
     drainListenerBus(s)
     s.sparkContext.addSparkListener(l)
