@@ -34,12 +34,12 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     declared.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for probabilistic ops (rows-only
     * driver check). */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     declared.collect { case Query(n, _, Some(sql)) => n -> sql }.toMap
 }

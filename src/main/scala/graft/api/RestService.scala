@@ -671,8 +671,10 @@ final class RestService(spark: SparkSession, store: TableStore,
       if (target.filter(col("nombre") === nombre).count() > 0)
         reply(ex, 400, s"Evento $nombre ya existente")
       else {
-        store.replace("eventos",
-          MergeOps.insertIfAbsent(target, row, Seq("nombre")))
+        // typed as the live table, so append's retype check holds
+        store.appendUnique("eventos", row.select(target.schema.fields
+          .map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*),
+          Seq("nombre"))
         // S1: the inventario clone makes the event reservable
         store.appendUnique("inventario", MergeOps.inventarioClones(row),
           Seq("nombre"))
@@ -748,9 +750,8 @@ final class RestService(spark: SparkSession, store: TableStore,
           reply(ex, 404, s"reserva Id $id no encontrada o ya cancelada")
         case Some(r) =>
           // O20 CAS A→X (reservas/main.go:186-195)
-          store.replace("reservas", MergeOps.guardedUpdate(target,
-            Seq(id).toDF("id"), Seq("id"), col("estado") === "A",
-            Map("estado" -> lit("X"))))
+          store.replace("reservas",
+            MergeOps.customerCancel(target, Seq(id).toDF("id")))
           reply(ex, 200, s"reserva Id: $id Cliente: " +
             s"${r.getAs[String]("email")} Evento: " +
             s"${r.getAs[String]("evento")} cancelada")

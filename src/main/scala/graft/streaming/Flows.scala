@@ -331,8 +331,7 @@ final class Flows(spark: SparkSession, store: TableStore,
         .filter(col("estado") === "A")
         .select(col("id"), col("evento"), col("email"), col("cantidad"))
       // O20: guarded state transition
-      store.replace("reservas", MergeOps.guardedUpdate(res, batch, Seq("id"),
-        guard = col("estado") === "A", sets = Map("estado" -> lit("X"))))
+      store.replace("reservas", MergeOps.customerCancel(res, batch))
       // O21: seat return; not-found (event already cancelled) tolerated
       val updatedInv = MergeOps.returnSeats(store.load("inventario"), pre)
       // canres=-1 parity with the reference's sentinel document state

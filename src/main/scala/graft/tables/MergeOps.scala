@@ -30,6 +30,7 @@ import org.apache.spark.sql.functions._
  *  - [[cancelEvents]] — O18, estado → C by nombre (eventos and
  *    inventario);
  *  - [[cancelReservas]] — O23, the cascade onto active reservas;
+ *  - [[customerCancel]] — O20, a customer's A → X cancel;
  *  - [[returnSeats]] — O21, seat returns as a negative admission fold.
  */
 object MergeOps {
@@ -47,18 +48,6 @@ object MergeOps {
       df.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === lit(1)).drop("__rn")
     }
-
-  /** O17/O22 — insert-if-absent on a unique key. Duplicate keys inside
-    * the batch collapse to the first row by `tieBreak` ordering;
-    * rows whose key already exists in the target are dropped
-    * (reference: duplicate insert → tolerated no-op,
-    * inventario/main.go:91-93). */
-  def insertIfAbsent(target: DataFrame, batch: DataFrame, key: Seq[String],
-      tieBreak: Seq[Column] = Nil): DataFrame = {
-    val fresh = dedupBy(batch, key, tieBreak)
-      .join(target.select(key.map(col): _*), key, "left_anti")
-    target.unionByName(fresh.select(target.columns.map(col): _*))
-  }
 
   /** O18/O20 — guarded single-column update: WHEN MATCHED AND guard
     * THEN SET. `guard` may reference target columns; `sets` assigns
@@ -324,6 +313,13 @@ object MergeOps {
     semiJoinUpdate(reservas, names, targetKey = "evento",
       sourceKey = "nombre", guard = col("estado") === "A",
       sets = Map("estado" -> lit("C")))
+
+  /** O20 (reservas/main.go:186-195) — customer cancel: the CAS A → X
+    * on every reserva whose id is in `ids`; a reserva that is not
+    * active keeps its estado. */
+  def customerCancel(reservas: DataFrame, ids: DataFrame): DataFrame =
+    guardedUpdate(reservas, ids, Seq("id"), guard = col("estado") === "A",
+      sets = Map("estado" -> lit("X")))
 
   /** O21 (inventario/main.go:114-133) — `returned` reservations (id,
     * evento, cantidad) give their seats back: the admission fold with

@@ -91,15 +91,6 @@ final class TableStore(spark: SparkSession, root: String,
     manifestPath(name, v)
   }
 
-  /** The current manifest of `name`, refused for a bucketed table with
-    * `why` — bucketed tables are replace-only, their layout is the
-    * bucket spec. */
-  private def requireUnbucketed(name: String, why: String): Manifest = {
-    val m = manifest(name, version(name))
-    require(m.bucketed.isEmpty, s"table $name is bucketed — $why")
-    m
-  }
-
   private def dirs(name: String, segs: Seq[String]): Seq[String] =
     segs.map(s => tdir(name).resolve(s).toString)
 
@@ -155,10 +146,7 @@ final class TableStore(spark: SparkSession, root: String,
     * segment unioned together — Spark's multi-path partition
     * discovery rejects sibling hive roots, and partition filters push
     * through the union into every branch, so pruning is preserved.
-    * Bucketed tables resolve through the session catalog — that is
-    * where Spark keeps the CLUSTERED BY metadata that lets a join or
-    * aggregation on the bucket key skip its Exchange. Other tables
-    * resolve once per version through the table's snapshot handle. */
+    * Each version resolves once through the table's snapshot handle. */
   def load(name: String): DataFrame = loadVersion(name, version(name))
 
   /** Snapshot handle: the resolved frame of a table's current version,
@@ -181,9 +169,7 @@ final class TableStore(spark: SparkSession, root: String,
   /** Time-travel read: bind to the snapshot AS OF version `v` (any
     * version still inside the vacuum horizon — reclaimed versions fail
     * with a pointed error, the Delta/Iceberg `VERSION AS OF` contract).
-    * Bucketed snapshots whose session-catalog entry is gone re-register
-    * from the manifest's recorded spec exactly like [[load]] does. The
-    * current version reads through the snapshot handle, older ones
+    * The current version reads through the snapshot handle, older ones
     * resolve afresh. */
   def loadVersion(name: String, v: Int): DataFrame = {
     val cur = version(name)
@@ -194,42 +180,9 @@ final class TableStore(spark: SparkSession, root: String,
     if (v == cur && held != null && held.version == v && held.mtime == mtime)
       return Bridge.freshRelations(held.frame)
     val m = readManifest(path)
-    m.bucketed match {
-      case Some(catalog) =>
-        // the catalog entry dies with the SparkSession but the manifest
-        // and data files are durable — a fresh session re-registers the
-        // recorded CLUSTERED BY spec over the existing segment before
-        // reading, so bucketed tables honor the same restart contract
-        // as every other table kind
-        if (!spark.catalog.tableExists(catalog))
-          m.bucketSpec.map(_.split("\\|", -1)) match {
-            case Some(Array(n, by, sort)) =>
-              val dir = dirs(name, m.segments).head
-              val schema = spark.read.parquet(dir).schema
-              // quote identifiers and escape the path: the store root
-              // is caller-chosen, so the LOCATION literal (and bucket/
-              // sort columns) must survive quotes/backticks in it
-              def qId(c: String) = "`" + c.replace("`", "``") + "`"
-              val loc = "'" + dir.replace("\\", "\\\\")
-                .replace("'", "\\'") + "'"
-              val sorted = if (sort.nonEmpty)
-                s" SORTED BY (${sort.split(",").map(qId).mkString(", ")})"
-              else ""
-              spark.sql(s"CREATE TABLE IF NOT EXISTS $catalog " +
-                s"(${schema.toDDL}) USING parquet " +
-                s"CLUSTERED BY (${by.split(",").map(qId).mkString(", ")})" +
-                s"$sorted INTO ${n.toInt} BUCKETS LOCATION $loc")
-              ()
-            case _ => throw new IllegalStateException(
-              s"bucketed table $name has no catalog entry in this " +
-                "session and its manifest carries no #bucketSpec header")
-          }
-        spark.table(catalog)
-      case None =>
-        def read() = readDirs(dirs(name, m.segments), m)
-        if (v == cur) Bridge.freshRelations(handleFor(name, v, mtime)(read()))
-        else read()
-    }
+    def read() = readDirs(dirs(name, m.segments), m)
+    if (v == cur) Bridge.freshRelations(handleFor(name, v, mtime)(read()))
+    else read()
   }
 
   /** The frame of `name`'s handle at (`v`, `mtime`), resolved with
@@ -363,51 +316,6 @@ final class TableStore(spark: SparkSession, root: String,
         Manifest(Seq(writeSegment(name, s"d$next", df, partitionBy)), partitionBy))
     }
 
-  /** Bucketed snapshot publish — the fact-to-fact co-location layout:
-    * rows are hash-CLUSTERED BY `bucketBy` into `numBuckets` files
-    * (optionally sorted within each bucket), and the bucketing spec is
-    * registered in the session catalog, which is where Spark's planner
-    * reads the `HashPartitioning` it needs to ELIDE the Exchange under
-    * a join or aggregation on the bucket key. Two fact tables bucketed
-    * on their join key with the same bucket count sort-merge-join with
-    * ZERO shuffle of either side — at 100 TB that is the difference
-    * between a co-located merge and re-shuffling both fact tables per
-    * query (the layout Delta/Iceberg express as CLUSTERED BY; the
-    * production swap SCALING.md names). Each version registers its own
-    * catalog entry over an external path inside this store, so the
-    * snapshot/versioning contract is unchanged. Bucketed tables are
-    * replace-only: a plain parquet append cannot extend hash-bucketed
-    * files without breaking the bucket invariant (production formats
-    * append per-bucket; this store's appends reject instead of
-    * silently degrading the layout). */
-  def replaceBucketed(name: String, df: DataFrame, bucketBy: Seq[String],
-      numBuckets: Int, sortBy: Seq[String] = Nil): Unit =
-    writeLock(name).synchronized {
-      val next = version(name) + 1
-      val seg = s"d$next"
-      val catalog = catalogId(name, next)
-      val w = df.write.mode("overwrite").format("parquet")
-        .option("path", tdir(name).resolve(seg).toString)
-        .bucketBy(numBuckets, bucketBy.head, bucketBy.drop(1): _*)
-      (if (sortBy.nonEmpty) w.sortBy(sortBy.head, sortBy.drop(1): _*) else w)
-        .saveAsTable(catalog)
-      // record the bucket spec itself, not just the catalog name: the
-      // session catalog is in-memory, so a later session re-creates the
-      // entry from this header (see load)
-      publish(name, next, Manifest(Seq(seg), bucketed = Some(catalog),
-        bucketSpec = Some(s"$numBuckets|${bucketBy.mkString(",")}|" +
-          sortBy.mkString(","))))
-    }
-
-  /** Session-catalog identifier for version `v` of bucketed table
-    * `name` in THIS store (several stores can host a `name`). */
-  private def catalogId(name: String, v: Int): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).take(4)
-      .map("%02x".format(_)).mkString
-    s"graft_${h}_${name}_v$v"
-  }
-
   /** Append rows to an insert-only table (notifications, rejections,
     * growing stored indexes): writes ONLY the new rows as a segment;
     * compacts when the manifest is long. Creates the table on first
@@ -428,8 +336,7 @@ final class TableStore(spark: SparkSession, root: String,
       if (!exists(name)) replace(name, df)
       else {
         val v = version(name)
-        val m = requireUnbucketed(name, "bucketed tables are replace-only " +
-          "(a plain append would break the bucket invariant)")
+        val m = manifest(name, v)
         val parts = m.partitionBy
         // a zero-row partitionBy write emits NO parquet files (only
         // _SUCCESS), so recording it in the manifest would make every
@@ -556,7 +463,7 @@ final class TableStore(spark: SparkSession, root: String,
     writeLock(name).synchronized {
       if (!exists(name)) replace(name, dedup)
       else {
-        val m = requireUnbucketed(name, "upsert would drop its bucket spec")
+        val m = manifest(name, version(name))
         val kept = load(name).join(dedup.select(key.map(col): _*),
           key, "left_anti")
         replace(name, kept.unionByName(dedup), m.partitionBy)
@@ -576,16 +483,13 @@ final class TableStore(spark: SparkSession, root: String,
     * layout); the version flip is atomic like every publish, and
     * superseded versions age out via the usual vacuum horizon. The
     * production swap is Delta OPTIMIZE / Iceberg rewrite_data_files.
-    * Bucketed tables are refused: their file count IS the bucket spec.
     * Cost: one full read + write of the table — schedule off-peak like
     * any OPTIMIZE. */
   def compact(name: String, targetRowsPerFile: Long = 1L << 20): Unit =
     writeLock(name).synchronized {
       require(exists(name), s"table $name does not exist")
       require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-      val parts = requireUnbucketed(name, "its layout is fixed by the " +
-        "bucket spec; re-publish with replaceBucketed to change it")
-        .partitionBy
+      val parts = manifest(name, version(name)).partitionBy
       val df = load(name)
       val rows = df.count()
       val nFiles = math.max(1L,
@@ -616,8 +520,7 @@ final class TableStore(spark: SparkSession, root: String,
     * (version unchanged). Prior versions still time-travel to the
     * deleted rows until vacuumed, and `changesBetween` across the
     * delete reports them as `_op = delete` via its rewriting-
-    * transition diff. Bucketed tables are refused (replace-only, like
-    * compact). If a delete empties the table entirely, an empty FLAT
+    * transition diff. If a delete empties the table entirely, an empty FLAT
     * segment with the full recorded schema is published (the
     * partition layout carries no information at zero rows; the next
     * replace re-establishes it). */
@@ -625,7 +528,7 @@ final class TableStore(spark: SparkSession, root: String,
     writeLock(name).synchronized {
       require(exists(name), s"table $name does not exist")
       val v = version(name)
-      val m = requireUnbucketed(name, "bucketed tables are replace-only")
+      val m = manifest(name, v)
       val parts = m.partitionBy
       val segs = m.segments
       val segDirs = dirs(name, segs)
@@ -749,14 +652,7 @@ final class TableStore(spark: SparkSession, root: String,
           val staleManifest = n.startsWith("m") &&
             n.drop(1).forall(_.isDigit) && n.drop(1).toInt < floor
           val staleSegment = Files.isDirectory(p) && !live.contains(n)
-          if (staleManifest) {
-            // a superseded bucketed version also owns a session-catalog
-            // entry; drop it with the manifest so the catalog never
-            // lists tables whose files this GC is about to delete
-            readManifest(p).bucketed.foreach(c =>
-              spark.sql(s"DROP TABLE IF EXISTS $c"))
-            Files.delete(p)
-          }
+          if (staleManifest) Files.delete(p)
           else if (staleSegment) deleteRecursively(p)
         }
       } finally stream.close()
@@ -801,34 +697,26 @@ object TableStore {
     *    in (lets append write layout-compatible segments);
     *  - `#schema=<StructType JSON>` — the superset schema of a table
     *    that EVOLVED past its older segments' footers, which read under
-    *    it with the new columns null;
-    *  - `#bucketed=<catalog id>` — the session-catalog entry of a
-    *    bucketed (replace-only) snapshot;
-    *  - `#bucketSpec=<n>|<by,..>|<sort,..>` — its CLUSTERED BY spec, from
-    *    which a later session re-registers the entry.
+    *    it with the new columns null.
     *
     * Parsed here and rendered here only; a header line the parser does
     * not know fails the read rather than being dropped or carried. */
   private final case class Manifest(segments: Seq[String],
-      partitionBy: Seq[String] = Nil, schemaJson: Option[String] = None,
-      bucketed: Option[String] = None, bucketSpec: Option[String] = None) {
+      partitionBy: Seq[String] = Nil, schemaJson: Option[String] = None) {
 
     def schema: Option[StructType] =
       schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
 
     /** True iff this manifest EXTENDS `from`'s segment list — the
       * append-only chain whose version diff is pure inserts readable
-      * from the delta segments alone (never for bucketed snapshots). */
+      * from the delta segments alone. */
     def extendsFrom(from: Manifest): Boolean =
-      bucketed.isEmpty && from.bucketed.isEmpty &&
-        segments.startsWith(from.segments)
+      segments.startsWith(from.segments)
 
     def render: String =
       (Option.when(partitionBy.nonEmpty)(partitionBy.mkString(","))
           .map("#partitionBy=" + _) ++
         schemaJson.map("#schema=" + _) ++
-        bucketed.map("#bucketed=" + _) ++
-        bucketSpec.map("#bucketSpec=" + _) ++
         segments).mkString("\n")
   }
 
@@ -840,8 +728,6 @@ object TableStore {
           value("#partitionBy=").map(v =>
               m.copy(partitionBy = v.split(",").toSeq.filter(_.nonEmpty)))
             .orElse(value("#schema=").map(v => m.copy(schemaJson = Some(v))))
-            .orElse(value("#bucketed=").map(v => m.copy(bucketed = Some(v))))
-            .orElse(value("#bucketSpec=").map(v => m.copy(bucketSpec = Some(v))))
             .getOrElse {
               if (line.startsWith("#")) throw new IllegalStateException(
                 s"manifest $where has an unknown header: $line")

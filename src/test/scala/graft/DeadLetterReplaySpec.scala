@@ -60,10 +60,9 @@ class DeadLetterReplaySpec extends AnyFunSuite {
 
     val n = DeadLetterReplay.replay(store, "event_creation", fixedParse) {
       good =>
-        store.replace("eventos", graft.tables.MergeOps.insertIfAbsent(
-          store.load("eventos"),
+        store.appendUnique("eventos",
           good.select("id", "nombre", "capacidad", "categoria", "estado"),
-          Seq("nombre")))
+          Seq("nombre"))
     }
     assert(n === 2L)
     assert(store.load("eventos").select("nombre").as[String]

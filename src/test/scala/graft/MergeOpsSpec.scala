@@ -1,6 +1,6 @@
 package graft
 
-import graft.tables.MergeOps
+import graft.tables.{MergeOps, TableStore}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,10 +13,13 @@ class MergeOpsSpec extends AnyFunSuite {
     rows.toDF("id", "nombre", "capacidad", "categoria", "estado")
 
   test("insertIfAbsent: existing key dropped, batch dups collapse") {
-    val target = Seq(("1", "a"), ("2", "b")).toDF("id", "nombre")
+    // O17 is TableStore.appendUnique on the unique key
+    val store = new TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-merge").toString)
+    store.init("t", Seq(("1", "a"), ("2", "b")).toDF("id", "nombre"))
     val batch = Seq(("3", "b"), ("4", "c"), ("5", "c")).toDF("id", "nombre")
-    val out = MergeOps.insertIfAbsent(target, batch, Seq("nombre"),
-      Seq(col("id"))).orderBy("id").collect()
+    store.appendUnique("t", batch, Seq("nombre"), Seq(col("id")))
+    val out = store.load("t").orderBy("id").collect()
     assert(out.map(_.getString(0)).toSeq === Seq("1", "2", "4"))
   }
 

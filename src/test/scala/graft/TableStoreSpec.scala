@@ -106,10 +106,6 @@ class TableStoreSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(pruned.matches("(?s).*PartitionFilters: \\[[^\\]]*part.*"),
       s"partition pruning lost after compact:\n$pruned")
-    // bucketed tables refuse: their file layout is the bucket spec
-    store.replaceBucketed("b", Seq((1, "a")).toDF("k", "v"),
-      bucketBy = Seq("k"), numBuckets = 2)
-    intercept[IllegalArgumentException](store.compact("b"))
   }
 
   test("concurrent appends to a shared sink lose no rows") {
@@ -280,82 +276,6 @@ class TableStoreSpec extends AnyFunSuite {
       s"compacted table lost pruning:\n$plan")
   }
 
-  test("bucketed replace: content round-trips, versions supersede, appends reject") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft-store").toString
-    val store = new TableStore(spark, root)
-    // this store's catalog-name prefix (same derivation as catalogId),
-    // so assertions don't collide with other suites' bucketed tables
-    val pfx = "graft_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).take(4).map("%02x".format(_))
-      .mkString
-    val v1 = (1 to 100).map(i => (i.toLong, s"r$i")).toDF("k", "v")
-    store.replaceBucketed("b", v1, bucketBy = Seq("k"), numBuckets = 4,
-      sortBy = Seq("k"))
-    assert(store.load("b").collect().map(r => (r.getLong(0), r.getString(1)))
-      .sortBy(_._1).toSeq === (1 to 100).map(i => (i.toLong, s"r$i")))
-    // a second bucketed publish supersedes the first (fresh catalog
-    // entry per version — readers of the new snapshot see new content)
-    val v2 = (1 to 50).map(i => (i.toLong, s"x$i")).toDF("k", "v")
-    store.replaceBucketed("b", v2, bucketBy = Seq("k"), numBuckets = 4)
-    val got = store.load("b").collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(got.length === 50 && got.forall(_._2.startsWith("x")))
-    // bucketed tables are replace-only: a plain append would break the
-    // bucket invariant and must reject loudly
-    val ex = intercept[IllegalArgumentException] {
-      store.append("b", Seq((999L, "z")).toDF("k", "v"))
-    }
-    assert(ex.getMessage.contains("replace-only"))
-    // vacuum drops the superseded version's catalog entry along with
-    // its manifest — the catalog never lists tables whose files are
-    // gone (v2's entry survives; v1's is dropped)
-    store.vacuum("b", keepVersions = 1)
-    val remaining = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith(pfx)).toSeq
-    assert(remaining.length === 1,
-      s"stale bucketed catalog entries survived vacuum: $remaining")
-    assert(store.load("b").count() === 50)
-    // cleanup the session-catalog entries this test registered
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith(pfx)).foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
-  test("bucketed table survives a session restart: re-registered from the manifest spec") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft-store").toString
-    val store = new TableStore(spark, root)
-    val df = (1 to 100).map(i => (i.toLong, s"r$i")).toDF("k", "v")
-    store.replaceBucketed("b", df, bucketBy = Seq("k"), numBuckets = 4,
-      sortBy = Seq("k"))
-    // simulate a JVM restart: the session catalog is in-memory, so a
-    // new session starts without the entry — drop it (the table is
-    // EXTERNAL: data files under the store root survive the drop)
-    val pfx = "graft_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).take(4).map("%02x".format(_))
-      .mkString
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith(pfx)).foreach(t =>
-        spark.sql(s"DROP TABLE $t"))
-    // load() must re-create the catalog entry from the #bucketSpec
-    // manifest header and serve the same content...
-    val got = store.load("b").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    assert(got === (1 to 100).map(i => (i.toLong, s"r$i")))
-    // ...with the bucketing METADATA intact: an aggregation on the
-    // bucket key must still ride the stored HashPartitioning with no
-    // Exchange (the whole point of the layout surviving restarts)
-    val agg = store.load("b").groupBy("k").count()
-    agg.collect()
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"restart lost the bucket spec — agg re-shuffles:\n$plan")
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith(pfx)).foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-    graft.tables.TempDirs.delete(root)
-  }
-
   test("upsert supersedes same-key rows and keeps the rest") {
     import spark.implicits._
     val store = fresh()
@@ -397,30 +317,6 @@ class TableStoreSpec extends AnyFunSuite {
     assert(scanned === p1Files && p1Files <
       store.load("t").inputFiles.length,
       s"partition pruning lost after upsert: scanned $scanned")
-  }
-
-  test("bucketed restart re-registration survives a quoted store path") {
-    import spark.implicits._
-    // a store root containing a single quote: the re-registration DDL
-    // interpolates the LOCATION literal, which must escape it
-    val root = Files.createTempDirectory("graft-store-o'brien").toString
-    val store = new TableStore(spark, root)
-    val df = (1 to 20).map(i => (i.toLong, s"r$i")).toDF("k", "v")
-    store.replaceBucketed("b", df, bucketBy = Seq("k"), numBuckets = 2,
-      sortBy = Seq("k"))
-    val pfx = "graft_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).take(4).map("%02x".format(_))
-      .mkString
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith(pfx)).foreach(t =>
-        spark.sql(s"DROP TABLE $t"))
-    val got = store.load("b").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    assert(got === (1 to 20).map(i => (i.toLong, s"r$i")))
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith(pfx)).foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-    graft.tables.TempDirs.delete(root)
   }
 
   test("MVCC: a plan captured before a write keeps its snapshot") {
@@ -897,14 +793,6 @@ class TableStoreSpec extends AnyFunSuite {
     assert(manifest("part") === s"#partitionBy=p\n$evolved\nd3_0\nd1\nd2")
     assert(store.deleteWhere("part", lit(true)) === 3L)
     assert(manifest("part") === s"$evolved\nd4")
-    // a bucketed publish records its catalog entry and its spec
-    val catalog = "graft_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).take(4).map("%02x".format(_))
-      .mkString + "_b_v0"
-    store.replaceBucketed("b", Seq((1L, "a")).toDF("k", "v"),
-      bucketBy = Seq("k"), numBuckets = 4, sortBy = Seq("v"))
-    assert(manifest("b") === s"#bucketed=$catalog\n#bucketSpec=4|k|v\nd0")
-    spark.sql(s"DROP TABLE IF EXISTS $catalog")
   }
 
   test("a manifest header the parser does not know fails loudly") {
