@@ -12,15 +12,14 @@ import org.apache.spark.sql.streaming.Trigger
   * redelivery dedup, per-key fold, table swaps, rejection log) and
   * prints one JSON line per measurement with requests/sec.
   *
-  * Two flow variants × two batching regimes:
-  *   - `admission_throughput[_stateful]`: the whole corpus as ONE
-  *     micro-batch — peak bulk throughput.
-  *   - `..._multibatch`: the corpus split into SPARK_GRAFT_STREAM_ROUNDS
-  *     micro-batches through one long-running query — the steady-state
-  *     regime, where the batch-MERGE flow pays O(table + history) per
-  *     trigger (snapshot reload + anti-join against the growing
-  *     reservas registry) while the keyed-state flow pays O(batch)
-  *     (state-store decisions + changelog-sized table merges).
+  * Two batching regimes:
+  *   - `admission_throughput`: the whole corpus as ONE micro-batch —
+  *     peak bulk throughput.
+  *   - `admission_throughput_multibatch`: the corpus split into
+  *     SPARK_GRAFT_STREAM_ROUNDS micro-batches through one long-running
+  *     query — the steady-state regime, where the flow pays
+  *     O(table + history) per trigger (snapshot reload + anti-join
+  *     against the growing reservas registry).
   *
   * Context for the numbers: the reference consumes ONE message at a
   * time per topic partition (single-partition topics, blocking
@@ -74,13 +73,10 @@ object StreamBench {
       } else
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
-    def run(metric: String, stateful: Boolean, nRounds: Int,
-        rocksdb: Boolean = false): Unit = {
-      stateProvider(rocksdb)
+    def run(metric: String, nRounds: Int): Unit = {
       val store = freshStore()
       // long-running trigger so each addData round is its own
-      // micro-batch of ONE live query (state carries over in the
-      // state store for the stateful variant)
+      // micro-batch of ONE live query
       val flows = new Flows(spark, store,
         trigger = Trigger.ProcessingTime(0))
       // multi-partition source: a single-partition MemoryStream would
@@ -88,8 +84,7 @@ object StreamBench {
       val ms = MemoryStream[R](spark, LocalSession.cpus)
       val chunk = (n + nRounds - 1) / nRounds
       val t0 = System.nanoTime()
-      val q = if (stateful) flows.admissionFlowStateful(ms.toDS().toDF())
-        else flows.admissionFlow(ms.toDS().toDF())
+      val q = flows.admissionFlow(ms.toDS().toDF())
       requests.grouped(chunk).foreach { c =>
         ms.addData(c.toSeq)
         q.processAllAvailable()
@@ -250,29 +245,18 @@ object StreamBench {
         s""""docs_per_sec":${(nd / secs).toLong},"sf":"$sfDir"}""")
     }
 
-    require(Set("both", "batch", "stateful", "consumer", "packing",
-      "ingest")(variant),
+    require(Set("both", "batch", "consumer", "packing", "ingest")(variant),
       s"unknown SPARK_GRAFT_STREAM_VARIANT '$variant' " +
-        "(expected both | batch | stateful | consumer | packing | ingest)")
-    val runBatch = variant == "both" || variant == "batch"
-    val runStateful = variant == "both" || variant == "stateful"
-    if (runBatch) run("admission_throughput", stateful = false, 1)
-    if (runStateful) run("admission_throughput_stateful", stateful = true, 1)
-    if (runBatch)
-      run("admission_throughput_multibatch", stateful = false, rounds)
-    if (runStateful) {
-      run("admission_throughput_stateful_multibatch", stateful = true, rounds)
-      // RocksDB state store + changelog checkpointing: the per-trigger
-      // checkpoint upload is just the changelog, the working state
-      // lives off-heap — the provider a real cluster deployment runs
-      run("admission_throughput_stateful_multibatch_rocksdb",
-        stateful = true, rounds, rocksdb = true)
+        "(expected both | batch | consumer | packing | ingest)")
+    if (variant == "both" || variant == "batch") {
+      run("admission_throughput", 1)
+      run("admission_throughput_multibatch", rounds)
     }
     if (variant == "both" || variant == "consumer") {
       runConsumer("consumer_throughput", 1)
       runConsumer("consumer_throughput_multibatch", rounds)
-      // the saga on the deployment-grade state provider, mirroring the
-      // admission flow's RocksDB+changelog regime
+      // the saga on the deployment-grade state provider: RocksDB with
+      // changelog checkpointing
       runConsumer("consumer_throughput_multibatch_rocksdb", rounds,
         rocksdb = true)
     }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Query
 import graft.sources.Tables
 import graft.sources.Tables.OracleCte
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -12,6 +13,22 @@ import org.apache.spark.sql.functions._
  * seed rows as self-contained VALUES CTEs.
  */
 object BoletiaQueries {
+
+  /** B2 per event: capacidad + Σ active reservations (nombre, cap0),
+    * which every writer of inventario and reservas must keep equal to
+    * the event's original capacity. */
+  def capacityInvariant(inventario: DataFrame, reservas: DataFrame)
+      : DataFrame = {
+    val act = reservas
+      .filter(col("estado") === "A")
+      .groupBy(col("evento"))
+      .agg(sum(col("cantidad")).as("act"))
+    inventario
+      .join(act, col("evento") === col("nombre"), "left")
+      .select(col("nombre"),
+        (col("capacidad") + coalesce(col("act"), lit(0L))).as("cap0"))
+      .orderBy("nombre")
+  }
 
   val all: Seq[Query] = Seq(
 
@@ -36,16 +53,7 @@ object BoletiaQueries {
         "FROM inventario i LEFT JOIN (SELECT evento, CAST(SUM(cantidad) AS BIGINT) AS act " +
         "FROM reservas WHERE estado = 'A' GROUP BY evento) r ON r.evento = i.nombre " +
         "ORDER BY i.nombre") {
-      (s, _) =>
-        val act = Tables.reservas(s)
-          .filter(col("estado") === "A")
-          .groupBy(col("evento"))
-          .agg(sum(col("cantidad")).as("act"))
-        Tables.inventario(s)
-          .join(act, col("evento") === col("nombre"), "left")
-          .select(col("nombre"),
-            (col("capacidad") + coalesce(col("act"), lit(0L))).as("cap0"))
-          .orderBy("nombre")
+      (s, _) => capacityInvariant(Tables.inventario(s), Tables.reservas(s))
     },
 
     // O23 cascade observable: reservation counts per estado

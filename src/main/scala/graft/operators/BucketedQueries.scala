@@ -48,10 +48,14 @@ object BucketedQueries {
   }
 
   /** The bucketed layout of corpus `d`, built on first use per corpus
-    * version. */
+    * version. A superseded version's catalog entries are dropped when
+    * its root is reclaimed; they are external, so the drop leaves the
+    * files to the root's own delete. */
   private[graft] def forDir(s: SparkSession, d: String): Facts =
     StoredIndexes.versioned(cache, d, "lineitem.parquet",
-      "graft-bucketed-facts") { root =>
+      "graft-bucketed-facts", onReclaim = (old: Facts) =>
+        Seq(old.orders, old.lineitem).foreach(id =>
+          s.sql(s"DROP TABLE IF EXISTS $id"))) { root =>
       val facts = Facts(catalogId(root, "orders_b"),
         catalogId(root, "lineitem_b"))
       def bucketed(src: String, id: String, key: String): () => Unit = () =>

@@ -136,10 +136,14 @@ private[graft] object StoredIndexes {
   // the horizon, leave younger roots alone so an in-flight reader
   // holding a lazy plan over the old index keeps its snapshot within
   // the horizon. Unswept roots still fall at JVM exit via TempDirs.
+  // Each root carries what else must go with it (a session-catalog
+  // entry over a path in the root), run just before the delete.
   // ------------------------------------------------------------------
 
+  private final case class Retired(atMs: Long, onReclaim: () => Unit)
+
   private val retired =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    new java.util.concurrent.ConcurrentHashMap[String, Retired]()
 
   /** Currently retired-but-unreclaimed roots (spec observability). */
   def retiredRoots: Set[String] = {
@@ -148,20 +152,22 @@ private[graft] object StoredIndexes {
     b.result()
   }
 
-  /** Reclaim every root superseded at least `horizonMs` ago: delete
-    * recursively and deregister from TempDirs. Returns the reclaimed
-    * roots. Horizon 0 = reclaim everything retired (the post-quiesce
-    * sweep); a serving deployment runs this periodically with its
-    * read-SLA horizon, exactly like TableStore.vacuum. */
+  /** Reclaim every root superseded at least `horizonMs` ago: run its
+    * reclaim hook, then delete recursively and deregister from
+    * TempDirs. Returns the reclaimed roots. Horizon 0 = reclaim
+    * everything retired (the post-quiesce sweep); a serving deployment
+    * runs this periodically with its read-SLA horizon, exactly like
+    * TableStore.vacuum. */
   def sweepRetired(horizonMs: Long): Seq[String] = {
     val cut = System.currentTimeMillis() - horizonMs
     val out = Seq.newBuilder[String]
     val it = retired.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (e.getValue <= cut) {
-        graft.tables.TempDirs.delete(e.getKey)
+      if (e.getValue.atMs <= cut) {
         it.remove()
+        try e.getValue.onReclaim()
+        finally graft.tables.TempDirs.delete(e.getKey)
         out += e.getKey
       }
     }
@@ -190,9 +196,11 @@ private[graft] object StoredIndexes {
     * written) root before rethrowing — the entry was never published,
     * so nothing can read it, and without the cleanup a repeatedly
     * failing rebuild (e.g. a corrupt corpus retried per probe) would
-    * leak one scratch root per attempt, invisible to [[sweepRetired]]. */
+    * leak one scratch root per attempt, invisible to [[sweepRetired]].
+    * `onReclaim(prev.index)` runs when prev's root is reclaimed. */
   private def rebuildEntry[A](prev: Cached[A], kind: String,
-      files: Map[String, String], rows: Long = -1L)(
+      files: Map[String, String], rows: Long = -1L,
+      onReclaim: A => Unit = (_: A) => ())(
       mk: String => A): Cached[A] = {
     val root = graft.tables.TempDirs.scratch(kind)
     val entry =
@@ -203,13 +211,10 @@ private[graft] object StoredIndexes {
           catch { case _: Throwable => () } // best-effort; don't mask e
           throw e
       }
-    if (prev != null) retireRoot(prev.root)
+    if (prev != null)
+      retired.put(prev.root, Retired(System.currentTimeMillis(),
+        () => onReclaim(prev.index)))
     entry
-  }
-
-  /** Record `root` as superseded as of now. */
-  private def retireRoot(root: String): Unit = {
-    retired.put(root, System.currentTimeMillis()); ()
   }
 
   /** Replace the entry under `cacheKey` (default `dir`) by
@@ -227,15 +232,18 @@ private[graft] object StoredIndexes {
     * ([[rebuildEntry]]). `kind` names the index in [[buildLog]].
     * `cacheKey` overrides the map key when one corpus dir can host
     * several index variants (parameterized builds); the version is
-    * always of `dir`. */
+    * always of `dir`. `onReclaim` releases what a superseded index
+    * holds outside its root; it runs when [[sweepRetired]] reclaims
+    * that root, so a reader that resolved the old index keeps it
+    * until then. */
   def versioned[A](m: java.util.concurrent.ConcurrentHashMap[
       String, Cached[A]], dir: String, file: String, kind: String,
-      cacheKey: String = null)(
+      cacheKey: String = null, onReclaim: A => Unit = (_: A) => ())(
       mk: String => A): A =
     advance(m, dir, file, cacheKey) {
       (prev, files) =>
         if (prev != null && prev.files == files) prev
-        else rebuildEntry(prev, kind, files)(mk)
+        else rebuildEntry(prev, kind, files, onReclaim = onReclaim)(mk)
     }
 
   /** [[versioned]] for DRIVER-VALUE artifacts (a learned profile, a

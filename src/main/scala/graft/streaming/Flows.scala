@@ -3,7 +3,7 @@ package graft.streaming
 import graft.tables.{MergeOps, TableStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * The reference's asynchronous dataflows (SURVEY.md §2.2 S1–S7,
@@ -30,8 +30,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQ
  */
 final class Flows(spark: SparkSession, store: TableStore,
     checkpointRoot: Option[String] = None,
-    trigger: Trigger = Trigger.AvailableNow(),
-    dedupHorizon: Long = Flows.DefaultDedupHorizon) {
+    trigger: Trigger = Trigger.AvailableNow()) {
   import spark.implicits._
 
   // dead_letter is the one table WRITTEN BY SEVERAL flows (each appends
@@ -97,7 +96,10 @@ final class Flows(spark: SparkSession, store: TableStore,
   // -------------------------------------------------------------------
   // S2/S8 — reservation admission: requests stream → per-key ordered
   // fold with oversell guard (O19) → inventario decrement + reservas
-  // insert. `seq` = message offset (admission order within key).
+  // insert. `seq` = message offset (admission order within key). The
+  // fold reads inventario afresh every trigger, so what the other
+  // writers of the table (the REST tier, the seat-return flows, hold
+  // expiry) changed between triggers is what it admits against.
   // -------------------------------------------------------------------
   def admissionFlow(requests: DataFrame): StreamingQuery =
     start(requests, "admission") { rawBatch0 =>
@@ -149,10 +151,9 @@ final class Flows(spark: SparkSession, store: TableStore,
       // rejections (sold out / closed event / unknown event) —
       // observable outcome of the 404 path (reservas/main.go:166-173).
       // The fold only emits admitted=false; WHICH guard failed is
-      // derived from the event's estado (static within a batch — this
-      // flow carries no cancels), so both admission engines label a
-      // closed-event rejection evento_cerrado and a sold-out one
-      // sin_capacidad.
+      // derived from the event's estado in the snapshot the fold read
+      // (this flow carries no cancels): evento_cerrado for a closed
+      // event, sin_capacidad for a sold-out one.
       val estados = inv.select(col("nombre").as("__n"),
         col("estado").as("__estado"))
       val rejected = log.filter(!col("admitted"))
@@ -168,154 +169,6 @@ final class Flows(spark: SparkSession, store: TableStore,
       batch.unpersist()
       log.unpersist()
     }
-
-  // -------------------------------------------------------------------
-  // S2/S5/S8, keyed-state variant (ROADMAP §7): admission decisions
-  // run against per-key state in the Spark state store
-  // (StatefulAdmission.admit) instead of reloading the inventario
-  // snapshot per batch — O(batch) per trigger, incremental (changelog)
-  // state checkpointing, and the tables become downstream
-  // materializations of the emitted log. Same outcomes as
-  // admissionFlow; StatefulAdmissionSpec replays the S2/S5b/S5/S8/O16
-  // scenarios against it.
-  // -------------------------------------------------------------------
-  def admissionFlowStateful(requests: DataFrame): StreamingQuery = {
-    // the input may be the plain request stream, or the UNIONED
-    // lifecycle stream with a `kind` column ("create" | "req" | "ret" |
-    // "cancel") so (capacidad, estado) has a single owner — see
-    // StatefulAdmission
-    val withKind =
-      if (requests.columns.contains("kind")) requests
-      else requests.withColumn("kind", lit("req"))
-    val validated = withKind.select(
-      col("id"),
-      coalesce(col("evento"), lit("")).as("evento"),
-      col("email"),
-      coalesce(col("cantidad").cast("int"), lit(0)).as("cantidad"),
-      coalesce(col("seq").cast("long"), lit(0L)).as("seq"),
-      when(col("kind") =!= "req", lit(null).cast("string"))
-        .otherwise(MergeOps.requestFault(col("cantidad"), col("id")))
-        .as("motivo"),
-      coalesce(col("kind"), lit("req")).as("kind")).as[SReq]
-    // state seeded once, at query start: (capacidad, estado) from the
-    // inventario snapshot, and the dedup maps from the DURABLE
-    // registries — `seen` from reservas, `returned` from devoluciones
-    // (joined through reservas for the event key). These are the same
-    // anti-joins the batch admissionFlow performs per batch; seeding
-    // them here makes a fresh-checkpoint restart safe: a redelivered
-    // request/return whose effect is already in the inventario snapshot
-    // is recognized as a duplicate instead of double-applied. Registry
-    // entries carry the SeedSeq sentinel; StatefulAdmission.admit
-    // re-anchors them at the key's first offset of THIS run, so they
-    // age out of state only after the run's own traffic spans the
-    // dedup horizon (the registry stays the durable record; the next
-    // restart reseeds). Both registries may post-date query start
-    // (events can be born via the `create` kind), so both loads are
-    // guarded.
-    val reg =
-      if (store.exists("reservas"))
-        store.load("reservas").select(col("evento"), col("id"))
-      else Seq.empty[(String, String)].toDF("evento", "id")
-    val seenByKey = reg.groupBy(col("evento").as("nombre"))
-      .agg(collect_list(col("id")).as("__seen"))
-    val devol =
-      if (store.exists("devoluciones")) store.load("devoluciones")
-      else Seq.empty[String].toDF("id")
-    val retByKey = devol.join(reg, Seq("id"))
-      .groupBy(col("evento").as("nombre"))
-      .agg(collect_list(col("id")).as("__ret"))
-    val init = store.load("inventario")
-      .select(col("nombre"), col("capacidad").cast("long").as("capacidad"),
-        col("estado"))
-      .join(seenByKey, Seq("nombre"), "left")
-      .join(retByKey, Seq("nombre"), "left")
-      .select(col("nombre"), col("capacidad"), col("estado"),
-        coalesce(col("__seen"), array().cast("array<string>")).as("__seen"),
-        coalesce(col("__ret"), array().cast("array<string>")).as("__ret"))
-      .as[(String, Long, String, Seq[String], Seq[String])]
-      .groupByKey(_._1)
-      .mapValues(t => InvState(t._2, t._3,
-        t._4.iterator.map(_ -> StatefulAdmission.SeedSeq).toMap,
-        t._5.iterator.map(_ -> StatefulAdmission.SeedSeq).toMap))
-    // local copy so the state function captures a Long, not `this`
-    // (Flows is not serializable and must not ride to executors)
-    val horizon = dedupHorizon
-    val log = validated.groupByKey(_.evento)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout,
-        init)(StatefulAdmission.admit(horizon) _)
-    start(log.toDF(), "admission_stateful") { batch0 =>
-      val log = batch0.persist()
-      val changes = log.filter(col("kind") =!= "reject")
-      if (!changes.isEmpty) {
-        // creates materialize FIRST (appendUnique on nombre — first
-        // wins, S1 parity; categoria is not carried on the lifecycle
-        // stream), so the lastState merge below sees the new keys and
-        // same-batch admissions land on them
-        val created = changes.filter(col("kind") === "create")
-          .select(col("id"), col("evento").as("nombre"),
-            col("cantidad").as("capacidad"),
-            lit(null).cast("string").as("categoria"),
-            lit("A").as("estado"))
-        if (!created.isEmpty) {
-          store.appendUnique("eventos", created, Seq("nombre"),
-            tieBreak = Seq(col("id")))
-          store.appendUnique("inventario", MergeOps.inventarioClones(created),
-            Seq("nombre"), tieBreak = Seq(col("id")))
-        }
-        val inv0 = store.load("inventario")
-        val capType = inv0.schema("capacidad").dataType
-        // the LAST state-changing event per key carries the key's
-        // final (capacidad, estado) — `ord` IS the fold order (the
-        // operator emits it), so no re-derivation of comparator
-        // tiebreaks here. One guarded MERGE applies both, touching
-        // only keys present in the batch.
-        val lastState = changes.groupBy(col("evento").as("nombre"))
-          .agg(max_by(struct(col("capacidad"), col("estado")),
-            col("ord")).as("__s"))
-          .select(col("nombre"), col("__s.capacidad").as("__cap"),
-            col("__s.estado").as("__estado"))
-        val capped = MergeOps.guardedUpdate(inv0, lastState,
-          Seq("nombre"), guard = lit(true),
-          sets = Map(
-            "capacidad" -> col("__b___cap").cast(capType),
-            "estado" -> col("__b___estado")),
-          batchCols = Seq("__cap", "__estado"))
-        // `ord` is the fold order, so the last admission is its max
-        val admitted = log.filter(col("kind") === "admit")
-        store.replace("inventario",
-          MergeOps.widenLastAdmitted(capped, admitted, col("ord")))
-        store.appendUnique("reservas", admitted.select(col("id"),
-          col("evento"), lit("A").as("estado"), col("email"),
-          col("cantidad")), Seq("id"))
-        // applied seat returns are durably recorded: devoluciones is
-        // the registry the restart reseed reads `returned` from (and
-        // the one the batch consumerFlow anti-joins against)
-        val returnedIds = changes.filter(col("kind") === "return")
-          .select(col("id"))
-        if (!returnedIds.isEmpty) {
-          if (!store.exists("devoluciones"))
-            store.init("devoluciones", Seq.empty[String].toDF("id"))
-          store.appendUnique("devoluciones", returnedIds, Seq("id"))
-        }
-        // O18/O23 organizer cancels: eventos estado + reservas cascade
-        // (active rows only; X history untouched) — table-side
-        // materialization of the state transition
-        val cancelled = changes.filter(col("kind") === "cancel")
-          .select(col("evento").as("nombre")).distinct()
-        if (!cancelled.isEmpty) {
-          store.replace("eventos",
-            MergeOps.cancelEvents(store.load("eventos"), cancelled))
-          store.replace("reservas",
-            MergeOps.cancelReservas(store.load("reservas"), cancelled))
-        }
-      }
-      store.appendUnique("rechazos", log.filter(col("motivo").isNotNull)
-        .select(col("id"), col("evento"), col("email"), col("cantidad"),
-          col("motivo")), Seq("id", "motivo"))
-      log.unpersist()
-      ()
-    }
-  }
 
   // -------------------------------------------------------------------
   // S3 — customer cancellation: CAS estado A→X on reservas (O20), then
@@ -458,15 +311,4 @@ final class Flows(spark: SparkSession, store: TableStore,
       parsed0.unpersist()
       ()
     }
-}
-
-object Flows {
-  /** Default dedup-state TTL for the keyed-state admission variant, in
-    * stream-offset (`seq`) units: per key, admitted/returned ids older
-    * than this many offsets behind the key's high-water mark are
-    * evicted from the state store. The reservas/devoluciones registries
-    * remain the durable dedup record — every (re)start reseeds from
-    * them — so the horizon only has to cover duplicate lag WITHIN one
-    * uninterrupted run. */
-  val DefaultDedupHorizon: Long = 1L << 20
 }

@@ -17,10 +17,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
  * once-only seat return.
  *
  * Built on Spark 4's `transformWithState` arbitrary-state API
- * (StatefulProcessor + ValueState + registerTimer) — the successor to
- * `flatMapGroupsWithState` used by [[StatefulAdmission]]: timers are
- * first-class (no manual deadline bookkeeping scanned per batch), the
- * hold state is a typed ValueState in RocksDB, and expiry work
+ * (StatefulProcessor + ValueState + registerTimer) rather than the
+ * older GroupState API: timers are first-class (no manual deadline
+ * bookkeeping scanned per batch), the hold state is a typed
+ * ValueState in RocksDB, and expiry work
  * happens in `handleExpiredTimer` — proportional to FIRING timers,
  * not to open holds. That is the 100 TB shape: a billion open holds
  * cost nothing per batch until their deadlines arrive.

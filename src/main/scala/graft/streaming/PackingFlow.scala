@@ -32,10 +32,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
  *    packed-doc map BEFORE the offset advances — without this, a
  *    duplicate would move the offset while its spans anti-join away,
  *    leaving a permanent hole in the window tiling (caught by
- *    review). The map is OFFSET-scoped, not clock-scoped
- *    (StatefulAdmission's dedupHorizon pattern): an entry evicts once
- *    the shard's offset has advanced `horizonTokens` past the doc's
- *    pack position, bounding state at O(horizon / avg doc length)
+ *    review). The map is OFFSET-scoped, not clock-scoped: each entry
+ *    records the stream position it was packed at, and evicts once
+ *    the shard's offset has advanced `horizonTokens` past that
+ *    position, bounding state at O(horizon / avg doc length)
  *    entries per shard, deterministically and replay-safely — a
  *    wall-clock TTL was tried first, but TTL state needs
  *    TimeMode.ProcessingTime, whose clock-driven no-data batches

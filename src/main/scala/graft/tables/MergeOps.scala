@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
  * thousands merging into a table of billions broadcasts the batch, not
  * the table).
  *
- * The Boletia write rules are defined here once each, so the batch
- * flows, the keyed-state flow, hold expiry and the REST handlers
- * apply the same rule:
+ * The Boletia write rules are defined here once each, so the
+ * streaming flows, hold expiry and the REST handlers apply the same
+ * rule:
  *
  *  - [[requestFault]] — O16 request validation;
  *  - [[inventarioClones]] — O2, an event's inventario row;
@@ -125,31 +125,23 @@ object MergeOps {
   final case class AdmitOut(id: String, evento: String, email: String,
       cantidad: Int, admitted: Boolean, seq: Long)
 
-  /** THE admission ordering — (seq, id, email, cantidad), nulls first.
-    * Single definition shared by the batch cogroup fold below and the
-    * keyed-state operator (StatefulAdmission.order), so the two
-    * admission engines cannot drift apart. Allocation-free (the
-    * tuple-Ordering it replaced threw on nulls). */
-  private[graft] def admissionCompare(aSeq: Long, aId: String,
-      aEmail: String, aCant: Int, bSeq: Long, bId: String,
-      bEmail: String, bCant: Int): Int = {
-    def nc(a: String, b: String): Int =
-      if (a eq b) 0 else if (a == null) -1 else if (b == null) 1
-      else a.compareTo(b)
-    var c = java.lang.Long.compare(aSeq, bSeq)
-    if (c != 0) return c
-    c = nc(aId, bId)
-    if (c != 0) return c
-    c = nc(aEmail, bEmail)
-    if (c != 0) return c
-    Integer.compare(aCant, bCant)
-  }
-
+  /** The admission ordering: (seq, id, email, cantidad), nulls first.
+    * Hand-written so it allocates nothing per comparison and accepts
+    * null ids and emails, which a tuple Ordering throws on. */
   private[tables] object AdmitReqOrder
       extends java.util.Comparator[AdmitReq] with Serializable {
-    override def compare(x: AdmitReq, y: AdmitReq): Int =
-      admissionCompare(x.seq, x.id, x.email, x.cantidad,
-        y.seq, y.id, y.email, y.cantidad)
+    private def nc(a: String, b: String): Int =
+      if (a eq b) 0 else if (a == null) -1 else if (b == null) 1
+      else a.compareTo(b)
+    override def compare(x: AdmitReq, y: AdmitReq): Int = {
+      var c = java.lang.Long.compare(x.seq, y.seq)
+      if (c != 0) return c
+      c = nc(x.id, y.id)
+      if (c != 0) return c
+      c = nc(x.email, y.email)
+      if (c != 0) return c
+      Integer.compare(x.cantidad, y.cantidad)
+    }
   }
 
   /** One row of the tagged-union cogroup input: side 0 = inventario
@@ -161,13 +153,13 @@ object MergeOps {
   /** The per-partition admission fold over key-clustered, side-ordered
     * [[AdmitMerge]] rows (a key's inventario row first, then its
     * requests — the upstream sort guarantees it). Requests of a key
-    * sort by [[AdmitReqOrder]] (the ONE admission ordering —
-    * deliberately NOT the Catalyst sort, whose UTF8String binary order
-    * diverges from String.compareTo on non-ASCII ids, and cross-engine
-    * order agreement with StatefulAdmission matters more than one
-    * in-fold sort) and fold against the key's capacity; keys missing
-    * either side emit nothing (unknownEventRequests surfaces the
-    * no-inventario ones). inventario is unique on `nombre` (every
+    * sort by [[AdmitReqOrder]] — deliberately NOT the Catalyst sort,
+    * whose UTF8String binary order diverges from String.compareTo on
+    * non-ASCII ids, so moving the sort there would change which
+    * request of a tied seq admits — and fold against the key's
+    * capacity; keys missing either side emit nothing
+    * (unknownEventRequests surfaces the no-inventario ones).
+    * inventario is unique on `nombre` (every
     * writer appends keyed on it, like the reference's unique index),
     * so a second inventario row for a key throws
     * IllegalStateException naming the key rather than guessing which

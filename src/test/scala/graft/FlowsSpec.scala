@@ -1,12 +1,17 @@
 package graft
 
+import java.net.{HttpURLConnection, URI}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import graft.api.RestService
+import graft.operators.BoletiaQueries
 import graft.sources.Tables
 import graft.streaming.Flows
 import graft.tables.TableStore
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 // top-level so Spark can derive encoders
@@ -204,13 +209,11 @@ class FlowsSpec extends AnyFunSuite {
     assert(res("61a2a4c9a80e2a0001a93f36") === "A") // other event untouched
   }
 
-  test("motivo parity: both admission engines label a cancelled-event request evento_cerrado") {
-    // the same requests through the batch-MERGE flow and the keyed-state
-    // flow must leave the SAME rechazos rows and the same widened
-    // inventario row: Final Futbol is seeded estado='C' (the batch fold
-    // derives evento_cerrado from inventario estado, the stateful fold
-    // from its state), four requests break the O16 rule, and two are
-    // admitted on Opera Boheme, the later one widening its row
+  test("motivo: a cancelled-event request is labelled evento_cerrado, O16 faults before the fold") {
+    // Final Futbol is seeded estado='C' (the fold derives
+    // evento_cerrado from inventario estado), four requests break the
+    // O16 rule, and two are admitted on Opera Boheme, the later one
+    // widening its row
     implicit val sql = spark.sqlContext
     import spark.implicits._
     val reqs = Seq(
@@ -221,34 +224,80 @@ class FlowsSpec extends AnyFunSuite {
       NReq(null, "Opera Boheme", "x@y.z", Some(1), 5),
       NReq("619c1dae4b2120000195fff2", "Opera Boheme", "w@y.z", Some(2), 6),
       NReq("619c1dae4b2120000195fff3", "Opera Boheme", "v@y.z", Some(1), 7))
-    def rechazoRows(store: TableStore) =
+    val (store, flows) = seededStore()
+    def rechazoRows() =
       store.load("rechazos").collect()
         .map(r => (Option(r.getString(0)), r.getString(1), r.getString(4)))
         .toSeq.sorted
-    def boheme(store: TableStore) =
+    def boheme() =
       store.load("inventario").filter(col("nombre") === "Opera Boheme")
         .select("capacidad", "idres", "email", "canres").collect().toSeq
-    val (storeA, flowsA) = seededStore()
-    val msA = MemoryStream[NReq]
-    msA.addData(reqs)
-    run(flowsA.admissionFlow(msA.toDS().toDF()))
-    val (storeB, flowsB) = seededStore()
-    val msB = MemoryStream[NReq]
-    msB.addData(reqs)
-    val qB = flowsB.admissionFlowStateful(msB.toDS().toDF())
-    run(qB)
+    val ms = MemoryStream[NReq]
+    ms.addData(reqs)
+    run(flows.admissionFlow(ms.toDS().toDF()))
     val expected = Seq(
       (None, "Opera Boheme", "id_invalido"),
       (Some("619c1dae4b2120000195fff0"), "Opera Boheme", "cantidad_invalida"),
       (Some("619c1dae4b2120000195fff1"), "Opera Boheme", "cantidad_invalida"),
       (Some("619c1dae4b2120000195ffff"), "Final Futbol", "evento_cerrado"),
       (Some("NOT-A-HEX-ID-AT-ALL-0000"), "Opera Boheme", "id_invalido"))
-    assert(rechazoRows(storeA) === expected)
-    assert(rechazoRows(storeB) === expected)
+    assert(rechazoRows() === expected)
     // 17 seeded − 2 − 1; the last admitted request fills the echo columns
     val widened = Seq(Row(14, "619c1dae4b2120000195fff3", "v@y.z", 1))
-    assert(boheme(storeA) === widened)
-    assert(boheme(storeB) === widened)
+    assert(boheme() === widened)
+  }
+
+  test("multi-writer: REST writes between two admission triggers keep B2 and admit a REST-created event") {
+    // inventario has several writers, as in the reference: one live
+    // admission query re-reads it each trigger, and between its two
+    // triggers POST /reservas decrements a seat count and POST /eventos
+    // adds an event
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    val (store, _) = seededStore()
+    val flows = new Flows(spark, store, trigger = Trigger.ProcessingTime(0))
+    def b2(): Map[String, Long] =
+      BoletiaQueries.capacityInvariant(store.load("inventario"),
+        store.load("reservas")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val before = b2()
+    val restId = "aaaaaaaaaaaaaaaaaaaaaa01"
+    val ids = Iterator(restId, "aaaaaaaaaaaaaaaaaaaaaa02")
+    val svc = new RestService(spark, store, idGen = () => ids.next())
+    svc.start()
+    def post(path: String, body: String): Int = {
+      val conn = new URI(s"http://127.0.0.1:${svc.boundPort}$path").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      conn.getOutputStream.write(body.getBytes(UTF_8))
+      conn.getResponseCode
+    }
+    val ms = MemoryStream[Req]
+    val qry = flows.admissionFlow(ms.toDS().toDF())
+    try {
+      ms.addData(Req("619c1dae4b2120000195a001", "Opera Boheme", "a@x.com", 2, 1))
+      qry.processAllAvailable()
+      assert(post("/reservas",
+        """{"Evento": "Opera Boheme", "Email": "r@x.com", "Cantidad": 4}""") === 200)
+      assert(post("/eventos",
+        """{"Nombre": "Teatro Nuevo", "Capacidad": 5, "Categoria": "Teatro"}""") === 200)
+      ms.addData(
+        Req("619c1dae4b2120000195a002", "Opera Boheme", "b@x.com", 1, 2),
+        Req("619c1dae4b2120000195a003", "Teatro Nuevo", "c@x.com", 2, 3))
+      qry.processAllAvailable()
+    } finally { qry.stop(); svc.stop() }
+    assert(b2() === before + ("Teatro Nuevo" -> 5L))
+    // 17 seeded − 2 (first trigger) − 4 (REST) − 1 (second trigger)
+    val cap = store.load("inventario").collect()
+      .map(r => r.getString(1) -> r.getInt(2)).toMap
+    assert(cap("Opera Boheme") === 10)
+    assert(cap("Teatro Nuevo") === 3)
+    val estados = store.load("reservas").collect()
+      .map(r => r.getString(0) -> r.getString(2)).toMap
+    assert(estados.get(restId) === Some("A"))
+    assert(estados.get("619c1dae4b2120000195a003") === Some("A"))
+    assert(!store.exists("rechazos") || store.load("rechazos").count() === 0)
   }
 
   test("malformed CDC payloads persist to dead_letter (no silent drop)") {

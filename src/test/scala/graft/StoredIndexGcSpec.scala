@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.operators.{PostingsIndex, ShingleIndex, StoredIndexes}
+import graft.operators.{BucketedQueries, PostingsIndex, ShingleIndex, StoredIndexes}
 import graft.tables.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -123,6 +123,32 @@ class StoredIndexGcSpec extends AnyFunSuite {
         () => { Thread.sleep(300); spark.range(1000).write.parquet(out) }))
       assert(spark.read.parquet(out).count() === 1000,
         "the sibling step's write must complete, not be interrupted")
+    } finally graft.tables.TempDirs.delete(dir)
+  }
+
+  test("a superseded bucketed layout's catalog entries are dropped when its root is reclaimed") {
+    val dir = Files.createTempDirectory("graft-bucketgc").toString
+    try {
+      val lineitem = Paths.get(dir, "lineitem.parquet")
+      Files.createDirectories(lineitem)
+      Files.copy(Paths.get(TestSpark.sf, "lineitem.parquet"),
+        lineitem.resolve("part-00000.parquet"))
+      Files.copy(Paths.get(TestSpark.sf, "orders.parquet"),
+        Paths.get(dir, "orders.parquet"))
+      def graftTables: Set[String] = spark.catalog.listTables().collect()
+        .map(_.name).filter(_.startsWith("graft_")).toSet
+      val before = graftTables
+      val v1 = BucketedQueries.forDir(spark, dir)
+      spark.read.parquet(s"${TestSpark.sf}/lineitem.parquet").limit(5)
+        .write.mode("append").parquet(lineitem.toString)
+      val v2 = BucketedQueries.forDir(spark, dir)
+      assert(v2 != v1, "an append must rebuild the layout")
+      // a reader that resolved the old pair keeps it until the sweep
+      assert(spark.table(v1.lineitem).count() > 0)
+      StoredIndexes.sweepRetired(0L)
+      assert(graftTables -- before === Set(v2.orders, v2.lineitem))
+      assert(SparkEntry.queries("x37_colocated_join")(spark, dir)
+        .collect().length === 10)
     } finally graft.tables.TempDirs.delete(dir)
   }
 }
