@@ -63,16 +63,6 @@ object StreamBench {
       store
     }
 
-    def stateProvider(rocksdb: Boolean): Unit =
-      if (rocksdb) {
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-      } else
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
     def run(metric: String, nRounds: Int): Unit = {
       val store = freshStore()
       // long-running trigger so each addData round is its own
@@ -105,9 +95,7 @@ object StreamBench {
     // connector puts on the topics.
     def jq(doc: String): String =
       "\"" + doc.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    def runConsumer(metric: String, nRounds: Int,
-        rocksdb: Boolean = false): Unit = {
-      stateProvider(rocksdb)
+    def runConsumer(metric: String, nRounds: Int): Unit = {
       val store = freshStore()
       val flows = new Flows(spark, store, trigger = Trigger.ProcessingTime(0))
       val inserts = requests.map { r =>
@@ -164,7 +152,11 @@ object StreamBench {
     // multiple column families. Reported per-batch docs/sec is the
     // ingest-side rate a trainer's window supply sustains.
     def runPacking(metric: String, nRounds: Int): Unit = {
-      stateProvider(rocksdb = true)
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
       val root = Files.createTempDirectory("graft-streambench-pack").toString
       val store = new TableStore(spark, root)
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -255,10 +247,6 @@ object StreamBench {
     if (variant == "both" || variant == "consumer") {
       runConsumer("consumer_throughput", 1)
       runConsumer("consumer_throughput_multibatch", rounds)
-      // the saga on the deployment-grade state provider: RocksDB with
-      // changelog checkpointing
-      runConsumer("consumer_throughput_multibatch_rocksdb", rounds,
-        rocksdb = true)
     }
     if (variant == "both" || variant == "packing") {
       runPacking("packing_throughput", 1)

@@ -64,8 +64,9 @@ import org.apache.spark.sql.functions._
  *  - POST /eventos inserts the event and its inventario clone (S1);
  *  - DELETE /eventos cancels the event and its inventario row and
  *    cascades its active reservations (S4);
- *  - POST /reservas applies the O19 guarded decrement and the settled
- *    reservation row (S2).
+ *  - POST /reservas runs the saga's admission fold
+ *    (`MergeOps.admitReservations`, O19) on the one request and writes
+ *    the settled reservation row (S2).
  *
  * DELETE /reservas is the customer CAS A→X (O20) alone: the S3 seat
  * return stays with the flows.
@@ -84,12 +85,7 @@ import org.apache.spark.sql.functions._
  */
 final class RestService(spark: SparkSession, store: TableStore,
     port: Int = 0, idGen: () => String = RestService.objectIdGen(),
-    analyticsDir: Option[String] = None,
-    // must match the IngestionFlows(spanCleanN) the deployment runs:
-    // the GDPR document purge recomputes documents_clean and would
-    // otherwise silently flip the derived table to a different span
-    // length than the flow maintains
-    spanCleanN: Int = 5) {
+    analyticsDir: Option[String] = None) {
 
   private val mapper = new ObjectMapper()
   private val lock = new Object
@@ -282,8 +278,7 @@ final class RestService(spark: SparkSession, store: TableStore,
             val st =
               try {
                 val n = lock.synchronized {
-                  graft.tables.Gdpr.purgeDocuments(store, Seq(docId),
-                    spanCleanN)
+                  graft.tables.Gdpr.purgeDocuments(store, Seq(docId))
                 }
                 s"done:$n"
               } catch { case e: Throwable => s"failed:${e.getMessage}" }
@@ -713,21 +708,23 @@ final class RestService(spark: SparkSession, store: TableStore,
       else lock.synchronized {
         import spark.implicits._
         val id = idGen()
+        // O19 guarded decrement (reservas/main.go:152-166): the
+        // admission fold over a one-request batch, so the request's
+        // values are rows, not plan literals
         val inv = store.load("inventario")
-        // O19 guarded decrement (reservas/main.go:152-166): nombre
-        // matches AND estado='A' AND capacidad covers the request
-        val guard = col("nombre") === evento && col("estado") === "A" &&
-          col("capacidad") >= cant
-        if (inv.filter(guard).count() == 0)
+        val (_, log) = MergeOps.admitReservations(inv,
+          Seq((id, evento, email, cant, 0L))
+            .toDF("id", "evento", "email", "cantidad", "seq"))
+        // the decision is the fold's one log row; the post-image is
+        // applied from that collected row, so the fold runs once
+        val rows = log.collect()
+        if (rows.head.getAs[String]("motivo") != null)
           reply(ex, 404,
             s"evento $evento no encontrado o sin capacidad en este momento")
         else {
-          store.replace("inventario", MergeOps.guardedUpdate(inv,
-            Seq(evento).toDF("nombre"), Seq("nombre"),
-            col("estado") === "A" && col("capacidad") >= cant,
-            Map("capacidad" -> (col("capacidad") - cant),
-              "idres" -> lit(id), "email" -> lit(email),
-              "canres" -> lit(cant))))
+          store.replace("inventario", MergeOps.applyAdmissions(inv,
+            spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+              log.schema)))
           // the saga's settled end-state: the reservation row the
           // async route lands via CDC (S2/S4)
           store.append("reservas", Seq((id, evento, "A", email, cant))

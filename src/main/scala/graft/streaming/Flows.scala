@@ -100,6 +100,15 @@ final class Flows(spark: SparkSession, store: TableStore,
   // fold reads inventario afresh every trigger, so what the other
   // writers of the table (the REST tier, the seat-return flows, hold
   // expiry) changed between triggers is what it admits against.
+  //
+  // CRASH WINDOW (open): the cross-batch dedup below reads `reservas`,
+  // which is written AFTER the inventario replace. A crash between the
+  // two replays the batch (FlowRunner commits after the body), its
+  // requests are not in reservas yet, so the anti-join keeps them and
+  // the fold decrements capacidad a SECOND time while reservas gains
+  // each row once: B2 (capacidad + active seats = original capacity)
+  // breaks by the crashed batch's admitted seats. ROADMAP §4 puts this
+  // flow on the crash-point matrix.
   // -------------------------------------------------------------------
   def admissionFlow(requests: DataFrame): StreamingQuery =
     start(requests, "admission") { rawBatch0 =>
@@ -130,43 +139,27 @@ final class Flows(spark: SparkSession, store: TableStore,
           col("__r.seq").as("seq"))
         .join(store.load("reservas").select(col("id")),
           Seq("id"), "left_anti")
-        .persist() // consumed by the fold AND the unknown-event check
-      val inv = store.load("inventario")
-      val (updatedInv, log0) = MergeOps.admitReservations(inv, batch)
-      // the admission log feeds three sinks (widening, reservas insert,
-      // rejections); without caching, the cogroup fold re-executes per
-      // sink — measured 5.8k → 50k req/s on a 600k-request batch
+      val (updatedInv, log0) =
+        MergeOps.admitReservations(store.load("inventario"), batch)
+      // the admission log feeds three sinks (the inventario post-image,
+      // reservas insert, rejections); without caching, the cogroup fold
+      // re-executes per sink — measured 5.8k → 50k req/s on a
+      // 600k-request batch
       val log = log0.persist()
-      val admitted = log.filter(col("admitted"))
-      // the last admitted reservation per key is the latest seq, id as
-      // the deterministic tiebreak for equal seq
-      store.replace("inventario", MergeOps.widenLastAdmitted(updatedInv,
-        admitted, struct(col("seq"), col("id"))))
+      store.replace("inventario", updatedInv)
       // O22: idempotent reservation registration — reservas only ever
       // GROWS on this path, so it appends a delta segment (O(admitted)
       // write) instead of rewriting the registry (O(history))
-      val newRows = admitted.select(col("id"), col("evento"),
-        lit("A").as("estado"), col("email"), col("cantidad"))
+      val newRows = log.filter(col("admitted")).select(col("id"),
+        col("evento"), lit("A").as("estado"), col("email"), col("cantidad"))
       store.appendUnique("reservas", newRows, Seq("id"))
-      // rejections (sold out / closed event / unknown event) —
-      // observable outcome of the 404 path (reservas/main.go:166-173).
-      // The fold only emits admitted=false; WHICH guard failed is
-      // derived from the event's estado in the snapshot the fold read
-      // (this flow carries no cancels): evento_cerrado for a closed
-      // event, sin_capacidad for a sold-out one.
-      val estados = inv.select(col("nombre").as("__n"),
-        col("estado").as("__estado"))
-      val rejected = log.filter(!col("admitted"))
-        .join(estados, col("evento") === col("__n"), "left")
+      // rejections (sold out / closed event / unknown event) — the
+      // observable outcome of the 404 path (reservas/main.go:166-173),
+      // labelled by the fold
+      store.appendUnique("rechazos", log.filter(!col("admitted"))
         .select(col("id"), col("evento"), col("email"), col("cantidad"),
-          when(col("__estado") =!= "A", "evento_cerrado")
-            .otherwise("sin_capacidad").as("motivo"))
-        .unionByName(MergeOps.unknownEventRequests(inv, batch)
-          .select(col("id"), col("evento"), col("email"), col("cantidad"),
-            lit("no_existe").as("motivo")))
-      store.appendUnique("rechazos", rejected, Seq("id", "motivo"))
+          col("motivo")), Seq("id", "motivo"))
       rawBatch.unpersist()
-      batch.unpersist()
       log.unpersist()
     }
 

@@ -130,7 +130,7 @@ final class IngestionFlows(spark: SparkSession, store: TableStore,
     checkpointRoot: Option[String] = None,
     trigger: Trigger = Trigger.AvailableNow(),
     quality: IngestQuality = IngestQuality(),
-    spanCleanN: Option[Int] = None,
+    spanClean: Boolean = false,
     contaminationDir: Option[String] = None,
     sourceCapPct: Option[Int] = None,
     chunkStore: Boolean = false,
@@ -510,12 +510,12 @@ final class IngestionFlows(spark: SparkSession, store: TableStore,
           // NEW duplication that excises spans from previously-clean
           // rows, and a new doc with a smaller doc_id can even take
           // ownership of a span an older doc kept — both cases mutate
-          // OLD output rows, which a patch would miss.
-          spanCleanN.foreach { ng =>
+          // OLD output rows, which a patch would miss. The span length
+          // is cleanedCorpus's default, the one Gdpr.purgeDocuments
+          // recomputes the table with.
+          if (spanClean)
             store.replace("documents_clean",
-              graft.operators.SpanDedup.cleanedCorpus(
-                store.load("documents"), ng))
-          }
+              graft.operators.SpanDedup.cleanedCorpus(store.load("documents")))
         }
           // the ingest_log write is LAST — the settledness marker that
           // makes every crash window above replayable (and, new in

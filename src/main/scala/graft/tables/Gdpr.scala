@@ -72,8 +72,7 @@ object Gdpr {
     * loop an erasure SLA runs.
     *
     * Returns the number of corpus rows erased. */
-  def purgeDocuments(store: TableStore, docIds: Seq[Long],
-      spanCleanN: Int = 5): Long = {
+  def purgeDocuments(store: TableStore, docIds: Seq[Long]): Long = {
     val n =
       if (!store.exists("documents")) 0L
       else store.deleteWhere("documents", col("doc_id").isin(docIds: _*))
@@ -104,7 +103,7 @@ object Gdpr {
           graft.operators.DedupQueries.fpQualityOf(remaining))
       if (store.exists("documents_clean"))
         store.replace("documents_clean",
-          graft.operators.SpanDedup.cleanedCorpus(remaining, spanCleanN))
+          graft.operators.SpanDedup.cleanedCorpus(remaining))
     } else if (residual) {
       // no corpus table to recompute from: prune the rows directly
       Seq("dedup_decisions", "documents_clean", "text_fps").foreach { t =>

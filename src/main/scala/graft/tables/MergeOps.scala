@@ -24,9 +24,11 @@ import org.apache.spark.sql.functions._
  * rule:
  *
  *  - [[requestFault]] — O16 request validation;
+ *  - [[admitReservations]] — O19, the admission fold: the reason each
+ *    refused request is refused, and inventario's post-image, its
+ *    last admitted reservation per event included (`POST /reservas`
+ *    and `Flows.admissionFlow` both run it);
  *  - [[inventarioClones]] — O2, an event's inventario row;
- *  - [[widenLastAdmitted]] — the inventario document shape
- *    (README.md:443-454), the last admitted reservation per event;
  *  - [[cancelEvents]] — O18, estado → C by nombre (eventos and
  *    inventario);
  *  - [[cancelReservas]] — O23, the cascade onto active reservas;
@@ -66,13 +68,8 @@ object MergeOps {
       .select(cols.map(c => col(c).as(s"__b_$c")): _*)
     val joined = target.join(b,
       key.map(k => col(k) === col(s"__b_$k")).reduce(_ && _), "left")
-    val matched = col(s"__b_${key.head}").isNotNull && guard
-    joined.select(target.columns.map { c =>
-      sets.get(c) match {
-        case Some(v) => when(matched, v).otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }: _*)
+    setWhere(joined, target.columns,
+      col(s"__b_${key.head}").isNotNull && guard, sets)
   }
 
   /** O23 — cascade / semi-join update: set columns on every target row
@@ -82,14 +79,19 @@ object MergeOps {
       sets: Map[String, Column]): DataFrame = {
     val keys = filterSource.select(col(sourceKey).as("__k")).distinct()
     val joined = target.join(keys, col(targetKey) === col("__k"), "left")
-    val matched = col("__k").isNotNull && guard
-    joined.select(target.columns.map { c =>
+    setWhere(joined, target.columns, col("__k").isNotNull && guard, sets)
+  }
+
+  /** The target's `columns` out of `joined`, each column in `sets`
+    * taking its new value on the rows where `matched` holds. */
+  private def setWhere(joined: DataFrame, columns: Array[String],
+      matched: Column, sets: Map[String, Column]): DataFrame =
+    joined.select(columns.map { c =>
       sets.get(c) match {
         case Some(v) => when(matched, v).otherwise(col(c)).as(c)
         case None => col(c)
       }
     }: _*)
-  }
 
   /** O19/O21 + S8 — the one genuinely stateful operator: per-key
     * ordered admission of capacity deltas with an oversell guard.
@@ -102,7 +104,12 @@ object MergeOps {
     * running capacity. Seat returns are the same fold with negative
     * `cantidad` and no capacity guard.
     *
-    * Returns (updated inventario, admission log with `admitted` flag).
+    * Returns (updated inventario, admission log): one log row per
+    * request, its `admitted` flag and, for a refused request, the
+    * `motivo` the reference's 404 stands for (reservas/main.go:166-173):
+    * `no_existe` when the event has no inventario row,
+    * `evento_cerrado` when its estado is set and not 'A',
+    * `sin_capacidad` otherwise (a null estado included).
     *
     * Implementation: both sides as one tagged union, shuffled once on
     * the event key, then each key folds in plain Scala
@@ -119,11 +126,11 @@ object MergeOps {
     * the Row-based first cut of this fold cost ~10× in the bench). */
   final case class AdmitReq(id: String, evento: String, email: String,
       cantidad: Int, seq: Long)
-  /** Flat fold output — one row per request. Flat rows (vs a per-key
-    * nested log array) keep the output encoder a cheap product
-    * encoder. */
+  /** Flat fold output — one row per request; `motivo` is null when
+    * admitted. Flat rows (vs a per-key nested log array) keep the
+    * output encoder a cheap product encoder. */
   final case class AdmitOut(id: String, evento: String, email: String,
-      cantidad: Int, admitted: Boolean, seq: Long)
+      cantidad: Int, admitted: Boolean, motivo: String, seq: Long)
 
   /** The admission ordering: (seq, id, email, cantidad), nulls first.
     * Hand-written so it allocates nothing per comparison and accepts
@@ -157,8 +164,8 @@ object MergeOps {
     * whose UTF8String binary order diverges from String.compareTo on
     * non-ASCII ids, so moving the sort there would change which
     * request of a tied seq admits — and fold against the key's
-    * capacity; keys missing either side emit nothing
-    * (unknownEventRequests surfaces the no-inventario ones).
+    * capacity. A key with no requests emits nothing; the requests of a
+    * key with no inventario row are each refused as `no_existe`.
     * inventario is unique on `nombre` (every
     * writer appends keyed on it, like the reference's unique index),
     * so a second inventario row for a key throws
@@ -182,16 +189,24 @@ object MergeOps {
           val r = it.next()
           reqB += AdmitReq(r.id, k, r.email, r.cantidad, r.seq)
         }
-        if (inv == null || reqB.isEmpty) Array.empty
+        if (reqB.isEmpty) Array.empty
         else {
           val arr = reqB.toArray
           if (arr.length > 1) java.util.Arrays.sort(arr, AdmitReqOrder)
-          var cap = inv.capacidad.toLong
-          val active = inv.estado == "A"
+          var cap = if (inv == null) 0L else inv.capacidad.toLong
+          // why every request of the key is refused; null while the
+          // event is open and only capacity decides
+          val closed =
+            if (inv == null) "no_existe"
+            else if (inv.estado == "A") null
+            else if (inv.estado != null) "evento_cerrado"
+            else "sin_capacidad"
           arr.map { r =>
-            val ok = active && (r.cantidad <= 0 || cap >= r.cantidad)
+            val ok = closed == null && (r.cantidad <= 0 || cap >= r.cantidad)
             if (ok) cap -= r.cantidad
-            AdmitOut(r.id, k, r.email, r.cantidad, ok, r.seq)
+            val motivo = if (ok) null else if (closed != null) closed
+              else "sin_capacidad"
+            AdmitOut(r.id, k, r.email, r.cantidad, ok, motivo, r.seq)
           }
         }
       }
@@ -235,24 +250,40 @@ object MergeOps {
       .as[AdmitMerge]
       .mapPartitions(foldAdmitPartition _)
       .toDF()
+    (applyAdmissions(inventario, log), log)
+  }
 
-    // the updated snapshot is DERIVED FROM THE LOG (cap' = cap − Σ
-    // admitted deltas per key — exactly the fold's final capacity), so
-    // a caller that persists `log` evaluates the cogroup ONCE for both
-    // outputs instead of once per output. The per-key delta side is one
-    // row per touched key — broadcastable in the CDC common case.
+  /** `inventario` after the admission log `log` — O19's whole
+    * post-image (reservas/main.go:151-159): each event loses its
+    * admitted seats and, in the inventario document shape
+    * (README.md:443-454), carries its last admitted reservation, the
+    * greatest by (seq, id), in idres/email/canres. Seat returns
+    * (cantidad ≤ 0) move capacity only. A target without those
+    * columns (x16) prunes the `__r` aggregate away. */
+  def applyAdmissions(inventario: DataFrame, log: DataFrame): DataFrame = {
+    // DERIVED FROM THE LOG (cap' = cap − Σ admitted deltas per key —
+    // exactly the fold's final capacity), so a caller that persists
+    // `log` evaluates the cogroup ONCE for both outputs instead of once
+    // per output. The per-key delta side is one row per touched key —
+    // broadcastable in the CDC common case.
     val delta = log.filter(col("admitted"))
       .groupBy(col("evento").as("__nombre"))
-      .agg(sum(col("cantidad")).as("__delta"))
+      .agg(sum(col("cantidad")).as("__delta"),
+        max_by(struct(col("id"), col("email"), col("cantidad")),
+          when(col("cantidad") > 0, struct(col("seq"), col("id")))).as("__r"))
     val capType = inventario.schema("capacidad").dataType
-    val updated = inventario
+    def lastOr(c: String, field: String): Column =
+      when(col("__r").isNotNull, col(s"__r.$field")).otherwise(col(c)).as(c)
+    inventario
       .join(delta, col("nombre") === col("__nombre"), "left")
       .select(inventario.columns.map {
         case "capacidad" => (col("capacidad") - coalesce(col("__delta"), lit(0L)))
           .cast(capType).as("capacidad")
+        case "idres" => lastOr("idres", "id")
+        case "email" => lastOr("email", "email")
+        case "canres" => lastOr("canres", "cantidad")
         case c => col(c)
       }: _*)
-    (updated, log)
   }
 
   /** O16 (reservas/main.go:112-115,142-145) — why a reservation
@@ -273,23 +304,6 @@ object MergeOps {
       lit(null).cast("string").as("idres"),
       lit(null).cast("string").as("email"),
       lit(null).cast("int").as("canres"))
-
-  /** The inventario document shape (README.md:443-454): each event
-    * touched by `admitted` (id, evento, email, cantidad) carries its
-    * last admitted reservation, the greatest by `order`, in
-    * idres/email/canres. */
-  def widenLastAdmitted(inv: DataFrame, admitted: DataFrame,
-      order: Column): DataFrame = {
-    val last = admitted.groupBy(col("evento").as("nombre"))
-      .agg(max_by(struct(col("id"), col("email"), col("cantidad")), order)
-        .as("__r"))
-      .select(col("nombre"), col("__r.id").as("__idres"),
-        col("__r.email").as("__email"), col("__r.cantidad").as("__canres"))
-    guardedUpdate(inv, last, Seq("nombre"), guard = lit(true),
-      sets = Map("idres" -> col("__b___idres"), "email" -> col("__b___email"),
-        "canres" -> col("__b___canres")),
-      batchCols = Seq("__idres", "__email", "__canres"))
-  }
 
   /** O18 (eventos/main.go:45-59) — organizer cancel: estado → C on
     * every `target` row (eventos or inventario) whose nombre is in
@@ -325,10 +339,4 @@ object MergeOps {
     admitReservations(inventario, returned.select(col("id"), col("evento"),
       lit(null).cast("string").as("email"),
       (-col("cantidad")).cast("int").as("cantidad"), lit(0L).as("seq")))._1
-
-  /** Unknown-event requests (no inventario row) — needed by flows to
-    * emit rejections the fold never saw. */
-  def unknownEventRequests(inventario: DataFrame, requests: DataFrame): DataFrame =
-    requests.join(inventario.select(col("nombre")),
-      requests("evento") === col("nombre"), "left_anti")
 }

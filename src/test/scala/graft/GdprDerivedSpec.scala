@@ -22,7 +22,7 @@ class GdprDerivedSpec extends AnyFunSuite {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-gdprdoc").toString
     val store = new TableStore(spark, root)
-    val flows = new IngestionFlows(spark, store, root, spanCleanN = Some(5))
+    val flows = new IngestionFlows(spark, store, root, spanClean = true)
     val ms = MemoryStream[(Long, String)]
     // 1 and 7 identical (near-dup cluster, 1 canonical); 9 shares 1's
     // 5-gram span (loses it to owner 1); 5 unrelated

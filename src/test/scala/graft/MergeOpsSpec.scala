@@ -102,12 +102,29 @@ class MergeOpsSpec extends AnyFunSuite {
       chain.contains("more than one row for nombre 'a'"), chain)
   }
 
-  test("unknownEventRequests finds requests with no inventario row") {
-    val i = inv(("1", "a", 5, "Op", "A"))
-    val reqs = Seq(("r1", "a", "x", 1, 1L), ("r2", "zz", "x", 1, 2L))
+  test("admitReservations: one log row per request, each refusal with its motivo") {
+    val i = Seq(
+      ("1", "a", 2, "Op", "A"), ("2", "c", 9, "Op", "C"),
+      ("3", "n", 9, "Op", null))
+      .toDF("id", "nombre", "capacidad", "categoria", "estado")
+    val reqs = Seq(
+      ("ra1", "a", "x@y", 2, 1L),  // admitted, cap 2→0
+      ("ra2", "a", "x@y", 1, 2L),  // sold out
+      ("rc1", "c", "x@y", 1, 1L),  // estado C
+      ("rn1", "n", "x@y", 1, 1L),  // null estado reads sold out
+      ("rz1", "zz", "x@y", 1, 1L)) // no inventario row
       .toDF("id", "evento", "email", "cantidad", "seq")
-    val unknown = MergeOps.unknownEventRequests(i, reqs)
-      .collect().map(_.getString(0))
-    assert(unknown.toSeq === Seq("r2"))
+    val (updated, log) = MergeOps.admitReservations(i, reqs)
+    val got = log.select("id", "admitted", "motivo").collect()
+      .map(r => (r.getString(0), r.getBoolean(1), Option(r.getString(2))))
+      .sortBy(_._1).toSeq
+    assert(got === Seq(
+      ("ra1", true, None),
+      ("ra2", false, Some("sin_capacidad")),
+      ("rc1", false, Some("evento_cerrado")),
+      ("rn1", false, Some("sin_capacidad")),
+      ("rz1", false, Some("no_existe"))))
+    val caps = updated.collect().map(r => r.getString(1) -> r.getInt(2)).toMap
+    assert(caps === Map("a" -> 0, "c" -> 9, "n" -> 9))
   }
 }

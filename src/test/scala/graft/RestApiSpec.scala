@@ -907,16 +907,26 @@ class RestApiSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a warm POST /reservas compiles no codegen class per call") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    // the request's values are plan literals; one Cantidad keeps every
-    // call's generated code identical, so a warm call must hit the
-    // codegen cache (the /search tests above have finished the
-    // pre-warm, which compiles on its own thread)
-    def reserve() = assert(http("POST", "/reservas",
-      """{"Evento": "Opera Boheme", "Email": "cg@x.com", "Cantidad": 1}""")
+    // the request's values travel as rows through the admission fold,
+    // so a warm call hits the codegen cache whatever its Cantidad (the
+    // /search tests above have finished the pre-warm, which compiles
+    // on its own thread)
+    def reserve(n: Int) = assert(http("POST", "/reservas",
+      s"""{"Evento": "Opera Boheme", "Email": "cg@x.com", "Cantidad": $n}""")
       ._1 === 200)
-    reserve(); reserve()
+    reserve(1); reserve(1)
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    reserve(); reserve(); reserve()
+    reserve(1); reserve(2); reserve(3)
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === before)
+  }
+
+  test("a warm POST /reservas runs no more Spark jobs than the guarded update did") {
+    // a warm call ran 8 jobs when the route had its own guard and
+    // update; nothing else runs jobs now (the pre-warm is done)
+    val body = """{"Evento": "Opera Boheme", "Email": "jc@x.com", "Cantidad": 1}"""
+    assert(http("POST", "/reservas", body)._1 === 200)
+    val jobs = TestSpark.jobTasks(spark)(
+      assert(http("POST", "/reservas", body)._1 === 200))
+    assert(jobs.size <= 8, s"POST /reservas jobs: $jobs")
   }
 }

@@ -212,7 +212,7 @@ class SpanDedupSpec extends AnyFunSuite {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-spanclean").toString
     val store = new TableStore(spark, root)
-    val flows = new IngestionFlows(spark, store, root, spanCleanN = Some(5))
+    val flows = new IngestionFlows(spark, store, root, spanClean = true)
     val ms = MemoryStream[(Long, String)]
     def df = ms.toDS().toDF("doc_id", "text")
     def run(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
