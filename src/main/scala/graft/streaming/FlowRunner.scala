@@ -15,9 +15,11 @@ private[streaming] object FlowRunner {
     * across restarts, i.e. with a persistent checkpoint. A temp
     * checkpoint restarts numbering at 0 on every start and the guard
     * would silently drop real batches — so without `checkpointRoot`
-    * the guard is off and idempotence rests on the flows'
-    * key-idempotent merges (which is also what absorbs the one
-    * crash-between-swap-and-commit replay). */
+    * the guard is off. Either way the commit is written after `body`,
+    * so a crash between a table swap and the commit re-runs the whole
+    * batch: key-deduplicated appends absorb that, but a flow that
+    * publishes two tables re-applies a half-done batch (ROADMAP "Known
+    * defects", owned by §4 and §11). */
   def start(store: TableStore, checkpointRoot: Option[String],
       trigger: Trigger, df: DataFrame, name: String)(
       body: DataFrame => Unit): StreamingQuery = {

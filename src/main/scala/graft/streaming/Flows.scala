@@ -17,14 +17,23 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * so echo messages are never generated; scenario tests assert
  * equivalent FINAL STATE, not equal message traffic (S6).
  *
- * Exactly-once: Spark checkpointing replays a failed batch;
- * every MERGE here is idempotent (insert-if-absent on message id,
- * guarded CAS transitions, per-key folds keyed by a monotone seq), so
- * redelivery is a no-op — the engine-grade version of the reference's
- * duplicate-insert tolerance (inventario/main.go:91-93, S5).
+ * Replay: Spark checkpointing replays a failed batch, and with a
+ * persistent checkpoint `FlowRunner` skips a batch id the store's
+ * commit log already holds. What a replay of an uncommitted batch
+ * leaves is only as safe as each write: the key-deduplicated appends
+ * (insert-if-absent on message id, the reference's duplicate-insert
+ * tolerance, inventario/main.go:91-93, S5) absorb it, but a flow whose
+ * batch writes two tables in two publishes re-applies a half-done
+ * batch — admission decrements capacidad twice, cancellation loses the
+ * returned seats, the consumer returns them twice (ROADMAP "Known
+ * defects", owned by §4 and §11).
  *
- * Each flow is one `foreachBatch` writer per table (single-writer rule
- * for TableStore swaps). In production the sources/sinks are Kafka
+ * Several writers replace the same table (inventario: admission,
+ * cancellation, consumer, hold expiry and the REST tier); TableStore
+ * serializes their publishes but does not detect a lost update between
+ * one writer's read and its publish (ROADMAP "Known defects", §11).
+ *
+ * In production the sources/sinks are Kafka
  * (`spark.readStream.format("kafka")`) and Delta MERGE; MemoryStream
  * drives the same code in tests.
  */
@@ -118,10 +127,6 @@ final class Flows(spark: SparkSession, store: TableStore,
       // O16: invalid requests are refused BEFORE the fold
       val validated = rawBatch.withColumn("__invalid",
         MergeOps.requestFault(col("cantidad"), col("id")))
-      store.appendUnique("rechazos",
-        validated.filter(col("__invalid").isNotNull)
-          .select(col("id"), col("evento"), col("email"), col("cantidad"),
-            col("__invalid").as("motivo")), Seq("id", "motivo"))
       // redelivery dedup, two layers: within-batch duplicates collapse
       // to the earliest seq (a dup would otherwise decrement capacity
       // twice while inserting one reservation), then anything already
@@ -153,12 +158,15 @@ final class Flows(spark: SparkSession, store: TableStore,
       val newRows = log.filter(col("admitted")).select(col("id"),
         col("evento"), lit("A").as("estado"), col("email"), col("cantidad"))
       store.appendUnique("reservas", newRows, Seq("id"))
-      // rejections (sold out / closed event / unknown event) — the
-      // observable outcome of the 404 path (reservas/main.go:166-173),
-      // labelled by the fold
-      store.appendUnique("rechazos", log.filter(!col("admitted"))
-        .select(col("id"), col("evento"), col("email"), col("cantidad"),
-          col("motivo")), Seq("id", "motivo"))
+      // rejections, one write: the O16 faults and the fold's refusals
+      // (sold out / closed event / unknown event — the observable outcome
+      // of the 404 path, reservas/main.go:166-173); their motivos differ
+      def refused(df: DataFrame, motivo: String) = df.select(col("id"),
+        col("evento"), col("email"), col("cantidad"), col(motivo).as("motivo"))
+      store.appendUnique("rechazos",
+        refused(validated.filter(col("__invalid").isNotNull), "__invalid")
+          .unionByName(refused(log.filter(!col("admitted")), "motivo")),
+        Seq("id", "motivo"))
       rawBatch.unpersist()
       log.unpersist()
     }

@@ -36,12 +36,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * horizon of versions while keeping everything a reader inside the
  * horizon can still reference.
  *
- * Writer contract: one snapshot-rewriting writer per table by
- * convention (one foreachBatch sink owns each replace()d table);
- * concurrent APPENDS to shared sinks (dead_letter) are supported and
- * serialized by the per-table JVM-local lock — sufficient because
- * every foreachBatch sink runs on the one driver that owns this store
- * instance. Readers are unrestricted.
+ * Writer contract: every version transition of a table serializes on
+ * a per-table JVM-local lock (every foreachBatch sink runs on the one
+ * driver that owns this store instance), so each publish is atomic and
+ * concurrent appends to a shared sink (dead_letter) lose no segment.
+ * Nothing checks which version a `replace`d frame was read from: a
+ * writer that loads version v and publishes after another writer has
+ * published v + 1 erases that write. `inventario` has five such
+ * writers (the admission, cancellation and consumer flows, hold
+ * expiry and the REST tier), so a write inside another's
+ * read-to-publish window is lost (ROADMAP "Known defects", §11).
+ * Readers are unrestricted.
  */
 /** @param autoVacuumKeep every version transition GCs manifests (and
   *   their now-unreferenced segments) more than this many versions
@@ -58,13 +63,9 @@ final class TableStore(spark: SparkSession, root: String,
 
   private val CompactThreshold = 16
 
-  // Per-table write lock. The single-writer-per-table contract holds
-  // for snapshot-rewriting flows, but APPEND-only sinks are legitimately
-  // shared (dead_letter receives rows from every flow): two concurrent
-  // appends that both read version v and both publish v+1 would lose
-  // one segment. All version transitions of a table therefore serialize
-  // on this JVM-local lock — sufficient because every foreachBatch sink
-  // runs on the one driver that owns this store instance.
+  // Per-table write lock: two concurrent appends that both read version
+  // v and both publish v+1 would lose one segment, so all version
+  // transitions of a table serialize here (see the writer contract).
   private val writeLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def writeLock(name: String): Object =
@@ -126,6 +127,24 @@ final class TableStore(spark: SparkSession, root: String,
     seg
   }
 
+  /** The schema segment `seg`, written from `df`, reads back under: a
+    * flat frame's schema made nullable (no job), else its data columns
+    * then its partition columns typed as hive inference reads them from
+    * the segment's directory names (a listing, no footer read; a
+    * zero-row write has no directories and keeps the frame's types). */
+  private def segmentSchema(name: String, seg: String, df: DataFrame,
+      partitionBy: Seq[String]): StructType = {
+    val flat = Bridge.nullable(df.schema)
+    if (partitionBy.isEmpty) flat
+    else {
+      val data = StructType(flat.filterNot(f => partitionBy.contains(f.name)))
+      val read = spark.read.schema(data)
+        .parquet(tdir(name).resolve(seg).toString).schema
+      StructType(data ++ partitionBy.map(p =>
+        read.find(_.name == p).getOrElse(flat(p))))
+    }
+  }
+
   def exists(name: String): Boolean = version(name) >= 0
 
   /** The table's live version number (−1 if the table is absent) —
@@ -154,7 +173,7 @@ final class TableStore(spark: SparkSession, root: String,
     * analysed plan, its `HadoopFsRelation`s with their file listings
     * and the schema — never rows. A published version is immutable, so
     * while the key holds, a read reuses the handle instead of listing
-    * the segment dirs and inferring their schema again; each read gets
+    * the segment dirs again; each read gets
     * a copy with fresh attribute ids ([[Bridge.freshRelations]]) so
     * reads of one version still self-join. Any publish moves the
     * version (and drops this instance's entry), and the next read
@@ -204,28 +223,24 @@ final class TableStore(spark: SparkSession, root: String,
       }
     }
 
-  /** The one schema every segment of `m` reads under: the RECORDED
-    * superset of an evolved table (parquet fills columns missing from
-    * older segments as null), else the first segment's — hive
-    * partition-column type inference runs per segment, so a segment
-    * whose partition values happen to all look numeric could otherwise
-    * infer a different type than its siblings. */
+  /** The one schema every segment of `m` reads under: the schema its
+    * manifest records (parquet fills columns missing from older
+    * segments of an evolved table as null, and no segment re-infers
+    * its partition-column types). A manifest written before every
+    * publish recorded one falls back to the first segment's footer — a
+    * one-task job, the store's only schema inference; the table's next
+    * publish records the schema. */
   private def pinnedSchema(dirs: Seq[String], m: Manifest): StructType =
     m.schema.getOrElse(spark.read.parquet(dirs.head).schema)
 
-  /** Partitioned segments read one scan each, unioned by name; a flat
-    * table or one segment reads as one scan, unpinned when nothing was
-    * recorded. */
-  private def readDirs(dirs: Seq[String], m: Manifest): DataFrame =
-    if (m.schema.isEmpty && (m.partitionBy.isEmpty || dirs.length == 1))
-      spark.read.parquet(dirs: _*)
-    else {
-      val sch = pinnedSchema(dirs, m)
-      if (dirs.length == 1 || m.partitionBy.isEmpty)
-        spark.read.schema(sch).parquet(dirs: _*)
-      else dirs.map(d => spark.read.schema(sch).parquet(d))
-        .reduce(_.unionByName(_))
-    }
+  /** Every read is pinned to [[pinnedSchema]]: a flat table or one
+    * segment reads as one scan, partitioned segments one scan each,
+    * unioned by name. */
+  private def readDirs(dirs: Seq[String], m: Manifest): DataFrame = {
+    val read = spark.read.schema(pinnedSchema(dirs, m))
+    if (dirs.length == 1 || m.partitionBy.isEmpty) read.parquet(dirs: _*)
+    else dirs.map(read.parquet(_)).reduce(_.unionByName(_))
+  }
 
   /** Change-data-feed between two versions — the rows a downstream
     * incremental consumer must apply to move its copy of `name` from
@@ -312,8 +327,9 @@ final class TableStore(spark: SparkSession, root: String,
       partitionBy: Seq[String] = Nil): Unit =
     writeLock(name).synchronized {
       val next = version(name) + 1
-      publish(name, next,
-        Manifest(Seq(writeSegment(name, s"d$next", df, partitionBy)), partitionBy))
+      val seg = writeSegment(name, s"d$next", df, partitionBy)
+      publish(name, next, Manifest(Seq(seg), partitionBy,
+        Some(segmentSchema(name, seg, df, partitionBy))))
     }
 
   /** Append rows to an insert-only table (notifications, rejections,
@@ -339,13 +355,11 @@ final class TableStore(spark: SparkSession, root: String,
         val m = manifest(name, v)
         val parts = m.partitionBy
         // a zero-row partitionBy write emits NO parquet files (only
-        // _SUCCESS), so recording it in the manifest would make every
-        // later load() fail schema inference on the empty segment dir —
-        // skip empty appends for partitioned tables entirely (flat
-        // empty writes still emit a schema-bearing part file and are
-        // harmless, so they keep the cheap no-action path)
+        // _SUCCESS), a segment that adds nothing: skip empty appends
+        // for partitioned tables (flat empty writes emit a part file,
+        // so they keep the cheap path with no emptiness probe)
         if (parts.isEmpty || !df.isEmpty) {
-          val cur = m.schema.getOrElse(load(name).schema)
+          val cur = pinnedSchema(dirs(name, m.segments), m)
           val curTypes = cur.fields
             .map(f => f.name -> f.dataType.catalogString).toMap
           // Partition columns carry NO type on disk — the value is the
@@ -387,34 +401,26 @@ final class TableStore(spark: SparkSession, root: String,
             .filterNot(f => curTypes.contains(f.name))
           val missing = cur.fieldNames
             .filterNot(df.schema.fieldNames.contains).toSeq
-          val (aligned, schemaJson) =
-            if (newCols.isEmpty && missing.isEmpty)
-              (df.select(cur.fieldNames.map(col).toSeq: _*), m.schemaJson)
-            else {
-              require(evolveSchema,
-                s"append to $name changes the schema (adds " +
-                  s"[${newCols.map(_.name).mkString(",")}], omits " +
-                  s"[${missing.mkString(",")}]) — pass " +
-                  "evolveSchema = true to evolve, or align the batch")
-              val evolved = StructType(
-                cur.fields ++ newCols.map(_.copy(nullable = true)))
-              val sel = evolved.fields.toSeq.map(f =>
-                if (df.columns.contains(f.name)) col(f.name)
-                else lit(null).cast(f.dataType).as(f.name))
-              (df.select(sel: _*),
-                if (newCols.isEmpty) m.schemaJson // pure omission: no evolution
-                else Some(evolved.json))
-            }
+          require(evolveSchema || (newCols.isEmpty && missing.isEmpty),
+            s"append to $name changes the schema (adds " +
+              s"[${newCols.map(_.name).mkString(",")}], omits " +
+              s"[${missing.mkString(",")}]) — pass " +
+              "evolveSchema = true to evolve, or align the batch")
+          // the table's schema after this append: `cur`, plus any added
+          // columns; the batch is aligned to it, omitted columns null
+          val schema = StructType(
+            cur.fields ++ newCols.map(_.copy(nullable = true)))
+          val aligned = df.select(schema.fields.toSeq.map(f =>
+            if (df.columns.contains(f.name)) col(f.name)
+            else lit(null).cast(f.dataType).as(f.name)): _*)
           if (m.segments.length >= CompactThreshold)
-            // the rewrite materializes the (possibly evolved) schema
-            // into the files themselves — no header needed afterwards
             replace(name, load(name).unionByName(aligned,
               allowMissingColumns = true), parts)
           else {
             val next = v + 1
             publish(name, next, Manifest(
               m.segments :+ writeSegment(name, s"d$next", aligned, parts), parts,
-              schemaJson))
+              Some(schema)))
           }
         }
       }
@@ -553,15 +559,14 @@ final class TableStore(spark: SparkSession, root: String,
       }
       if (deleted > 0L) {
         if (rewritten.nonEmpty)
-          publish(name, v + 1, m.copy(segments = rewritten))
+          publish(name, v + 1, Manifest(rewritten, parts, Some(pinned)))
         else {
           // table emptied: one empty flat segment carrying the full
           // schema (partition columns become ordinary columns)
           val empty = spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pinned)
-          publish(name, v + 1, m.copy(
-            segments = Seq(writeSegment(name, s"d${v + 1}", empty)),
-            partitionBy = Nil))
+          publish(name, v + 1, Manifest(
+            Seq(writeSegment(name, s"d${v + 1}", empty)), Nil, Some(pinned)))
         }
       }
       deleted
@@ -669,11 +674,13 @@ final class TableStore(spark: SparkSession, root: String,
   // -- per-flow batch commit log: replay protection for foreachBatch ---
   // Structured Streaming re-runs a failed micro-batch with the same
   // batchId; flows consult this log and skip already-committed ids, the
-  // library-level equivalent of Delta's txn-id dedup. (A crash between
-  // the last table swap and the commit write re-applies one batch; the
-  // flows' merges are key-idempotent, so the reapplication is a no-op —
-  // same contract as the reference's at-least-once + dup-tolerant
-  // consumers, inventario/main.go:91-93.)
+  // library-level equivalent of Delta's txn-id dedup. The id is written
+  // after the batch body, so a crash between a table swap and the
+  // commit write re-runs the whole batch over what it already
+  // published. Only key-deduplicated appends absorb that replay: a flow
+  // that writes two tables in two publishes (admission, cancellation,
+  // consumer, hold expiry) applies a half-done batch twice and breaks
+  // seat accounting (ROADMAP "Known defects", owned by §4 and §11).
 
   def lastCommitted(flow: String): Long = {
     val f = Paths.get(root, "_commits", flow)
@@ -694,18 +701,18 @@ object TableStore {
     * newline. The headers, in this order and each at most once:
     *
     *  - `#partitionBy=c1,c2` — the hive layout every segment is written
-    *    in (lets append write layout-compatible segments);
-    *  - `#schema=<StructType JSON>` — the superset schema of a table
-    *    that EVOLVED past its older segments' footers, which read under
-    *    it with the new columns null.
+    *    in (lets append write layout-compatible segments); absent for a
+    *    flat table;
+    *  - `#schema=<StructType JSON>` — the schema every segment reads
+    *    under (columns an evolved table added read as null in its older
+    *    segments). Every publish writes it, so no read infers a schema;
+    *    a manifest written before that has none, and only
+    *    `TableStore.pinnedSchema` falls back to a footer for it.
     *
     * Parsed here and rendered here only; a header line the parser does
     * not know fails the read rather than being dropped or carried. */
   private final case class Manifest(segments: Seq[String],
-      partitionBy: Seq[String] = Nil, schemaJson: Option[String] = None) {
-
-    def schema: Option[StructType] =
-      schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+      partitionBy: Seq[String] = Nil, schema: Option[StructType] = None) {
 
     /** True iff this manifest EXTENDS `from`'s segment list — the
       * append-only chain whose version diff is pure inserts readable
@@ -716,7 +723,7 @@ object TableStore {
     def render: String =
       (Option.when(partitionBy.nonEmpty)(partitionBy.mkString(","))
           .map("#partitionBy=" + _) ++
-        schemaJson.map("#schema=" + _) ++
+        schema.map("#schema=" + _.json) ++
         segments).mkString("\n")
   }
 
@@ -727,7 +734,8 @@ object TableStore {
           def value(h: String) = Option.when(line.startsWith(h))(line.drop(h.length))
           value("#partitionBy=").map(v =>
               m.copy(partitionBy = v.split(",").toSeq.filter(_.nonEmpty)))
-            .orElse(value("#schema=").map(v => m.copy(schemaJson = Some(v))))
+            .orElse(value("#schema=").map(v => m.copy(schema =
+              Some(DataType.fromJson(v).asInstanceOf[StructType]))))
             .getOrElse {
               if (line.startsWith("#")) throw new IllegalStateException(
                 s"manifest $where has an unknown header: $line")

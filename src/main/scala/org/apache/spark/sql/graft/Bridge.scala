@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
 
 /** Column ⇄ Expression bridge. Spark 4 narrowed these converters to
@@ -56,6 +57,10 @@ object Bridge {
     plan.foreach(_.unsetTagValue(classic.Dataset.DATASET_ID_TAG))
     classic.Dataset.ofRows(cdf.sparkSession, plan)
   }
+
+  /** `s` with every field, element and map value nullable: the schema
+    * a file source reads rows written under `s` back as. */
+  def nullable(s: StructType): StructType = s.asNullable
 
   /** True for a path under a table root (relative, with a leading
     * `/`) that Spark's file index leaves out of a read: `_SUCCESS` and

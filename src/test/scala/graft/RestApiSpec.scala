@@ -922,11 +922,27 @@ class RestApiSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a warm POST /reservas runs no more Spark jobs than the guarded update did") {
     // a warm call ran 8 jobs when the route had its own guard and
-    // update; nothing else runs jobs now (the pre-warm is done)
+    // update, two of them inferring the schema of the inventario and
+    // reservas versions the previous call wrote; the store now reads
+    // both from their manifests (nothing else runs jobs now: the
+    // pre-warm is done)
     val body = """{"Evento": "Opera Boheme", "Email": "jc@x.com", "Cantidad": 1}"""
     assert(http("POST", "/reservas", body)._1 === 200)
     val jobs = TestSpark.jobTasks(spark)(
       assert(http("POST", "/reservas", body)._1 === 200))
-    assert(jobs.size <= 8, s"POST /reservas jobs: $jobs")
+    assert(jobs.size <= 6, s"POST /reservas jobs: $jobs")
+  }
+
+  test("a point read of a version the service just wrote runs one job") {
+    // the POST publishes a fresh inventario version; reading it runs
+    // the point lookup's collect and no schema job
+    assert(http("POST", "/reservas",
+      """{"Evento": "Opera Boheme", "Email": "pr@x.com", "Cantidad": 1}""")
+      ._1 === 200)
+    val jobs = TestSpark.jobTasks(spark) {
+      val (code, text) = http("GET", "/reservas/eventos/Opera%20Boheme")
+      assert(code === 200 && text.contains("\"Nombre\":\"Opera Boheme\""), text)
+    }
+    assert(jobs.size === 1, s"GET /reservas/eventos/{n} jobs: $jobs")
   }
 }

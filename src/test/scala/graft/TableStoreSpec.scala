@@ -716,22 +716,88 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("handle: concurrent first loads of a new version resolve it once") {
     import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
     val store = fresh()
     store.init("t", (1 to 50).map(i => (i, s"v$i")).toDF("k", "v"))
     store.append("t", Seq((51, "v51")).toDF("k", "v"))
-    // resolving a version runs one schema-inference job; four loads
-    // racing on the new version share one resolution
+    // resolving a version runs no job (the manifest records the
+    // schema); four loads racing on the new version share one
+    // resolution, so every frame reads through one relation
     val go = new java.util.concurrent.CountDownLatch(1)
+    val frames = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.DataFrame]()
     val jobs = TestSpark.jobTasks(spark) {
       val ts = (1 to 4).map { _ =>
-        val t = new Thread(() => { go.await(); store.load("t"); () })
+        val t = new Thread(() => { go.await(); frames.add(store.load("t")); () })
         t.start(); t
       }
       go.countDown()
       ts.foreach(_.join())
     }
-    assert(jobs.size === 1, s"jobs: $jobs")
+    assert(jobs.isEmpty, s"jobs: $jobs")
+    val relations = frames.toArray(Array.empty[org.apache.spark.sql.DataFrame])
+      .toSeq.map(_.queryExecution.analyzed
+        .collectFirst { case r: LogicalRelation => r.relation }.get)
+    assert(relations.size === 4 && relations.forall(_ eq relations.head))
     assert(store.load("t").count() === 51L)
+  }
+
+  test("a fresh version of every publish kind resolves with no Spark job") {
+    import spark.implicits._
+    val store = fresh()
+    Seq("flat" -> Nil, "part" -> Seq("v")).foreach { case (t, parts) =>
+      def resolvesFree(publish: String) = {
+        val jobs = TestSpark.jobTasks(spark)(store.load(t))
+        assert(jobs.isEmpty, s"$t after $publish: $jobs")
+      }
+      store.replace(t, Seq((1, "a"), (2, "b")).toDF("k", "v"), parts)
+      resolvesFree("replace")
+      store.append(t, Seq((3, "a")).toDF("k", "v"))
+      resolvesFree("append")
+      store.appendUnique(t, Seq((3, "x"), (4, "b")).toDF("k", "v"), Seq("k"))
+      resolvesFree("appendUnique")
+      store.append(t, Seq((5, "a", 0.5)).toDF("k", "v", "s"),
+        evolveSchema = true)
+      resolvesFree("evolving append")
+      store.upsert(t, Seq((1, "b", 1.5)).toDF("k", "v", "s"), Seq("k"))
+      resolvesFree("upsert")
+      assert(store.deleteWhere(t, col("k") === 2) === 1L)
+      resolvesFree("deleteWhere")
+      store.compact(t)
+      resolvesFree("compact")
+      val rows = store.load(t).select("k", "v", "s").collect()
+        .map(r => (r.getInt(0), r.getString(1), Option(r.get(2)))).sortBy(_._1)
+      assert(rows.toSeq === Seq((1, "b", Some(1.5)), (3, "a", None),
+        (4, "b", None), (5, "a", Some(0.5))), t)
+      assert(store.partitionColumns(t) === parts)
+    }
+  }
+
+  test("a manifest without #schema still reads, and the next publish records it") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    def manifest(t: String) = new String(Files.readAllBytes(
+      Paths.get(root, t, s"m${store.version(t)}")), "UTF-8")
+    Seq("flat" -> Nil, "part" -> Seq("v")).foreach { case (t, parts) =>
+      store.replace(t, Seq((1, "a"), (2, "b")).toDF("k", "v"), parts)
+      val recorded = manifest(t).split("\n").filter(_.startsWith("#schema="))
+      assert(recorded.length === 1, manifest(t))
+      // the manifest as a writer that recorded no schema left it
+      val m0 = Paths.get(root, t, "m0")
+      Files.write(m0, manifest(t).split("\n")
+        .filterNot(_.startsWith("#schema=")).mkString("\n").getBytes("UTF-8"))
+      // the legacy version reads through the footer fallback: one job
+      val jobs = TestSpark.jobTasks(spark)(
+        assert(store.load(t).schema.fieldNames.toSeq === Seq("k", "v")))
+      assert(jobs.size === 1, s"$t legacy read: $jobs")
+      assert(content(store, t) === Seq((1, "a"), (2, "b")))
+      store.append(t, Seq((3, "a")).toDF("k", "v"))
+      assert(manifest(t).split("\n").filter(_.startsWith("#schema=")).toSeq ===
+        recorded.toSeq, manifest(t))
+      assert(TestSpark.jobTasks(spark)(store.load(t)).isEmpty)
+      assert(content(store, t) === Seq((1, "a"), (2, "b"), (3, "a")))
+    }
   }
 
   test("handle: a version published by another instance is visible") {
@@ -769,11 +835,12 @@ class TableStoreSpec extends AnyFunSuite {
       s"""{"name":"$n","type":"$t","nullable":true,"metadata":{}}"""
     def schema(fs: String*) =
       "#schema=" + fs.mkString("""{"type":"struct","fields":[""", ",", "]}")
-    // a flat append lists its segments only
+    // a flat table leads with its schema, then its segments
     store.init("flat", Seq((1, "a")).toDF("k", "v"))
     store.append("flat", Seq((2, "b")).toDF("k", "v"))
-    assert(manifest("flat") === "d0\nd1")
-    // a schema-evolving append records the superset schema first
+    assert(manifest("flat") === schema(field("k", "integer"),
+      field("v", "string")) + "\nd0\nd1")
+    // a schema-evolving append records the superset schema
     store.append("flat", Seq((3, "c", 1.5)).toDF("k", "v", "w"),
       evolveSchema = true)
     assert(manifest("flat") === schema(field("k", "integer"),
@@ -781,7 +848,8 @@ class TableStoreSpec extends AnyFunSuite {
     // a partitioned table leads with its layout, then the schema
     store.replace("part", Seq((1, "a"), (2, "b")).toDF("k", "p"), Seq("p"))
     store.append("part", Seq((3, "c")).toDF("k", "p"))
-    assert(manifest("part") === "#partitionBy=p\nd0\nd1")
+    assert(manifest("part") === "#partitionBy=p\n" + schema(
+      field("k", "integer"), field("p", "string")) + "\nd0\nd1")
     store.append("part", Seq((4, "a", 7L)).toDF("k", "p", "x"),
       evolveSchema = true)
     val evolved = schema(field("k", "integer"), field("p", "string"),
