@@ -68,6 +68,11 @@ import org.apache.spark.sql.functions._
  *    (`MergeOps.admitReservations`, O19) on the one request and writes
  *    the settled reservation row (S2).
  *
+ * Each write route's guard and tables are one `TableStore.commit`, and
+ * the route replies after it returns: a flow that writes the same
+ * table meanwhile makes the route re-run on fresh reads, so neither
+ * write is lost.
+ *
  * DELETE /reservas is the customer CAS A→X (O20) alone: the S3 seat
  * return stays with the flows.
  *
@@ -660,43 +665,49 @@ final class RestService(spark: SparkSession, store: TableStore,
       val row = Seq((id, nombre, int(js, "Capacidad"),
         str(js, "Categoria"), "A"))
         .toDF("id", "nombre", "capacidad", "categoria", "estado")
-      val target = store.load("eventos")
-      // O17 insert-if-absent on the unique name (eventos/main.go:75-78:
-      // duplicate insert → 400 "ya existente")
-      if (target.filter(col("nombre") === nombre).count() > 0)
-        reply(ex, 400, s"Evento $nombre ya existente")
-      else {
-        // typed as the live table, so append's retype check holds
-        store.appendUnique("eventos", row.select(target.schema.fields
-          .map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*),
-          Seq("nombre"))
-        // S1: the inventario clone makes the event reservable
-        store.appendUnique("inventario", MergeOps.inventarioClones(row),
-          Seq("nombre"))
-        replyJson(ex, 200, Json.obj("Id" -> id, "Nombre" -> nombre,
-          "Capacidad" -> int(js, "Capacidad"),
-          "Categoria" -> str(js, "Categoria"), "Estado" -> "A"))
+      val created = store.commit { c =>
+        val target = c.load("eventos")
+        // O17 insert-if-absent on the unique name (eventos/main.go:75-78:
+        // duplicate insert → 400 "ya existente")
+        val absent = target.filter(col("nombre") === nombre).count() == 0
+        if (absent) {
+          // typed as the live table, so append's retype check holds
+          c.appendUnique("eventos", row.select(target.schema.fields
+            .map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*),
+            Seq("nombre"))
+          // S1: the inventario clone makes the event reservable
+          c.appendUnique("inventario", MergeOps.inventarioClones(row),
+            Seq("nombre"))
+        }
+        absent
       }
+      if (!created) reply(ex, 400, s"Evento $nombre ya existente")
+      else replyJson(ex, 200, Json.obj("Id" -> id, "Nombre" -> nombre,
+        "Capacidad" -> int(js, "Capacidad"),
+        "Categoria" -> str(js, "Categoria"), "Estado" -> "A"))
     }
   }
 
   private def deleteEvento(ex: HttpExchange, nombre: String): Unit =
     lock.synchronized {
       import spark.implicits._
-      val target = store.load("eventos")
-      if (target.filter(col("nombre") === nombre).count() == 0)
-        reply(ex, 404, "Not Found")
-      else {
-        // S4: estado→C on the event and its inventario row (O18), and
-        // its active reservations cascade (O23)
-        val names = Seq(nombre).toDF("nombre")
-        store.replace("eventos", MergeOps.cancelEvents(target, names))
-        store.replace("inventario",
-          MergeOps.cancelEvents(store.load("inventario"), names))
-        store.replace("reservas",
-          MergeOps.cancelReservas(store.load("reservas"), names))
-        reply(ex, 200, s"Evento: $nombre cancelado")
+      val names = Seq(nombre).toDF("nombre")
+      val found = store.commit { c =>
+        val target = c.load("eventos")
+        val found = target.filter(col("nombre") === nombre).count() > 0
+        if (found) {
+          // S4: estado→C on the event and its inventario row (O18), and
+          // its active reservations cascade (O23)
+          c.replace("eventos", MergeOps.cancelEvents(target, names))
+          c.replace("inventario",
+            MergeOps.cancelEvents(c.load("inventario"), names))
+          c.replace("reservas",
+            MergeOps.cancelReservas(c.load("reservas"), names))
+        }
+        found
       }
+      if (!found) reply(ex, 404, "Not Found")
+      else reply(ex, 200, s"Evento: $nombre cancelado")
     }
 
   private def postReserva(ex: HttpExchange): Unit = body(ex) match {
@@ -708,29 +719,32 @@ final class RestService(spark: SparkSession, store: TableStore,
       else lock.synchronized {
         import spark.implicits._
         val id = idGen()
-        // O19 guarded decrement (reservas/main.go:152-166): the
-        // admission fold over a one-request batch, so the request's
-        // values are rows, not plan literals
-        val inv = store.load("inventario")
-        val (_, log) = MergeOps.admitReservations(inv,
-          Seq((id, evento, email, cant, 0L))
-            .toDF("id", "evento", "email", "cantidad", "seq"))
-        // the decision is the fold's one log row; the post-image is
-        // applied from that collected row, so the fold runs once
-        val rows = log.collect()
-        if (rows.head.getAs[String]("motivo") != null)
-          reply(ex, 404,
-            s"evento $evento no encontrado o sin capacidad en este momento")
-        else {
-          store.replace("inventario", MergeOps.applyAdmissions(inv,
-            spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-              log.schema)))
-          // the saga's settled end-state: the reservation row the
-          // async route lands via CDC (S2/S4)
-          store.append("reservas", Seq((id, evento, "A", email, cant))
-            .toDF("id", "evento", "estado", "email", "cantidad"))
-          replyJson(ex, 200, reservaJson(id, evento, "A", email, cant))
+        val admitted = store.commit { c =>
+          // O19 guarded decrement (reservas/main.go:152-166): the
+          // admission fold over a one-request batch, so the request's
+          // values are rows, not plan literals
+          val inv = c.load("inventario")
+          val (_, log) = MergeOps.admitReservations(inv,
+            Seq((id, evento, email, cant, 0L))
+              .toDF("id", "evento", "email", "cantidad", "seq"))
+          // the decision is the fold's one log row; the post-image is
+          // applied from that collected row, so the fold runs once
+          val rows = log.collect()
+          val admitted = rows.head.getAs[String]("motivo") == null
+          if (admitted) {
+            c.replace("inventario", MergeOps.applyAdmissions(inv,
+              spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+                log.schema)))
+            // the saga's settled end-state: the reservation row the
+            // async route lands via CDC (S2/S4)
+            c.append("reservas", Seq((id, evento, "A", email, cant))
+              .toDF("id", "evento", "estado", "email", "cantidad"))
+          }
+          admitted
         }
+        if (!admitted) reply(ex, 404,
+          s"evento $evento no encontrado o sin capacidad en este momento")
+        else replyJson(ex, 200, reservaJson(id, evento, "A", email, cant))
       }
   }
 
@@ -739,16 +753,19 @@ final class RestService(spark: SparkSession, store: TableStore,
       reply(ex, 400, "id incorrecta, el formato es /id/(12 bytes hex)")
     else lock.synchronized {
       import spark.implicits._
-      val target = store.load("reservas")
-      val hit = target.filter(col("id") === id && col("estado") === "A")
-        .collect().headOption
+      val hit = store.commit { c =>
+        val target = c.load("reservas")
+        val hit = target.filter(col("id") === id && col("estado") === "A")
+          .collect().headOption
+        // O20 CAS A→X (reservas/main.go:186-195)
+        if (hit.isDefined) c.replace("reservas",
+          MergeOps.customerCancel(target, Seq(id).toDF("id")))
+        hit
+      }
       hit match {
         case None =>
           reply(ex, 404, s"reserva Id $id no encontrada o ya cancelada")
         case Some(r) =>
-          // O20 CAS A→X (reservas/main.go:186-195)
-          store.replace("reservas",
-            MergeOps.customerCancel(target, Seq(id).toDF("id")))
           reply(ex, 200, s"reserva Id: $id Cliente: " +
             s"${r.getAs[String]("email")} Evento: " +
             s"${r.getAs[String]("evento")} cancelada")

@@ -41,8 +41,8 @@ private[graft] object StoredIndexes {
     * sequentially — submitting from a small pool lets the next write's
     * tasks back-fill executors freed by the current write's tail,
     * instead of every build paying its stages' straggler tails
-    * end-to-end). Safe here because TableStore serializes transitions
-    * per table and each step writes a DISTINCT table. Every step runs
+    * end-to-end). Safe here because each step writes a DISTINCT table,
+    * and store commits on distinct tables never conflict. Every step runs
     * to its end, failed or not — a sibling's write is never
     * interrupted mid-flight — and then the first failure in step order
     * is rethrown unwrapped: the all-or-nothing surface the sequential

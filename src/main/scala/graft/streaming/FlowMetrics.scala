@@ -20,7 +20,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, Qu
  * redelivered progress event (listener-bus replay, overlapping
  * attach/detach) cannot double-count a batch. Writes happen on the
  * listener-bus thread against a DIFFERENT table than any flow writes —
- * TableStore's per-table locks make that safe — and a listener failure
+ * each is its own store commit, which never conflicts with a flow's —
+ * and a listener failure
  * must never take down the flow it observes, so the write path
  * swallows (but counts) its own errors.
  */

@@ -17,21 +17,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * so echo messages are never generated; scenario tests assert
  * equivalent FINAL STATE, not equal message traffic (S6).
  *
- * Replay: Spark checkpointing replays a failed batch, and with a
- * persistent checkpoint `FlowRunner` skips a batch id the store's
- * commit log already holds. What a replay of an uncommitted batch
- * leaves is only as safe as each write: the key-deduplicated appends
- * (insert-if-absent on message id, the reference's duplicate-insert
- * tolerance, inventario/main.go:91-93, S5) absorb it, but a flow whose
- * batch writes two tables in two publishes re-applies a half-done
- * batch — admission decrements capacidad twice, cancellation loses the
- * returned seats, the consumer returns them twice (ROADMAP "Known
- * defects", owned by §4 and §11).
- *
- * Several writers replace the same table (inventario: admission,
- * cancellation, consumer, hold expiry and the REST tier); TableStore
- * serializes their publishes but does not detect a lost update between
- * one writer's read and its publish (ROADMAP "Known defects", §11).
+ * Every batch body runs as one store commit (`FlowRunner`): its
+ * tables and, with a persistent checkpoint, its batch id become
+ * visible together, and a body whose written table moved under it
+ * (inventario has several writers: admission, cancellation, consumer,
+ * hold expiry and the REST tier) re-runs on fresh reads. Bodies
+ * therefore read and write only through the commit handle `c`.
  *
  * In production the sources/sinks are Kafka
  * (`spark.readStream.format("kafka")`) and Delta MERGE; MemoryStream
@@ -43,23 +34,22 @@ final class Flows(spark: SparkSession, store: TableStore,
   import spark.implicits._
 
   // dead_letter is the one table WRITTEN BY SEVERAL flows (each appends
-  // its own rows). TableStore's per-table write lock already serializes
-  // concurrent creation/appends; seeding the (empty) table here is
-  // belt-and-braces that additionally keeps every runtime write on the
-  // cheap append path (no first-batch replace() of an empty table).
+  // its own rows; a commit that loses the race re-runs). Seeding the
+  // (empty) table here keeps every runtime write on the cheap append
+  // path (no first-batch replace() of an empty table).
   if (!store.exists("dead_letter"))
     store.init("dead_letter",
       Seq.empty[(String, String)].toDF("flow", "raw"))
 
   private def start(df: DataFrame, name: String)(
-      body: DataFrame => Unit): StreamingQuery =
+      body: (TableStore#Commit, DataFrame) => Unit): StreamingQuery =
     FlowRunner.start(store, checkpointRoot, trigger, df, name)(body)
 
   /** O25 deviation, wired: malformed CDC payloads (null id after
     * parsing) land verbatim in the `dead_letter` table instead of the
     * reference's no-ack poison-retry loop (inventario/main.go:70-79).
     * Returns the well-formed rows. Keyed on (flow, raw) so a
-    * crash-replayed batch cannot double-append.
+    * redelivered payload cannot double-append.
     *
     * Callers must pass `parsed` PERSISTED: the bad-row anti-join here
     * and every downstream consumer of the good rows re-scan it, and an
@@ -69,10 +59,11 @@ final class Flows(spark: SparkSession, store: TableStore,
     * persists itself, so the parse lineage is evaluated exactly once
     * per batch (first clean batch creates an empty dead_letter table,
     * a one-time no-op write). */
-  private def routeDeadLetters(flow: String, parsed: DataFrame): DataFrame = {
+  private def routeDeadLetters(c: TableStore#Commit, flow: String,
+      parsed: DataFrame): DataFrame = {
     val bad = CdcCodec.deadLetter(parsed)
       .select(lit(flow).as("flow"), col("raw"))
-    store.appendUnique("dead_letter", bad, Seq("flow", "raw"))
+    c.appendUnique("dead_letter", bad, Seq("flow", "raw"))
     parsed.filter(col("id").isNotNull)
   }
 
@@ -83,20 +74,20 @@ final class Flows(spark: SparkSession, store: TableStore,
   // kafka-mongodb-connect.yaml:22-33).
   // -------------------------------------------------------------------
   def eventCreationFlow(rawEventos: DataFrame): StreamingQuery =
-    start(rawEventos, "event_creation") { batch =>
+    start(rawEventos, "event_creation") { (c, batch) =>
       // parse once: the parsed frame feeds the dead-letter probe and
       // two appendUnique sinks — unpersisted it would re-run from_json
       // over the batch per action
       val parsed0 = CdcCodec.parseEvento(batch).persist()
-      val parsed = routeDeadLetters("event_creation", parsed0)
-      val evCols = store.load("eventos").columns
+      val parsed = routeDeadLetters(c, "event_creation", parsed0)
+      val evCols = c.load("eventos").columns
       // O17: unique-key insert; duplicate nombre rejected (first wins).
       // Insert-only tables take the log-structured append path: only
       // the fresh rows are written, never the whole snapshot.
-      store.appendUnique("eventos",
+      c.appendUnique("eventos",
         parsed.select(evCols.map(col).toIndexedSeq: _*), Seq("nombre"),
         tieBreak = Seq(col("id")))
-      store.appendUnique("inventario", MergeOps.inventarioClones(parsed),
+      c.appendUnique("inventario", MergeOps.inventarioClones(parsed),
         Seq("nombre"), tieBreak = Seq(col("id")))
       parsed0.unpersist()
       ()
@@ -109,18 +100,9 @@ final class Flows(spark: SparkSession, store: TableStore,
   // fold reads inventario afresh every trigger, so what the other
   // writers of the table (the REST tier, the seat-return flows, hold
   // expiry) changed between triggers is what it admits against.
-  //
-  // CRASH WINDOW (open): the cross-batch dedup below reads `reservas`,
-  // which is written AFTER the inventario replace. A crash between the
-  // two replays the batch (FlowRunner commits after the body), its
-  // requests are not in reservas yet, so the anti-join keeps them and
-  // the fold decrements capacidad a SECOND time while reservas gains
-  // each row once: B2 (capacidad + active seats = original capacity)
-  // breaks by the crashed batch's admitted seats. ROADMAP §4 puts this
-  // flow on the crash-point matrix.
   // -------------------------------------------------------------------
   def admissionFlow(requests: DataFrame): StreamingQuery =
-    start(requests, "admission") { rawBatch0 =>
+    start(requests, "admission") { (c, rawBatch0) =>
       // the source batch feeds two branches (invalid-routing and the
       // fold pipeline); persist so the stream source is scanned once
       val rawBatch = rawBatch0.persist()
@@ -142,28 +124,28 @@ final class Flows(spark: SparkSession, store: TableStore,
         .select(col("id"), col("__r.evento").as("evento"),
           col("__r.email").as("email"), col("__r.cantidad").as("cantidad"),
           col("__r.seq").as("seq"))
-        .join(store.load("reservas").select(col("id")),
+        .join(c.load("reservas").select(col("id")),
           Seq("id"), "left_anti")
       val (updatedInv, log0) =
-        MergeOps.admitReservations(store.load("inventario"), batch)
+        MergeOps.admitReservations(c.load("inventario"), batch)
       // the admission log feeds three sinks (the inventario post-image,
       // reservas insert, rejections); without caching, the cogroup fold
       // re-executes per sink — measured 5.8k → 50k req/s on a
       // 600k-request batch
       val log = log0.persist()
-      store.replace("inventario", updatedInv)
+      c.replace("inventario", updatedInv)
       // O22: idempotent reservation registration — reservas only ever
       // GROWS on this path, so it appends a delta segment (O(admitted)
       // write) instead of rewriting the registry (O(history))
       val newRows = log.filter(col("admitted")).select(col("id"),
         col("evento"), lit("A").as("estado"), col("email"), col("cantidad"))
-      store.appendUnique("reservas", newRows, Seq("id"))
+      c.appendUnique("reservas", newRows, Seq("id"))
       // rejections, one write: the O16 faults and the fold's refusals
       // (sold out / closed event / unknown event — the observable outcome
       // of the 404 path, reservas/main.go:166-173); their motivos differ
       def refused(df: DataFrame, motivo: String) = df.select(col("id"),
         col("evento"), col("email"), col("cantidad"), col(motivo).as("motivo"))
-      store.appendUnique("rechazos",
+      c.appendUnique("rechazos",
         refused(validated.filter(col("__invalid").isNotNull), "__invalid")
           .unionByName(refused(log.filter(!col("admitted")), "motivo")),
         Seq("id", "motivo"))
@@ -177,17 +159,17 @@ final class Flows(spark: SparkSession, store: TableStore,
   // (evento, cantidad) is read under the same guard the CAS uses.
   // -------------------------------------------------------------------
   def cancellationFlow(cancelIds: DataFrame): StreamingQuery =
-    start(cancelIds, "cancellation") { batch =>
-      val res = store.load("reservas")
+    start(cancelIds, "cancellation") { (c, batch) =>
+      val res = c.load("reservas")
       // pre-image of rows the CAS will transition (estado='A' guard)
       val pre = res.join(batch.select(col("id").as("__cid")),
         col("id") === col("__cid"), "left_semi")
         .filter(col("estado") === "A")
         .select(col("id"), col("evento"), col("email"), col("cantidad"))
       // O20: guarded state transition
-      store.replace("reservas", MergeOps.customerCancel(res, batch))
+      c.replace("reservas", MergeOps.customerCancel(res, batch))
       // O21: seat return; not-found (event already cancelled) tolerated
-      val updatedInv = MergeOps.returnSeats(store.load("inventario"), pre)
+      val updatedInv = MergeOps.returnSeats(c.load("inventario"), pre)
       // canres=-1 parity with the reference's sentinel document state
       val sentinel = pre.select(col("evento").as("__e"),
         col("id").as("__idres"), col("email").as("__email"))
@@ -197,7 +179,7 @@ final class Flows(spark: SparkSession, store: TableStore,
         sets = Map("idres" -> col("__b___idres"), "email" -> col("__b___email"),
           "canres" -> lit(-1)),
         batchCols = Seq("__idres", "__email"))
-      store.replace("inventario", widened)
+      c.replace("inventario", widened)
     }
 
   // -------------------------------------------------------------------
@@ -206,11 +188,11 @@ final class Flows(spark: SparkSession, store: TableStore,
   // as history (O23, inventario/main.go:99-103).
   // -------------------------------------------------------------------
   def organizerCancelFlow(cancelNames: DataFrame): StreamingQuery =
-    start(cancelNames, "organizer_cancel") { batch =>
+    start(cancelNames, "organizer_cancel") { (c, batch) =>
       Seq("eventos", "inventario").foreach(t =>
-        store.replace(t, MergeOps.cancelEvents(store.load(t), batch)))
-      store.replace("reservas",
-        MergeOps.cancelReservas(store.load("reservas"), batch))
+        c.replace(t, MergeOps.cancelEvents(c.load(t), batch)))
+      c.replace("reservas",
+        MergeOps.cancelReservas(c.load("reservas"), batch))
     }
 
   // -------------------------------------------------------------------
@@ -224,7 +206,7 @@ final class Flows(spark: SparkSession, store: TableStore,
   // Input frame: (topic, value) — KafkaIO.readTopics shape.
   // -------------------------------------------------------------------
   def consumerFlow(messages: DataFrame): StreamingQuery =
-    start(messages, "consumer") { batch0 =>
+    start(messages, "consumer") { (c, batch0) =>
       // the source batch is scanned by both topic branches — persist so
       // the stream source reads once; each branch's PARSED frame is
       // persisted BEFORE routeDeadLetters (its dead-letter anti-join is
@@ -238,7 +220,7 @@ final class Flows(spark: SparkSession, store: TableStore,
       // invMsgs feeds two branches (register, cascade probe+apply) and
       // the dead-letter anti-join runs off invParsed inside
       // routeDeadLetters — all narrow filters over the cached parse
-      val invMsgs = routeDeadLetters("consumer", invParsed)
+      val invMsgs = routeDeadLetters(c, "consumer", invParsed)
         .withColumn("clase",
           CdcCodec.classifyInventario(col("canres"), col("estado")))
       // O22: admitted-reservation messages → register (DetReserva
@@ -246,36 +228,36 @@ final class Flows(spark: SparkSession, store: TableStore,
       val newReservas = invMsgs.filter(col("clase") === "insert_reservation")
         .select(col("idres").as("id"), col("nombre").as("evento"),
           lit("A").as("estado"), col("email"), col("canres").as("cantidad"))
-      store.appendUnique("reservas", newReservas, Seq("id"))
+      c.appendUnique("reservas", newReservas, Seq("id"))
       // O23: organizer-cancel messages → cascade (estado C propagates)
       val cancelled = invMsgs.filter(col("clase") === "cascade_cancel")
         .select(col("nombre"))
       if (!cancelled.isEmpty) {
-        store.replace("reservas",
-          MergeOps.cancelReservas(store.load("reservas"), cancelled))
-        store.replace("inventario",
-          MergeOps.cancelEvents(store.load("inventario"), cancelled))
+        c.replace("reservas",
+          MergeOps.cancelReservas(c.load("reservas"), cancelled))
+        c.replace("inventario",
+          MergeOps.cancelEvents(c.load("inventario"), cancelled))
       }
       // O21: customer-cancel messages (estado='X') → seat return;
       // creation echoes (estado='A') dropped (inventario/main.go:111-113).
       // A reservation is returnable at most ONCE: dedupe within the
       // batch and against the processed-returns table, else a
       // redelivered X message (at-least-once) would inflate capacity.
-      if (!store.exists("devoluciones"))
-        store.init("devoluciones", Seq.empty[String].toDF("id"))
+      if (!c.exists("devoluciones"))
+        c.replace("devoluciones", Seq.empty[String].toDF("id"))
       val resParsed = CdcCodec.parseReserva(
         src.filter(col("topic") === "boletia.reservas").select(col("value")))
         .persist()
-      val returns = routeDeadLetters("consumer", resParsed)
+      val returns = routeDeadLetters(c, "consumer", resParsed)
         .filter(col("estado") === "X")
         .dropDuplicates("id")
-        .join(store.load("devoluciones"), Seq("id"), "left_anti")
+        .join(c.load("devoluciones"), Seq("id"), "left_anti")
         .select(col("id"), col("evento"), col("cantidad"))
         .persist()
       if (!returns.isEmpty) {
-        store.replace("inventario",
-          MergeOps.returnSeats(store.load("inventario"), returns))
-        store.appendUnique("devoluciones", returns.select(col("id")), Seq("id"))
+        c.replace("inventario",
+          MergeOps.returnSeats(c.load("inventario"), returns))
+        c.appendUnique("devoluciones", returns.select(col("id")), Seq("id"))
       }
       returns.unpersist()
       resParsed.unpersist()
@@ -291,9 +273,9 @@ final class Flows(spark: SparkSession, store: TableStore,
   // SES — here they land in a `notificaciones` table.
   // -------------------------------------------------------------------
   def notificationFlow(rawReservas: DataFrame): StreamingQuery =
-    start(rawReservas, "notifications") { batch =>
+    start(rawReservas, "notifications") { (c, batch) =>
       val parsed0 = CdcCodec.parseReserva(batch).persist()
-      val parsed = routeDeadLetters("notifications", parsed0)
+      val parsed = routeDeadLetters(c, "notifications", parsed0)
       val formatted = parsed.select(
         col("id"), col("email"),
         when(col("estado") === "A", "Confirmación de reserva")
@@ -305,10 +287,10 @@ final class Flows(spark: SparkSession, store: TableStore,
             .when(col("estado") === "C",
               lit(" fue cancelada, el evento fue suspendido por los organizadores"))
             .otherwise(lit(" fue cancelada a petición suya"))).as("body"))
-      // appendUnique keyed on (id, body): crash-replay of a batch must
+      // appendUnique keyed on (id, body): a redelivered post-image must
       // not double-send; the same reservation legitimately produces
       // different bodies over its lifecycle (A then X)
-      store.appendUnique("notificaciones", formatted, Seq("id", "body"))
+      c.appendUnique("notificaciones", formatted, Seq("id", "body"))
       parsed0.unpersist()
       ()
     }

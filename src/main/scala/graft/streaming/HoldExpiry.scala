@@ -39,9 +39,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
  *    ts alone would keep nondeterministic arrival order);
  *  - unknown kinds are DROPPED, never treated as settles (a typo'd
  *    kind must not silently clear a live hold);
- *  - the downstream seat return applies the inventario effect BEFORE
- *    recording the dedup key (consumerFlow's order): a crash between
- *    the two replays at-least-once rather than losing the return.
+ *  - the downstream seat return and its `expired_holds` record land in
+ *    one store commit, so a batch is applied whole or not at all.
  */
 object HoldExpiry {
 
@@ -144,28 +143,10 @@ object HoldExpiry {
   }
 
   /** Operational flow: expiries return their seats to `inventario`
-    * and append once into `expired_holds`. Ordering follows
-    * consumerFlow (Flows.scala seat returns): dedup against the
-    * record table FIRST, apply the inventario effect, THEN record —
-    * a crash between effect and record replays at-least-once (the
-    * reference's tolerated semantics) instead of recording first and
-    * silently LOSING the return on replay.
-    *
-    * REPLAY BOUND (explicit, because the failure consequence differs
-    * from consumerFlow's): a crash BETWEEN the inventario replace and
-    * the expired_holds append replays the batch, whose ids were never
-    * recorded, so their seat returns apply a SECOND time — and
-    * admitReservations' negative-cantidad path increments capacidad
-    * unconditionally (it cannot clamp: inventario keeps only the
-    * REMAINING count, the original capacity lives upstream in the
-    * eventos source). Worst case is therefore one extra cantidad per
-    * expired hold in the crashed batch — transient phantom capacity
-    * that oversells at most that many seats until reconciliation, the
-    * mirror image of record-first's permanently LOST returns. The
-    * reference makes the same trade (consumer effect before offset
-    * commit); a deployment needing the clamp feeds the eventos
-    * capacity table into a post-merge `least(capacidad, original)`
-    * reconciliation view. The increment itself is
+    * and append once into `expired_holds`, both in the batch's one
+    * commit: a crashed batch leaves neither, and its replay returns
+    * the seats once. The anti-join against `expired_holds` drops ids
+    * already recorded. The increment itself is
     * [[graft.tables.MergeOps.returnSeats]], exactly like consumerFlow's
     * devoluciones — no bespoke inventario merge, and unknown eventos
     * are tolerated the same way. */
@@ -177,20 +158,20 @@ object HoldExpiry {
       tombstoneWindowMs: Long = 24L * 3600 * 1000): StreamingQuery =
     FlowRunner.start(store, checkpointRoot, trigger,
       expiries(events, timeoutMs, watermarkDelay, tombstoneWindowMs).toDF(),
-      "hold_expiry") { batch =>
+      "hold_expiry") { (c, batch) =>
         val fresh =
-          (if (store.exists("expired_holds"))
-            batch.join(store.load("expired_holds").select("id"),
+          (if (c.exists("expired_holds"))
+            batch.join(c.load("expired_holds").select("id"),
               Seq("id"), "left_anti")
           else batch).persist()
         try {
           if (!fresh.isEmpty) {
-            store.replace("inventario",
-              MergeOps.returnSeats(store.load("inventario"), fresh))
+            c.replace("inventario",
+              MergeOps.returnSeats(c.load("inventario"), fresh))
             // fresh is already deduped against the table and a timer
             // fires once per key, so a plain append suffices —
             // appendUnique would re-run the identical anti-join
-            store.append("expired_holds", fresh)
+            c.append("expired_holds", fresh)
           }
         } finally { fresh.unpersist(); () }
     }

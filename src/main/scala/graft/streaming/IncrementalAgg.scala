@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  *
  * Exactly-once: the additive fold is NOT naturally idempotent (a
  * replayed batch would double-count), so this flow REQUIRES the
- * TableStore batch-commit-log guard — i.e. a persistent
+ * store's batch-id skip (`FlowRunner`) — i.e. a persistent
  * `checkpointRoot` — and refuses to start without one. (The reference
  * gets the same effect from consumer-group offsets plus
  * duplicate-tolerant upserts, inventario/main.go:91-93; an additive
@@ -69,14 +69,14 @@ final class AggFlows(spark: SparkSession, store: TableStore,
 
   require(checkpointRoot.isDefined,
     "incremental aggregates double-count on replay without the " +
-      "batch-commit-log guard — pass a persistent checkpointRoot")
+      "batch-id skip — pass a persistent checkpointRoot")
 
   /** Maintain view `event_stats(event_type, n, total_cents)` from an
     * events stream. Money kept in integer cents so the fold is exact
     * under any association order. */
   def eventTypeStatsFlow(events: DataFrame): StreamingQuery =
     FlowRunner.start(store, checkpointRoot, trigger, events,
-      "event_stats") { batch =>
+      "event_stats") { (_, batch) =>
       val delta = batch
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),

@@ -139,7 +139,7 @@ final class IngestionFlows(spark: SparkSession, store: TableStore,
 
   private def start(df: DataFrame, name: String)(
       body: DataFrame => Unit): StreamingQuery =
-    FlowRunner.start(store, checkpointRoot, trigger, df, name)(body)
+    FlowRunner.start(store, checkpointRoot, trigger, df, name)((_, b) => body(b))
 
   /** New documents → quality gate → corpus + incrementally maintained
     * dedup decisions + per-doc admit/drop log. Input schema: (doc_id

@@ -139,7 +139,7 @@ object PackingFlow {
       trigger: Trigger = Trigger.AvailableNow(),
       horizonTokens: Long = 1L << 20): StreamingQuery =
     FlowRunner.start(store, checkpointRoot, trigger,
-      spans(docs, w, horizonTokens).toDF(), "packing") { batch =>
+      spans(docs, w, horizonTokens).toDF(), "packing") { (_, batch) =>
         store.appendUnique("packing_manifest", batch,
           Seq("doc_id", "window_id"))
       }

@@ -1,6 +1,5 @@
 package graft.tables
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -27,10 +26,11 @@ import org.apache.spark.sql.functions._
  * probes the base tables with a semi-join on K (pushed-down IN at the
  * gate's key counts; at corpus scale the same shape rides a broadcast
  * semi-join — K is bounded by the CHANGE volume either way, never by
- * table size). Version cursors ride the store's batch commit log, so
- * a crash between publish and cursor-commit replays idempotently
- * (the rederive is a fixed point). A cursor aged past the vacuum
- * horizon falls back to one full rebuild, like [[TableStore.syncTo]].
+ * table size). The view and its two version cursors (the base
+ * versions it was derived from, kept as batch ids in the store
+ * pointer) land in one store commit, so a failed sync leaves all three
+ * where they were. A cursor aged past the vacuum horizon falls back
+ * to one full rebuild, like [[TableStore.syncTo]].
  */
 object JoinView {
 
@@ -43,77 +43,78 @@ object JoinView {
     * `aKey`/`bKey` are the UNIQUE keys of the base tables (the CDC
     * precondition); `joinKey` must be a column set present in both.
     * Returns the number of join keys rederived (−1 for a full
-    * (re)build). Call serially per view, like every store writer. */
+    * (re)build). */
   def sync(store: TableStore, view: String, a: String, b: String,
-      joinKey: Seq[String], aKey: Seq[String], bKey: Seq[String]): Long = {
-    val (fa, fb) = (s"_jview_${view}__a", s"_jview_${view}__b")
-    val (av, bv) = (store.version(a), store.version(b))
-    require(av >= 0 && bv >= 0, s"base table missing for view $view")
-    def joined(ka: DataFrame, kb: DataFrame): DataFrame =
-      ka.join(kb, joinKey)
+      joinKey: Seq[String], aKey: Seq[String], bKey: Seq[String]): Long =
+    store.commit { c =>
+      val (fa, fb) = (s"_jview_${view}__a", s"_jview_${view}__b")
+      val (av, bv) = (c.version(a), c.version(b))
+      require(av >= 0 && bv >= 0, s"base table missing for view $view")
+      val (la, lb) =
+        (store.lastCommitted(fa).toInt, store.lastCommitted(fb).toInt)
 
-    def rebuild(): Long = {
-      store.replace(view, joined(store.load(a), store.load(b)))
-      store.commitBatch(fa, av); store.commitBatch(fb, bv)
-      -1L
-    }
-
-    val (la, lb) = (store.lastCommitted(fa).toInt, store.lastCommitted(fb).toInt)
-    if (!store.exists(view) || la < 0 || lb < 0) return rebuild()
-    if (la == av && lb == bv) return 0L
-    // cursor older than the vacuum horizon → full rebuild
-    if (!versionReadable(store, a, la) || !versionReadable(store, b, lb))
-      return rebuild()
-
-    val changed =
-      (if (la < av) store.changesBetween(a, la, av, aKey)
-        .select(joinKey.map(col): _*)
-      else store.load(a).limit(0).select(joinKey.map(col): _*))
-        .unionByName(
-          if (lb < bv) store.changesBetween(b, lb, bv, bKey)
+      // the view rows of the join keys that changed since the cursors;
+      // the number of keys, or −1 when the change is too wide (or its
+      // keys defy literals) and the view is rebuilt instead
+      def rederive(): Long = {
+        val changed =
+          (if (la < av) store.changesBetween(a, la, av, aKey)
             .select(joinKey.map(col): _*)
-          else store.load(b).limit(0).select(joinKey.map(col): _*))
-        .distinct()
-    val keys = changed.limit(MaxInlineKeys + 1).collect()
-    if (keys.length > MaxInlineKeys) return rebuild()
-    if (keys.isEmpty) {
-      store.commitBatch(fa, av); store.commitBatch(fb, bv)
-      return 0L
+          else c.load(a).limit(0).select(joinKey.map(col): _*))
+            .unionByName(
+              if (lb < bv) store.changesBetween(b, lb, bv, bKey)
+                .select(joinKey.map(col): _*)
+              else c.load(b).limit(0).select(joinKey.map(col): _*))
+            .distinct()
+        val keys = changed.limit(MaxInlineKeys + 1).collect()
+        if (keys.length > MaxInlineKeys) -1L
+        else if (keys.isEmpty) 0L
+        else {
+          // key ∈ K as a pushed-down predicate (single-column IN, or an
+          // IN over struct tuples for composite keys). Literals are
+          // built with Literal.create against the changed-key SCHEMA
+          // types, not lit(): lit() infers from the runtime value, so a
+          // null key field became NullType (leaning on IN-coercion to
+          // widen it) and an array/struct-typed key threw outright. If
+          // a key value still defies literal construction, fall back to
+          // the rebuild escape hatch rather than failing the sync.
+          val hit: Option[org.apache.spark.sql.Column] =
+            try {
+              val types = changed.schema.fields.map(_.dataType)
+              def keyLit(v: Any, i: Int) = org.apache.spark.sql.graft.Bridge
+                .column(org.apache.spark.sql.catalyst.expressions.Literal
+                  .create(v, types(i)))
+              Some(
+                if (joinKey.length == 1)
+                  col(joinKey.head).isin(
+                    keys.map(r => keyLit(r.get(0), 0)).toIndexedSeq: _*)
+                else
+                  struct(joinKey.map(col): _*).isin(keys.map(r => struct(
+                    joinKey.indices.map(i => keyLit(r.get(i), i)): _*))
+                    .toIndexedSeq: _*))
+            } catch { case scala.util.control.NonFatal(_) => None }
+          hit.fold(-1L) { h =>
+            c.deleteWhere(view, h)
+            // restricting ONE side to K suffices for an inner join:
+            // every result row's key comes from both sides, so the
+            // a-side filter already bounds the slice to K
+            c.append(view, c.load(a).filter(h).join(c.load(b), joinKey))
+            keys.length.toLong
+          }
+        }
+      }
+
+      val synced = c.exists(view) && la >= 0 && lb >= 0
+      if (synced && la == av && lb == bv) 0L
+      else {
+        // a cursor older than the vacuum horizon → full rebuild
+        val n =
+          if (synced && store.versionExists(a, la) &&
+              store.versionExists(b, lb)) rederive()
+          else -1L
+        if (n < 0L) c.replace(view, c.load(a).join(c.load(b), joinKey))
+        c.markBatch(fa, av); c.markBatch(fb, bv)
+        n
+      }
     }
-
-    // key ∈ K as a pushed-down predicate (single-column IN, or an
-    // IN over struct tuples for composite keys). Literals are built
-    // with Literal.create against the changed-key SCHEMA types, not
-    // lit(): lit() infers from the runtime value, so a null key field
-    // became NullType (leaning on IN-coercion to widen it) and an
-    // array/struct-typed key threw outright. If a key value still
-    // defies literal construction, fall back to the rebuild escape
-    // hatch rather than failing the sync.
-    val hit: Option[org.apache.spark.sql.Column] =
-      try {
-        val types = changed.schema.fields.map(_.dataType)
-        def keyLit(v: Any, i: Int) = org.apache.spark.sql.graft.Bridge
-          .column(org.apache.spark.sql.catalyst.expressions.Literal
-            .create(v, types(i)))
-        Some(
-          if (joinKey.length == 1)
-            col(joinKey.head).isin(
-              keys.map(r => keyLit(r.get(0), 0)).toIndexedSeq: _*)
-          else
-            struct(joinKey.map(col): _*).isin(keys.map(r => struct(
-              joinKey.indices.map(i => keyLit(r.get(i), i)): _*))
-              .toIndexedSeq: _*))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    if (hit.isEmpty) return rebuild()
-    store.deleteWhere(view, hit.get)
-    // restricting ONE side to K suffices for an inner join: every
-    // result row's key comes from both sides, so the a-side filter
-    // already bounds the slice to K
-    store.append(view, joined(store.load(a).filter(hit.get), store.load(b)))
-    store.commitBatch(fa, av); store.commitBatch(fb, bv)
-    keys.length.toLong
-  }
-
-  private def versionReadable(store: TableStore, name: String,
-      v: Int): Boolean = store.versionExists(name, v)
 }

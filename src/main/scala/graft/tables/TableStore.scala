@@ -1,8 +1,12 @@
 package graft.tables
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException,
+  Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.ConcurrentHashMap
+import scala.collection.mutable
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions.{col, lit}
@@ -14,11 +18,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * only, never delete — README.md:47) with the snapshot semantics flows
  * need.
  *
- * Layout: every version N has a manifest file `root/<table>/m<N>`
- * listing the data segment dirs (`d<K>/`) that compose the snapshot
- * (its format: [[TableStore.Manifest]]), plus a `_current` pointer
- * file naming the live version. `load` binds a DataFrame to the
- * segment list current AT CALL TIME.
+ * Layout: one store pointer, the file `root/_pointer`
+ * ([[TableStore.Pointer]]), names every table's live version and every
+ * flow's last committed batch id. Every version N of a table has a
+ * manifest file `root/<table>/m<N>` listing the data segment dirs
+ * (`d<K>/`) that compose the snapshot (its format:
+ * [[TableStore.Manifest]]). `load` binds a DataFrame to the segment
+ * list current AT CALL TIME.
  *
  * Writes are O(change), not O(table): `replace` materializes a full
  * new segment (mutating merges need it), but `append`/`appendUnique`
@@ -36,17 +42,42 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * horizon of versions while keeping everything a reader inside the
  * horizon can still reference.
  *
- * Writer contract: every version transition of a table serializes on
- * a per-table JVM-local lock (every foreachBatch sink runs on the one
- * driver that owns this store instance), so each publish is atomic and
- * concurrent appends to a shared sink (dead_letter) lose no segment.
- * Nothing checks which version a `replace`d frame was read from: a
- * writer that loads version v and publishes after another writer has
- * published v + 1 erases that write. `inventario` has five such
- * writers (the admission, cancellation and consumer flows, hold
- * expiry and the REST tier), so a write inside another's
- * read-to-publish window is lost (ROADMAP "Known defects", §11).
- * Readers are unrestricted.
+ * The commit contract — every write is a [[commit]], and the store
+ * has no other publish path:
+ *
+ *  - A commit pins the version of each table it reads or writes the
+ *    first time it touches it, and reads that version for the rest of
+ *    its body. Its writes stage segments under fresh directory names
+ *    (`d<N>`, `d<N>-<k>` when another writer holds the name), where N
+ *    is the pinned version + 1; a later read in the same body sees
+ *    them.
+ *  - When the body returns, the commit writes each written table's
+ *    manifest `m<N>` and replaces the pointer in one atomic move,
+ *    with the batch ids the body marked ([[Commit.markBatch]]). A
+ *    reader sees all of the commit's tables and batch ids, or none.
+ *    A commit that fails or throws before the move leaves no table
+ *    and no batch id visible, and deletes what it staged.
+ *  - First committer wins on the tables a commit WRITES: if one of
+ *    them has moved since the commit pinned it, the commit discards
+ *    its staging and re-runs its body once on fresh reads, this time
+ *    holding the root lock from its first read to its flip. No other
+ *    commit on the root can flip in between, so the re-run cannot
+ *    lose again, and a long body cannot starve behind a stream of
+ *    short ones; while it runs, the other commits wait at their flip.
+ *    A re-run that still conflicts (another process writing the
+ *    root, or a body that commits its own table outside its handle)
+ *    fails loudly. Tables a commit only reads are not checked: two
+ *    commits that each read the other's written table can both
+ *    succeed (write skew).
+ *  - The pointer moves under one JVM-wide lock per store root, so two
+ *    `TableStore` instances on one root never clobber each other.
+ *
+ * The single-table ops (`replace`, `append`, `appendUnique`, `upsert`,
+ * `compact`, `deleteWhere`) are one-op commits. A writer that builds
+ * a frame from `load` and then calls one of them is not checked
+ * against what it loaded; a read-modify-write that must not lose a
+ * concurrent write runs in one [[commit]] and reads through its
+ * handle. Readers are unrestricted.
  */
 /** @param autoVacuumKeep every version transition GCs manifests (and
   *   their now-unreferenced segments) more than this many versions
@@ -58,33 +89,35 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   available for explicit, tighter GC. */
 final class TableStore(spark: SparkSession, root: String,
     autoVacuumKeep: Int = 16) {
-  import TableStore.Manifest
+  import TableStore.{Manifest, Pointer}
   Files.createDirectories(Paths.get(root))
 
   private val CompactThreshold = 16
 
-  // Per-table write lock: two concurrent appends that both read version
-  // v and both publish v+1 would lose one segment, so all version
-  // transitions of a table serialize here (see the writer contract).
-  private val writeLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def writeLock(name: String): Object =
-    writeLocks.computeIfAbsent(name, _ => new Object)
+  private val rootPath = Paths.get(root).toRealPath()
+  private val pointerPath = rootPath.resolve("_pointer")
+  // every commit's flip and abort, a losing commit's re-run and every
+  // vacuum of this root, JVM-wide
+  private val rootLock = TableStore.lockFor(rootPath)
 
-  private def tdir(name: String): Path = Paths.get(root, name)
-  private def pointer(name: String): Path = tdir(name).resolve("_current")
+  private def tdir(name: String): Path = rootPath.resolve(name)
 
   private def manifestPath(name: String, v: Int): Path =
     tdir(name).resolve(s"m$v")
 
   private def readManifest(p: Path): Manifest =
-    Manifest.parse(new String(Files.readAllBytes(p)), p.toString)
+    Manifest.parse(new String(Files.readAllBytes(p), UTF_8), p.toString)
 
   private def manifest(name: String, v: Int): Manifest =
     readManifest(manifestPath(name, v))
 
+  private def pointer(): Pointer =
+    try Pointer.parse(new String(Files.readAllBytes(pointerPath), UTF_8),
+      pointerPath.toString)
+    catch { case _: NoSuchFileException => Pointer(Map.empty, Map.empty) }
+
   /** Version `v`'s manifest path, or the pointed error of a version
-    * that was never published or has been vacuumed. */
+    * that was never committed or has been vacuumed. */
   private def requireReadable(name: String, v: Int): Path = {
     require(versionExists(name, v), s"table $name has no readable " +
       s"version $v (current ${version(name)}; older versions " +
@@ -102,46 +135,24 @@ final class TableStore(spark: SparkSession, root: String,
     if (v < 0) Nil else manifest(name, v).partitionBy
   }
 
-  /** Atomically flip the table to version `next` = `m`. The segment
-    * data is fully materialized BEFORE the pointer flips; concurrent
-    * readers see old-or-new, never partial. */
-  private def publish(name: String, next: Int, m: Manifest): Unit = {
-    Files.write(manifestPath(name, next), m.render.getBytes)
-    val tmp = tdir(name).resolve("_current_tmp")
-    Files.write(tmp, next.toString.getBytes)
-    Files.move(tmp, pointer(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    handles.remove(name)
-    // always-on retention GC (callers hold the write lock; vacuum's
-    // synchronized re-enters). Only fires once the horizon is behind
-    // us, so young tables pay nothing.
-    if (autoVacuumKeep > 0 && next >= autoVacuumKeep)
-      vacuum(name, autoVacuumKeep)
-  }
-
-  private def writeSegment(name: String, seg: String, df: DataFrame,
-      partitionBy: Seq[String] = Nil): String = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tdir(name).resolve(seg).toString)
-    seg
-  }
-
   /** The schema segment `seg`, written from `df`, reads back under: a
     * flat frame's schema made nullable (no job), else its data columns
     * then its partition columns typed as hive inference reads them from
     * the segment's directory names (a listing, no footer read; a
-    * zero-row write has no directories and keeps the frame's types). */
+    * zero-row write has no directories and keeps the frame's types).
+    * For a partitioned segment also the listed frame, when it reads
+    * under exactly that schema: the commit seeds the new version's
+    * snapshot handle with it, so the first `load` lists nothing. */
   private def segmentSchema(name: String, seg: String, df: DataFrame,
-      partitionBy: Seq[String]): StructType = {
+      partitionBy: Seq[String]): (StructType, Option[DataFrame]) = {
     val flat = Bridge.nullable(df.schema)
-    if (partitionBy.isEmpty) flat
+    if (partitionBy.isEmpty) (flat, None)
     else {
       val data = StructType(flat.filterNot(f => partitionBy.contains(f.name)))
-      val read = spark.read.schema(data)
-        .parquet(tdir(name).resolve(seg).toString).schema
-      StructType(data ++ partitionBy.map(p =>
-        read.find(_.name == p).getOrElse(flat(p))))
+      val read = spark.read.schema(data).parquet(tdir(name).resolve(seg).toString)
+      val schema = StructType(data ++ partitionBy.map(p =>
+        read.schema.find(_.name == p).getOrElse(flat(p))))
+      (schema, Option.when(read.schema == schema)(read))
     }
   }
 
@@ -149,16 +160,15 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** The table's live version number (−1 if the table is absent) —
     * the handle time travel and CDC take. */
-  def version(name: String): Int =
-    if (Files.exists(pointer(name)))
-      new String(Files.readAllBytes(pointer(name))).trim.toInt
-    else -1
+  def version(name: String): Int = pointer().tables.getOrElse(name, -1)
 
-  /** True iff version `v` of `name` is still readable (its manifest
-    * has not been vacuumed) — the probe incremental consumers use to
-    * decide between a delta read and a full resync. */
+  /** True iff version `v` of `name` is committed and still readable
+    * (at most the live version, its manifest not vacuumed) — the probe
+    * incremental consumers use to decide between a delta read and a
+    * full resync. A manifest above the live version is a commit that
+    * never flipped, not a version. */
   def versionExists(name: String, v: Int): Boolean =
-    v >= 0 && Files.exists(manifestPath(name, v))
+    v >= 0 && v <= version(name) && Files.exists(manifestPath(name, v))
 
   /** Snapshot read: bound to the segment list current at call time.
     * Partitioned tables with several delta segments read one scan per
@@ -313,46 +323,182 @@ final class TableStore(spark: SparkSession, root: String,
     }
   }
 
+  // -- the single-table ops: each is a one-op commit ([[Commit]]) ------
+
   def init(name: String, df: DataFrame): Unit = replace(name, df)
 
-  /** Publish a whole-table snapshot (mutating merges). `partitionBy`
-    * lays the segment out as hive-style partition directories, so
-    * reader filters on those columns become PartitionFilters and prune
-    * whole directories from the scan (the layout the stored ANN
-    * indexes use to make a probe O(probed partitions), not O(corpus)).
-    * The layout is recorded in the manifest, so later append()s write
-    * layout-compatible segments and the table keeps pruning as it
-    * grows (incremental index maintenance). */
   def replace(name: String, df: DataFrame,
       partitionBy: Seq[String] = Nil): Unit =
-    writeLock(name).synchronized {
-      val next = version(name) + 1
-      val seg = writeSegment(name, s"d$next", df, partitionBy)
-      publish(name, next, Manifest(Seq(seg), partitionBy,
-        Some(segmentSchema(name, seg, df, partitionBy))))
-    }
+    commit(_.replace(name, df, partitionBy))
 
-  /** Append rows to an insert-only table (notifications, rejections,
-    * growing stored indexes): writes ONLY the new rows as a segment;
-    * compacts when the manifest is long. Creates the table on first
-    * append (flat layout — use replace(partitionBy) to establish a
-    * partitioned one). Appends into a partitioned table write
-    * hive-partitioned segments matching the recorded layout, so
-    * partition discovery and pruning keep working across segments. */
-  /** `evolveSchema = true` lets a batch ADD nullable columns (and omit
-    * existing ones — filled as null): the table's live schema becomes
-    * the union, recorded in the manifest so older segments read under
-    * it with the new columns null — Delta `mergeSchema` semantics.
-    * Retyping or any schema change without the flag is rejected with a
-    * pointed error (the fixture-drift class the schema-guard specs
-    * exist for), never silently coerced. */
   def append(name: String, df: DataFrame,
       evolveSchema: Boolean = false): Unit =
-    writeLock(name).synchronized {
-      if (!exists(name)) replace(name, df)
-      else {
-        val v = version(name)
-        val m = manifest(name, v)
+    commit(_.append(name, df, evolveSchema))
+
+  def appendUnique(name: String, df: DataFrame, key: Seq[String],
+      tieBreak: Seq[Column] = Nil, evolveSchema: Boolean = false): Unit =
+    commit(_.appendUnique(name, df, key, tieBreak, evolveSchema))
+
+  def upsert(name: String, df: DataFrame, key: Seq[String]): Unit =
+    commit(_.upsert(name, df, key))
+
+  def compact(name: String, targetRowsPerFile: Long = 1L << 20): Unit =
+    commit(_.compact(name, targetRowsPerFile))
+
+  def deleteWhere(name: String, predicate: Column): Long =
+    commit(_.deleteWhere(name, predicate))
+
+  /** Run `body` as one commit (the contract is in the class doc) and
+    * return its result once the commit is visible. `body` may run
+    * twice: it must touch the store only through its handle, must not
+    * wait on another thread's commit to this root (the re-run holds
+    * the root lock), and must not `return` out of the closure. */
+  def commit[A](body: Commit => A): A = {
+    commits.incrementAndGet()
+    def attempt(locked: Boolean): A = {
+      val c = new Commit
+      // None: a written table moved before the flip. A body that threw
+      // because a table moved under it (say, a staged segment vacuumed)
+      // conflicted too; any other throw is the body's own error.
+      val out: Option[Either[Throwable, A]] =
+        try { val a = body(c); Option.when(c.flip())(Right(a)) }
+        catch { case NonFatal(e) => Some(Left(e)) }
+        finally c.abortUnlessFlipped()
+      out match {
+        case Some(Right(a)) => c.settle(); a
+        case Some(Left(e)) if locked || !c.invalidated => throw e
+        case _ if !locked =>
+          reruns.incrementAndGet()
+          rootLock.synchronized(attempt(locked = true))
+        case _ => throw new java.util.ConcurrentModificationException(
+          s"commit on $root conflicted while holding the root lock " +
+            s"(tables ${c.written.mkString(",")}): another process writes " +
+            "this root, or the body commits outside its handle")
+      }
+    }
+    attempt(locked = false)
+  }
+
+  private val commits = new java.util.concurrent.atomic.AtomicLong
+  private val reruns = new java.util.concurrent.atomic.AtomicLong
+
+  /** This instance's commit counts since it was created: commits run,
+    * and those among them that conflicted and re-ran their body under
+    * the root lock. */
+  def commitCounts: TableStore.CommitCounts =
+    TableStore.CommitCounts(commits.get, reruns.get)
+
+  /** One commit's handle: the store as the body sees it, with its
+    * reads pinned and its writes staged (see the class doc). Used by
+    * one thread, for one attempt. */
+  final class Commit private[TableStore] () {
+    private val pinned = mutable.Map[String, Int]()
+    private val staged = mutable.LinkedHashMap[String, Manifest]()
+    private val seeds = mutable.Map[String, DataFrame]()
+    private val reserved = mutable.ArrayBuffer[Path]()
+    private val marks = mutable.LinkedHashMap[String, Long]()
+    private var flipped = false
+
+    /** The version of `name` this commit reads (−1 if absent), pinned
+      * on first use. */
+    def version(name: String): Int =
+      pinned.getOrElseUpdate(name, TableStore.this.version(name))
+
+    def exists(name: String): Boolean =
+      staged.contains(name) || version(name) >= 0
+
+    /** The table as this commit sees it: its staged writes, else the
+      * pinned version. */
+    def load(name: String): DataFrame = staged.get(name) match {
+      case Some(m) => readDirs(dirs(name, m.segments), m)
+      case None => loadVersion(name, version(name))
+    }
+
+    private def live(name: String): Option[Manifest] =
+      staged.get(name).orElse(
+        Option.when(version(name) >= 0)(manifest(name, version(name))))
+
+    def partitionColumns(name: String): Seq[String] =
+      live(name).map(_.partitionBy).getOrElse(Nil)
+
+    /** Record `batchId` as `flow`'s last committed batch, visible with
+      * this commit's tables ([[TableStore.lastCommitted]]). */
+    def markBatch(flow: String, batchId: Long): Unit = marks(flow) = batchId
+
+    private[TableStore] def written: Iterable[String] = staged.keys
+
+    /** True iff a table this commit began to write has moved since it
+      * pinned it, or a version it pinned is no longer readable: the
+      * only ways a concurrent commit or vacuum can pull data out from
+      * under the body. */
+    private[TableStore] def invalidated: Boolean = {
+      val now = pointer().tables
+      reserved.map(_.getParent.getFileName.toString).exists(t =>
+        now.getOrElse(t, -1) != version(t)) ||
+        pinned.exists { case (t, v) => v >= 0 && !versionExists(t, v) }
+    }
+
+    /** Write `df` as a fresh segment of `name` named for the pinned
+      * version + 1 (`tag` distinguishes several segments of one op);
+      * the name is reserved atomically, so no two writers share it. */
+    private def stage(name: String, df: DataFrame, partitionBy: Seq[String],
+        tag: String = ""): String = {
+      Files.createDirectories(tdir(name))
+      val want = s"d${version(name) + 1}$tag"
+      val seg = Iterator.from(0).map(k => if (k == 0) want else s"$want-$k")
+        .find { n =>
+          try { reserved += Files.createDirectory(tdir(name).resolve(n)); true }
+          catch { case _: FileAlreadyExistsException => false }
+        }.get
+      val w = df.write.mode("append")
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(tdir(name).resolve(seg).toString)
+      seg
+    }
+
+    private def put(name: String, m: Manifest,
+        seed: Option[DataFrame] = None): Unit = {
+      staged(name) = m
+      seed match {
+        case Some(f) => seeds(name) = f
+        case None => seeds -= name
+      }
+    }
+
+    /** Publish a whole-table snapshot (mutating merges). `partitionBy`
+      * lays the segment out as hive-style partition directories, so
+      * reader filters on those columns become PartitionFilters and
+      * prune whole directories from the scan (the layout the stored ANN
+      * indexes use to make a probe O(probed partitions), not
+      * O(corpus)). The layout is recorded in the manifest, so later
+      * append()s write layout-compatible segments and the table keeps
+      * pruning as it grows (incremental index maintenance). */
+    def replace(name: String, df: DataFrame,
+        partitionBy: Seq[String] = Nil): Unit = {
+      val seg = stage(name, df, partitionBy)
+      val (schema, typed) = segmentSchema(name, seg, df, partitionBy)
+      put(name, Manifest(Seq(seg), partitionBy, Some(schema)), typed)
+    }
+
+    /** Append rows to an insert-only table (notifications, rejections,
+      * growing stored indexes): writes ONLY the new rows as a segment;
+      * compacts when the manifest is long. Creates the table on first
+      * append (flat layout — use replace(partitionBy) to establish a
+      * partitioned one). Appends into a partitioned table write
+      * hive-partitioned segments matching the recorded layout, so
+      * partition discovery and pruning keep working across segments.
+      *
+      * `evolveSchema = true` lets a batch ADD nullable columns (and
+      * omit existing ones — filled as null): the table's live schema
+      * becomes the union, recorded in the manifest so older segments
+      * read under it with the new columns null — Delta `mergeSchema`
+      * semantics. Retyping or any schema change without the flag is
+      * rejected with a pointed error (the fixture-drift class the
+      * schema-guard specs exist for), never silently coerced. */
+    def append(name: String, df: DataFrame,
+        evolveSchema: Boolean = false): Unit = live(name) match {
+      case None => replace(name, df)
+      case Some(m) =>
         val parts = m.partitionBy
         // a zero-row partitionBy write emits NO parquet files (only
         // _SUCCESS), a segment that adds nothing: skip empty appends
@@ -416,29 +562,20 @@ final class TableStore(spark: SparkSession, root: String,
           if (m.segments.length >= CompactThreshold)
             replace(name, load(name).unionByName(aligned,
               allowMissingColumns = true), parts)
-          else {
-            val next = v + 1
-            publish(name, next, Manifest(
-              m.segments :+ writeSegment(name, s"d$next", aligned, parts), parts,
-              Some(schema)))
-          }
+          else put(name, Manifest(m.segments :+ stage(name, aligned, parts),
+            parts, Some(schema)))
         }
-      }
     }
 
-  /** Idempotent append: rows whose `key` already exists are dropped, so
-    * a crash-replayed batch cannot double-append (the append-only
-    * analogue of the key-idempotent MERGEs). In-batch duplicates
-    * collapse to the first row by `tieBreak` ordering (arbitrary when
-    * empty). Write cost is O(new rows); the existing table is only
-    * READ for the anti-join. */
-  def appendUnique(name: String, df: DataFrame, key: Seq[String],
-      tieBreak: Seq[Column] = Nil, evolveSchema: Boolean = false): Unit = {
-    val dedup = MergeOps.dedupBy(df, key, tieBreak)
-    // the lock spans the anti-join read as well as the write: two
-    // concurrent appendUniques could otherwise both miss a key in the
-    // snapshot and both append it
-    writeLock(name).synchronized {
+    /** Idempotent append: rows whose `key` already exists are dropped,
+      * so a redelivered batch cannot double-append (the append-only
+      * analogue of the key-idempotent MERGEs). In-batch duplicates
+      * collapse to the first row by `tieBreak` ordering (arbitrary when
+      * empty). Write cost is O(new rows); the existing table is only
+      * READ for the anti-join. */
+    def appendUnique(name: String, df: DataFrame, key: Seq[String],
+        tieBreak: Seq[Column] = Nil, evolveSchema: Boolean = false): Unit = {
+      val dedup = MergeOps.dedupBy(df, key, tieBreak)
       if (!exists(name)) replace(name, dedup)
       else {
         // persist: the emptiness probe AND the segment write both
@@ -452,50 +589,43 @@ final class TableStore(spark: SparkSession, root: String,
         } finally fresh.unpersist()
       }
     }
-  }
 
-  /** Key-replacing MERGE: rows of `df` SUPERSEDE existing rows with the
-    * same `key`; all other rows are kept (in-batch duplicates collapse
-    * arbitrarily). Unlike [[appendUnique]] the incoming row wins — the
-    * re-verdict path for tables whose rows can legitimately be
-    * corrected (a quality-rejected document re-sent with fixed
-    * content). Cost is a full snapshot rewrite — O(table), the same
-    * order as the derived-table recomputes that accompany it on the
-    * ingest path; the production swap is a Delta/Iceberg MERGE with
-    * file-level pruning. */
-  def upsert(name: String, df: DataFrame, key: Seq[String]): Unit = {
-    val dedup = df.dropDuplicates(key)
-    // the lock spans the read as well as the rewrite, like appendUnique
-    writeLock(name).synchronized {
+    /** Key-replacing MERGE: rows of `df` SUPERSEDE existing rows with
+      * the same `key`; all other rows are kept (in-batch duplicates
+      * collapse arbitrarily). Unlike [[appendUnique]] the incoming row
+      * wins — the re-verdict path for tables whose rows can
+      * legitimately be corrected (a quality-rejected document re-sent
+      * with fixed content). Cost is a full snapshot rewrite — O(table),
+      * the same order as the derived-table recomputes that accompany it
+      * on the ingest path; the production swap is a Delta/Iceberg MERGE
+      * with file-level pruning. */
+    def upsert(name: String, df: DataFrame, key: Seq[String]): Unit = {
+      val dedup = df.dropDuplicates(key)
       if (!exists(name)) replace(name, dedup)
       else {
-        val m = manifest(name, version(name))
         val kept = load(name).join(dedup.select(key.map(col): _*),
           key, "left_anti")
-        replace(name, kept.unionByName(dedup), m.partitionBy)
+        replace(name, kept.unionByName(dedup), partitionColumns(name))
       }
     }
-  }
 
-  /** OPTIMIZE — small-file compaction. Rewrites the table as ONE
-    * segment of ~`targetRowsPerFile`-row files (per partition directory
-    * for partitioned layouts, with rows clustered so each directory is
-    * written by as few tasks as hold its rows). The append path bounds
-    * SEGMENT count (manifest length) but not file count or size — a
-    * streaming flow committing small batches accretes many tiny files,
-    * and at 100 TB tiny files are the classic scan killer (per-file
-    * open/footer cost dominates; row-group pruning loses leverage).
-    * Content is byte-identical by construction (same rows, fresh
-    * layout); the version flip is atomic like every publish, and
-    * superseded versions age out via the usual vacuum horizon. The
-    * production swap is Delta OPTIMIZE / Iceberg rewrite_data_files.
-    * Cost: one full read + write of the table — schedule off-peak like
-    * any OPTIMIZE. */
-  def compact(name: String, targetRowsPerFile: Long = 1L << 20): Unit =
-    writeLock(name).synchronized {
+    /** OPTIMIZE — small-file compaction. Rewrites the table as ONE
+      * segment of ~`targetRowsPerFile`-row files (per partition
+      * directory for partitioned layouts, with rows clustered so each
+      * directory is written by as few tasks as hold its rows). The
+      * append path bounds SEGMENT count (manifest length) but not file
+      * count or size — a streaming flow committing small batches
+      * accretes many tiny files, and at 100 TB tiny files are the
+      * classic scan killer (per-file open/footer cost dominates;
+      * row-group pruning loses leverage). Content is byte-identical by
+      * construction (same rows, fresh layout); superseded versions age
+      * out via the usual vacuum horizon. The production swap is Delta
+      * OPTIMIZE / Iceberg rewrite_data_files. Cost: one full read +
+      * write of the table — schedule off-peak like any OPTIMIZE. */
+    def compact(name: String, targetRowsPerFile: Long = 1L << 20): Unit = {
       require(exists(name), s"table $name does not exist")
       require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-      val parts = manifest(name, version(name)).partitionBy
+      val parts = partitionColumns(name)
       val df = load(name)
       val rows = df.count()
       val nFiles = math.max(1L,
@@ -506,71 +636,112 @@ final class TableStore(spark: SparkSession, root: String,
       replace(name, shaped, parts)
     }
 
-  /** Targeted row deletion — `DELETE FROM name WHERE predicate`, the
-    * third mutation class next to append and upsert (the reference
-    * never deletes — README.md:47 — but a data-governance request,
-    * GDPR erasure being the canonical one, needs it as a first-class
-    * table op). Returns the number of rows deleted.
-    *
-    * Scale shape (the Delta/Iceberg copy-on-write DELETE): the
-    * predicate is evaluated PER SEGMENT, and only segments that
-    * actually contain matches are rewritten — the match probe is a
-    * predicate-pushed count whose parquet min/max row-group stats let
-    * untouched segments answer from footers, so a targeted delete on
-    * a 100 TB table rewrites O(affected segments), not O(table).
-    * Untouched segment directories are carried into the new manifest
-    * byte-identical. SQL DELETE semantics: rows where the predicate
-    * is NULL survive. A segment whose every row matches is DROPPED
-    * from the manifest rather than rewritten (a zero-row partitioned
-    * write emits no readable files). No-match deletes publish nothing
-    * (version unchanged). Prior versions still time-travel to the
-    * deleted rows until vacuumed, and `changesBetween` across the
-    * delete reports them as `_op = delete` via its rewriting-
-    * transition diff. If a delete empties the table entirely, an empty FLAT
-    * segment with the full recorded schema is published (the
-    * partition layout carries no information at zero rows; the next
-    * replace re-establishes it). */
-  def deleteWhere(name: String, predicate: Column): Long =
-    writeLock(name).synchronized {
+    /** Targeted row deletion — `DELETE FROM name WHERE predicate`, the
+      * third mutation class next to append and upsert (the reference
+      * never deletes — README.md:47 — but a data-governance request,
+      * GDPR erasure being the canonical one, needs it as a first-class
+      * table op). Returns the number of rows deleted.
+      *
+      * Scale shape (the Delta/Iceberg copy-on-write DELETE): the
+      * predicate is evaluated PER SEGMENT, and only segments that
+      * actually contain matches are rewritten — the match probe is a
+      * predicate-pushed count whose parquet min/max row-group stats let
+      * untouched segments answer from footers, so a targeted delete on
+      * a 100 TB table rewrites O(affected segments), not O(table).
+      * Untouched segment directories are carried into the new manifest
+      * byte-identical. SQL DELETE semantics: rows where the predicate
+      * is NULL survive. A segment whose every row matches is DROPPED
+      * from the manifest rather than rewritten (a zero-row partitioned
+      * write emits no readable files). No-match deletes publish nothing
+      * (version unchanged). Prior versions still time-travel to the
+      * deleted rows until vacuumed, and `changesBetween` across the
+      * delete reports them as `_op = delete` via its rewriting-
+      * transition diff. If a delete empties the table entirely, an
+      * empty FLAT segment with the full recorded schema is published
+      * (the partition layout carries no information at zero rows; the
+      * next replace re-establishes it). */
+    def deleteWhere(name: String, predicate: Column): Long = {
       require(exists(name), s"table $name does not exist")
-      val v = version(name)
-      val m = manifest(name, v)
+      val m = live(name).get
       val parts = m.partitionBy
       val segs = m.segments
       val segDirs = dirs(name, segs)
       // one schema across segments, the rule readDirs reads under
-      val pinned = pinnedSchema(segDirs, m)
-      val keep = !org.apache.spark.sql.functions
+      val pinnedAs = pinnedSchema(segDirs, m)
+      val matches = org.apache.spark.sql.functions
         .coalesce(predicate, lit(false))
       var deleted = 0L
       val rewritten = segs.zip(segDirs).zipWithIndex.flatMap {
         case ((seg, dir), i) =>
-          val sdf = spark.read.schema(pinned).parquet(dir)
-          val hits = sdf.filter(
-            org.apache.spark.sql.functions.coalesce(predicate, lit(false)))
-            .count()
+          val sdf = spark.read.schema(pinnedAs).parquet(dir)
+          val hits = sdf.filter(matches).count()
           if (hits == 0L) Some(seg) // untouched — carried as-is
           else {
             deleted += hits
-            val kept = sdf.filter(keep)
+            val kept = sdf.filter(!matches)
             if (kept.isEmpty) None // fully-deleted segment: drop
-            else Some(writeSegment(name, s"d${v + 1}_$i", kept, parts))
+            else Some(stage(name, kept, parts, s"_$i"))
           }
       }
       if (deleted > 0L) {
         if (rewritten.nonEmpty)
-          publish(name, v + 1, Manifest(rewritten, parts, Some(pinned)))
+          put(name, Manifest(rewritten, parts, Some(pinnedAs)))
         else {
           // table emptied: one empty flat segment carrying the full
           // schema (partition columns become ordinary columns)
           val empty = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pinned)
-          publish(name, v + 1, Manifest(
-            Seq(writeSegment(name, s"d${v + 1}", empty)), Nil, Some(pinned)))
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pinnedAs)
+          put(name, Manifest(Seq(stage(name, empty, Nil)), Nil, Some(pinnedAs)))
         }
       }
       deleted
     }
+
+    /** Make this commit visible, or report a conflict (false). Under
+      * the root lock: check that no written table has moved, write each
+      * written table's manifest (over any orphan a failed flip left),
+      * then replace the pointer in one atomic move. */
+    private[TableStore] def flip(): Boolean = rootLock.synchronized {
+      val now = pointer()
+      val ok = staged.keys.forall(t => now.tables.getOrElse(t, -1) == version(t))
+      if (ok && (staged.nonEmpty || marks.nonEmpty)) {
+        staged.foreach { case (t, m) =>
+          Files.write(manifestPath(t, version(t) + 1), m.render.getBytes(UTF_8))
+        }
+        val tmp = rootPath.resolve("_pointer_tmp")
+        Files.write(tmp, Pointer(
+          now.tables ++ staged.keys.map(t => t -> (version(t) + 1)),
+          now.flows ++ marks).render.getBytes(UTF_8))
+        Files.move(tmp, pointerPath, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+        flipped = true
+      }
+      ok
+    }
+
+    /** Delete this attempt's staged segments unless it flipped: under
+      * the root lock, and only those a vacuum has not reclaimed since
+      * their table moved. */
+    private[TableStore] def abortUnlessFlipped(): Unit =
+      if (!flipped) rootLock.synchronized {
+        reserved.filter(Files.exists(_)).foreach(deleteRecursively)
+      }
+
+    /** After the flip: drop the written tables' handles (seeding the
+      * ones whose segment typing already resolved the new version) and
+      * run the always-on retention GC, which only fires once the
+      * horizon is behind us, so young tables pay nothing. */
+    private[TableStore] def settle(): Unit = rootLock.synchronized {
+      staged.keys.foreach { t =>
+        val v = version(t) + 1
+        handles.remove(t)
+        if (TableStore.this.version(t) == v) seeds.get(t).foreach(f =>
+          handles.put(t, new Handle(v,
+            Files.getLastModifiedTime(manifestPath(t, v)), f)))
+        if (autoVacuumKeep > 0 && v >= autoVacuumKeep) vacuum(t, autoVacuumKeep)
+      }
+    }
+  }
 
   /** True iff the transition `fromV` → current is append-only (pure
     * inserts, readable from the delta segments alone) — the probe an
@@ -586,41 +757,43 @@ final class TableStore(spark: SparkSession, root: String,
     * downstream-materialization pattern (Delta CDF reader feeding a
     * derived table). Returns the src version synced to.
     *
-    * Cost: an append-only hop applies O(delta) via the idempotent
-    * appendUnique (a crash between apply and the sync-log commit
-    * replays harmlessly); a rewriting hop applies changed-key
-    * anti-join + union — O(dst + change), never O(history). A sync
-    * whose base version has been vacuumed falls back to one full
-    * resync and is caught up from there on. `key` must be a unique
-    * key of `src`, as in [[changesBetween]]. */
-  def syncTo(src: String, dst: String, key: Seq[String]): Int = {
+    * Cost: an append-only hop appends O(delta); a
+    * rewriting hop applies changed-key anti-join + union —
+    * O(dst + change), never O(history). The replica and its cursor
+    * (the src version it holds, kept as the batch id of flow
+    * `_sync_<src>__<dst>`) land in one commit. A sync whose base
+    * version has been vacuumed falls back to one full resync and is
+    * caught up from there on. `key` must be a unique key of `src`, as
+    * in [[changesBetween]]. */
+  def syncTo(src: String, dst: String, key: Seq[String]): Int = commit { c =>
     val flow = s"_sync_${src}__$dst"
-    val cur = version(src)
+    val cur = c.version(src)
     require(cur >= 0, s"table $src does not exist")
     val last = lastCommitted(flow).toInt
-    if (exists(dst) && last == cur) return cur
-    // first sync, or a base version aged out of the vacuum horizon →
-    // one full resync
-    if (!exists(dst) || !versionExists(src, last))
-      replace(dst, loadVersion(src, cur), partitionColumns(src))
-    else if (manifest(src, cur).extendsFrom(manifest(src, last)))
-      // evolveSchema: an evolved source's delta legitimately carries
-      // columns dst has not seen yet — replication must follow the
-      // evolution, not reject it
-      appendUnique(dst, changesBetween(src, last, cur, key).drop("_op"),
-        key, evolveSchema = true)
-    else {
-      val changes = changesBetween(src, last, cur, key).persist()
-      try {
-        val changedKeys = changes.select(key.map(col): _*)
-        val kept = load(dst).join(changedKeys, key, "left_anti")
-        val upserts = changes.filter(col("_op") =!= "delete").drop("_op")
-        // allowMissingColumns: dst may predate src's schema evolution
-        replace(dst, kept.unionByName(upserts, allowMissingColumns = true),
-          partitionColumns(dst))
-      } finally changes.unpersist()
+    if (!c.exists(dst) || last != cur) {
+      // first sync, or a base version aged out of the vacuum horizon →
+      // one full resync
+      if (!c.exists(dst) || !versionExists(src, last))
+        c.replace(dst, c.load(src), c.partitionColumns(src))
+      else if (manifest(src, cur).extendsFrom(manifest(src, last)))
+        // evolveSchema: an evolved source's delta legitimately carries
+        // columns dst has not seen yet — replication must follow the
+        // evolution, not reject it
+        c.append(dst, changesBetween(src, last, cur, key).drop("_op"),
+          evolveSchema = true)
+      else {
+        val changes = changesBetween(src, last, cur, key).persist()
+        try {
+          val changedKeys = changes.select(key.map(col): _*)
+          val kept = c.load(dst).join(changedKeys, key, "left_anti")
+          val upserts = changes.filter(col("_op") =!= "delete").drop("_op")
+          // allowMissingColumns: dst may predate src's schema evolution
+          c.replace(dst, kept.unionByName(upserts, allowMissingColumns = true),
+            c.partitionColumns(dst))
+        } finally changes.unpersist()
+      }
+      c.markBatch(flow, cur)
     }
-    commitBatch(flow, cur)
     cur
   }
 
@@ -635,28 +808,34 @@ final class TableStore(spark: SparkSession, root: String,
     * list, so a newer manifest covers every older one back to the last
     * replace). Readers bound to versions OUTSIDE the horizon lose their
     * files — the same contract as Delta/Iceberg VACUUM, where the
-    * retention period must exceed the longest-running reader. The
-    * per-table write lock serializes vacuum against concurrent version
-    * transitions.
+    * retention period must exceed the longest-running reader.
+    *
+    * A segment named for a version above the current one is staged by
+    * a commit in flight and is never reclaimed. A staged segment can
+    * only become unreferenced-and-reclaimable after its table has moved
+    * past the version it was staged for, and then its commit conflicts
+    * and never publishes it. Vacuum runs under the root lock, so it
+    * never interleaves with a flip.
     *
     * Without this, a long-running deployment leaks storage linearly in
     * commits (every replace() retires a whole snapshot segment). Flows
     * call it on whatever cadence suits the table's churn. */
   def vacuum(name: String, keepVersions: Int = 2): Unit =
-    writeLock(name).synchronized {
+    rootLock.synchronized {
       val cur = version(name)
       require(cur >= 0, s"table $name does not exist")
       require(keepVersions >= 1, "must keep at least the current version")
       val floor = math.max(0, cur - keepVersions + 1)
       val live = (floor to cur).flatMap(v => manifest(name, v).segments).toSet
-      val dir = tdir(name)
-      val stream = Files.list(dir)
+      def number(n: String) = n.drop(1).takeWhile(_.isDigit).toIntOption
+      val stream = Files.list(tdir(name))
       try {
         stream.forEach { p =>
           val n = p.getFileName.toString
           val staleManifest = n.startsWith("m") &&
             n.drop(1).forall(_.isDigit) && n.drop(1).toInt < floor
-          val staleSegment = Files.isDirectory(p) && !live.contains(n)
+          val staleSegment = Files.isDirectory(p) && !live.contains(n) &&
+            !number(n).exists(_ > cur)
           if (staleManifest) Files.delete(p)
           else if (staleSegment) deleteRecursively(p)
         }
@@ -671,30 +850,47 @@ final class TableStore(spark: SparkSession, root: String,
     Files.delete(p)
   }
 
-  // -- per-flow batch commit log: replay protection for foreachBatch ---
-  // Structured Streaming re-runs a failed micro-batch with the same
-  // batchId; flows consult this log and skip already-committed ids, the
-  // library-level equivalent of Delta's txn-id dedup. The id is written
-  // after the batch body, so a crash between a table swap and the
-  // commit write re-runs the whole batch over what it already
-  // published. Only key-deduplicated appends absorb that replay: a flow
-  // that writes two tables in two publishes (admission, cancellation,
-  // consumer, hold expiry) applies a half-done batch twice and breaks
-  // seat accounting (ROADMAP "Known defects", owned by §4 and §11).
-
-  def lastCommitted(flow: String): Long = {
-    val f = Paths.get(root, "_commits", flow)
-    if (Files.exists(f)) new String(Files.readAllBytes(f)).trim.toLong else -1L
-  }
-
-  def commitBatch(flow: String, batchId: Long): Unit = {
-    val d = Paths.get(root, "_commits")
-    Files.createDirectories(d)
-    Files.write(d.resolve(flow), batchId.toString.getBytes)
-  }
+  /** The last batch id a commit marked for `flow` (−1 if none) — the
+    * skip check of a replayed micro-batch, the library-level
+    * equivalent of Delta's txn-id dedup. */
+  def lastCommitted(flow: String): Long = pointer().flows.getOrElse(flow, -1L)
 }
 
 object TableStore {
+
+  final case class CommitCounts(commits: Long, reruns: Long)
+
+  private val rootLocks = new ConcurrentHashMap[Path, Object]()
+
+  private def lockFor(root: Path): Object =
+    rootLocks.computeIfAbsent(root, _ => new Object)
+
+  /** The store pointer, the file `root/_pointer`: one line per table,
+    * `table\t<name>\t<live version>`, then one per flow,
+    * `flow\t<name>\t<last committed batch id>`, each group sorted by
+    * name and joined by `\n`. A commit replaces the whole file in one
+    * atomic move. Parsed here and rendered here only; a line the parser
+    * does not know fails the read. */
+  private final case class Pointer(tables: Map[String, Int],
+      flows: Map[String, Long]) {
+    def render: String =
+      (tables.toSeq.sorted.map { case (t, v) => s"table\t$t\t$v" } ++
+        flows.toSeq.sorted.map { case (f, b) => s"flow\t$f\t$b" })
+        .mkString("\n")
+  }
+
+  private object Pointer {
+    def parse(text: String, where: String): Pointer =
+      text.split("\n").iterator.filter(_.nonEmpty)
+        .foldLeft(Pointer(Map.empty, Map.empty)) { (p, line) =>
+          line.split("\t", -1) match {
+            case Array("table", t, v) => p.copy(tables = p.tables + (t -> v.toInt))
+            case Array("flow", f, b) => p.copy(flows = p.flows + (f -> b.toLong))
+            case _ => throw new IllegalStateException(
+              s"store pointer $where has an unknown line: $line")
+          }
+        }
+  }
 
   /** One version's manifest, the file `root/<table>/m<N>`: header lines,
     * then one segment dir per line, joined by `\n` with no trailing

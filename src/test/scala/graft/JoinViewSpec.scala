@@ -152,4 +152,28 @@ class JoinViewSpec extends AnyFunSuite {
     assert(sync(store) === -1L) // full rebuild, not an error
     assert(view(store) === full(store))
   }
+
+  test("a failed sync leaves the view and both cursors where they were; the next sync converges") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-jview").toString
+    val store = new TableStore(spark, root)
+    store.init("orders", Seq((1, 10, "apple"), (2, 20, "fig"))
+      .toDF("oid", "ck", "item"))
+    store.init("custs", Seq((10, "Ana"), (20, "Bo")).toDF("ck", "name"))
+    assert(sync(store) === -1L)
+    val synced = view(store)
+    store.append("orders", Seq((3, 20, "kiwi")).toDF("oid", "ck", "item"))
+    store.upsert("custs", Seq((10, "ANA")).toDF("ck", "name"), Seq("ck"))
+    val cursors = Seq("a", "b").map(s => store.lastCommitted(s"_jview_v__$s"))
+    val v = store.version("v")
+    val block = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(root, "v", s"m${v + 1}"))
+    intercept[java.io.IOException](sync(store))
+    assert(store.version("v") === v)
+    assert(Seq("a", "b").map(s => store.lastCommitted(s"_jview_v__$s")) === cursors)
+    assert(view(store) === synced)
+    java.nio.file.Files.delete(block)
+    assert(sync(store) === 2L)
+    assert(view(store) === full(store))
+  }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import graft.tables.TableStore
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Log-structured store contracts: appends write deltas (not
   * snapshots), manifests compose segments, compaction bounds segment
@@ -109,9 +110,9 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("concurrent appends to a shared sink lose no rows") {
-    // dead_letter is appended to by several flows concurrently; without
-    // per-table write serialization two appends can both read version v
-    // and both publish v+1, silently dropping one segment
+    // dead_letter is appended to by several flows concurrently; two
+    // appends that both read version v conflict at the commit, and the
+    // loser re-runs on v+1 instead of dropping the winner's segment
     import spark.implicits._
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
@@ -578,7 +579,7 @@ class TableStoreSpec extends AnyFunSuite {
     // ...and a downstream sync replicates the NULL, not the stale value
     store.init("dst", store.loadVersion("t", 0))
     // seed the cursor at v0, then sync the NULL-ing hop
-    store.commitBatch("_sync_t__dst", 0)
+    store.commit(_.markBatch("_sync_t__dst", 0))
     store.syncTo("t", "dst", Seq("k"))
     assert(store.load("dst").filter(col("k") === 1)
       .select("v").head.isNullAt(0), "sync replicated the stale value")
@@ -819,7 +820,9 @@ class TableStoreSpec extends AnyFunSuite {
     val store = new TableStore(spark, root)
     store.init("t", Seq((1, "a"), (2, "b")).toDF("k", "v"))
     assert(content(store, "t") === Seq((1, "a"), (2, "b")))
-    graft.tables.TempDirs.delete(Paths.get(root, "t").toString)
+    // the store pointer names every table's version: re-creating a
+    // table at the same version re-creates the store root
+    graft.tables.TempDirs.delete(root)
     store.init("t", Seq((7, "q")).toDF("k", "v"))
     assert(store.version("t") === 0)
     assert(content(store, "t") === Seq((7, "q")))
@@ -896,5 +899,233 @@ class TableStoreSpec extends AnyFunSuite {
     Files.write(m, "#unparseable\n".getBytes("UTF-8"))
     Files.setLastModifiedTime(m, mtime)
     assert(content(store, "t") === Seq((1, "a")))
+  }
+
+  // -- the store commit ----------------------------------------------
+
+  private def names(dir: java.nio.file.Path): Set[String] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toSet
+    finally s.close()
+  }
+
+  test("on disk: one store pointer names every table version and flow batch id") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    store.init("t", Seq((1, "a")).toDF("k", "v"))
+    store.append("t", Seq((2, "b")).toDF("k", "v"))
+    store.init("u", Seq((3, "c")).toDF("k", "v"))
+    store.commit(_.markBatch("f", 3))
+    assert(names(Paths.get(root)) === Set("_pointer", "t", "u"))
+    assert(names(Paths.get(root, "t")) === Set("m0", "m1", "d0", "d1"))
+    assert(new String(Files.readAllBytes(Paths.get(root, "_pointer")),
+      "UTF-8") === "table\tt\t1\ntable\tu\t0\nflow\tf\t3")
+    assert(store.lastCommitted("f") === 3L && store.lastCommitted("g") === -1L)
+  }
+
+  test("a manifest above the live version is not a readable version") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    store.init("t", Seq((1, "a")).toDF("k", "v"))
+    // the manifest a flip writes before it moves the pointer, left by
+    // a flip that never moved it
+    val orphan = Paths.get(root, "t", "m1")
+    Files.write(orphan, Files.readAllBytes(Paths.get(root, "t", "m0")))
+    assert(!store.versionExists("t", 1))
+    val e = intercept[IllegalArgumentException](store.loadVersion("t", 1))
+    assert(e.getMessage.contains("no readable version 1"), e.getMessage)
+    store.append("t", Seq((2, "b")).toDF("k", "v"))
+    assert(store.version("t") === 1 && store.versionExists("t", 1))
+    assert(new String(Files.readAllBytes(orphan), "UTF-8").endsWith("d0\nd1"))
+    assert(content(store, "t") === Seq((1, "a"), (2, "b")))
+  }
+
+  test("a 64-partition replace lists its segment once: the load runs no job") {
+    import spark.implicits._
+    val store = fresh()
+    store.replace("fwd", (0 until 640).map(i => (i, i % 64)).toDF("k", "bkt"),
+      partitionBy = Seq("bkt"))
+    val jobs = TestSpark.jobTasks(spark)(store.load("fwd"))
+    assert(jobs.isEmpty, s"jobs: $jobs")
+    assert(store.load("fwd").filter(col("bkt") === 5).count() === 10L)
+  }
+
+  test("a body that throws after staging two tables leaves neither, nor its batch id") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    store.init("a", Seq((1, "a")).toDF("k", "v"))
+    store.append("a", Seq((2, "b")).toDF("k", "v"))
+    store.init("b", Seq((5, "e")).toDF("k", "v"))
+    val before = Seq("a", "b").map(t => t -> names(Paths.get(root, t))).toMap
+    val e = intercept[IllegalStateException](store.commit { c =>
+      c.append("a", Seq((3, "c")).toDF("k", "v"))
+      c.replace("b", Seq((9, "z")).toDF("k", "v"))
+      c.markBatch("f", 7)
+      assert(content(store, "a") === Seq((1, "a"), (2, "b")))
+      throw new IllegalStateException("boom")
+    })
+    assert(e.getMessage === "boom")
+    assert(store.version("a") === 1 && store.version("b") === 0)
+    assert(store.lastCommitted("f") === -1L)
+    assert(content(store, "a") === Seq((1, "a"), (2, "b")))
+    assert(content(store, "b") === Seq((5, "e")))
+    // every committed segment and manifest survives; the staged ones go
+    assert(Seq("a", "b").forall(t => names(Paths.get(root, t)) === before(t)))
+  }
+
+  test("a commit whose written table moved re-runs its body on fresh reads") {
+    import spark.implicits._
+    val store = fresh()
+    store.init("t", Seq((1, "a")).toDF("k", "v"))
+    var runs = 0
+    store.commit { c =>
+      runs += 1
+      val seen = c.load("t").count().toInt
+      // another writer commits t inside this commit's window
+      if (runs == 1) store.append("t", Seq((2, "b")).toDF("k", "v"))
+      c.append("t", Seq((10 + seen, "c")).toDF("k", "v"))
+    }
+    assert(runs === 2)
+    assert(content(store, "t") === Seq((1, "a"), (2, "b"), (12, "c")))
+  }
+
+  test("a table only read is not checked; a commit that keeps conflicting fails loudly") {
+    import spark.implicits._
+    val store = fresh()
+    store.init("r", Seq((1, "a")).toDF("k", "v"))
+    store.init("w", Seq((1, "a")).toDF("k", "v"))
+    var runs = 0
+    store.commit { c =>
+      runs += 1
+      c.load("r").count()
+      if (runs == 1) store.append("r", Seq((2, "b")).toDF("k", "v"))
+      c.append("w", Seq((2, "b")).toDF("k", "v"))
+    }
+    assert(runs === 1, "a moved read-only table must not force a re-run")
+    runs = 0
+    intercept[java.util.ConcurrentModificationException](store.commit { c =>
+      runs += 1
+      c.version("w")
+      store.append("w", Seq((10 + runs, "x")).toDF("k", "v"))
+      c.append("w", Seq((0, "lost")).toDF("k", "v"))
+    })
+    // one optimistic run, then one under the root lock, where the
+    // nested append still flips first
+    assert(runs === 2)
+    assert(!content(store, "w").exists(_._2 == "lost"))
+    assert(store.load("w").count() === 2L + 2L)
+  }
+
+  test("a body that throws while a table it only read moves runs once and rethrows its own error") {
+    import spark.implicits._
+    val store = fresh()
+    store.init("r", Seq((1, "a")).toDF("k", "v"))
+    store.init("w", Seq((1, "a")).toDF("k", "v"))
+    var runs = 0
+    val e = intercept[IllegalArgumentException](store.commit { c =>
+      runs += 1
+      c.load("r").count()
+      c.append("w", Seq((2, "b")).toDF("k", "v"))
+      store.append("r", Seq((2, "b")).toDF("k", "v"))
+      require(false, "bad batch")
+    })
+    assert(e.getMessage.contains("bad batch"), e.getMessage)
+    assert(runs === 1)
+    assert(store.version("r") === 1 && store.version("w") === 0)
+  }
+
+  test("a slow commit racing a table's stream of short commits finishes, and so do they") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val store = fresh()
+    store.init("t", Seq((0, "seed")).toDF("k", "v"))
+    val started = new java.util.concurrent.CountDownLatch(1)
+    @volatile var done = false
+    // another writer commits t every 50 ms until the slow commit is in
+    val short = Future {
+      var n = 0
+      while (!done) {
+        n += 1
+        store.append("t", Seq((n, "short")).toDF("k", "v"))
+        started.countDown()
+        Thread.sleep(50)
+      }
+      n
+    }
+    var runs = 0
+    val seen = store.commit { c =>
+      runs += 1
+      val rows = c.load("t").count()
+      started.await()
+      Thread.sleep(1000)
+      c.append("t", Seq((-1, "slow")).toDF("k", "v"))
+      rows
+    }
+    done = true
+    val n = Await.result(short, 120.seconds)
+    // the optimistic run loses to the short commits; the locked re-run
+    // cannot
+    assert(runs === 2)
+    val rows = content(store, "t")
+    assert(rows.length === 1 + n + 1)
+    assert(rows.count(_._2 == "slow") === 1)
+    assert(rows.count(_._2 == "short") === n)
+    assert(seen >= 2L)
+  }
+
+  test("two instances on one root never clobber each other's tables") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val root = Files.createTempDirectory("graft-store").toString
+    val (a, b) = (new TableStore(spark, root), new TableStore(spark, root))
+    // b commits y while a's commit on x is open
+    a.commit { c =>
+      c.replace("x", Seq((1, "a")).toDF("k", "v"))
+      b.replace("y", Seq((2, "b")).toDF("k", "v"))
+    }
+    assert(a.version("x") === 0 && a.version("y") === 0)
+    val stores = Seq(a, b, new TableStore(spark, root), new TableStore(spark, root))
+    Await.result(Future.sequence(stores.zipWithIndex.map { case (s, i) =>
+      Future((1 to 5).foreach(n =>
+        s.replace(s"t$i", Seq((n, "v")).toDF("k", "v"))))
+    }), 120.seconds)
+    assert((0 until 4).map(i => a.version(s"t$i")) === Seq(4, 4, 4, 4))
+    assert(a.version("x") === 0 && a.version("y") === 0)
+  }
+
+  test("vacuum never reclaims a segment staged by a commit in flight") {
+    import spark.implicits._
+    val store = fresh()
+    store.init("t", Seq((1, "a")).toDF("k", "v"))
+    store.commit { c =>
+      c.append("t", Seq((2, "b")).toDF("k", "v"))
+      store.vacuum("t", keepVersions = 1)
+    }
+    assert(content(store, "t") === Seq((1, "a"), (2, "b")))
+  }
+
+  test("syncTo: a failed apply leaves the replica and its cursor; the next sync converges") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    store.init("src", Seq((1, "a"), (2, "b")).toDF("k", "v"))
+    assert(store.syncTo("src", "dst", Seq("k")) === 0)
+    store.upsert("src", Seq((1, "A"), (3, "c")).toDF("k", "v"), Seq("k"))
+    val v = store.version("dst")
+    val block = Files.createDirectories(Paths.get(root, "dst", s"m${v + 1}"))
+    intercept[java.io.IOException](store.syncTo("src", "dst", Seq("k")))
+    assert(store.version("dst") === v)
+    assert(store.lastCommitted("_sync_src__dst") === 0L)
+    assert(content(store, "dst") === Seq((1, "a"), (2, "b")))
+    Files.delete(block)
+    assert(store.syncTo("src", "dst", Seq("k")) === 1)
+    assert(content(store, "dst") === Seq((1, "A"), (2, "b"), (3, "c")))
   }
 }
